@@ -102,10 +102,6 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize a multi-consumed intermediate and truncate lineage.
 

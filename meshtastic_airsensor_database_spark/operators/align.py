@@ -15,7 +15,7 @@ no cross-partition ordering is ever required.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -219,24 +219,6 @@ def salted_collect_list(
 def node_equality_filter(df: DataFrame, key: str, value) -> DataFrame:
     """Per-node slice (graphdata.py:90-91); partition-prunable at scale."""
     return df.filter(F.col(key) == F.lit(value))
-
-
-def hourly_stats(df: DataFrame, key: str, ts_col: str, value_cols: list[str]) -> DataFrame:
-    """Per-key hourly min/max/avg/count — the query graphdata's plots
-    visually answer (SURVEY §2.4 per_node_stats)."""
-    aggs: list[Column] = [F.count("*").alias("n")]
-    for v in value_cols:
-        aggs += [
-            F.avg(v).alias(f"avg_{v}"),
-            F.min(v).alias(f"min_{v}"),
-            F.max(v).alias(f"max_{v}"),
-        ]
-    return (
-        df.groupBy(key, F.window(ts_col, "1 hour").alias("w"))
-        .agg(*aggs)
-        .withColumn("hour_ts", F.col("w.start"))
-        .drop("w")
-    )
 
 
 def asof_join_tolerance(

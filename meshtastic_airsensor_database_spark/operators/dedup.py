@@ -284,8 +284,8 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, content_col: str) -> Data
     return pairs_within_buckets(bands, ["band_idx", "band_hash"], "_id")
 
 
-def build_minhash_index(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
-    """The persistable LSH index of a corpus: ``(doc_id, band_idx,
+def minhash_band_frame(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
+    """The in-memory LSH band frame of a corpus: ``(doc_id, band_idx,
     band_hash)`` rows, one per (document, band).
 
     A continuously-ingesting pipeline computes this ONCE per corpus
@@ -313,7 +313,7 @@ def delta_neardup_pairs(
     corpus×corpus space.
 
     The batch-vs-corpus candidates come from probing the batch's band
-    rows against the corpus LSH index (``build_minhash_index``) with a
+    rows against the corpus LSH band frame (``minhash_band_frame``) with a
     plain equi-join on ``(band_idx, band_hash)`` — when the index is
     persisted bucketed on those keys, only the (small) batch side
     shuffles, and the corpus is never re-read beyond the index.
@@ -332,7 +332,7 @@ def delta_neardup_pairs(
     idx = (
         corpus_index
         if corpus_index is not None
-        else build_minhash_index(corpus, id_col, content_col)
+        else minhash_band_frame(corpus, id_col, content_col)
     )
     old_cands = (
         nb.join(

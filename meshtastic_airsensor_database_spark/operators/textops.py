@@ -1,37 +1,14 @@
 """Document-level text analysis operators (SURVEY.md §2.11 text_analysis).
 
-DataFrame-level wrappers around functions/text.py so pipelines can
-annotate a corpus in one pass: tokens, quality features, language ID,
-fingerprints. All column expressions — one narrow projection, no
-shuffle, trivially parallel at 100 TB.
+DataFrame-level operators over a corpus: the chunking UDTF, vocabulary
+build and encode, and the gram-count passes behind novelty and
+cross-source overlap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..functions.text import (
-    doc_fingerprint_md5,
-    doc_fingerprint_rolling,
-    lang_id_pred,
-    quality_features,
-    token_count,
-)
-
-
-def annotate_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text annotation: token count, quality features,
-    predicted language, content fingerprints."""
-    feats = quality_features(F.col(text_col))
-    return (
-        df.withColumn("n_tokens", token_count(F.col(text_col)))
-        .withColumn("punct_ratio", F.round(feats["punct_ratio"], 4))
-        .withColumn("stopword_ratio", F.round(feats["stopword_ratio"], 4))
-        .withColumn("pred_lang", lang_id_pred(F.col(text_col)))
-        .withColumn("fingerprint", doc_fingerprint_md5(F.col(text_col)))
-        .withColumn("rolling_fingerprint", doc_fingerprint_rolling(F.col(text_col)))
-    )
 
 
 def chunk_doc_udtf(size: int, stride: int):
@@ -76,20 +53,6 @@ def chunk_documents_udtf(
     chunker = chunk_doc_udtf(size, stride)
     return df.lateralJoin(chunker(F.col(text_col).outer())).select(
         id_col, "chunk_idx", "start_tok", "end_tok", "n_chunk_tokens", "chunk_text"
-    )
-
-
-def quality_filter(
-    df: DataFrame,
-    min_tokens: int = 10,
-    max_punct_ratio: float = 0.1,
-    min_stopword_ratio: float = 0.05,
-) -> DataFrame:
-    """Training-data quality gate over an annotated corpus."""
-    return df.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("punct_ratio") < max_punct_ratio)
-        & (F.col("stopword_ratio") >= min_stopword_ratio)
     )
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import f_to_c, tz_suffix_strip, utc_to_pacific
+from ..functions.scalars import tz_suffix_strip, utc_to_pacific
 from ..io_utils import load
 from ..operators.graph import cooccurrence_edges, triangle_counts
 from ..operators.profile import profile_columns
@@ -27,13 +27,12 @@ from ..operators.sketch import (
     hll_rollup_estimate,
 )
 from ..operators.align import (
-    latest_reading_per_node,
     reading_gap_detect,
     rolling_avg,
     sessionize,
     timeseries_align,
 )
-from .base import Query, r
+from .base import Query, r, sql_query
 
 
 # --- flagship: per-node hourly aggregate (SURVEY §7.1 M0) --------------------
@@ -68,13 +67,6 @@ FROM events GROUP BY 1, 2
 
 
 # --- latest reading per node (heartbeat-dict dual, SURVEY §2.5) --------------
-
-def latest_reading(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    latest = latest_reading_per_node(ev, "user_id", "ts", "event_id")
-    return latest.select("user_id", "event_id", "ts", "event_type",
-                         r("value", 2).alias("value"))
-
 
 LATEST_READING_SQL = """
 SELECT user_id, event_id, ts, event_type, CAST(ROUND(CAST(value AS DECIMAL(38,9)), 2) AS DOUBLE) AS value
@@ -378,11 +370,6 @@ FROM events
 
 # --- unit conversion + rounding (SURVEY §2.8 f_to_c, round_cols) --------------
 
-def f_to_c_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return ev.select("event_id", r(f_to_c(F.col("value")), 3).alias("value_c"))
-
-
 F_TO_C_VALUES_SQL = """
 SELECT event_id, CAST(ROUND(CAST((value - 32.0) * 5.0 / 9.0 AS DECIMAL(38,9)), 3) AS DOUBLE) AS value_c
 FROM events
@@ -599,19 +586,6 @@ SELECT event_type,
        COUNT(*) AS n
 FROM events GROUP BY event_type
 """
-
-
-def conditional_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional aggregation per user: count_if + null-skipping
-    conditional average (the CASE WHEN/FILTER family)."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.count_if(F.col("value") > 50).alias("n_high"),
-        F.count_if(F.col("event_type") == "click").alias("n_clicks"),
-        r(F.avg(F.when(F.col("event_type") == "click", F.col("value"))), 2)
-            .alias("avg_click_value"),
-        F.count("*").alias("n"),
-    )
 
 
 CONDITIONAL_EVENT_COUNTS_SQL = """
@@ -853,41 +827,13 @@ def events_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT heavy hitters: users contributing >= 0.75% of all events.
-
-    The hash-checkable twin of ``frequent_event_props`` (freqItems /
-    Karp-Shenker sketch, rows-only): two hash aggregates — a per-key
-    count (map-side partialed) and a single-row grand total broadcast
-    back — with the support test in exact integer arithmetic
-    (``n * 10000 >= total * 75``), so no float threshold can diverge
-    between engines. At 100 TB this is one shuffle on ``user_id`` plus
-    a scalar broadcast; the sketch variant remains the single-pass
-    path when even one per-key pass is too expensive.
-    """
-    ev = load(spark, sf_dir, "events")
-    total = ev.groupBy().agg(F.count("*").cast("bigint").alias("_total"))
-    counts = ev.groupBy("user_id").agg(
-        F.count("*").cast("bigint").alias("n_events")
-    )
-    return (
-        counts.join(F.broadcast(total))
-        .filter(F.col("n_events") * 10000 >= F.col("_total") * 75)
-        .select(
-            "user_id",
-            "n_events",
-            r(F.col("n_events") * 100.0 / F.col("_total"), 4).alias("pct_of_events"),
-        )
-    )
-
-
 HEAVY_HITTER_USERS_SQL = """
 WITH tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS _total FROM events),
 c AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
   FROM events GROUP BY user_id
 )
-SELECT c.user_id, c.n_events,
+SELECT /*+ BROADCAST(tot) */ c.user_id, c.n_events,
        -- force DOUBLE before dividing: the bare literal 100.0 routes
        -- DuckDB through DECIMAL arithmetic while Spark computes in
        -- DOUBLE, which could round differently at a .xxxx5 boundary
@@ -971,44 +917,6 @@ LIMIT 20
 """
 
 
-def skew_key_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join/agg-key skew diagnosis for ``events.user_id`` — the report
-    that decides whether a key needs salting (operators/skew.py) or can
-    rely on AQE's skew-join split: total rows, distinct keys, mean and
-    max per-key cardinality, and the row share of the top-1 / top-10
-    hottest keys.
-
-    Scale shape: one per-key hash aggregate (map-side partialed), one
-    single-row total broadcast, and a TakeOrdered top-10 — the per-key
-    counts never sort globally. Output is one row.
-    """
-    ev = load(spark, sf_dir, "events")
-    counts = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    stats = counts.agg(
-        F.sum("n").cast("long").alias("n_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.max("n").cast("long").alias("max_key_rows"),
-    )
-    top10 = (
-        counts.orderBy(F.col("n").desc(), "user_id")
-        .limit(10)
-        .agg(F.sum("n").cast("long").alias("top10_rows"))
-    )
-    return (
-        stats.crossJoin(F.broadcast(top10))
-        .select(
-            "n_rows",
-            "n_keys",
-            r(F.col("n_rows") * 1.0 / F.col("n_keys"), 4).alias("avg_key_rows"),
-            "max_key_rows",
-            r(F.col("max_key_rows") * 100.0 / F.col("n_rows"), 4).alias("top1_pct"),
-            r(F.col("top10_rows") * 100.0 / F.col("n_rows"), 4).alias("top10_pct"),
-        )
-    )
-
-
 SKEW_KEY_REPORT_SQL = """
 WITH c AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY user_id
@@ -1023,7 +931,7 @@ t AS (
   SELECT CAST(SUM(n) AS BIGINT) AS top10_rows
   FROM (SELECT n FROM c ORDER BY n DESC, user_id LIMIT 10)
 )
-SELECT s.n_rows, s.n_keys,
+SELECT /*+ BROADCAST(t) */ s.n_rows, s.n_keys,
        CAST(ROUND(CAST(CAST(s.n_rows * 1.0 AS DOUBLE) / s.n_keys AS DECIMAL(38,9)), 4) AS DOUBLE) AS avg_key_rows,
        s.max_key_rows,
        CAST(ROUND(CAST(CAST(s.max_key_rows * 100.0 AS DOUBLE) / s.n_rows AS DECIMAL(38,9)), 4) AS DOUBLE) AS top1_pct,
@@ -1117,8 +1025,8 @@ FROM events
 QUERIES: list[Query] = [
     Query("hourly_avg_by_node", hourly_avg_by_node, HOURLY_AVG_BY_NODE_SQL,
           ("per_node_stats", "windowed_ingest"), "flagship per-node hourly stats"),
-    Query("latest_reading_per_node", latest_reading, LATEST_READING_SQL,
-          ("latest_reading_per_node", "last_seen_per_node"), "heartbeat-dict dual"),
+    sql_query("latest_reading_per_node", LATEST_READING_SQL,
+              ("latest_reading_per_node", "last_seen_per_node"), "heartbeat-dict dual"),
     Query("reading_gap_detect", reading_gaps, READING_GAPS_SQL,
           ("reading_gap_detect", "offline_detection"), "batch offline detection"),
     Query("rolling_avg_value", rolling_avg_value, ROLLING_AVG_VALUE_SQL,
@@ -1142,8 +1050,8 @@ QUERIES: list[Query] = [
           ("utc_to_pacific",), "LA-timezone day bucketing"),
     Query("tz_suffix_roundtrip", tz_suffix_roundtrip, TZ_SUFFIX_ROUNDTRIP_SQL,
           ("tz_suffix_strip", "timestamp_parse_coerce"), "suffix strip + coercing parse"),
-    Query("f_to_c_values", f_to_c_values, F_TO_C_VALUES_SQL,
-          ("f_to_c", "round_cols"), "unit conversion + rounding"),
+    sql_query("f_to_c_values", F_TO_C_VALUES_SQL,
+              ("f_to_c", "round_cols"), "unit conversion + rounding"),
     Query("aligned_type_buckets", aligned_type_buckets, ALIGNED_TYPE_BUCKETS_SQL,
           ("timeseries_align", "multi_file_union"), "multi-source time-bucket alignment"),
     Query("outage_episodes", outage_episode_bounds, OUTAGE_EPISODE_BOUNDS_SQL,
@@ -1156,9 +1064,9 @@ QUERIES: list[Query] = [
     Query("value_percentiles_by_type", value_percentiles_by_type,
           VALUE_PERCENTILES_BY_TYPE_SQL, ("per_node_stats",),
           "exact interpolated median/p90 per group"),
-    Query("conditional_event_counts", conditional_event_counts,
-          CONDITIONAL_EVENT_COUNTS_SQL, ("per_node_stats", "packet_type_filter"),
-          "count_if + conditional average per user"),
+    sql_query("conditional_event_counts", CONDITIONAL_EVENT_COUNTS_SQL,
+              ("per_node_stats", "packet_type_filter"),
+              "count_if + conditional average per user"),
     Query("lead_gap_stats", lead_gap_stats, LEAD_GAP_STATS_SQL,
           ("reading_gap_detect",), "lead-window forward gap stats"),
     Query("props_regex_extract", props_regex_extract, PROPS_REGEX_EXTRACT_SQL,
@@ -1179,10 +1087,10 @@ QUERIES: list[Query] = [
           ("approx_distinct_nodes", "windowed_ingest"),
           "incremental distinct via mergeable per-day HLL sketches "
           "(exact-sparse at oracle scale; rsd-bounded beyond)"),
-    Query("heavy_hitter_users", heavy_hitter_users, HEAVY_HITTER_USERS_SQL,
-          ("per_node_stats", "approx_distinct_nodes"),
-          "exact heavy hitters (integer-arithmetic support threshold); "
-          "hash-checkable twin of the freqItems sketch"),
+    sql_query("heavy_hitter_users", HEAVY_HITTER_USERS_SQL,
+              ("per_node_stats", "approx_distinct_nodes"),
+              "exact heavy hitters (integer-arithmetic support threshold); "
+              "hash-checkable twin of the freqItems sketch"),
     Query("pseudonymized_events", pseudonymized_events,
           PSEUDONYMIZED_EVENTS_SQL,
           ("column_projection",),
@@ -1198,8 +1106,8 @@ QUERIES: list[Query] = [
           "count-min-sketch frequency estimates (derandomized md5 "
           "hashes -> the sketch ESTIMATE is hash-checkable) with an "
           "exact-count overestimate audit"),
-    Query("skew_key_report", skew_key_report, SKEW_KEY_REPORT_SQL,
-          ("per_node_stats",),
-          "join-key skew diagnosis: key cardinality + top-1/top-10 "
-          "hot-key row shares (decides salting vs AQE skew split)"),
+    sql_query("skew_key_report", SKEW_KEY_REPORT_SQL,
+              ("per_node_stats",),
+              "join-key skew diagnosis: key cardinality + top-1/top-10 "
+              "hot-key row shares (decides salting vs AQE skew split)"),
 ]

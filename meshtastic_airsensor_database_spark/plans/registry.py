@@ -30,7 +30,7 @@ for _mod in (relational, events, textq, vectorq, streamq, curateq, tsq):
 # (tools/check_correctness.py runs ALL queries); redundant variants of
 # in-window operators (second top-k / grouping / set-op forms, etc.)
 # are what got demoted.
-_DRIVER_WINDOW_R11 = [
+_DRIVER_WINDOW = [
     # Standing policy: {new or changed this round} ∪ {changed since
     # last driver row} ∪ oldest-banked evidence refresh. r11 code
     # changes (erase_key intent marker, compaction broadcast map,
@@ -99,533 +99,9 @@ _DRIVER_WINDOW_R11 = [
     "monthly_order_trend",
     "outage_episodes",
 ]
-_DRIVER_WINDOW_R10 = [
-    # Standing policy: {new or changed this round} ∪ {changed since
-    # last driver row} ∪ oldest-banked evidence refresh. r10 code
-    # changes (quarantine_view max-count delivery pick, landing-file
-    # guard, idempotent JDBC sink, bench sweep-min field) touch NO
-    # registered query's plan — replay_quarantine_counts reads the
-    # quarantine JSON directly, not through quarantine_view — so the
-    # window is the new query plus pure staleness refresh.
-    # -- r10 NEW query: the production-threshold (>=0.9) semantic
-    # decontamination tier (r9 verdict #4) earns its driver row first
-    "semantic_contaminated_evals_strict",
-    # -- the 7 deferred r4-banked rows (queued by the r9 rotation
-    # comment; their only driver evidence is r4)
-    "m4_downsample",
-    "props_variant_extract",
-    "seasonal_anomaly_flags",
-    "table_checksum_report",
-    "token_drift_psi",
-    "type_corr_matrix",
-    "winsorized_value_stats",
-    # -- the full r5-banked tier (28 rows, latest driver evidence r5;
-    # includes dau_wau_stickiness, whose r9 bench flag gets a fresh
-    # correctness row alongside the adjudication)
-    "ab_welch_test",
-    "ann_pq_topk",
-    "benford_digit_audit",
-    "bootstrap_value_ci",
-    "conversion_latency_stats",
-    "corpus_data_card",
-    "dau_wau_stickiness",
-    "debounced_events",
-    "embedding_corr_pairs",
-    "ffd_bin_packing",
-    "hyperplane_lsh_bucket_sizes",
-    "incremental_cms_users",
-    "linear_attribution",
-    "mannwhitney_value_test",
-    "minhash_jaccard_calibration",
-    "nearest_centroid_confusion",
-    "oov_rate_by_source",
-    "orders_per_customer_histogram",
-    "pii_redacted_docs",
-    "pseudonymized_events",
-    "quantized_topk_cosine",
-    "retrieval_rank_overlap",
-    "rolling_fingerprints",
-    "sentiment_by_source",
-    "span_deduped_docs",
-    "sparse_tf_cosine_pairs",
-    "top_session_paths",
-    "type_hour_chi2",
-    # -- 14 of the 38 r6-banked rows (alphabetical; the remaining 24
-    # lead the r11 queue)
-    "ann_ivf_topk",
-    "ann_kmeans_ivf_topk",
-    "bm25_topk_docs",
-    "bpe_encode_compression",
-    "bpe_learned_merges",
-    "ccnet_perplexity_buckets",
-    "cohort_retention",
-    "doc_novelty_scores",
-    "dsir_sampled_docs",
-    "embedding_batch_topk",
-    "embedding_neardup_pairs",
-    "embedding_topk_cosine",
-    "fuzzy_name_matches",
-    "hard_negatives_topk",
-]
-_DRIVER_WINDOW_R9 = [
-    # Standing policy: {new or changed this round} ∪ {changed since
-    # last driver row} ∪ oldest-banked evidence refresh.
-    # -- r9 streaming blast radius: maintain_rollup was restructured
-    # (null-ts exclusion, literal-partition-dir merge read, one-job
-    # dynamic overwrite via the writer option) and process_packet_batch
-    # gained the mixed-ts dedup anti-join + pooled job-group
-    # propagation — every query replaying the batch core or
-    # maintaining/reading a rollup re-records under the new code.
-    "replay_route_counts",
-    "replay_env_enriched",
-    "replay_battery_enriched",
-    "replay_v1_env",
-    "replay_quarantine_counts",
-    "replay_late_dedup",
-    "replay_dim_history",
-    "replay_env_hourly_rollup",
-    "replay_stream_join",
-    "replay_env_asof_names",
-    "incremental_rollup_hourly",
-    "daily_rollup_from_hourly",
-    "incremental_distinct_hourly",
-    # -- the 16 r3-banked rows queued by the r8 rotation comment (their
-    # only driver evidence was r3)
-    "interval_event_stats",
-    "lang_quota_sample",
-    "neardup_components",
-    "neardup_pagerank",
-    "normalized_dedup_docs",
-    "rag_chunk_spans",
-    "salted_brand_quantities",
-    "seasonal_naive_skill",
-    "sliding_hourly_load",
-    "temperature_mix_sample",
-    "user_copresence_triangles",
-    "value_acf_by_type",
-    "value_drift_cusum",
-    "value_histogram",
-    "value_outliers_mad",
-    "vocab_encoded_docs",
-    # -- the 6 rows-only entries that have NEVER had a driver row of
-    # any kind (stalest evidence in the ledger — the driver records
-    # the weaker rows-only check for them; their exact oracle-backed
-    # siblings carry the value-level evidence)
-    "image_neardup_pairs",
-    "embedding_pca_coords",
-    "approx_distinct_users",
-    "approx_value_percentiles",
-    "frequent_event_props",
-    "ml_minhash_neardups",
-    # -- r9 NEW query: semantic eval-set decontamination (LSH-pruned
-    # eval x train cosine with an exact mirrored twin) — new work earns
-    # its driver row first; its slot came from props_variant_extract
-    # (r4-green; the props family stays via props_regex_extract, r8
-    # green, and it joins the r10 queue)
-    "semantic_contaminated_evals",
-    # -- evidence refresh: 14 of the 21 r4-banked rows (the remaining
-    # 7 — m4_downsample, props_variant_extract, seasonal_anomaly_flags,
-    # table_checksum_report, token_drift_psi, type_corr_matrix,
-    # winsorized_value_stats — have an in-window family sibling this
-    # round and lead the r10 queue)
-    "bigram_pmi_topk",
-    "cluster_quality_metrics",
-    "cms_heavy_hitters",
-    "event_transition_matrix",
-    "events_column_profile",
-    "rollup_quantile_estimate",
-    "seasonal_decomposition",
-    "skew_key_report",
-    "table_constraint_report",
-    "time_weighted_avg",
-    "unpivot_metric_stats",
-    "value_ks_drift",
-    "vocab_growth_by_source",
-    "zipf_token_slope",
-]
-_DRIVER_WINDOW_R8 = [
-    # Standing policy: {new or changed this round} ∪ {changed since
-    # last driver row} ∪ oldest-banked evidence refresh.
-    # -- r8 streaming blast radius: process_packet_batch was
-    # restructured again (stats job now also collects v0 event dates,
-    # dim upsert is a single staged write, sinks run concurrently) and
-    # maintain_rollup gained the affected_dates 2-job path + the
-    # observed-metric date collect — every query that replays the
-    # batch core or maintains/reads a rollup re-records under it.
-    "replay_route_counts",
-    "replay_env_enriched",
-    "replay_battery_enriched",
-    "replay_v1_env",
-    "replay_quarantine_counts",
-    "replay_late_dedup",
-    "replay_dim_history",
-    "replay_env_hourly_rollup",
-    "replay_stream_join",
-    "replay_env_asof_names",
-    "incremental_rollup_hourly",
-    "daily_rollup_from_hourly",
-    "incremental_distinct_hourly",
-    # -- evidence refresh, stalest tier first: ALL 24 queries whose
-    # only driver row is r2 (the ledger's oldest green evidence) ...
-    "bpe_token_stats",
-    "conditional_event_counts",
-    "cube_orders",
-    "customers_without_urgent_orders",
-    "distinct_mktsegments",
-    "doc_fingerprints",
-    "doc_split_assignment",
-    "lang_id_confusion",
-    "lead_gap_stats",
-    "nation_keys_except",
-    "nation_keys_intersect",
-    "order_value_quartiles",
-    "pii_scan",
-    "priority_multiset_intersect",
-    "priority_order_extremes",
-    "props_regex_extract",
-    "session_counts",
-    "term_df_topk",
-    "token_stats_by_lang",
-    "top3_orders_per_segment",
-    "top_orders_by_revenue",
-    "topk_expensive_orders",
-    "user_value_trend",
-    "value_percentiles_by_type",
-    # -- ... and the first 13 (alphabetical) of the 29 r3-banked rows;
-    # the remaining 16 are the r9 rotation queue (asof/bpe/chunk/
-    # curation/dedup/timeseries family spread).
-    "asof_view_within_tolerance",
-    "bpe_merge_candidates",
-    "chunk_pack_spans",
-    "contaminated_eval_docs",
-    "curation_funnel",
-    "delta_neardup_pairs",
-    "doc_perplexity",
-    "doc_repetition_signals",
-    "dup_span_stats",
-    "ewma_value_smooth",
-    "funnel_conversion",
-    "gapfill_value_grid",
-    "heavy_hitter_users",
-]
-_DRIVER_WINDOW_R7 = [
-    # Standing policy: {new or changed this round} ∪ {changed since
-    # last driver row} ∪ oldest-banked evidence refresh.
-    # -- r7 new/changed oracles: pca_explained_variance gained an exact
-    # twin (top-2 Rayleigh spectrum over the trace; rows-only 7 -> 6);
-    # the two-ladder SQL body was refactored to carry n_vecs; the four
-    # LSH-cap twins now interpolate MAX_BUCKET instead of a literal;
-    # the exact-multimodal synths were refactored to id-frame inputs.
-    "pca_explained_variance",
-    "pca_power_coords",
-    "linreg_token_diversity",
-    "logreg_quality_gd",
-    "pca_power_two_components",
-    "pca_power_component",
-    "minhash_neardup_candidates",
-    "cross_shard_neardup_probe",
-    "embedding_lsh_neardup_pairs",
-    "image_neardup_pairs_exact",
-    "audio_fingerprint_exact",
-    # -- streaming blast radius: process_packet_batch was restructured
-    # this round (single stats job, skip-empty routes, batch-width
-    # coalesce, direct dim overwrite) and maintain_rollup now
-    # checkpoints partials first — every query that replays the batch
-    # core or maintains/reads a rollup re-records under the new code.
-    "replay_route_counts",
-    "replay_env_enriched",
-    "replay_battery_enriched",
-    "replay_v1_env",
-    "replay_quarantine_counts",
-    "replay_late_dedup",
-    "replay_dim_history",
-    "replay_env_hourly_rollup",
-    "replay_stream_join",
-    "replay_env_asof_names",
-    "incremental_rollup_hourly",
-    "daily_rollup_from_hourly",
-    "incremental_distinct_hourly",
-    # -- evidence refresh: the only three r1-banked rows left...
-    "char_jaccard_neardup_pairs",
-    "embedding_norms",
-    "jaccard_neardup_pairs",
-    # -- ...and 26 of the r2-banked rows (5 named by the r6 verdict
-    # first), one per family where possible; the rest of the r2 bank
-    # rotates into r8.
-    "pacific_daily_counts",
-    "epoch_roundtrip",
-    "f_to_c_values",
-    "tz_suffix_roundtrip",
-    "union_order_slices",
-    "aligned_type_buckets",
-    "asof_latest_view_value",
-    "exact_dedup_docs",
-    "fact_dim_join",
-    "hourly_avg_by_node",
-    "latest_reading_per_node",
-    "reading_gap_detect",
-    "rolling_avg_value",
-    "props_json_extract",
-    "quality_scores",
-    "grouping_sets_revenue",
-    "outage_episodes",
-    "region_supplier_revenue",
-    "rollup_lineitem",
-    "monthly_order_trend",
-    "customers_with_urgent_orders",
-    "parts_above_avg_price",
-    "pivot_priority_by_status",
-]
-_DRIVER_WINDOW_R6 = [
-    # Standing policy (r5 verdict): window = {queries new or changed
-    # this round} ∪ {queries whose plan changed since their last driver
-    # row} ∪ one long-green representative per SURVEY §2 family.
-    # -- r6 new/changed oracles: the BPE loop twinned via unrolled
-    # recursive-style CTEs (rows-only -> exact), and the two LSH twins
-    # that now mirror the MAX_BUCKET degenerate-bucket cap; simhash's
-    # builder was refactored into a reusable frame function.
-    "bpe_learned_merges",
-    "bpe_encode_compression",
-    "minhash_neardup_candidates",
-    "embedding_lsh_neardup_pairs",
-    "simhash_dedup_buckets",
-    # -- ordered-stats consumers: the Arrow cumsum kernel gained the
-    # null-fill fix this round (operators/ordered.py), so every query
-    # planning through it re-records under the current kernel.
-    "pareto_user_share",
-    "token_budget_selection",
-    "rfm_segments",
-    "line_numbering",
-    # -- r5-changed-but-unwindowed (the whole vectorq/curateq/tsq blast
-    # radius the r5 verdict re-swept locally): their LATEST code gets a
-    # driver row, not just the r3/r4 snapshot of it.
-    "embedding_topk_cosine",
-    "embedding_batch_topk",
-    "semantic_dedup_pairs",
-    "hybrid_search_rrf",
-    "hard_negatives_topk",
-    "standardized_embedding_probe",
-    "embedding_neardup_pairs",
-    "hll_distinct_users_rollup",
-    "ccnet_perplexity_buckets",
-    "dsir_sampled_docs",
-    "split_leakage_report",
-    "weighted_quality_sample",
-    "length_grouped_batches",
-    "ann_ivf_topk",
-    "mmr_diversified_topk",
-    "pricing_summary",
-    "value_equidepth_bins",
-    "doc_novelty_scores",
-    "tfidf_top_terms",
-    # (hourly_avg_by_node also changed in r5 but is the flagship: the
-    # driver smoke-checks entry() separately every round.)
-    # -- long-green family representatives (same core as r4/r5:
-    # streaming replay + late data + SCD2, LSH verify, multimodal,
-    # entity resolution, quarantine, rollup routing, sketch, retrieval,
-    # trained ANN, session windows, dedup survivor, CDC, set join).
-    "replay_late_dedup",
-    "replay_dim_history",
-    "minhash_verified_neardups",
-    "multimodal_binary_meta",
-    "fuzzy_name_matches",
-    "replay_quarantine_counts",
-    "daily_rollup_from_hourly",
-    "incremental_distinct_hourly",
-    "bm25_topk_docs",
-    "ann_kmeans_ivf_topk",
-    "session_window_stats",
-    "quality_survivor_docs",
-    "snapshot_diff_customers",
-    "prefix_jaccard_neardups",
-    "source_overlap_jaccard",
-    # -- evidence refresh: oldest banked rows (last driver-checked r4),
-    # one per family, so no green row goes stale beyond two rounds.
-    "cohort_retention",
-    "last_touch_attribution",
-    # -- r6 NEW queries: the oracle-exact image near-dup (md5 pixels +
-    # integer aHash; PPM roundtrip hash-pinned cross-engine), its WAV
-    # sibling (integer audio features over the codec roundtrip), the
-    # power-iteration PCA twin (derandomized sibling of eigh), and the
-    # incremental-dedup probe (query mirror of operators/dedup_index).
-    "image_neardup_pairs_exact",
-    "audio_fingerprint_exact",
-    "pca_power_component",
-    "pca_power_two_components",
-    "cross_shard_neardup_probe",
-]
-_DRIVER_WINDOW_R5 = [
-    # -- the 22 oracle-green queries that have NEVER had a driver row
-    # (the r4 verdict's top ask: after r5 records green, every
-    # registered query has driver evidence at least once).
-    "sentiment_by_source",
-    "span_deduped_docs",
-    "ab_welch_test",
-    "bootstrap_value_ci",
-    "orders_per_customer_histogram",
-    "linear_attribution",
-    "dau_wau_stickiness",
-    "pareto_user_share",
-    "type_hour_chi2",
-    "mannwhitney_value_test",
-    "nearest_centroid_confusion",
-    "top_session_paths",
-    "embedding_corr_pairs",
-    "corpus_data_card",
-    "conversion_latency_stats",
-    "rfm_segments",
-    "incremental_cms_users",
-    "sparse_tf_cosine_pairs",
-    "token_budget_selection",
-    "benford_digit_audit",
-    "retrieval_rank_overlap",
-    "rolling_fingerprints",
-    # -- r5 upgrades: four queries converted from rows-only to exact
-    # twins (derandomized md5 simhash / LSH planes, recursive-CTE FFD
-    # replay) — their first oracle-checked driver rows.
-    "simhash_dedup_buckets",
-    "hyperplane_lsh_bucket_sizes",
-    "embedding_lsh_neardup_pairs",
-    "ffd_bin_packing",
-    "ann_pq_topk",
-    # -- r5 NEW queries (MinHash estimator calibration on the md5
-    # basis, per-key time-window debounce, tokenizer OOV coverage,
-    # planted-PII redaction, salted pseudonymization) and the md5-basis
-    # candidates upgrade.
-    "minhash_jaccard_calibration",
-    "debounced_events",
-    "oov_rate_by_source",
-    "pii_redacted_docs",
-    "pseudonymized_events",
-    "minhash_neardup_candidates",
-    # -- re-record under CHANGED r5 plans: line_numbering's ranged
-    # frame is now localCheckpoint-pinned (the r4 ADVICE boundary-drift
-    # fix); quantized_topk_cosine moved to the mapInArrow kernel.
-    "line_numbering",
-    "quantized_topk_cosine",
-    # -- long-green family representatives (same five as r4: streaming
-    # replay + watermark late data + SCD2, LSH verify, multimodal,
-    # entity resolution) ...
-    "replay_late_dedup",
-    "replay_dim_history",
-    "minhash_verified_neardups",
-    "multimodal_binary_meta",
-    "fuzzy_name_matches",
-    # -- ... plus one r4-green rep per remaining family so every SURVEY
-    # §2 family keeps a fresh row: quarantine, rollup routing, sketch,
-    # retrieval (x2), trained ANN, session windows, dedup survivor,
-    # CDC, set join, downsample, product analytics, text stats.
-    "replay_quarantine_counts",
-    "daily_rollup_from_hourly",
-    "incremental_distinct_hourly",
-    "bm25_topk_docs",
-    "ann_kmeans_ivf_topk",
-    "session_window_stats",
-    "quality_survivor_docs",
-    "snapshot_diff_customers",
-    "prefix_jaccard_neardups",
-    "source_overlap_jaccard",
-]
-_DRIVER_WINDOW_R4 = [
-    # -- round-4 first: every oracle-backed query that has NEVER had a
-    # driver-recorded row (the r3 verdict's top ask — after this round
-    # records green, all 127 oracle-backed queries will have driver
-    # evidence), plus the two ANN queries newly upgraded from rows-only
-    # to exact twins, plus line_numbering to RE-record under its new
-    # partition-offset plan (the r3 perf-weak fix).
-    "ann_ivf_topk",
-    "ann_kmeans_ivf_topk",
-    "line_numbering",
-    "bigram_pmi_topk",
-    "bm25_topk_docs",
-    "cohort_retention",
-    "daily_rollup_from_hourly",
-    "embedding_neardup_pairs",
-    "event_transition_matrix",
-    "events_column_profile",
-    "incremental_distinct_hourly",
-    "last_touch_attribution",
-    "m4_downsample",
-    "prefix_jaccard_neardups",
-    "props_variant_extract",
-    "replay_quarantine_counts",
-    "rollup_quantile_estimate",
-    "snapshot_diff_customers",
-    "standardized_embedding_probe",
-    "table_constraint_report",
-    "time_weighted_avg",
-    "token_drift_psi",
-    "type_corr_matrix",
-    "unpivot_metric_stats",
-    "value_equidepth_bins",
-    "value_ks_drift",
-    "winsorized_value_stats",
-    "zipf_token_slope",
-    # -- round-4 NEW queries (never driver-checked, added this round):
-    # quality-aware dedup survivor selection, near-dup split-leakage
-    # audit, per-source vocabulary growth.
-    "quality_survivor_docs",
-    "split_leakage_report",
-    "vocab_growth_by_source",
-    "session_window_stats",
-    "weighted_quality_sample",
-    "seasonal_decomposition",
-    "tfidf_top_terms",
-    "seasonal_anomaly_flags",
-    "ccnet_perplexity_buckets",
-    "length_grouped_batches",
-    # -- added late in round 4: count-min-sketch frequency audit,
-    # per-doc corpus novelty, cross-source shingle-overlap matrix.
-    # Their three slots came from hourly_avg_by_node (the flagship —
-    # the driver smoke-checks entry() separately every round and it is
-    # benched), normalized_dedup_docs and salted_brand_quantities (both
-    # r3 driver-green; dedup stays in-window via minhash_verified_
-    # neardups + neardup_components + quality_survivor_docs, skew via
-    # the bench entry).
-    "cms_heavy_hitters",
-    "doc_novelty_scores",
-    "source_overlap_jaccard",
-    # -- and the retrieval/eval pair that followed: MMR diversity
-    # re-rank + per-label cluster-quality report. Slots from
-    # fact_dim_join (r3 green; joins stay via asof_view_within_
-    # tolerance + replay_dim_history) and contaminated_eval_docs (r3
-    # green; curation stays via split_leakage_report + ccnet +
-    # length_grouped_batches, and it stays benched).
-    "mmr_diversified_topk",
-    "cluster_quality_metrics",
-    # -- and the ops pair: cross-engine table checksums + join-key skew
-    # diagnosis. Slots from neardup_components and
-    # asof_view_within_tolerance (both r3 driver-green; dedup stays via
-    # minhash_verified_neardups + quality_survivor_docs, as-of/replay
-    # via replay_late_dedup + replay_dim_history).
-    "table_checksum_report",
-    "skew_key_report",
-    # -- long-green representatives keeping the remaining SURVEY §2
-    # families in-window (streaming replay core + watermark late-data
-    # + SCD2 + as-of, LSH dedup verify, multimodal, graph, entity).
-    "replay_late_dedup",
-    "replay_dim_history",
-    "minhash_verified_neardups",
-    "multimodal_binary_meta",
-    "fuzzy_name_matches",
-]
-# r6 rotation rationale: CORRECTNESS_r05 recorded the whole r5 window
-# green (50/50), closing the evidence ledger — every registered query
-# now has at least one green driver row. From r6 the standing policy
-# applies: window = {new/changed this round} ∪ {changed since last
-# driver row} ∪ family reps ∪ the oldest banked rows as refresh.
-# Rotation pool (green, banked, rotate back in when their plans
-# change): everything in _DRIVER_WINDOW_R5/_R4 not in _R6.
-# r12 rotation queue: the 15 r7-banked rows deferred this round
-# (pacific_daily_counts, parts_above_avg_price, pca_explained_variance,
-# pca_power_component, pca_power_coords, pca_power_two_components,
-# pivot_priority_by_status, props_json_extract, quality_scores,
-# reading_gap_detect, region_supplier_revenue, rolling_avg_value,
-# rollup_lineitem, tz_suffix_roundtrip, union_order_slices), then the
-# r8-banked tier (37 rows), plus anything new/changed in r12. After
-# r11 the staleness floor is r7 and every registered query has a
-# green driver row at r4+.
-_DRIVER_WINDOW = _DRIVER_WINDOW_R11
+# Rotation: each round's window is {new or changed queries} ∪ {changed
+# since their last driver row} ∪ the oldest-banked green rows. Earlier
+# windows are in git history; next in queue are the 15 deferred r7 rows.
 assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)
 assert len(set(_DRIVER_WINDOW)) == 50
 _missing = [n for n in _DRIVER_WINDOW if n not in REGISTRY]

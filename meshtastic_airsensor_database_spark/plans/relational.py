@@ -19,31 +19,10 @@ from pyspark.sql import functions as F
 
 from ..io_utils import load
 from ..operators.entity import blocked_fuzzy_match
-from .base import Query, r
+from .base import Query, r, sql_query
 
 
 # --- Q1-style pricing summary (agg showcase: 8 aggregates, 2 keys) ---------
-
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.4 per_node_stats generalization — hash agg w/ partials."""
-    li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            r(F.sum("l_quantity"), 2).alias("sum_qty"),
-            r(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            r(F.sum(disc_price), 2).alias("sum_disc_price"),
-            r(F.sum(charge), 2).alias("sum_charge"),
-            r(F.avg("l_quantity"), 2).alias("avg_qty"),
-            r(F.avg("l_extendedprice"), 2).alias("avg_price"),
-            r(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
 
 PRICING_SUMMARY_SQL = """
 SELECT l_returnflag, l_linestatus,
@@ -63,27 +42,8 @@ GROUP BY l_returnflag, l_linestatus
 
 # --- Q3-style: 3-way join + agg + deterministic top-k -----------------------
 
-def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    revenue = r(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(revenue.alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
 TOP_ORDERS_BY_REVENUE_SQL = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
+SELECT /*+ BROADCAST(customer) */ o_orderkey, o_orderdate, o_orderpriority,
        CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount)) AS DECIMAL(38,9)), 2) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
@@ -99,36 +59,8 @@ LIMIT 10
 
 # --- Q5-style: 6-way join through the star schema ---------------------------
 
-def region_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer and supplier must share a nation — classic 6-way equi-join.
-
-    Dimensions (region/nation/supplier/customer) are broadcast; only
-    lineitem x orders shuffles, on the join key.
-    """
-    region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = load(spark, sf_dir, "nation")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    li = load(spark, sf_dir, "lineitem")
-    revenue = r(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .filter(cust.c_nationkey == supp.s_nationkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(revenue.alias("revenue"))
-    )
-
-
 REGION_SUPPLIER_REVENUE_SQL = """
-SELECT n_name, CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount)) AS DECIMAL(38,9)), 2) AS DOUBLE) AS revenue
+SELECT /*+ BROADCAST(customer, supplier, nation, region) */ n_name, CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount)) AS DECIMAL(38,9)), 2) AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -144,27 +76,8 @@ GROUP BY n_name
 
 # --- fact -> dim snowflake enrich (node_dim_enrich generalization) ----------
 
-def fact_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.3 node_dim_enrich: left broadcast join through 3 dims."""
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    region = load(spark, sf_dir, "region")
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey, "left")
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "left")
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey, "left")
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            r(F.sum("o_totalprice"), 2).alias("total_price"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-        )
-    )
-
-
 FACT_DIM_JOIN_SQL = """
-SELECT r_name,
+SELECT /*+ BROADCAST(customer, nation, region) */ r_name,
        COUNT(*) AS n_orders,
        CAST(ROUND(CAST(SUM(o_totalprice) AS DECIMAL(38,9)), 2) AS DOUBLE) AS total_price,
        COUNT(DISTINCT o_custkey) AS n_customers
@@ -198,17 +111,6 @@ GROUP BY c_nationkey
 """
 
 
-def customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT ANTI (NOT EXISTS) — customers with no URGENT order, per nation."""
-    cust = load(spark, sf_dir, "customer")
-    urgent = load(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        cust.join(urgent, cust.c_custkey == urgent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
 CUSTOMERS_WITHOUT_URGENT_ORDERS_SQL = """
 SELECT c_nationkey, COUNT(*) AS n_customers
 FROM customer
@@ -220,13 +122,6 @@ GROUP BY c_nationkey
 
 # --- set operations (SURVEY §2.7) -------------------------------------------
 
-def nation_keys_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT: nations having both customers and suppliers."""
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s)
-
-
 NATION_KEYS_INTERSECT_SQL = """
 SELECT c_nationkey AS nationkey FROM customer
 INTERSECT
@@ -234,31 +129,11 @@ SELECT s_nationkey AS nationkey FROM supplier
 """
 
 
-def nation_keys_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT: nations with customers but no suppliers."""
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.subtract(s)  # EXCEPT (distinct) semantics, matching the SQL
-
-
 NATION_KEYS_EXCEPT_SQL = """
 SELECT c_nationkey AS nationkey FROM customer
 EXCEPT
 SELECT s_nationkey AS nationkey FROM supplier
 """
-
-
-def union_order_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.7 multi_file_union: two same-schema slices unioned, then
-    aggregated (the pd.concat pattern, cleandata.py:11-19)."""
-    orders = load(spark, sf_dir, "orders")
-    hi = orders.filter(F.col("o_totalprice") >= 200000).select("o_orderstatus", "o_totalprice")
-    lo = orders.filter(F.col("o_totalprice") < 50000).select("o_orderstatus", "o_totalprice")
-    return (
-        hi.unionByName(lo)
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"), r(F.avg("o_totalprice"), 2).alias("avg_price"))
-    )
 
 
 UNION_ORDER_SLICES_SQL = """
@@ -274,25 +149,12 @@ FROM u GROUP BY o_orderstatus
 
 # --- grouping variants: rollup / cube / pivot --------------------------------
 
-def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        r(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.count("*").alias("n"),
-    )
-
-
 ROLLUP_LINEITEM_SQL = """
 SELECT l_returnflag, l_linestatus,
        CAST(ROUND(CAST(SUM(l_quantity) AS DECIMAL(38,9)), 2) AS DOUBLE) AS sum_qty, COUNT(*) AS n
 FROM lineitem
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
-
-
-def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(F.count("*").alias("n"))
 
 
 CUBE_ORDERS_SQL = """
@@ -330,52 +192,20 @@ FROM orders GROUP BY o_orderstatus
 
 # --- sorts / top-k / distinct -------------------------------------------------
 
-def topk_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orderBy+limit -> TakeOrderedAndProject (SURVEY §2.6)."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(25)
-    )
-
-
 TOPK_EXPENSIVE_ORDERS_SQL = """
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25
 """
 
 
-def top3_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank window per group: top-3 orders by price within each market
-    segment (dense ranking family; complements row_number/lag/range
-    windows elsewhere). Broadcast dim join, then ONE window sort
-    partitioned by segment."""
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .withColumn("rank_in_segment", F.rank().over(w))
-        .filter(F.col("rank_in_segment") <= 3)
-        .select("c_mktsegment", "rank_in_segment", "o_orderkey", "o_totalprice")
-    )
-
-
 TOP3_ORDERS_PER_SEGMENT_SQL = """
 SELECT c_mktsegment, rank_in_segment, o_orderkey, o_totalprice
-FROM (SELECT c_mktsegment, o_orderkey, o_totalprice,
+FROM (SELECT /*+ BROADCAST(customer) */ c_mktsegment, o_orderkey, o_totalprice,
              RANK() OVER (PARTITION BY c_mktsegment
                           ORDER BY o_totalprice DESC, o_orderkey) AS rank_in_segment
       FROM orders JOIN customer ON o_custkey = c_custkey)
 WHERE rank_in_segment <= 3
 """
-
-
-def distinct_mktsegments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load(spark, sf_dir, "customer").select("c_mktsegment").distinct()
 
 
 DISTINCT_MKTSEGMENTS_SQL = "SELECT DISTINCT c_mktsegment FROM customer"
@@ -446,20 +276,6 @@ FROM documents
 """
 
 
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (beyond rollup/cube): per (flag, status),
-    per flag, and grand total in one pass — Catalyst expands to a
-    single Expand + hash aggregate (one shuffle, partial combine)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    return spark.sql("""
-        SELECT l_returnflag, l_linestatus,
-               CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount)) AS DECIMAL(38,9)), 2) AS DOUBLE) AS revenue,
-               COUNT(*) AS n
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-    """)
-
-
 GROUPING_SETS_REVENUE_SQL = """
 SELECT l_returnflag, l_linestatus,
        CAST(ROUND(CAST(SUM(l_extendedprice * (1 - l_discount)) AS DECIMAL(38,9)), 2) AS DOUBLE) AS revenue,
@@ -492,18 +308,6 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
-def monthly_order_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """date_trunc('month') time-bucketed trend (SURVEY §2.8 date
-    functions as a declared query)."""
-    orders = load(spark, sf_dir, "orders")
-    return orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("month")
-    ).agg(
-        F.count("*").alias("n_orders"),
-        r(F.sum("o_totalprice"), 2).alias("total_price"),
-    )
-
-
 MONTHLY_ORDER_TREND_SQL = """
 SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
        COUNT(*) AS n_orders,
@@ -512,39 +316,11 @@ FROM orders GROUP BY 1
 """
 
 
-def parts_above_avg_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-subquery predicate: parts priced above the global average
-    (Catalyst plans the subquery as a one-row broadcast)."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_sq")
-    return spark.sql("""
-        SELECT p_partkey, p_brand, p_retailprice
-        FROM part_sq
-        WHERE p_retailprice > (SELECT AVG(p_retailprice) FROM part_sq)
-    """)
-
-
 PARTS_ABOVE_AVG_PRICE_SQL = """
 SELECT p_partkey, p_brand, p_retailprice
 FROM part
 WHERE p_retailprice > (SELECT AVG(p_retailprice) FROM part)
 """
-
-
-def priority_multiset_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL / EXCEPT ALL (multiplicity-preserving set ops,
-    completing §2.7's intersect/except pair), aggregated to counts so
-    the result is compact: how many priority occurrences the 'O' and
-    'F' order populations share, and how many are 'O'-only."""
-    orders = load(spark, sf_dir, "orders")
-    o = orders.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
-    f = orders.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    both = o.intersectAll(f).groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_shared")
-    )
-    only_o = o.exceptAll(f).groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_only_open")
-    )
-    return both.join(only_o, "o_orderpriority", "full").na.fill(0)
 
 
 PRIORITY_MULTISET_INTERSECT_SQL = """
@@ -561,24 +337,6 @@ SELECT COALESCE(b.o_orderpriority, x.o_orderpriority) AS o_orderpriority,
        COALESCE(n_only_open, 0) AS n_only_open
 FROM both_ms b FULL JOIN only_o x USING (o_orderpriority)
 """
-
-
-def order_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NTILE quartiles within each priority (ranking-window family
-    beyond rank/row_number), aggregated to per-quartile stats."""
-    orders = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice"), F.col("o_orderkey")
-    )
-    return (
-        orders.withColumn("quartile", F.ntile(4).over(w))
-        .groupBy("o_orderpriority", "quartile")
-        .agg(
-            F.count("*").alias("n"),
-            r(F.min("o_totalprice"), 2).alias("min_price"),
-            r(F.max("o_totalprice"), 2).alias("max_price"),
-        )
-    )
 
 
 ORDER_VALUE_QUARTILES_SQL = """
@@ -736,36 +494,6 @@ GROUP BY metric
 
 SNAP_OLD_BEFORE = "1996-01-01 00:00:00"
 SNAP_NEW_FROM = "1994-01-01 00:00:00"
-
-
-def snapshot_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reconcile two snapshot versions of a per-customer order summary
-    (overlapping date windows, so all four statuses occur): one full
-    outer equi-join on the key, null-safe column comparison in codegen
-    (operators/cdc.py). The "what changed since yesterday's run"
-    question as a declared, oracle-checked query.
-    """
-    from ..operators.cdc import snapshot_diff
-
-    orders = load(spark, sf_dir, "orders")
-
-    def summarize(df: DataFrame) -> DataFrame:
-        return df.groupBy("o_custkey").agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            r(F.sum("o_totalprice"), 2).alias("total"),
-        )
-
-    old = summarize(
-        orders.filter(
-            F.col("o_orderdate") < F.lit(SNAP_OLD_BEFORE).cast("timestamp")
-        )
-    )
-    new = summarize(
-        orders.filter(
-            F.col("o_orderdate") >= F.lit(SNAP_NEW_FROM).cast("timestamp")
-        )
-    )
-    return snapshot_diff(old, new, ["o_custkey"], ["n_orders", "total"])
 
 
 SNAPSHOT_DIFF_CUSTOMERS_SQL = f"""
@@ -1033,33 +761,6 @@ FROM g
 # --- count-of-counts distribution (TPC-H Q13 shape) ---------------------------
 
 
-def orders_per_customer_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution of customers by how many (non-LOW-priority) orders
-    they placed, INCLUDING the zero-order customers — the TPC-H Q13
-    shape (left join against a filtered fact, then a count-of-counts
-    re-aggregation).
-
-    Scale shape: the fact side aggregates to per-customer counts
-    BEFORE the join (the exchange carries |customers-with-orders|
-    rows, never raw orders), the left join is key-to-key on custkey,
-    and the final histogram agg is |distinct counts| wide. No window,
-    no skew risk beyond the custkey hash.
-    """
-    cust = load(spark, sf_dir, "customer").select("c_custkey")
-    per = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "5-LOW")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        cust.join(per, cust.c_custkey == per.o_custkey, "left")
-        .select(F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count("*").cast("long").alias("custdist"))
-    )
-
-
 ORDERS_PER_CUSTOMER_HISTOGRAM_SQL = """
 WITH per AS (
   SELECT o_custkey, COUNT(*) AS n
@@ -1075,52 +776,52 @@ GROUP BY 1
 
 
 QUERIES: list[Query] = [
-    Query("pricing_summary", pricing_summary, PRICING_SUMMARY_SQL,
-          ("per_node_stats", "column_projection"), "TPC-H Q1-style 8-agg hash aggregate"),
-    Query("top_orders_by_revenue", top_orders_by_revenue, TOP_ORDERS_BY_REVENUE_SQL,
-          ("fact_dim_join", "time_sort"), "3-way join + agg + deterministic top-k"),
-    Query("region_supplier_revenue", region_supplier_revenue, REGION_SUPPLIER_REVENUE_SQL,
-          ("node_dim_enrich",), "6-way snowflake join, dims broadcast"),
-    Query("fact_dim_join", fact_dim_join, FACT_DIM_JOIN_SQL,
-          ("node_dim_enrich",), "left broadcast enrich through 3 dims + agg"),
+    sql_query("pricing_summary", PRICING_SUMMARY_SQL,
+              ("per_node_stats", "column_projection"), "TPC-H Q1-style 8-agg hash aggregate"),
+    sql_query("top_orders_by_revenue", TOP_ORDERS_BY_REVENUE_SQL,
+              ("fact_dim_join", "time_sort"), "3-way join + agg + deterministic top-k"),
+    sql_query("region_supplier_revenue", REGION_SUPPLIER_REVENUE_SQL,
+              ("node_dim_enrich",), "6-way snowflake join, dims broadcast"),
+    sql_query("fact_dim_join", FACT_DIM_JOIN_SQL,
+              ("node_dim_enrich",), "left broadcast enrich through 3 dims + agg"),
     Query("customers_with_urgent_orders", customers_with_urgent_orders,
           CUSTOMERS_WITH_URGENT_ORDERS_SQL, ("node_dim_enrich",), "left semi join (EXISTS)"),
-    Query("customers_without_urgent_orders", customers_without_urgent_orders,
-          CUSTOMERS_WITHOUT_URGENT_ORDERS_SQL, ("node_dim_enrich",), "left anti join (NOT EXISTS)"),
-    Query("nation_keys_intersect", nation_keys_intersect, NATION_KEYS_INTERSECT_SQL,
-          ("multi_file_union",), "INTERSECT set op"),
-    Query("nation_keys_except", nation_keys_except, NATION_KEYS_EXCEPT_SQL,
-          ("multi_file_union",), "EXCEPT set op"),
-    Query("union_order_slices", union_order_slices, UNION_ORDER_SLICES_SQL,
-          ("multi_file_union",), "same-schema union + agg (pd.concat dual)"),
-    Query("rollup_lineitem", rollup_lineitem, ROLLUP_LINEITEM_SQL,
-          ("per_node_stats",), "ROLLUP grouping sets"),
-    Query("cube_orders", cube_orders, CUBE_ORDERS_SQL,
-          ("per_node_stats",), "CUBE grouping sets"),
+    sql_query("customers_without_urgent_orders", CUSTOMERS_WITHOUT_URGENT_ORDERS_SQL,
+              ("node_dim_enrich",), "left anti join (NOT EXISTS)"),
+    sql_query("nation_keys_intersect", NATION_KEYS_INTERSECT_SQL,
+              ("multi_file_union",), "INTERSECT set op"),
+    sql_query("nation_keys_except", NATION_KEYS_EXCEPT_SQL,
+              ("multi_file_union",), "EXCEPT set op"),
+    sql_query("union_order_slices", UNION_ORDER_SLICES_SQL,
+              ("multi_file_union",), "same-schema union + agg (pd.concat dual)"),
+    sql_query("rollup_lineitem", ROLLUP_LINEITEM_SQL,
+              ("per_node_stats",), "ROLLUP grouping sets"),
+    sql_query("cube_orders", CUBE_ORDERS_SQL,
+              ("per_node_stats",), "CUBE grouping sets"),
     Query("pivot_priority_by_status", pivot_priority_by_status, PIVOT_PRIORITY_BY_STATUS_SQL,
           ("stream_route_multiplex",), "pivot with explicit values"),
-    Query("topk_expensive_orders", topk_expensive_orders, TOPK_EXPENSIVE_ORDERS_SQL,
-          ("time_sort",), "global top-k (TakeOrderedAndProject)"),
-    Query("top3_orders_per_segment", top3_orders_per_segment, TOP3_ORDERS_PER_SEGMENT_SQL,
-          ("latest_reading_per_node", "time_sort"), "rank window top-3 per group"),
-    Query("distinct_mktsegments", distinct_mktsegments, DISTINCT_MKTSEGMENTS_SQL,
-          ("per_node_stats",), "DISTINCT"),
+    sql_query("topk_expensive_orders", TOPK_EXPENSIVE_ORDERS_SQL,
+              ("time_sort",), "global top-k (TakeOrderedAndProject)"),
+    sql_query("top3_orders_per_segment", TOP3_ORDERS_PER_SEGMENT_SQL,
+              ("latest_reading_per_node", "time_sort"), "rank window top-3 per group"),
+    sql_query("distinct_mktsegments", DISTINCT_MKTSEGMENTS_SQL,
+              ("per_node_stats",), "DISTINCT"),
     Query("line_numbering", line_numbering, LINE_NUMBERING_SQL,
           ("line_numbering", "text_line_source"), "stable 0-based line numbers"),
-    Query("grouping_sets_revenue", grouping_sets_revenue, GROUPING_SETS_REVENUE_SQL,
-          ("per_node_stats",), "explicit GROUPING SETS in one pass"),
+    sql_query("grouping_sets_revenue", GROUPING_SETS_REVENUE_SQL,
+              ("per_node_stats",), "explicit GROUPING SETS in one pass"),
     Query("priority_order_extremes", priority_order_extremes, PRIORITY_ORDER_EXTREMES_SQL,
           ("per_node_stats", "latest_reading_per_node"), "max_by/min_by arg-extremes"),
-    Query("monthly_order_trend", monthly_order_trend, MONTHLY_ORDER_TREND_SQL,
-          ("per_node_stats", "epoch_to_timestamp"), "date_trunc monthly trend"),
-    Query("parts_above_avg_price", parts_above_avg_price, PARTS_ABOVE_AVG_PRICE_SQL,
-          ("node_equality_filter",), "scalar-subquery predicate"),
-    Query("priority_multiset_intersect", priority_multiset_intersect,
-          PRIORITY_MULTISET_INTERSECT_SQL, ("multi_file_union",),
-          "INTERSECT ALL / EXCEPT ALL multiset ops"),
-    Query("order_value_quartiles", order_value_quartiles,
-          ORDER_VALUE_QUARTILES_SQL, ("latest_reading_per_node", "time_sort"),
-          "NTILE quartile ranking window"),
+    sql_query("monthly_order_trend", MONTHLY_ORDER_TREND_SQL,
+              ("per_node_stats", "epoch_to_timestamp"), "date_trunc monthly trend"),
+    sql_query("parts_above_avg_price", PARTS_ABOVE_AVG_PRICE_SQL,
+              ("node_equality_filter",), "scalar-subquery predicate"),
+    sql_query("priority_multiset_intersect", PRIORITY_MULTISET_INTERSECT_SQL,
+              ("multi_file_union",),
+              "INTERSECT ALL / EXCEPT ALL multiset ops"),
+    sql_query("order_value_quartiles", ORDER_VALUE_QUARTILES_SQL,
+              ("latest_reading_per_node", "time_sort"),
+              "NTILE quartile ranking window"),
     Query("salted_brand_quantities", salted_brand_quantities,
           SALTED_BRAND_QUANTITIES_SQL, ("node_dim_enrich",),
           "skew-salted equi-join == plain join (semantics-invariant salting)"),
@@ -1136,19 +837,17 @@ QUERIES: list[Query] = [
           TABLE_CHECKSUM_REPORT_SQL, ("ddl_bootstrap", "jdbc_healthcheck"),
           "order-insensitive md5-xor content checksums per table "
           "(replication/migration integrity, no sort, no row transfer)"),
-    Query("snapshot_diff_customers", snapshot_diff_customers,
-          SNAPSHOT_DIFF_CUSTOMERS_SQL, ("dim_upsert_from_stream",),
-          "CDC-style snapshot reconciliation: keyed full-outer diff "
-          "with null-safe change detection"),
+    sql_query("snapshot_diff_customers", SNAPSHOT_DIFF_CUSTOMERS_SQL, ("dim_upsert_from_stream",),
+              "CDC-style snapshot reconciliation: keyed full-outer diff "
+              "with null-safe change detection"),
     Query("unpivot_metric_stats", unpivot_metric_stats,
           UNPIVOT_METRIC_STATS_SQL, ("column_projection", "per_node_stats"),
           "wide-to-long unpivot (single-scan Expand vs 4 unioned "
           "scans) + per-metric hash agg"),
-    Query("orders_per_customer_histogram", orders_per_customer_histogram,
-          ORDERS_PER_CUSTOMER_HISTOGRAM_SQL,
-          ("node_dim_enrich", "per_node_stats"),
-          "TPC-H Q13 count-of-counts: aggregate-before-join left join "
-          "keeping zero-order customers, then histogram re-agg"),
+    sql_query("orders_per_customer_histogram", ORDERS_PER_CUSTOMER_HISTOGRAM_SQL,
+              ("node_dim_enrich", "per_node_stats"),
+              "TPC-H Q13 count-of-counts: aggregate-before-join left join "
+              "keeping zero-order customers, then histogram re-agg"),
     Query("benford_digit_audit", benford_digit_audit,
           BENFORD_DIGIT_AUDIT_SQL,
           ("per_node_stats", "numeric_coercion"),

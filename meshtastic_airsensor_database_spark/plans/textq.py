@@ -36,26 +36,10 @@ from ..operators.textops import (
     novelty_counts,
     source_shingle_sets,
 )
-from .base import Query, r
+from .base import Query, r, sql_query
 
 
 # --- exact dedup (SURVEY §2.11 exact_dedup) -----------------------------------
-
-def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-groupBy exact dedup: one row per distinct content, keeping
-    the smallest doc_id (deterministic survivor) + duplicate count.
-    At 100 TB: group on the md5 fingerprint, not the full text, so the
-    shuffle carries 16 bytes + id per row."""
-    docs = load(spark, sf_dir, "documents")
-    return (
-        docs.select(doc_fingerprint_md5(F.col("text")).alias("fingerprint"), "doc_id")
-        .groupBy("fingerprint")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            (F.count("*") - 1).alias("n_duplicates"),
-        )
-    )
-
 
 EXACT_DEDUP_DOCS_SQL = """
 SELECT md5(text) AS fingerprint,
@@ -335,11 +319,6 @@ FROM documents GROUP BY 1, 2
 
 
 # --- fingerprints (SURVEY §2.11 text_analysis) --------------------------------
-
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", doc_fingerprint_md5(F.col("text")).alias("fingerprint"))
-
 
 DOC_FINGERPRINTS_SQL = "SELECT doc_id, md5(text) AS fingerprint FROM documents"
 
@@ -2289,8 +2268,8 @@ QUERIES: list[Query] = [
           "routed sigmoid + per-step gradient/weight rounding — the "
           "classifier member of the trained-model family; each step "
           "is one map-side-partial aggregate (4-double shuffle row)"),
-    Query("exact_dedup_docs", exact_dedup_docs, EXACT_DEDUP_DOCS_SQL,
-          ("exact_dedup",), "hash-groupBy exact dedup with survivor"),
+    sql_query("exact_dedup_docs", EXACT_DEDUP_DOCS_SQL,
+              ("exact_dedup",), "hash-groupBy exact dedup with survivor"),
     Query("normalized_dedup_docs", normalized_dedup_docs,
           NORMALIZED_DEDUP_DOCS_SQL, ("exact_dedup", "text_analysis"),
           "normalization-insensitive exact dedup (canonical-form md5)"),
@@ -2312,8 +2291,8 @@ QUERIES: list[Query] = [
           "median length, corpus share (one scan, |lang|-wide agg)"),
     Query("lang_id_confusion", lang_id_confusion, LANG_ID_CONFUSION_SQL,
           ("text_analysis",), "marker-word language ID confusion matrix"),
-    Query("doc_fingerprints", doc_fingerprints, DOC_FINGERPRINTS_SQL,
-          ("text_analysis", "exact_dedup"), "md5 content fingerprints"),
+    sql_query("doc_fingerprints", DOC_FINGERPRINTS_SQL,
+              ("text_analysis", "exact_dedup"), "md5 content fingerprints"),
     Query("jaccard_neardup_pairs", jaccard_neardup_pairs_sampled,
           _doc_sampled_sql(JACCARD_NEARDUP_PAIRS_SQL, NEARDUP_SAMPLE_MAX_ID),
           ("near_dedup",), "word-3-gram Jaccard near-dup pairs (exact, sampled)"),

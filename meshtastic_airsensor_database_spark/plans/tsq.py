@@ -24,7 +24,7 @@ from ..operators.intervals import bucketed_range_join
 from ..operators.ordered import global_ntile, global_rank_cumsum
 from ..operators.timegrid import gapfill
 from ..streaming.rollup import maintain_rollup, read_rollup
-from .base import Query, r
+from .base import Query, r, sql_query
 
 # --- dense gap-filled grid (time_gapfill) -------------------------------------
 
@@ -154,51 +154,6 @@ GROUP BY 1, 2
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strictly-ordered per-user funnel: first 'view', then the first
-    'click' after it, then the first 'purchase' after that — the
-    MATCH_RECOGNIZE-style sequence question expressed as three chained
-    keyed aggregations (each shuffle co-partitioned on user_id, so
-    after the first exchange the joins are local at any scale).
-    """
-    ev = load(spark, sf_dir, "events")
-    s1, s2, s3 = FUNNEL_STEPS
-    a = (
-        ev.filter(F.col("event_type") == s1)
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ts_1"))
-    )
-    b = (
-        ev.filter(F.col("event_type") == s2)
-        .join(a, "user_id")
-        .where(F.col("ts") > F.col("ts_1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ts_2"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == s3)
-        .join(b, "user_id")
-        .where(F.col("ts") > F.col("ts_2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ts_3"))
-    )
-    return (
-        a.join(b, "user_id", "left")
-        .join(c, "user_id", "left")
-        .select(
-            "user_id",
-            "ts_1",
-            "ts_2",
-            "ts_3",
-            F.when(F.col("ts_3").isNotNull(), 3)
-            .when(F.col("ts_2").isNotNull(), 2)
-            .otherwise(1)
-            .cast("int")
-            .alias("funnel_depth"),
-        )
-    )
-
-
 FUNNEL_CONVERSION_SQL = f"""
 WITH a AS (
   SELECT user_id, MIN(ts) AS ts_1 FROM events
@@ -226,34 +181,6 @@ FROM a LEFT JOIN b USING (user_id) LEFT JOIN c USING (user_id)
 
 MAD_Z_THRESHOLD = 3.5
 MAD_CONSISTENCY = 0.6745  # Phi^-1(0.75): MAD -> sigma-equivalent scale
-
-
-def value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user robust z-score outliers: |0.6745 (v - median) / MAD| >
-    3.5 (Iglewicz-Hoaglin modified z-score) — the sensor-glitch gate
-    that, unlike mean/stddev, is not dragged by the outliers themselves.
-
-    Scale: two keyed exact-median aggregations + two co-partitioned
-    joins on user_id (one exchange total under AQE reuse); at 100 TB
-    swap ``median`` for ``approx_percentile`` and keep the shape.
-    """
-    ev = load(spark, sf_dir, "events")
-    med = ev.groupBy("user_id").agg(F.median("value").alias("_med"))
-    with_med = ev.join(med, "user_id")
-    mad = with_med.groupBy("user_id").agg(
-        F.median(F.abs(F.col("value") - F.col("_med"))).alias("_mad")
-    )
-    z = MAD_CONSISTENCY * (F.col("value") - F.col("_med")) / F.col("_mad")
-    return (
-        with_med.join(mad, "user_id")
-        .where((F.col("_mad") > 0) & (F.abs(z) > MAD_Z_THRESHOLD))
-        .select(
-            "event_id",
-            "user_id",
-            r("value", 2).alias("value"),
-            r(z, 3).alias("robust_z"),
-        )
-    )
 
 
 VALUE_OUTLIERS_MAD_SQL = f"""
@@ -640,22 +567,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 HIST_BIN_WIDTH = 25.0
 
 
-def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram of ``value`` per event type — the
-    one-shuffle binning primitive behind every dashboard distribution
-    panel (fixed bins, not data-dependent ones, so the map-side
-    partial aggregation needs no prior min/max pass)."""
-    ev = load(spark, sf_dir, "events")
-    bin_idx = F.floor(F.col("value") / HIST_BIN_WIDTH).cast("long")
-    return ev.groupBy(
-        "event_type", bin_idx.alias("bin_idx")
-    ).agg(
-        F.count("*").cast("long").alias("n"),
-        r(F.min("value"), 2).alias("bin_min"),
-        r(F.max("value"), 2).alias("bin_max"),
-    ).withColumn("bin_lo", r(F.col("bin_idx") * HIST_BIN_WIDTH, 2))
-
-
 VALUE_HISTOGRAM_SQL = f"""
 SELECT event_type, bin_idx,
        CAST(COUNT(*) AS BIGINT) AS n,
@@ -881,33 +792,6 @@ GROUP BY 1, 2
 EQUIDEPTH_BINS = 10
 
 
-def value_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-DEPTH histogram of ``value`` per event type: NTILE assigns
-    equal-population bins, then per-bin extrema/counts — the
-    selectivity-estimation / quantile-sketch-calibration companion to
-    the fixed-width ``value_histogram``.
-
-    Scale note: NTILE is a per-key window sort (one exchange + local
-    sort per event_type; deterministic tie-break on event_id so both
-    engines bin identical rows identically). Exact equi-depth
-    fundamentally requires that per-key ordering; the approximation
-    that avoids it at extreme per-key cardinality is
-    ``approx_value_percentiles`` (approx_percentile sketch), declared
-    separately — this query is the exact tier.
-    """
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    binned = ev.select(
-        "event_type", "value", F.ntile(EQUIDEPTH_BINS).over(w).alias("bin")
-    )
-    return binned.groupBy("event_type", "bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        r(F.min("value"), 2).alias("lo"),
-        r(F.max("value"), 2).alias("hi"),
-        r(F.avg("value"), 2).alias("mid"),
-    ).select("event_type", F.col("bin").cast("long").alias("bin"), "n", "lo", "hi", "mid")
-
-
 VALUE_EQUIDEPTH_BINS_SQL = f"""
 WITH binned AS (
   SELECT event_type, value,
@@ -1059,52 +943,6 @@ KS_SPLIT_TS = "2024-01-16 00:00:00"  # mid-range of the testdata month
 KS_BIN_W = 1.0
 
 
-def value_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Kolmogorov–Smirnov statistic between the first and second
-    half of each event type's value distribution — the classic
-    distribution-drift test beside the PSI report (token_drift_psi).
-
-    Exactness note: the statistic is computed on values quantized to
-    {KS_BIN_W}-wide bins; the quantized KS is itself exact and
-    deterministic (both engines see identical bins), and binning is
-    what makes the CDF walk scale-safe: the cumulative sums run per
-    event type over at most range/width rows, partitioned by type —
-    never a global single-partition sort. One hash agg (map-side
-    partials) + one per-key window + one tiny broadcast-size join.
-    """
-    ev = load(spark, sf_dir, "events")
-    is_before = F.col("ts") < F.lit(KS_SPLIT_TS).cast("timestamp")
-    g = ev.groupBy(
-        "event_type",
-        F.floor(F.col("value") / KS_BIN_W).cast("long").alias("bin"),
-    ).agg(
-        F.sum(F.when(is_before, 1).otherwise(0)).alias("na"),
-        F.sum(F.when(is_before, 0).otherwise(1)).alias("nb"),
-    )
-    w = Window.partitionBy("event_type").orderBy("bin")
-    cum = g.select(
-        "event_type",
-        F.sum("na").over(w).alias("ca"),
-        F.sum("nb").over(w).alias("cb"),
-    )
-    tot = g.groupBy("event_type").agg(
-        F.sum("na").alias("ta"), F.sum("nb").alias("tb")
-    )
-    d = cum.join(tot, "event_type").select(
-        "event_type",
-        F.abs(
-            F.col("ca") / F.col("ta") - F.col("cb") / F.col("tb")
-        ).alias("d"),
-        "ta",
-        "tb",
-    )
-    return d.groupBy("event_type").agg(
-        r(F.max("d"), 4).alias("ks_stat"),
-        F.max("ta").cast("long").alias("n_before"),
-        F.max("tb").cast("long").alias("n_after"),
-    )
-
-
 VALUE_KS_DRIFT_SQL = f"""
 WITH g AS (
   SELECT event_type, CAST(floor(value / {KS_BIN_W}) AS BIGINT) AS bin,
@@ -1133,36 +971,6 @@ GROUP BY 1
 
 
 # --- cross-series Pearson correlation matrix ----------------------------------
-
-
-def type_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation between every pair of event types' hourly-
-    mean series — the cross-series companion of value_acf_by_type
-    (which correlates each series with its own past).
-
-    Scale shape: the hourly agg collapses events to |types| x |hours|
-    rows (one shuffle, map-side partials); the pair generation is a
-    self equi-join ON THE HOUR key (co-partitioned, output bounded by
-    |types|^2 per hour — never a cross join); corr() is a hash agg
-    with map-side co-moment partials.
-    """
-    ev = load(spark, sf_dir, "events")
-    hm = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(F.avg("value").alias("m"))
-    a, b = hm.alias("a"), hm.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.h") == F.col("b.h"))
-        & (F.col("a.event_type") < F.col("b.event_type")),
-    )
-    return pairs.groupBy(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-    ).agg(
-        r(F.corr(F.col("a.m"), F.col("b.m")), 4).alias("pearson_r"),
-        F.count(F.lit(1)).cast("long").alias("n_hours"),
-    )
 
 
 TYPE_CORR_MATRIX_SQL = """
@@ -1425,41 +1233,6 @@ FROM ret r JOIN sizes s USING (cohort_wk)
 # --- event-type transition matrix (first-order Markov counts) -----------------
 
 
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user consecutive event-type transitions with empirical
-    transition probabilities — the first-order Markov view of user
-    behavior (the generalization of the funnel's fixed 3-step path).
-
-    Scale shape: ONE window sort shuffle on user_id computes every
-    lag; the transition counts are a hash agg over at most
-    |event_type|^2 cells, and the probability denominator is a second
-    tiny agg joined back broadcast-size. Tie-break on event_id makes
-    the sequence deterministic under equal timestamps.
-    """
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id",
-            F.col("event_type").alias("next_type"),
-            F.lag("event_type").over(w).alias("prev_type"),
-        )
-        .where(F.col("prev_type").isNotNull())
-    )
-    counts = pairs.groupBy("prev_type", "next_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    totals = counts.groupBy("prev_type").agg(
-        F.sum("n").cast("long").alias("n_from")
-    )
-    return counts.join(totals, "prev_type").select(
-        "prev_type",
-        "next_type",
-        "n",
-        r(F.col("n") / F.col("n_from"), 4).alias("p"),
-    )
-
-
 EVENT_TRANSITION_MATRIX_SQL = """
 WITH pairs AS (
   SELECT user_id, event_type AS next_type,
@@ -1485,109 +1258,6 @@ FROM counts c JOIN totals t USING (prev_type)
 DECOMP_HALF_WIN = 12  # 25-point centered MA over the hourly series
 
 
-def seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic additive seasonal decomposition of the per-type hourly
-    mean-value series: trend = 25-point centered moving average
-    (emitted only where the window is FULL — the standard edge rule),
-    seasonal = hour-of-day mean of the detrended series, residual =
-    value - trend - seasonal. The decomposition underlying every
-    'is this spike load or rhythm?' triage.
-
-    Scale shape: one hourly pre-aggregation (map-side partialed; the
-    series is hours x types, tiny relative to raw events), ONE keyed
-    window sort per type for the centered MA, a (type, hour-of-day)
-    hash agg for the seasonal profile, and a broadcast-sized join back
-    (<= types x 24 rows). Nothing unkeyed, nothing over raw events.
-    """
-    return _decomposed(load(spark, sf_dir, "events")).select(
-        "event_type",
-        "hour_ts",
-        r("v", 4).alias("value"),
-        r("trend", 4).alias("trend"),
-        r("seasonal", 4).alias("seasonal"),
-        r("resid", 4).alias("resid"),
-    )
-
-
-def _decomposed(ev: DataFrame) -> DataFrame:
-    """Unrounded decomposition core shared by seasonal_decomposition
-    and seasonal_anomaly_flags: (event_type, hour_ts, v, trend,
-    seasonal, resid)."""
-    from pyspark.sql import Window
-
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour_ts")
-    ).agg(F.avg("value").alias("v"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_ts")
-        .rowsBetween(-DECOMP_HALF_WIN, DECOMP_HALF_WIN)
-    )
-    full = 2 * DECOMP_HALF_WIN + 1
-    with_trend = hourly.withColumn(
-        "trend",
-        F.when(F.count(F.lit(1)).over(w) == full, F.avg("v").over(w)),
-    ).withColumn("detrended", F.col("v") - F.col("trend"))
-    seasonal = with_trend.groupBy(
-        "event_type", F.hour("hour_ts").alias("hod")
-    ).agg(F.avg("detrended").alias("seasonal"))
-    return (
-        with_trend.withColumn("hod", F.hour("hour_ts"))
-        .join(F.broadcast(seasonal), ["event_type", "hod"])
-        .select(
-            "event_type",
-            "hour_ts",
-            "v",
-            "trend",
-            "seasonal",
-            (F.col("v") - F.col("trend") - F.col("seasonal")).alias("resid"),
-        )
-    )
-
-
-def seasonal_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonality-aware anomaly detection: robust (median/MAD)
-    modified z-scores over the decomposition RESIDUAL, per event type.
-    The raw-value MAD flagger (value_outliers_mad) marks every rush
-    hour anomalous on a rhythmic series; flagging the residual after
-    removing trend + hour-of-day rhythm is the triage that only fires
-    on genuinely unexplained spikes.
-
-    The flag compares the ROUNDED z on both engines (the decimal-route
-    integer-threshold discipline), so ulp-level engine differences in
-    the computed residual can never flip a row across the threshold.
-    Scale shape: the decomposition core (hours x types) plus two tiny
-    per-type median aggregations broadcast back — nothing over raw
-    events beyond the hourly pre-aggregate.
-    """
-    d = _decomposed(load(spark, sf_dir, "events")).filter(
-        F.col("resid").isNotNull()
-    )
-    med = d.groupBy("event_type").agg(F.median("resid").alias("med"))
-    mad = (
-        d.join(F.broadcast(med), "event_type")
-        .groupBy("event_type")
-        .agg(F.median(F.abs(F.col("resid") - F.col("med"))).alias("mad"))
-    )
-    z = r(
-        MAD_CONSISTENCY * (F.col("resid") - F.col("med")) / F.col("mad"), 3
-    )
-    return (
-        d.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
-        .filter(F.col("mad") > 0)
-        .withColumn("robust_z", z)
-        .filter(F.abs(F.col("robust_z")) > MAD_Z_THRESHOLD)
-        .select(
-            "event_type",
-            "hour_ts",
-            r("v", 4).alias("value"),
-            r("resid", 4).alias("resid"),
-            "robust_z",
-        )
-    )
-
-
 _DECOMP_CTES = f"""hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS hour_ts, AVG(value) AS v
   FROM events GROUP BY 1, 2
@@ -1608,7 +1278,7 @@ seasonal AS (
 
 SEASONAL_DECOMPOSITION_SQL = f"""
 WITH {_DECOMP_CTES}
-SELECT t.event_type,
+SELECT /*+ BROADCAST(s) */ t.event_type,
        CAST(t.hour_ts AS TIMESTAMP) AS hour_ts,
        {_R4.format(x="t.v")} AS value,
        {_R4.format(x="t.trend")} AS trend,
@@ -1621,7 +1291,7 @@ JOIN seasonal s ON t.event_type = s.event_type AND hour(t.hour_ts) = s.hod
 SEASONAL_ANOMALY_FLAGS_SQL = f"""
 WITH {_DECOMP_CTES},
 d AS (
-  SELECT t.event_type, t.hour_ts, t.v,
+  SELECT /*+ BROADCAST(s) */ t.event_type, t.hour_ts, t.v,
          t.v - t.trend - s.seasonal AS resid
   FROM with_trend t
   JOIN seasonal s ON t.event_type = s.event_type AND hour(t.hour_ts) = s.hod
@@ -1629,12 +1299,12 @@ d AS (
 ),
 med AS (SELECT event_type, median(resid) AS med FROM d GROUP BY 1),
 mad AS (
-  SELECT d.event_type, median(abs(d.resid - m.med)) AS mad
+  SELECT /*+ BROADCAST(m) */ d.event_type, median(abs(d.resid - m.med)) AS mad
   FROM d JOIN med m USING (event_type) GROUP BY 1
 )
 SELECT event_type, CAST(hour_ts AS TIMESTAMP) AS hour_ts, value, resid, robust_z
 FROM (
-  SELECT d.event_type, d.hour_ts,
+  SELECT /*+ BROADCAST(m, x) */ d.event_type, d.hour_ts,
          {_R4.format(x="d.v")} AS value,
          {_R4.format(x="d.resid")} AS resid,
          {_R3.format(x=f"{MAD_CONSISTENCY} * (d.resid - m.med) / x.mad")} AS robust_z
@@ -2561,12 +2231,12 @@ QUERIES: list[Query] = [
     Query("interval_event_stats", interval_event_stats, INTERVAL_EVENT_STATS_SQL,
           ("range_interval_join",),
           "bucketed point-in-interval range join + per-interval stats"),
-    Query("funnel_conversion", funnel_conversion, FUNNEL_CONVERSION_SQL,
-          ("funnel_pattern",),
-          "strictly-ordered view->click->purchase funnel per user"),
-    Query("value_outliers_mad", value_outliers_mad, VALUE_OUTLIERS_MAD_SQL,
-          ("robust_outlier_detect",),
-          "median/MAD modified z-score outlier detection per user"),
+    sql_query("funnel_conversion", FUNNEL_CONVERSION_SQL,
+              ("funnel_pattern",),
+              "strictly-ordered view->click->purchase funnel per user"),
+    sql_query("value_outliers_mad", VALUE_OUTLIERS_MAD_SQL,
+              ("robust_outlier_detect",),
+              "median/MAD modified z-score outlier detection per user"),
     Query("last_touch_attribution", last_touch_attribution,
           LAST_TOUCH_ATTRIBUTION_SQL,
           ("timeseries_align", "funnel_pattern"),
@@ -2590,20 +2260,18 @@ QUERIES: list[Query] = [
     Query("ewma_value_smooth", ewma_value_smooth, EWMA_VALUE_SMOOTH_SQL,
           ("rolling_avg_pm25", "timeseries_align"),
           "per-key truncated EWMA smoothing as a pure window expression"),
-    Query("value_histogram", value_histogram, VALUE_HISTOGRAM_SQL,
-          ("per_node_stats",),
-          "fixed-width value histogram per event type (one-shuffle binning)"),
-    Query("seasonal_decomposition", seasonal_decomposition,
-          SEASONAL_DECOMPOSITION_SQL,
-          ("timeseries_align", "rolling_avg_pm25"),
-          "additive trend/seasonal/residual decomposition of the "
-          "hourly series (25-pt centered MA + hour-of-day profile)"),
-    Query("seasonal_anomaly_flags", seasonal_anomaly_flags,
-          SEASONAL_ANOMALY_FLAGS_SQL,
-          ("robust_outlier_detect", "timeseries_align"),
-          "seasonality-aware anomaly flags: median/MAD robust z over "
-          "the decomposition residual (fires on unexplained spikes, "
-          "not rhythm)"),
+    sql_query("value_histogram", VALUE_HISTOGRAM_SQL,
+              ("per_node_stats",),
+              "fixed-width value histogram per event type (one-shuffle binning)"),
+    sql_query("seasonal_decomposition", SEASONAL_DECOMPOSITION_SQL,
+              ("timeseries_align", "rolling_avg_pm25"),
+              "additive trend/seasonal/residual decomposition of the "
+              "hourly series (25-pt centered MA + hour-of-day profile)"),
+    sql_query("seasonal_anomaly_flags", SEASONAL_ANOMALY_FLAGS_SQL,
+              ("robust_outlier_detect", "timeseries_align"),
+              "seasonality-aware anomaly flags: median/MAD robust z over "
+              "the decomposition residual (fires on unexplained spikes, "
+              "not rhythm)"),
     Query("seasonal_naive_skill", seasonal_naive_skill,
           SEASONAL_NAIVE_SKILL_SQL,
           ("timeseries_align", "per_node_stats"),
@@ -2622,26 +2290,24 @@ QUERIES: list[Query] = [
           ("continuous_aggregate", "approx_distinct_nodes"),
           "materialized rollup maintains a mergeable HLL sketch for "
           "hourly distinct users across out-of-order slices"),
-    Query("value_equidepth_bins", value_equidepth_bins,
-          VALUE_EQUIDEPTH_BINS_SQL,
-          ("per_node_stats",),
-          "exact equi-depth histogram via deterministic NTILE binning"),
+    sql_query("value_equidepth_bins", VALUE_EQUIDEPTH_BINS_SQL,
+              ("per_node_stats",),
+              "exact equi-depth histogram via deterministic NTILE binning"),
     Query("cohort_retention", cohort_retention, COHORT_RETENTION_SQL,
           ("funnel_pattern", "per_node_stats"),
           "weekly first-activity cohort retention (dedup-first, "
           "count-only after join)"),
-    Query("event_transition_matrix", event_transition_matrix,
-          EVENT_TRANSITION_MATRIX_SQL, ("funnel_pattern",),
-          "first-order Markov transition counts/probabilities over "
-          "per-user event sequences"),
-    Query("value_ks_drift", value_ks_drift, VALUE_KS_DRIFT_SQL,
-          ("robust_outlier_detect", "per_node_stats"),
-          "exact two-sample KS drift statistic per event type "
-          "(binned CDF walk, per-key windows, no global sort)"),
-    Query("type_corr_matrix", type_corr_matrix, TYPE_CORR_MATRIX_SQL,
-          ("timeseries_align", "per_node_stats"),
-          "pairwise Pearson correlation of hourly-mean series "
-          "(hour-keyed self equi-join, co-moment hash agg)"),
+    sql_query("event_transition_matrix", EVENT_TRANSITION_MATRIX_SQL, ("funnel_pattern",),
+              "first-order Markov transition counts/probabilities over "
+              "per-user event sequences"),
+    sql_query("value_ks_drift", VALUE_KS_DRIFT_SQL,
+              ("robust_outlier_detect", "per_node_stats"),
+              "exact two-sample KS drift statistic per event type "
+              "(binned CDF walk, per-key windows, no global sort)"),
+    sql_query("type_corr_matrix", TYPE_CORR_MATRIX_SQL,
+              ("timeseries_align", "per_node_stats"),
+              "pairwise Pearson correlation of hourly-mean series "
+              "(hour-keyed self equi-join, co-moment hash agg)"),
     Query("time_weighted_avg", time_weighted_avg, TIME_WEIGHTED_AVG_SQL,
           ("rolling_avg_pm25", "per_node_stats"),
           "LOCF time-weighted mean per user (one window shuffle, "

@@ -312,26 +312,6 @@ def jdbc_idempotent_table_sink(
     stamped.foreachPartition(_write_partition)
 
 
-def psycopg2_connection_factory(dsn: str):
-    """Zero-arg factory for ``jdbc_idempotent_table_sink`` backed by
-    psycopg2 (the reference's actual driver, AIRWISEv0.py:162); pass
-    ``placeholder='%s'`` alongside. Import-gated at CALL time on the
-    executor, mirroring ``pymongo_client_factory``.
-    """
-
-    def _factory():
-        try:
-            import psycopg2
-        except ImportError as exc:  # pragma: no cover - absent in CI
-            raise NotImplementedError(
-                "jdbc_idempotent_table_sink's Postgres factory requires "
-                "the 'psycopg2' package"
-            ) from exc
-        return psycopg2.connect(dsn)
-
-    return _factory
-
-
 def jdbc_healthcheck(spark: SparkSession, url: str, properties: dict[str, str] | None = None) -> bool:
     """Fail-fast connectivity probe (`SELECT 1`), AIRWISEv0.py:315-327.
 

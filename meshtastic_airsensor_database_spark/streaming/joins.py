@@ -125,14 +125,3 @@ def run_env_battery_join_stream(
         .option("checkpointLocation", os.path.join(out_dir, "_join_checkpoint"))
         .start()
     )
-
-
-def batch_env_battery_join(
-    raw: DataFrame, bound_seconds: int = JOIN_BOUND_SECONDS
-) -> DataFrame:
-    """Batch twin over raw packet lines — identical parse/filter/join
-    lineage, for replay verification and ad-hoc backfills."""
-    parsed = json_envelope_parse(raw)
-    return env_battery_interval_join(
-        _env_side(parsed), _battery_side(parsed), bound_seconds
-    )

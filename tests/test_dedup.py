@@ -361,13 +361,13 @@ class TestDeltaNeardup:
 
     def test_prebuilt_index_reused(self, spark):
         from meshtastic_airsensor_database_spark.operators.dedup import (
-            build_minhash_index,
             delta_neardup_pairs,
+            minhash_band_frame,
         )
 
         corpus = self._mk(spark, [(1, self.BASE)])
         batch = self._mk(spark, [(10, self.NEAR)])
-        idx = build_minhash_index(corpus, "doc_id", "text")
+        idx = minhash_band_frame(corpus, "doc_id", "text")
         got = delta_neardup_pairs(
             batch, corpus, "doc_id", "text", 0.8, corpus_index=idx
         ).collect()

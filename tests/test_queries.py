@@ -4,6 +4,9 @@ schema-stable DataFrame. Oracle parity itself is the driver's gate
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +33,60 @@ def test_registry_metadata():
     for q in REGISTRY.values():
         assert q.survey_ids, f"{q.name} missing SURVEY §2 mapping"
         assert q.description
+
+
+# queries declared once (plans/base.py::sql_query): the twin text is the builder
+SINGLE_SOURCED = [n for n, q in REGISTRY.items() if hasattr(q.builder, "sql")]
+
+
+@pytest.mark.parametrize("name", SINGLE_SOURCED)
+def test_single_sourced_builder_runs_its_oracle_text(spark, sf_dir, monkeypatch, name):
+    q = REGISTRY[name]
+    seen = []
+    real_sql = spark.sql
+    monkeypatch.setattr(
+        spark, "sql", lambda text, *a, **k: seen.append(text) or real_sql(text, *a, **k)
+    )
+    q.builder(spark, sf_dir)
+    assert seen == [q.oracle]
+
+
+def test_sql_views_follow_sf_dir(spark, sf_dir):
+    """The testdata views are rebound when the sf_dir changes, and a
+    frame built before the rebind keeps reading its own directory."""
+    from meshtastic_airsensor_database_spark.io_utils import load
+
+    bigger = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    build = REGISTRY["parts_above_avg_price"].builder
+    first = build(spark, sf_dir)
+    n_small = first.count()
+    n_big = build(spark, bigger).count()
+    assert load(spark, bigger, "part").count() > load(spark, sf_dir, "part").count()
+    assert n_big > n_small > 0
+    assert first.count() == n_small
+    assert build(spark, sf_dir).count() == n_small
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in SINGLE_SOURCED if "/*+ BROADCAST(" in REGISTRY[n].oracle]
+)
+def test_broadcast_hint_comments_take_effect(spark, sf_dir, name):
+    """With size-based broadcasting off, every hinted text still plans
+    more broadcasts than the same text with its hint comments removed."""
+    text = REGISTRY[name].oracle
+    REGISTRY[name].builder(spark, sf_dir)  # binds the views
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        def broadcasts(t):
+            return spark.sql(t)._jdf.queryExecution().executedPlan().toString().count(
+                "BroadcastExchange"
+            )
+
+        assert broadcasts(text) > broadcasts(re.sub(r"/\*\+.*?\*/", "", text))
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_approx_percentiles_close_to_exact(spark, sf_dir):
