@@ -87,46 +87,14 @@ def int8_scale(col: Column | str) -> Column:
     return F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
 
 
-def cosine_similarity_arrow(a: Column | str, b: Column | str) -> Column:
-    """Arrow/BLAS row-wise cosine — the bulk-verify twin of
-    ``cosine_similarity`` for stages that score MILLIONS of candidate
-    pairs (LSH/cluster verify joins), where the higher-order-function
-    formulation evaluates interpreted per element (measured 159 s for
-    5M 64-dim pairs vs ~2 s vectorized).
-
-    Semantics match the expression path at filter level: a zero-norm
-    side yields NaN (the expression path yields NULL) — both fail any
-    ``>= threshold`` predicate, which is the only way verify stages
-    consume the value. Raw doubles differ from the sequential
-    reduction only in the last ulp (einsum pairwise summation);
-    callers round through the decimal route before comparison like
-    every other scored column.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _rowcos(va, vb):
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in va])
-        B = np.stack([np.asarray(x, dtype=np.float64) for x in vb])
-        num = np.einsum("ij,ij->i", A, B)
-        denom = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(np.where(denom > 0, num / denom, np.nan))
-
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return _rowcos(ca, cb)
-
-
 # --- derandomized sign-LSH banding ------------------------------------------
 #
-# Shared by plans/vectorq.py's semantic-decontamination tiers (whose
-# DuckDB twins derive the SAME signs element by element, so oracle hash
+# The package's one sign-LSH projection: plans/vectorq.py's near-dup,
+# bucket-occupancy and semantic-decontamination queries (whose DuckDB
+# twins derive the SAME signs element by element, so oracle hash
 # parity pins this precompute) and operators/decon_index.py's persisted
-# band index. Planes are md5-derived ±1 vectors — data-independent,
-# reproducible on any engine, no RNG state to ship.
+# band index all band through it. Planes are md5-derived ±1 vectors —
+# data-independent, reproducible on any engine, no RNG state to ship.
 
 HPLSH_SALT = "hplsh7"
 

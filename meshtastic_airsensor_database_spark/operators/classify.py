@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 HASH_DIM = 1 << 14
-LANGID_SEED = 42
 
 
 def train_langid_model(docs: DataFrame, text_col: str = "text", label_col: str = "lang"):

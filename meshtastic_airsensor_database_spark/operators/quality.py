@@ -36,8 +36,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-REPORT_COLS = ("constraint", "n_rows", "n_bad", "pass_rate")
-
 
 def _finish(report: DataFrame) -> DataFrame:
     """Attach the derived pass_rate and fix column order/types."""

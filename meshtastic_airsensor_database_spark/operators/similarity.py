@@ -1,17 +1,19 @@
 """Vector similarity search (SURVEY.md §2.11 similarity_search_topk).
 
-Three tiers over an ``array<float>`` embedding column:
+Two tiers over an ``array<float>`` embedding column:
 
 1. brute_force_topk — exact: one scan, cosine in built-in expressions,
    TakeOrderedAndProject. The correctness baseline at any scale where a
    full scan is affordable.
-2. hyperplane LSH   — random-hyperplane sign buckets; candidates from
-   colliding buckets only, then exact re-rank. Sub-linear reads when
-   the bucket layout is partitioned/persisted.
-3. ivf_topk         — IVF: vectors pre-assigned to nearest centroid
+2. ivf_topk         — IVF: vectors pre-assigned to nearest centroid
    partitions; a query probes only n_probe partitions. At 100 TB the
    assignment is the table's PARTITION KEY, so probing k of C
    partitions reads k/C of the data (partition pruning).
+
+Random-hyperplane sign-LSH (candidates from colliding bands only, then
+exact re-rank) is functions/vectors.py::sign_band_rows, the one md5
+hyperplane banding behind plans/vectorq.py's LSH queries and
+operators/decon_index.py.
 
 All math is double-precision built-ins (zip_with/aggregate); the only
 Python is driver-side centroid handling (tiny, broadcast back).
@@ -30,8 +32,6 @@ from ..functions.vectors import (
     l2_norm,
 )
 from ..io_utils import fan_out
-
-N_HYPERPLANES = 16
 
 
 def brute_force_topk(
@@ -267,14 +267,11 @@ def ivf_topk(
     n_probe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """IVF ANN: probe the n_probe clusters nearest the query, exact
-    re-rank inside. Returns (vec_id, cluster, cosine) top-k.
-    ``vectorized`` picks the Arrow/BLAS assignment (default — the bulk
-    throughput path); False keeps the pure-built-in formulation."""
-    assign = assign_ivf_clusters_arrow if vectorized else assign_ivf_clusters
-    assigned = assign(emb, n_centroids, id_col, vec_col)
+    re-rank inside. Returns (vec_id, cluster, cosine) top-k. Assignment
+    is the Arrow/BLAS bulk path (``assign_ivf_clusters_arrow``)."""
+    assigned = assign_ivf_clusters_arrow(emb, n_centroids, id_col, vec_col)
     q = emb.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_qv"))
     cents = emb.filter(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec")
@@ -283,158 +280,6 @@ def ivf_topk(
     # by cosine, so the probe uses cosine too
     return _probe_and_rerank(
         assigned, cents, q, k, n_probe, id_col, vec_col, query_vec_id, "cosine"
-    )
-
-
-def hyperplane_lsh_buckets(
-    emb: DataFrame,
-    n_planes: int = N_HYPERPLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane (sign) LSH bucket per vector.
-
-    Hyperplane p's components are pseudo-random ±1 derived from
-    xxhash64(seed, p, dim_index) — deterministic, no driver RNG, no
-    data movement: one narrow pass computes the n-bit sign bucket.
-    """
-    v = F.col(vec_col).cast("array<double>")
-    dims = F.sequence(F.lit(0), F.size(v) - 1)
-    def plane_sign(p: int):
-        return lambda i: F.when(
-            F.xxhash64(F.lit(seed), F.lit(p), i).bitwiseAND(F.lit(1)) == 1, 1.0
-        ).otherwise(-1.0)
-
-    bits = []
-    for p in range(n_planes):
-        signs = F.transform(dims, plane_sign(p))
-        proj = F.aggregate(
-            F.zip_with(v, signs, lambda x, s: x * s), F.lit(0.0), lambda a, x: a + x
-        )
-        bits.append(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
-        )
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket.bitwiseOR(b)
-    return emb.select(F.col(id_col), bucket.alias("lsh_bucket"))
-
-
-def hyperplane_lsh_buckets_arrow(
-    emb: DataFrame,
-    n_planes: int = N_HYPERPLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    dim: int | None = None,
-) -> DataFrame:
-    """Vectorized sign-LSH bucketing — bit-identical to
-    ``hyperplane_lsh_buckets`` (parity-tested) at matmul speed.
-
-    The expression formulation re-derives every plane's ±1 pattern per
-    ROW (xxhash64 per (plane, dim) per row) and folds the projection
-    through interpreted higher-order functions. Here the plane matrix
-    is materialized ONCE with the same xxhash64 expressions (a
-    dim-row helper query — the hash stays JVM-side so the pattern is
-    identical), then each Arrow batch projects via one (B, dim) @
-    (dim, planes) BLAS matmul and packs sign bits with numpy.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    spark = emb.sparkSession
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    # plane matrix from the SAME hash expressions, computed once
-    dims_df = spark.range(dim).select(F.col("id").cast("int").alias("i"))
-    sign_cols = [
-        F.when(
-            F.xxhash64(F.lit(seed), F.lit(p), F.col("i")).bitwiseAND(F.lit(1)) == 1,
-            1.0,
-        )
-        .otherwise(-1.0)
-        .alias(f"p{p}")
-        for p in range(n_planes)
-    ]
-    rows = dims_df.select("i", *sign_cols).orderBy("i").collect()
-    planes = np.array(
-        [[r[f"p{p}"] for p in range(n_planes)] for r in rows]
-    )  # (dim, n_planes)
-    weights = np.power(2.0, np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("long")
-    def _bucket(v):
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        proj = m @ planes
-        return pd.Series(((proj > 0).astype(np.int64) * weights).sum(axis=1))
-
-    return emb.select(F.col(id_col), _bucket(F.col(vec_col)).alias("lsh_bucket"))
-
-
-def hyperplane_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    n_planes: int = N_HYPERPLANES,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    vectorized: bool = True,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs, LSH-pruned then exactly verified
-    — the scale path that replaces the all-pairs cosine join.
-
-    Sign-LSH bands: the ``n_planes``-bit bucket splits into ``n_bands``
-    sub-buckets; high-cosine vectors agree on most sign bits, so they
-    collide in at least one band w.h.p. Candidates are generated with
-    the shared bucket-grouping shape (operators/dedup.py::
-    pairs_within_buckets — one shuffle, no self-join of the sign
-    pipeline), then exact cosine confirms >= threshold: no false
-    positives, recall governed by (n_planes, n_bands).
-    """
-    from .dedup import pairs_within_buckets
-
-    band_bits = n_planes // n_bands
-    mask = (1 << band_bits) - 1
-    bucket_fn = hyperplane_lsh_buckets_arrow if vectorized else hyperplane_lsh_buckets
-    buckets = bucket_fn(emb, n_planes, id_col, vec_col)
-    bands = buckets.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftrightunsigned(F.col("lsh_bucket"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_hash"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
-    cands = pairs_within_buckets(bands, ["band_idx", "band_hash"], id_col)
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    # vectorized also picks the verify math: LSH candidate sets are
-    # large by design, and the HOF cosine evaluates interpreted per
-    # element (see _semantic_pairs_grouped_blas measurements)
-    from ..functions.vectors import cosine_similarity_arrow
-
-    cos = (cosine_similarity_arrow if vectorized else cosine_similarity)(
-        F.col("_va"), F.col("_vb")
-    )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cos, 4).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
     )
 
 

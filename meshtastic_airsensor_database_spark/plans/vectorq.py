@@ -12,7 +12,7 @@ against the exact queries in tests/.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
@@ -21,9 +21,7 @@ from ..functions.vectors import (
     dist2_raw,
     dot_raw,
     double_sql_literal,
-    hplsh_sign_py,
     l2_norm,
-    quantize_int8,
     sign_band_rows,
 )
 from ..io_utils import ephemeral_dir, fan_out, load, materialize
@@ -33,8 +31,6 @@ from ..operators.dedup import (
     MHJ_PERMS,
     MHJ_SALTS,
     md5_minhash_sketch as _md5_minhash_sketch,
-    minhash_lsh_candidates,
-    simhash_buckets,
 )
 from ..operators.similarity import (
     embedding_dim_stats,
@@ -125,7 +121,9 @@ BATCH_K = 5
 
 def _batch_scores_expr(emb: DataFrame) -> DataFrame:
     """(query_id, vec_id, cosine) via the pure-expression path: queries
-    packed into one broadcast row, per-row explode + HOF cosine.
+    packed into one broadcast row, per-row explode + HOF cosine. Kept
+    as the reference tests compare ``_batch_scores_arrow`` (the path
+    ``embedding_batch_topk`` runs) against.
 
     Both norms are hoisted OUT of the per-query lambda: the row
     vector's norm becomes a materialized column (a captured
@@ -272,12 +270,9 @@ def _partial_topk_merge(
     )
 
 
-def embedding_batch_topk(
-    spark: SparkSession, sf_dir: str, vectorized: bool = True
-) -> DataFrame:
+def embedding_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    scored = (_batch_scores_arrow if vectorized else _batch_scores_expr)(emb)
-    return _partial_topk_merge(scored, BATCH_K)
+    return _partial_topk_merge(_batch_scores_arrow(emb), BATCH_K)
 
 
 EMBEDDING_BATCH_TOPK_SQL = f"""
@@ -2042,33 +2037,51 @@ LSH_ND_BAND_BITS = LSH_ND_PLANES // LSH_ND_BANDS
 HPLSH_ORACLE_PLANES = 16
 # one salt for every md5-derandomized hyperplane family in the engine —
 # the oracle SQL builders below interpolate it, functions/vectors.py's
-# sign helpers and operators/decon_index.py's persisted band index
-# derive the SAME signs from it
+# sign_band_rows (and through it operators/decon_index.py's persisted
+# band index) derives the SAME signs from it
 HPLSH_ORACLE_SALT = HPLSH_SALT
 
 
-def _hplsh_sign(p: int):
-    """±1 component of plane p at dim index i — bit 0 of the first hex
-    digit of md5('{salt}:{p}:{i}'), identically computable in DuckDB."""
-    return lambda i: F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.lit(HPLSH_ORACLE_SALT), F.lit(str(p)), i.cast("string")
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        )
-        .cast("int")
-        .bitwiseAND(F.lit(1))
-        == 1,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
+def _embedding_bands(
+    spark: SparkSession, sf_dir: str, n_bands: int, band_bits: int, **extra: Column
+) -> tuple[DataFrame, DataFrame]:
+    """``(emb, bands)``: the fanned-out embeddings table and its
+    ``sign_band_rows`` banding ``(vec_id, *extra, band_idx, band_hash)``
+    — the one sign-LSH projection every md5-hyperplane query here
+    rides (their twins derive the same bits with ``_ddb_sign_bit``).
+
+    The literal sign matrix is sized by the vector dim, read off one
+    row of the unfanned scan (no repartition job for the peek). An
+    empty table has no row to read it from and no vector to band, so
+    any dim plans the same typed, empty result."""
+    raw = load(spark, sf_dir, "embeddings")
+    first = raw.select(F.size("embedding")).head()
+    dim = first[0] if first is not None else 1
+    emb = fan_out(raw)
+    base = emb.select(
+        "vec_id",
+        *[c.alias(k) for k, c in extra.items()],
+        F.col("embedding").cast("array<double>").alias("_v"),
+    )
+    bands = sign_band_rows(
+        base, "_v", n_bands, band_bits, dim, carry=("vec_id", *extra)
+    )
+    return emb, bands
+
+
+def _ddb_sign_bit(p: int, bit: int) -> str:
+    """DuckDB twin of one ``sign_band_rows`` bit: ``1 << bit`` when
+    ``v``'s projection onto md5 hyperplane ``p`` is positive. The sign
+    is the ``hplsh_sign_py`` formula element by element and the
+    projection folds in index order, so both engines compare the same
+    doubles."""
+    sign = (
+        "CASE WHEN (CAST(concat('0x', substr(md5("
+        f"'{HPLSH_ORACLE_SALT}:{p}:' || CAST(i - 1 AS VARCHAR)"
+        "), 1, 1)) AS INTEGER) & 1) = 1 THEN 1.0 ELSE -1.0 END"
+    )
+    proj = f"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ({sign})))"
+    return f"CASE WHEN {proj} > 0 THEN CAST({1 << bit} AS BIGINT) ELSE 0 END"
 
 
 def embedding_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2078,52 +2091,21 @@ def embedding_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Band parameters are tuned to the synthetic corpus (max pairwise
     cosine ~0.51, so the threshold is 0.4): 24 planes / 8 bands of 3
     bits gives ~90% analytic recall at cos 0.4. Production near-dup
-    thresholds (>=0.9) make pruning far sharper at the operator's
-    defaults (16 planes / 4 bands).
+    thresholds (>=0.9) make pruning far sharper with fewer, wider
+    bands.
 
-    Planes are DERANDOMIZED to the md5 basis (same family as
-    ``hyperplane_lsh_bucket_sizes``) so the ENTIRE pipeline — sign
-    projections, banding, bucket-grouped candidate generation, exact
-    verify — has a DuckDB twin (r4 verdict rows-only-shrink item). The
-    xxhash64/Arrow-matmul tier lives in operators/similarity.py::
-    hyperplane_neardup_pairs with the identical shape. The twin also
-    mirrors the degenerate-bucket cap (MAX_BUCKET, interpolated) via QUALIFY, so
-    parity holds at EVERY scale factor, not just the sf<=0.01 corpus
-    where the cap cannot bind.
+    Planes are DERANDOMIZED to the md5 basis (``sign_band_rows``, the
+    same banding as ``hyperplane_lsh_bucket_sizes``) so the ENTIRE
+    pipeline — sign projections, banding, bucket-grouped candidate
+    generation, exact verify — has a DuckDB twin (r4 verdict
+    rows-only-shrink item). The twin also mirrors the degenerate-bucket
+    cap (MAX_BUCKET, interpolated) via QUALIFY, so parity holds at
+    EVERY scale factor, not just the sf<=0.01 corpus where the cap
+    cannot bind.
     """
     from ..operators.dedup import pairs_within_buckets
 
-    emb = fan_out(load(spark, sf_dir, "embeddings"))
-    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("_v"))
-    dims = F.sequence(F.lit(0), F.size(F.col("_v")) - 1)
-    bucket = None
-    for p in range(LSH_ND_PLANES):
-        proj = F.aggregate(
-            F.zip_with(F.col("_v"), dims, lambda x, i: x * _hplsh_sign(p)(i)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        term = F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
-    mask = (1 << LSH_ND_BAND_BITS) - 1
-    bands = base.select("vec_id", bucket.alias("_bkt")).select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftrightunsigned(F.col("_bkt"), b * LSH_ND_BAND_BITS)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_hash"),
-                    )
-                    for b in range(LSH_ND_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("vec_id", "band.band_idx", "band.band_hash")
+    emb, bands = _embedding_bands(spark, sf_dir, LSH_ND_BANDS, LSH_ND_BAND_BITS)
     cands = pairs_within_buckets(bands, ["band_idx", "band_hash"], "vec_id")
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
@@ -2137,21 +2119,7 @@ def embedding_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_neardup_sql() -> str:
-    terms = []
-    for p in range(LSH_ND_PLANES):
-        sign = (
-            "CASE WHEN (CAST(concat('0x', substr(md5("
-            f"'{HPLSH_ORACLE_SALT}:{p}:' || CAST(i - 1 AS VARCHAR)"
-            "), 1, 1)) AS INTEGER) & 1) = 1 THEN 1.0 ELSE -1.0 END"
-        )
-        proj = (
-            "list_sum(list_transform(range(1, len(v) + 1), "
-            f"i -> v[i] * ({sign})))"
-        )
-        terms.append(
-            f"CASE WHEN {proj} > 0 THEN CAST({1 << p} AS BIGINT) ELSE 0 END"
-        )
-    bucket = "\n           + ".join(terms)
+    bucket = "\n           + ".join(_ddb_sign_bit(p, p) for p in range(LSH_ND_PLANES))
     cos = _DDB_COS.format(a="ea.v", b="eb.v")
     mask = (1 << LSH_ND_BAND_BITS) - 1
     return f"""
@@ -2197,81 +2165,34 @@ EMBEDDING_LSH_NEARDUP_PAIRS_SQL = _lsh_neardup_sql()
 SEMCON_EVAL_MOD = 10
 
 
-def semantic_contaminated_evals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-level decontamination — the semantic sibling of
-    ``contaminated_eval_docs``' n-gram overlap: an eval example whose
-    nearest TRAIN neighbor by embedding cosine clears the near-dup
-    threshold is contaminated even when no verbatim n-gram survives
-    (paraphrases, translations, near-duplicates post-normalization).
-    Reports, per contaminated eval vector, the strongest train cosine
-    and how many train neighbors clear the threshold.
-
-    Scale shape (the reason this survives 100 TB): the eval x train
-    pair space is pruned by the SAME derandomized sign-LSH banding as
-    ``embedding_lsh_neardup_pairs`` (24 md5 planes, 8 bands x 3 bits,
-    MAX_BUCKET degenerate-bucket cap) — bands are a narrow transform,
-    candidates come from ONE bipartite equi-join on (band_idx,
-    band_hash), and the full cross product is never materialized. The
-    DuckDB twin mirrors planes, banding, cap, split and rounding, so
-    parity holds at every scale factor.
-
-    Cost note (measured r9): the synthetic corpus forces a 0.4 cosine
-    threshold, whose recall-preserving 3-bit bands make the verify
-    pair-heavy (~10 s action at sf0.1) — the same trade recorded for
-    ``embedding_lsh_neardup_pairs``; production thresholds (>=0.9)
-    prune far sharper. Kept off the bench headline set per that
-    standing policy."""
-    emb = fan_out(load(spark, sf_dir, "embeddings"))
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_v")
-    )
-    dims = F.sequence(F.lit(0), F.size(F.col("_v")) - 1)
-    bucket = None
-    for p in range(LSH_ND_PLANES):
-        proj = F.aggregate(
-            F.zip_with(F.col("_v"), dims, lambda x, i: x * _hplsh_sign(p)(i)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        term = F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
-    mask = (1 << LSH_ND_BAND_BITS) - 1
-    is_eval = (
+def _semcon_is_eval() -> Column:
+    return (
         F.conv(
             F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
         ).cast("long")
         % SEMCON_EVAL_MOD
         == 0
     )
-    bands = (
-        base.select("vec_id", is_eval.alias("_ev"), bucket.alias("_bkt"))
-        .select(
-            "vec_id",
-            "_ev",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_idx"),
-                            F.shiftrightunsigned(
-                                F.col("_bkt"), b * LSH_ND_BAND_BITS
-                            )
-                            .bitwiseAND(F.lit(mask))
-                            .alias("band_hash"),
-                        )
-                        for b in range(LSH_ND_BANDS)
-                    ]
-                )
-            ).alias("band"),
-        )
-        .select("vec_id", "_ev", "band.band_idx", "band.band_hash")
-    )
+
+
+def _semcon_scored(
+    spark: SparkSession, sf_dir: str, n_bands: int, band_bits: int
+) -> DataFrame:
+    """``(eval_id, cosine)`` for every eval x train pair colliding in
+    at least one band — the shared scoring of both decontamination
+    tiers, which differ only in banding and final aggregate.
+
+    The degenerate-bucket cap (MAX_BUCKET) counts the WHOLE band,
+    before the eval/train split. Candidates come from ONE bipartite
+    equi-join on (band_idx, band_hash), so the eval x train cross
+    product is never materialized; each candidate's cosine is exact.
+    The twins mirror split, banding, cap and rounding, so parity holds
+    at every scale factor."""
     from pyspark.sql import Window
 
-    # degenerate-bucket cap on the WHOLE band (before the split), one
-    # rule shared with the near-dup tier and mirrored by the twin
+    emb, bands = _embedding_bands(
+        spark, sf_dir, n_bands, band_bits, _ev=_semcon_is_eval()
+    )
     w = Window.partitionBy("band_idx", "band_hash")
     bands = (
         bands.withColumn("_n", F.count(F.lit(1)).over(w))
@@ -2293,37 +2214,51 @@ def semantic_contaminated_evals(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(
         F.col("vec_id").alias("train_id"), F.col("embedding").alias("_vb")
     )
-    scored = (
+    return (
         cands.join(a, "eval_id")
         .join(b, "train_id")
         .select(
             "eval_id",
             r(cosine_similarity(F.col("_va"), F.col("_vb")), 4).alias("cosine"),
         )
-        .filter(F.col("cosine") >= COSINE_PAIR_THRESHOLD)
     )
-    return scored.groupBy("eval_id").agg(
-        F.max("cosine").alias("top_cosine"),
-        F.count(F.lit(1)).alias("n_contaminating"),
+
+
+def semantic_contaminated_evals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-level decontamination — the semantic sibling of
+    ``contaminated_eval_docs``' n-gram overlap: an eval example whose
+    nearest TRAIN neighbor by embedding cosine clears the near-dup
+    threshold is contaminated even when no verbatim n-gram survives
+    (paraphrases, translations, near-duplicates post-normalization).
+    Reports, per contaminated eval vector, the strongest train cosine
+    and how many train neighbors clear the threshold.
+
+    Scale shape (the reason this survives 100 TB): the eval x train
+    pair space is pruned by the SAME derandomized sign-LSH banding as
+    ``embedding_lsh_neardup_pairs`` (24 md5 planes, 8 bands x 3 bits)
+    and scored by ``_semcon_scored`` — bands are a narrow transform,
+    candidates come from ONE bipartite equi-join on (band_idx,
+    band_hash), and the full cross product is never materialized.
+
+    Cost note (measured r9): the synthetic corpus forces a 0.4 cosine
+    threshold, whose recall-preserving 3-bit bands make the verify
+    pair-heavy (~10 s action at sf0.1) — the same trade recorded for
+    ``embedding_lsh_neardup_pairs``; production thresholds (>=0.9)
+    prune far sharper. Kept off the bench headline set per that
+    standing policy."""
+    scored = _semcon_scored(spark, sf_dir, LSH_ND_BANDS, LSH_ND_BAND_BITS)
+    return (
+        scored.filter(F.col("cosine") >= COSINE_PAIR_THRESHOLD)
+        .groupBy("eval_id")
+        .agg(
+            F.max("cosine").alias("top_cosine"),
+            F.count(F.lit(1)).alias("n_contaminating"),
+        )
     )
 
 
 def _semcon_sql() -> str:
-    terms = []
-    for p in range(LSH_ND_PLANES):
-        sign = (
-            "CASE WHEN (CAST(concat('0x', substr(md5("
-            f"'{HPLSH_ORACLE_SALT}:{p}:' || CAST(i - 1 AS VARCHAR)"
-            "), 1, 1)) AS INTEGER) & 1) = 1 THEN 1.0 ELSE -1.0 END"
-        )
-        proj = (
-            "list_sum(list_transform(range(1, len(v) + 1), "
-            f"i -> v[i] * ({sign})))"
-        )
-        terms.append(
-            f"CASE WHEN {proj} > 0 THEN CAST({1 << p} AS BIGINT) ELSE 0 END"
-        )
-    bucket = "\n           + ".join(terms)
+    bucket = "\n           + ".join(_ddb_sign_bit(p, p) for p in range(LSH_ND_PLANES))
     cos = _DDB_COS.format(a="ea.v", b="eb.v")
     mask = (1 << LSH_ND_BAND_BITS) - 1
     return f"""
@@ -2381,14 +2316,6 @@ SEMCON_STRICT_BANDS = 8
 SEMCON_STRICT_BAND_BITS = 10  # 80 planes total
 
 
-# Python mirror of ``_hplsh_sign`` — identical md5 formula, so a sign
-# matrix precomputed driver-side equals the one the DuckDB twin (and
-# the loose tier's in-plan expression) derives element by element.
-# Shared home: functions/vectors.py (operators/decon_index.py reuses
-# it for the persisted band index).
-_hplsh_sign_py = hplsh_sign_py
-
-
 def semantic_contaminated_evals_strict(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2403,77 +2330,13 @@ def semantic_contaminated_evals_strict(
     machinery end to end, and ``n_contaminating`` is the decision
     column a production run would act on.
 
-    Scale shape: the 80 hyperplane signs are DATA-INDEPENDENT md5
-    constants, so they are precomputed driver-side (one 1-row peek for
-    the dim) and shipped as literal arrays — per-row work is 80
-    dim-length multiply-folds, no per-element md5 like the loose tier
-    pays (the r9-measured cost driver). Candidates come from ONE
-    bipartite equi-join on (band_idx, band_hash) with the shared
-    MAX_BUCKET degenerate cap; the eval x train cross product is never
-    materialized, and collision volume scales with the 0.8% random
-    band-collision rate, not the pair count. The DuckDB twin derives
-    the SAME signs in SQL (md5 formula element by element), so hash
-    parity pins the precompute-vs-in-plan equivalence too."""
-    emb = fan_out(load(spark, sf_dir, "embeddings"))
-    dim = len(emb.select("embedding").head()[0])
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_v")
-    )
-    # the whole 80 x dim sign matrix is ONE nested-array literal and
-    # the 80 projections ONE transform/aggregate expression —
-    # functions/vectors.py::sign_band_rows (shared with the persisted
-    # decontamination index, operators/decon_index.py), whose
-    # sign_matrix_literal docstring records the measured builder-cost
-    # story (plane-by-plane lit() ~10 s -> SQL-text literal 0.35 s).
-    is_eval = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % SEMCON_EVAL_MOD
-        == 0
-    )
-    bands = sign_band_rows(
-        base.select("vec_id", is_eval.alias("_ev"), "_v"),
-        "_v",
-        SEMCON_STRICT_BANDS,
-        SEMCON_STRICT_BAND_BITS,
-        dim,
-        carry=("vec_id", "_ev"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_idx", "band_hash")
-    bands = (
-        bands.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_n") <= MAX_BUCKET)
-        .drop("_n")
-    )
-    ev = bands.filter(F.col("_ev")).select(
-        F.col("vec_id").alias("eval_id"), "band_idx", "band_hash"
-    )
-    tr = bands.filter(~F.col("_ev")).select(
-        F.col("vec_id").alias("train_id"), "band_idx", "band_hash"
-    )
-    cands = (
-        ev.join(tr, ["band_idx", "band_hash"])
-        .select("eval_id", "train_id")
-        .distinct()
-    )
-    a = emb.select(
-        F.col("vec_id").alias("eval_id"), F.col("embedding").alias("_va")
-    )
-    b2 = emb.select(
-        F.col("vec_id").alias("train_id"), F.col("embedding").alias("_vb")
-    )
-    scored = (
-        cands.join(a, "eval_id")
-        .join(b2, "train_id")
-        .select(
-            "eval_id",
-            r(cosine_similarity(F.col("_va"), F.col("_vb")), 4).alias(
-                "cosine"
-            ),
-        )
+    Scale shape: the loose tier's ``_semcon_scored`` with 80 planes in
+    8 sharp 10-bit bands (the persisted decontamination index,
+    operators/decon_index.py, bands with the same parameters), so
+    collision volume scales with the 0.8% random band-collision rate,
+    not the pair count."""
+    scored = _semcon_scored(
+        spark, sf_dir, SEMCON_STRICT_BANDS, SEMCON_STRICT_BAND_BITS
     )
     return scored.groupBy("eval_id").agg(
         F.max("cosine").alias("top_cosine"),
@@ -2486,31 +2349,23 @@ def semantic_contaminated_evals_strict(
     )
 
 
-def _semcon_strict_sql() -> str:
-    band_exprs = []
-    for b in range(SEMCON_STRICT_BANDS):
-        terms = []
-        for j in range(SEMCON_STRICT_BAND_BITS):
-            p = b * SEMCON_STRICT_BAND_BITS + j
-            sign = (
-                "CASE WHEN (CAST(concat('0x', substr(md5("
-                f"'{HPLSH_ORACLE_SALT}:{p}:' || CAST(i - 1 AS VARCHAR)"
-                "), 1, 1)) AS INTEGER) & 1) = 1 THEN 1.0 ELSE -1.0 END"
-            )
-            proj = (
-                "list_sum(list_transform(range(1, len(v) + 1), "
-                f"i -> v[i] * ({sign})))"
-            )
-            terms.append(
-                f"CASE WHEN {proj} > 0 THEN CAST({1 << j} AS BIGINT) "
-                "ELSE 0 END"
-            )
-        band_exprs.append(
-            f"SELECT vec_id, is_eval, {b} AS band_idx,\n"
-            "       (" + "\n        + ".join(terms) + ") AS band_hash\n"
-            "  FROM bkt"
+def _ddb_strict_bands_sql() -> str:
+    """``bands_raw`` body of the strict-banding twins: one UNION ALL arm
+    per band over ``bkt``, bit j of band b from plane ``b*bits + j``."""
+    return "\nUNION ALL\n".join(
+        f"SELECT vec_id, is_eval, {b} AS band_idx,\n"
+        "       ("
+        + "\n        + ".join(
+            _ddb_sign_bit(b * SEMCON_STRICT_BAND_BITS + j, j)
+            for j in range(SEMCON_STRICT_BAND_BITS)
         )
-    bands_raw = "\nUNION ALL\n".join(band_exprs)
+        + ") AS band_hash\n"
+        "  FROM bkt"
+        for b in range(SEMCON_STRICT_BANDS)
+    )
+
+
+def _semcon_strict_sql() -> str:
     cos = _DDB_COS.format(a="ea.v", b="eb.v")
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2521,7 +2376,7 @@ bkt AS (
   FROM e
 ),
 bands_raw AS (
-{bands_raw}
+{_ddb_strict_bands_sql()}
 ),
 bands AS (
   SELECT * FROM bands_raw
@@ -2588,13 +2443,7 @@ def decon_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = fan_out(load(spark, sf_dir, "embeddings"))
-    is_eval = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % SEMCON_EVAL_MOD
-        == 0
-    )
+    is_eval = _semcon_is_eval()
     evals = emb.filter(is_eval)
     train = emb.filter(~is_eval)
     path = os.path.join(_ephemeral_dir("decon_idx_q_"), "idx")
@@ -2604,36 +2453,11 @@ def decon_index_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decon_index_report_sql() -> str:
-    # identical per-plane md5 sign derivation to _semcon_strict_sql
-    # (the index uses the same shared banding helper and parameters);
-    # the CTE structure differs where the PROBE's semantics differ
-    # from the one-shot query's: the bucket cap partitions over the
-    # STORED (train) side only, and the output is the distinct
-    # candidate-pair report, not a per-eval aggregate.
-    band_exprs = []
-    for b in range(SEMCON_STRICT_BANDS):
-        terms = []
-        for j in range(SEMCON_STRICT_BAND_BITS):
-            p = b * SEMCON_STRICT_BAND_BITS + j
-            sign = (
-                "CASE WHEN (CAST(concat('0x', substr(md5("
-                f"'{HPLSH_ORACLE_SALT}:{p}:' || CAST(i - 1 AS VARCHAR)"
-                "), 1, 1)) AS INTEGER) & 1) = 1 THEN 1.0 ELSE -1.0 END"
-            )
-            proj = (
-                "list_sum(list_transform(range(1, len(v) + 1), "
-                f"i -> v[i] * ({sign})))"
-            )
-            terms.append(
-                f"CASE WHEN {proj} > 0 THEN CAST({1 << j} AS BIGINT) "
-                "ELSE 0 END"
-            )
-        band_exprs.append(
-            f"SELECT vec_id, is_eval, {b} AS band_idx,\n"
-            "       (" + "\n        + ".join(terms) + ") AS band_hash\n"
-            "  FROM bkt"
-        )
-    bands_raw = "\nUNION ALL\n".join(band_exprs)
+    # the strict twin's bands (the index uses the same shared banding
+    # helper and parameters); the CTE structure differs where the
+    # PROBE's semantics differ from the one-shot query's: the bucket
+    # cap partitions over the STORED (train) side only, and the output
+    # is the distinct candidate-pair report, not a per-eval aggregate.
     cos = _DDB_COS.format(a="ea.v", b="eb.v")
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2644,7 +2468,7 @@ bkt AS (
   FROM e
 ),
 bands_raw AS (
-{bands_raw}
+{_ddb_strict_bands_sql()}
 ),
 tb AS (
   SELECT vec_id, band_idx, band_hash FROM bands_raw WHERE NOT is_eval
@@ -2858,53 +2682,26 @@ def hyperplane_lsh_bucket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     basis (±1 from a hex digit of md5(salt:plane:dim)) so the whole
     bucketing has an exact DuckDB twin: the hash match pins the sign
     projections, bit packing and occupancy — the r4 verdict's
-    rows-only-shrink item. The scale tiers are
-    operators/similarity.py::hyperplane_lsh_buckets (xxhash64 planes,
-    same shape) and its Arrow matmul variant; all are one narrow pass,
-    no shuffle before the bounded (≤2^planes) occupancy agg.
+    rows-only-shrink item. The bucket is the single 16-bit band of
+    ``sign_band_rows``: one narrow pass, no shuffle before the bounded
+    (≤2^planes) occupancy agg.
 
     Both engines fold the projection sequentially over the dim index
     (Spark ``aggregate`` == DuckDB ``list_sum(list_transform(...))``),
     so the sign comparisons see bit-identical doubles.
     """
-    emb = fan_out(load(spark, sf_dir, "embeddings"))
-    v = F.col("embedding").cast("array<double>")
-    base = emb.select("vec_id", v.alias("_v"))
-    dims = F.sequence(F.lit(0), F.size(F.col("_v")) - 1)
-    bucket = None
-    for p in range(HPLSH_ORACLE_PLANES):
-        proj = F.aggregate(
-            F.zip_with(F.col("_v"), dims, lambda x, i: x * _hplsh_sign(p)(i)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        term = F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
+    _, bands = _embedding_bands(spark, sf_dir, 1, HPLSH_ORACLE_PLANES)
     return (
-        base.select(bucket.alias("lsh_bucket"))
+        bands.select(F.col("band_hash").alias("lsh_bucket"))
         .groupBy("lsh_bucket")
         .agg(F.count("*").cast("long").alias("n_vectors"))
     )
 
 
 def _hplsh_sql() -> str:
-    terms = []
-    for p in range(HPLSH_ORACLE_PLANES):
-        sign = (
-            "CASE WHEN (CAST(concat('0x', substr(md5("
-            f"'{HPLSH_ORACLE_SALT}:{p}:' || CAST(i - 1 AS VARCHAR)"
-            "), 1, 1)) AS INTEGER) & 1) = 1 THEN 1.0 ELSE -1.0 END"
-        )
-        proj = (
-            "list_sum(list_transform(range(1, len(v) + 1), "
-            f"i -> v[i] * ({sign})))"
-        )
-        terms.append(
-            f"CASE WHEN {proj} > 0 THEN CAST({1 << p} AS BIGINT) ELSE 0 END"
-        )
-    bucket = "\n         + ".join(terms)
+    bucket = "\n         + ".join(
+        _ddb_sign_bit(p, p) for p in range(HPLSH_ORACLE_PLANES)
+    )
     return f"""
 SELECT lsh_bucket, CAST(COUNT(*) AS BIGINT) AS n_vectors FROM (
   SELECT ({bucket}) AS lsh_bucket

@@ -41,10 +41,6 @@ from pyspark.sql import functions as F
 
 ROLLUP_PARTITION_COL = "rollup_date"
 
-# Partial-aggregate schema of the rollup table. Kept in one place so the
-# maintainer and the finalizer can't drift.
-_PARTIAL_COLS = ("sum_value", "cnt", "min_value", "max_value")
-
 
 def _partials(
     df: DataFrame,

@@ -234,6 +234,23 @@ def test_minhash_candidates_plan_has_no_join(spark, sf_dir):
         assert op not in plan, plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["embedding_lsh_neardup_pairs", "semantic_contaminated_evals",
+     "hyperplane_lsh_bucket_sizes"],
+)
+def test_sign_lsh_plans_have_no_per_element_md5(spark, sf_dir, name):
+    """The md5 hyperplane queries band through
+    functions/vectors.py::sign_band_rows: the signs are a driver-built
+    literal matrix of ±1.0, so the optimized plan never hashes the
+    plane salt per element per row."""
+    from meshtastic_airsensor_database_spark.functions.vectors import HPLSH_SALT
+
+    df = REGISTRY[name].builder(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert HPLSH_SALT not in plan, name
+
+
 def test_ivf_assignment_is_narrow_no_vector_shuffle(spark, sf_dir):
     """IVF cluster assignment runs as a narrow transform+array_max over
     a broadcast centroid array: the vector relation is never exchanged.

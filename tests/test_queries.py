@@ -1248,6 +1248,28 @@ def test_semantic_strict_tier_catches_planted_contamination(spark, tmp_path):
         assert r["n_candidates"] <= 0.25 * n_train, r
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["embedding_lsh_neardup_pairs", "semantic_contaminated_evals",
+     "semantic_contaminated_evals_strict", "hyperplane_lsh_bucket_sizes"],
+)
+def test_sign_lsh_query_on_empty_embeddings_is_typed_empty(
+    spark, sf_dir, tmp_path, name
+):
+    """An empty embeddings table has no row to read the sign-matrix dim
+    from; the sign-LSH queries still return no rows under their usual
+    schema instead of raising."""
+    from meshtastic_airsensor_database_spark.io_utils import load
+
+    load(spark, sf_dir, "embeddings").limit(0).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    builder = REGISTRY[name].builder
+    got = builder(spark, str(tmp_path))
+    assert got.collect() == []
+    assert got.schema == builder(spark, sf_dir).schema
+
+
 def test_fold_numpy_twins():
     """_matmul_fold/_matvec_fold must be BIT-identical to the ascending
     left-fold Python arithmetic they replaced (np.add.accumulate is

@@ -8,7 +8,6 @@ from meshtastic_airsensor_database_spark.io_utils import load
 from meshtastic_airsensor_database_spark.operators.similarity import (
     assign_ivf_clusters,
     brute_force_topk,
-    hyperplane_lsh_buckets,
     ivf_topk,
 )
 
@@ -54,25 +53,18 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     assert full == exact
 
 
-def test_hyperplane_buckets_deterministic(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    b1 = {r.vec_id: r.lsh_bucket for r in hyperplane_lsh_buckets(emb).collect()}
-    b2 = {r.vec_id: r.lsh_bucket for r in hyperplane_lsh_buckets(emb).collect()}
-    assert b1 == b2
-    assert len(set(b1.values())) > 1  # not degenerate
-
-
-def test_hyperplane_neardup_pairs_recall_vs_exact(spark, sf_dir):
-    """Sign-LSH pruned + verified pairs vs the exact all-pairs query:
-    no false positives (verification is exact), recall >= 0.7 at the
-    corpus threshold with the tuned (24 planes, 8 bands)."""
-    from pyspark.sql import functions as F
-
+def test_embedding_lsh_neardup_pairs_recall_vs_exact(spark, sf_dir):
+    """Sign-LSH pruned + verified pairs (the registered
+    embedding_lsh_neardup_pairs) vs the exact all-pairs set: no false
+    positives (verification is exact), recall >= 0.7 at the corpus
+    threshold with the tuned 24 planes in 8 bands."""
     from meshtastic_airsensor_database_spark.io_utils import fan_out
-    from meshtastic_airsensor_database_spark.operators.similarity import (
-        hyperplane_neardup_pairs,
-    )
     from meshtastic_airsensor_database_spark.functions.vectors import cosine_similarity
+    from meshtastic_airsensor_database_spark.plans.base import r as decimal_round
+    from meshtastic_airsensor_database_spark.plans.vectorq import (
+        COSINE_PAIR_THRESHOLD,
+        embedding_lsh_neardup_pairs,
+    )
 
     emb = fan_out(load(spark, sf_dir, "embeddings"))
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
@@ -81,15 +73,13 @@ def test_hyperplane_neardup_pairs_recall_vs_exact(spark, sf_dir):
         (r.id_a, r.id_b)
         for r in a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b",
-                F.round(cosine_similarity("ea", "eb"), 4).alias("cos"))
-        .filter(F.col("cos") >= 0.4)
+                decimal_round(cosine_similarity("ea", "eb"), 4).alias("cos"))
+        .filter(F.col("cos") >= COSINE_PAIR_THRESHOLD)
         .collect()
     }
     got = {
         (r.id_a, r.id_b)
-        for r in hyperplane_neardup_pairs(
-            emb, threshold=0.4, n_planes=24, n_bands=8
-        ).collect()
+        for r in embedding_lsh_neardup_pairs(spark, sf_dir).collect()
     }
     assert got <= exact  # exact verification -> no false positives
     if exact:
@@ -271,30 +261,19 @@ def test_arrow_assignment_matches_builtin_assignment(spark, sf_dir):
     assert a == b
 
 
-def test_arrow_lsh_buckets_bit_identical_to_expressions(spark, sf_dir):
-    from meshtastic_airsensor_database_spark.io_utils import load
-    from meshtastic_airsensor_database_spark.operators.similarity import (
-        hyperplane_lsh_buckets,
-        hyperplane_lsh_buckets_arrow,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    a = {r["vec_id"]: r["lsh_bucket"]
-         for r in hyperplane_lsh_buckets(emb, 24).collect()}
-    b = {r["vec_id"]: r["lsh_bucket"]
-         for r in hyperplane_lsh_buckets_arrow(emb, 24).collect()}
-    assert a == b
-
-
 def test_batch_topk_arrow_equals_expression_path(spark, sf_dir):
     from meshtastic_airsensor_database_spark.plans.vectorq import (
+        BATCH_K,
+        _batch_scores_expr,
+        _partial_topk_merge,
         embedding_batch_topk,
     )
 
+    emb = load(spark, sf_dir, "embeddings")
     a = sorted(tuple(r) for r in embedding_batch_topk(spark, sf_dir).collect())
     b = sorted(
         tuple(r)
-        for r in embedding_batch_topk(spark, sf_dir, vectorized=False).collect()
+        for r in _partial_topk_merge(_batch_scores_expr(emb), BATCH_K).collect()
     )
     assert a == b
 

@@ -2,8 +2,9 @@
 
 These sketches are correctness-bearing: the driver hash-checks the
 queries built on them (minhash_neardup_candidates,
-minhash_jaccard_calibration, simhash_dedup_buckets,
-hyperplane_lsh_bucket_sizes, embedding_lsh_neardup_pairs), so the
+minhash_jaccard_calibration, simhash_dedup_buckets, and through
+sign_band_rows hyperplane_lsh_bucket_sizes, embedding_lsh_neardup_pairs
+and the semantic decontamination tiers), so the
 sketch math deserves the same adversarial treatment the ordered-stats
 machinery got (tests/test_ordered.py): hypothesis drives token
 multisets / vectors through shapes the fixtures never produce —
@@ -18,15 +19,16 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from meshtastic_airsensor_database_spark.plans.vectorq import (
+    HPLSH_ORACLE_PLANES,
     HPLSH_ORACLE_SALT,
     LSH_ND_BAND_BITS,
     LSH_ND_BANDS,
-    LSH_ND_PLANES,
     MH_CAND_BANDS,
     MHJ_PERMS,
     MHJ_SALTS,
@@ -104,19 +106,22 @@ def _model_simhash(toks: list[str]) -> tuple[int, list[int]]:
     return sig, bands
 
 
-def _model_hplsh_bucket(vec: list[float]) -> int:
+def _model_sign_bands(vec: list[float], n_bands: int, band_bits: int) -> list[int]:
     """±1 plane component = bit 0 of the first hex digit of
     md5('{salt}:{p}:{i}'); projection = SEQUENTIAL left-fold sum (the
-    F.aggregate order), bucket bit p set iff projection > 0."""
-    bkt = 0
-    for p in range(LSH_ND_PLANES):
+    F.aggregate order); bit j of band b set iff the projection onto
+    plane b*band_bits + j is > 0."""
+    projs = []
+    for p in range(n_bands * band_bits):
         acc = 0.0
         for i, x in enumerate(vec):
             sign = 1.0 if int(_hx(f"{HPLSH_ORACLE_SALT}:{p}:{i}")[0], 16) & 1 else -1.0
             acc += x * sign
-        if acc > 0:
-            bkt |= 1 << p
-    return bkt
+        projs.append(acc)
+    return [
+        sum(1 << j for j in range(band_bits) if projs[b * band_bits + j] > 0)
+        for b in range(n_bands)
+    ]
 
 
 def test_md5_minhash_sketch_matches_python_model(spark):
@@ -233,64 +238,23 @@ def test_md5_simhash_matches_python_model(spark):
     check()
 
 
-def test_md5_hyperplane_bucket_matches_python_model(spark):
-    """The sign-LSH bucket (24 md5 planes, sequential-fold projection)
-    must match the model bit for bit — including the band split used by
-    embedding_lsh_neardup_pairs."""
-    vec = st.lists(
-        st.floats(min_value=-8, max_value=8, allow_nan=False, width=64),
-        min_size=1,
-        max_size=12,
-    )
-
-    @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-    @given(vecs=st.lists(vec, min_size=1, max_size=6))
-    def check(vecs):
-        from meshtastic_airsensor_database_spark.plans.vectorq import _hplsh_sign
-
-        rows = [(i, v) for i, v in enumerate(vecs)]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        base = df.select("vec_id", F.col("embedding").alias("_v"))
-        dims = F.sequence(F.lit(0), F.size(F.col("_v")) - 1)
-        bucket = None
-        for p in range(LSH_ND_PLANES):
-            proj = F.aggregate(
-                F.zip_with(F.col("_v"), dims, lambda x, i: x * _hplsh_sign(p)(i)),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            term = F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            bucket = term if bucket is None else bucket.bitwiseOR(term)
-        got = {r["vec_id"]: r["bkt"] for r in base.select("vec_id", bucket.alias("bkt")).collect()}
-        mask = (1 << LSH_ND_BAND_BITS) - 1
-        for i, v in enumerate(vecs):
-            want = _model_hplsh_bucket(v)
-            assert got[i] == want, (i, v)
-            # band split parity (the structure the pair query buckets on)
-            for b in range(LSH_ND_BANDS):
-                assert (got[i] >> (b * LSH_ND_BAND_BITS)) & mask == (
-                    want >> (b * LSH_ND_BAND_BITS)
-                ) & mask
-
-    check()
-
-
-def test_sign_band_rows_matches_python_model(spark):
-    """Property pin of the SHARED sign-LSH banding helper
-    (functions/vectors.py::sign_band_rows — the strict decontamination
-    query and the persisted decon index both ride it): for random
-    vectors of a random dim, the Spark band rows equal a pure-Python
-    recompute from the same md5 sign formula with the same sequential
-    left-fold projection order. Non-default (3 bands x 5 bits) banding
-    so parameter plumbing is exercised, not just the 8x10 default."""
+@pytest.mark.parametrize(
+    "n_bands,band_bits",
+    [(3, 5), (LSH_ND_BANDS, LSH_ND_BAND_BITS), (1, HPLSH_ORACLE_PLANES)],
+)
+def test_sign_band_rows_matches_python_model(spark, n_bands, band_bits):
+    """Property pin of the package's one sign-LSH banding
+    (functions/vectors.py::sign_band_rows — every md5-hyperplane query
+    and the persisted decon index ride it): for random vectors of a
+    random dim, the Spark band rows equal a pure-Python recompute of
+    the md5 sign formula with the same sequential left-fold projection
+    order. Parametrized over a non-default banding and the two
+    bandings the queries use: 8 bands x 3 bits (the embedding near-dup
+    pairs and the loose decontamination tier) and one 16-bit band
+    (hyperplane_lsh_bucket_sizes)."""
     from meshtastic_airsensor_database_spark.functions.vectors import (
-        hplsh_sign_py,
         sign_band_rows,
     )
-
-    n_bands, band_bits = 3, 5
 
     @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
     @given(data=st.data())
@@ -313,18 +277,7 @@ def test_sign_band_rows_matches_python_model(spark):
             ).collect()
         }
         for i, v in enumerate(vecs):
-            projs = []
-            for p in range(n_bands * band_bits):
-                acc = 0.0
-                for j, x in enumerate(v):
-                    acc += x * hplsh_sign_py(p, j)
-                projs.append(acc)
-            for b in range(n_bands):
-                want = sum(
-                    1 << j
-                    for j in range(band_bits)
-                    if projs[b * band_bits + j] > 0
-                )
+            for b, want in enumerate(_model_sign_bands(v, n_bands, band_bits)):
                 assert got[(i, b)] == want, (i, b, v)
 
     check()
