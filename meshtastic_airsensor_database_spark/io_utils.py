@@ -138,86 +138,122 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-# --- staged index (re)builds --------------------------------------------------
+# --- crash-safe directory swap -------------------------------------------------
 #
-# A persisted multi-table index (operators/dedup_index.py bands+sigs,
-# operators/vindex.py centroids+vectors) cannot be REBUILT in place
-# with two sequential overwrites: a crash between them leaves table A
-# from the new build and table B from the old one — mutually
-# inconsistent in a way every probe then trusts silently (new bands
-# verified against old signatures; new centroids pruning old
-# assignments). The fix is the compact_unpartitioned discipline
-# (sources/maintenance.py): build EVERYTHING into <path>.build-staging,
-# stamp a completion marker, then swap with two directory renames —
-# every crash point is recovered by ``recover_staged_build`` at the
-# next build/extend entry. Local/posix rename semantics (the same
-# caveat as compaction: object stores need a manifest swap).
+# One state machine replaces a directory's contents atomically with
+# respect to process crashes: the writer fills ``<path><staging>``, a
+# completion marker lands in it, then two renames swap it in (live ->
+# ``<path><trash>``, staging -> live) and the trash is dropped. Every
+# crash point is converged by ``recover_swap`` at the next entry.
+# Three callers, each keeping its own on-disk names:
+#
+# - persisted index (re)builds (operators/dedup_index.py bands+sigs,
+#   operators/decon_index.py bands+vecs, operators/vindex.py
+#   centroids+vectors): ``.build-staging`` / ``.build-trash`` with an
+#   fsync'd ``_BUILD_COMPLETE`` stamped by ``publish_swap``. Two
+#   sequential in-place overwrites would leave table A from the new
+#   build and table B from the old one after a crash between them —
+#   new bands verified against old signatures, silently;
+# - unpartitioned compaction and index erasure
+#   (sources/maintenance.py): ``.compact-staging`` / ``.compact-trash``
+#   with Spark's ``_SUCCESS`` as the marker;
+# - the ingest node-dim snapshot (streaming/ingest.py): ``._next`` /
+#   ``._old`` with Spark's ``_SUCCESS``.
+#
+# The filesystem follows the path: ``os`` for local paths, Hadoop
+# ``FileSystem`` for ``scheme://`` paths. Rename atomicity is the
+# filesystem's: posix and HDFS give it, object stores do not (they
+# need a manifest swap — versioned.py's pointer publish).
 
-_STAGING_SUFFIX = ".build-staging"
-_TRASH_SUFFIX = ".build-trash"
-_BUILD_MARKER = "_BUILD_COMPLETE"
-
-
-def begin_staged_build(path: str) -> str:
-    """Start a staged (re)build: recover any prior crash state, then
-    return a CLEAN staging dir the caller writes the whole index into."""
-    import shutil
-
-    recover_staged_build(path)
-    staging = path + _STAGING_SUFFIX
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(staging)
-    return staging
+BUILD_SWAP = (".build-staging", ".build-trash", "_BUILD_COMPLETE")
 
 
-def commit_staged_build(path: str) -> None:
-    """Atomically (two renames) publish the staged build over ``path``.
-    The completion marker is fsync'd BEFORE any rename, so recovery can
-    always tell a finished staging from a half-written one."""
-    import shutil
+def _swap_fs(path: str):
+    """(exists, rename, rmtree, touch) for the filesystem that
+    holds ``path``; ``touch`` creates an empty file durably."""
+    if "://" not in path:
+        import shutil
 
-    staging = path + _STAGING_SUFFIX
-    trash = path + _TRASH_SUFFIX
-    marker = os.path.join(staging, _BUILD_MARKER)
-    with open(marker, "w") as f:
-        f.flush()
-        os.fsync(f.fileno())
-    if os.path.exists(path):
-        os.rename(path, trash)
-    os.rename(staging, path)
-    shutil.rmtree(trash, ignore_errors=True)
+        def touch(p):
+            with open(p, "w") as f:
+                f.flush()
+                os.fsync(f.fileno())
+
+        return (
+            os.path.exists,
+            os.rename,
+            lambda p: shutil.rmtree(p, ignore_errors=True),
+            touch,
+        )
+    from pyspark import SparkContext
+
+    sc = SparkContext.getOrCreate()
+    hpath = sc._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(sc._jsc.hadoopConfiguration())
+
+    return (
+        lambda p: fs.exists(hpath(p)),
+        lambda a, b: fs.rename(hpath(a), hpath(b)),
+        lambda p: fs.delete(hpath(p), True),
+        # close() completes the file on the NameNode; hsync is not
+        # supported by every FileSystem
+        lambda p: fs.create(hpath(p), True).close(),
+    )
 
 
-def recover_staged_build(path: str) -> None:
-    """Converge from ANY crash point of a staged build/swap:
+def publish_swap(path: str, staging_suffix: str, trash_suffix: str, marker: str) -> None:
+    """Swap the complete ``path + staging_suffix`` in for ``path``. The
+    marker is stamped durably BEFORE any rename unless the writer
+    already left it, so ``recover_swap`` can always tell a finished
+    staging from a half-written one. Callers run ``recover_swap``
+    first, at their entry."""
+    exists, rename, rmtree, touch = _swap_fs(path)
+    staging, trash = path + staging_suffix, path + trash_suffix
+    stamp = staging + "/" + marker
+    if not exists(stamp):
+        touch(stamp)
+    if exists(path):
+        rename(path, trash)
+    rename(staging, path)
+    rmtree(trash)
+
+
+def recover_swap(path: str, staging_suffix: str, trash_suffix: str, marker: str) -> bool:
+    """Converge from ANY crash point of ``publish_swap``; returns
+    whether ``path`` exists afterwards.
 
     - trash exists, path missing, staging complete -> crash between the
       two renames: finish (staging -> path), drop trash;
     - trash exists, path missing, staging absent/incomplete -> roll
       back (trash -> path);
     - trash exists, path exists -> crash after both renames: drop trash;
-    - staging complete, path missing, no trash -> fresh build crashed
+    - staging complete, path missing, no trash -> first publish crashed
       between marker and rename: finish it;
     - any other staging remnant -> drop it (the original — if any — is
-      intact; the caller re-runs the build).
-    """
-    import shutil
+      intact; the caller re-runs its write).
 
-    staging = path + _STAGING_SUFFIX
-    trash = path + _TRASH_SUFFIX
-    staged_ok = os.path.exists(os.path.join(staging, _BUILD_MARKER))
-    if os.path.exists(trash):
-        if not os.path.exists(path):
-            if staged_ok:
-                os.rename(staging, path)
-            else:
-                os.rename(trash, path)
-        if os.path.exists(trash) and os.path.exists(path):
-            shutil.rmtree(trash, ignore_errors=True)
-    elif staged_ok and not os.path.exists(path):
-        os.rename(staging, path)
-    if os.path.exists(staging):
-        shutil.rmtree(staging, ignore_errors=True)
+    Afterwards neither staging nor trash exists.
+    """
+    exists, rename, rmtree, _ = _swap_fs(path)
+    staging, trash = path + staging_suffix, path + trash_suffix
+    staged_ok = exists(staging + "/" + marker)
+    has_path = exists(path)
+    if not has_path and (staged_ok or exists(trash)):
+        rename(staging if staged_ok else trash, path)
+        has_path = True
+    rmtree(trash)
+    rmtree(staging)
+    return has_path
+
+
+def begin_staged_build(path: str) -> str:
+    """Start a staged index (re)build: recover any prior crash state,
+    then return a CLEAN staging dir the caller writes the whole index
+    into; ``publish_swap(path, *BUILD_SWAP)`` publishes it."""
+    recover_swap(path, *BUILD_SWAP)
+    staging = path + BUILD_SWAP[0]
+    os.makedirs(staging)
+    return staging
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -62,11 +62,12 @@ from ..functions.vectors import (
     sign_band_rows,
 )
 from ..io_utils import (
+    BUILD_SWAP,
     begin_staged_build,
-    commit_staged_build,
     materialize,
     parallel_append_ordered,
-    recover_staged_build,
+    publish_swap,
+    recover_swap,
 )
 from .dedup import MAX_BUCKET
 
@@ -204,7 +205,7 @@ def build_decon_index(
     # at 100 TB.
     #
     # The two writes are INDEPENDENT jobs inside one atomic staged
-    # build (ordering is irrelevant before commit_staged_build's
+    # build (ordering is irrelevant before publish_swap's
     # rename), so they run concurrently from two driver threads — the
     # second write's tasks back-fill the first's stragglers instead of
     # waiting for them (guide §2.6 overlap-independent-jobs).
@@ -223,7 +224,7 @@ def build_decon_index(
         )
         fb.result()
         fv.result()
-    commit_staged_build(path)
+    publish_swap(path, *BUILD_SWAP)
 
 
 def extend_decon_index(
@@ -256,7 +257,7 @@ def extend_decon_index(
     first = new_train.select(emb_col).head()
     if first is None:
         return
-    recover_staged_build(path)  # converge any crashed (re)build first
+    recover_swap(path, *BUILD_SWAP)  # converge any crashed (re)build first
     bands, vecs, dim = _index_rows(
         new_train, id_col, emb_col, n_bands, band_bits, dim=len(first[0])
     )

@@ -23,7 +23,7 @@ docs) are capped by ``MAX_BUCKET`` salting guard.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint_md5, word_shingles
@@ -129,35 +129,15 @@ def _perm_params(n_perm: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(content_col: Column, n_perm: int = N_PERMUTATIONS) -> Column:
-    """array<long> MinHash signature over word-3-gram shingles.
-
-    One xxhash64 per shingle, then each 'permutation' is a universal
-    hash (a*x+b) mod P over that base hash; min over the shingle set
-    approximates the Jaccard-preserving permutation min. Pure
-    built-ins: transform + array_min.
-    """
-    shingles = word_shingles(content_col, 3)
-    base = F.transform(
-        shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_P))
-    )
-    def perm(a: int, b: int):
-        return lambda x: (x * a + b) % _MINHASH_P
-
-    mins = [
-        F.array_min(F.transform(base, perm(a, b))) for a, b in _perm_params(n_perm)
-    ]
-    return F.array(*mins)
-
-
 def minhash_signature_df(
     df: DataFrame, id_col: str, content_col: str, n_perm: int = N_PERMUTATIONS
 ) -> DataFrame:
     """(id, sig array<long>) via explode + hash aggregate — the scale shape.
 
-    The column formulation (``minhash_signature``) gets its shingle
-    subexpression inlined once per permutation by Catalyst (no CSE
-    across array elements) — quadratic blowup. Exploding shingles and
+    A column formulation (one ``array_min(transform(shingles, ...))``
+    per permutation) gets its shingle subexpression inlined once per
+    permutation by Catalyst (no CSE across array elements) — quadratic
+    blowup. Exploding shingles and
     running ``n_perm`` MIN aggregates hashes each shingle exactly once
     and shuffles only (id, n_perm longs).
     """

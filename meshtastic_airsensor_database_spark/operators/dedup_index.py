@@ -52,11 +52,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io_utils import (
+    BUILD_SWAP,
     begin_staged_build,
-    commit_staged_build,
     materialize,
     parallel_append_ordered,
-    recover_staged_build,
+    publish_swap,
+    recover_swap,
 )
 from .dedup import (
     _MINHASH_P,
@@ -196,11 +197,11 @@ def build_minhash_index(
     extend/probe read the tier from the stamp, never from the caller.
 
     The whole build lands in a STAGED directory and swaps in with two
-    renames (io_utils.begin/commit_staged_build): two in-place
+    renames (io_utils.begin_staged_build/publish_swap): two in-place
     overwrites would leave a crash window where new bands meet old
     signatures — candidates verified against the wrong sketch, silently
     wrong estimates. Any crash state converges at the next
-    build/extend entry (``recover_staged_build``)."""
+    build/extend entry (``recover_swap``)."""
     if sketch not in _META_BY_SKETCH:
         raise ValueError(
             f"sketch must be one of {sorted(_META_BY_SKETCH)}, got {sketch!r}"
@@ -219,7 +220,7 @@ def build_minhash_index(
     # files at 100 TB.
     #
     # Both writes are INDEPENDENT jobs inside one atomic staged build
-    # (ordering is irrelevant before commit_staged_build's rename), so
+    # (ordering is irrelevant before publish_swap's rename), so
     # they run concurrently from two driver threads (guide §2.6) —
     # extend keeps its sigs-BEFORE-bands ordering because its appends
     # are not staged.
@@ -238,7 +239,7 @@ def build_minhash_index(
         )
         fs.result()
         fb.result()
-    commit_staged_build(path)
+    publish_swap(path, *BUILD_SWAP)
 
 
 def extend_minhash_index(
@@ -259,7 +260,7 @@ def extend_minhash_index(
     probe (distinct-id bucket counts, distinct report)."""
     if new_docs.isEmpty():
         return
-    recover_staged_build(path)
+    recover_swap(path, *BUILD_SWAP)
     sketch = _check_meta(path)
     # NOT share_sketch: an eager shared sketch would serialize one
     # sketch job BEFORE the two appends — measured slower end-to-end

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
-from ..io_utils import begin_staged_build, commit_staged_build, recover_staged_build
+from ..io_utils import BUILD_SWAP, begin_staged_build, publish_swap, recover_swap
 from .similarity import (
     assign_to_centroids_euclidean,
     lloyd_kmeans_centroids,
@@ -76,7 +76,7 @@ def build_ivf_index(
     shuffle on the cluster key (the partitionBy); centroids are C rows.
 
     The whole build lands in a STAGED directory and swaps in with two
-    renames (io_utils.begin/commit_staged_build): two in-place
+    renames (io_utils.begin_staged_build/publish_swap): two in-place
     overwrites would leave a crash window where NEW centroids prune OLD
     assignments — probes read the wrong clusters, silently. Any crash
     state converges at the next build/extend entry."""
@@ -107,7 +107,7 @@ def build_ivf_index(
     assigned.hint("rebalance", "cluster").write.partitionBy("cluster").parquet(
         os.path.join(staging, "vectors")
     )
-    commit_staged_build(path)
+    publish_swap(path, *BUILD_SWAP)
 
 
 def extend_ivf_index(
@@ -128,7 +128,7 @@ def extend_ivf_index(
     first = new_emb.select(vec_col).head()
     if first is None:
         return
-    recover_staged_build(path)
+    recover_swap(path, *BUILD_SWAP)
     _check_meta(path, len(first[0]))
     spark = new_emb.sparkSession
     cents = spark.read.parquet(os.path.join(path, "centroids"))

@@ -80,15 +80,3 @@ def binary_file_source(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def orc_batch_source(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar-interchange source beyond parquet: ORC ships inside
-    Spark itself (no external package), with the same pushdown story —
-    predicate/column pruning reach the scan, files are splittable, and
-    vectorized reading applies. The engine treats it as a first-class
-    fact-table format so a warehouse standardized on ORC (Hive
-    heritage) can feed the same pipelines; every io_utils consumer is
-    format-agnostic past the load.
-    """
-    return spark.read.orc(path)

@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io_utils import BUILD_SWAP, publish_swap, recover_swap
+
 
 @dataclass(frozen=True)
 class CompactionReport:
@@ -598,34 +600,9 @@ def _dir_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     return n, total
 
 
-def _recover_compaction(path: str) -> None:
-    """Finish or roll back an interrupted compact_unpartitioned swap.
-
-    States (staging = <path>.compact-staging, trash = <path>.compact-trash):
-    - trash exists, path missing, staging complete  -> crash BETWEEN the
-      two renames: finish (staging -> path), drop trash;
-    - trash exists, path missing, staging gone/incomplete -> roll back
-      (trash -> path);
-    - trash exists, path exists -> crash after both renames: drop trash;
-    - staging exists (path intact) -> crashed mid-write or pre-swap:
-      drop staging; the caller re-runs the rewrite from the intact
-      original either way.
-    """
-    import shutil
-
-    staging = path + ".compact-staging"
-    trash = path + ".compact-trash"
-    staged_ok = os.path.exists(os.path.join(staging, "_SUCCESS"))
-    if os.path.exists(trash):
-        if not os.path.exists(path):
-            if staged_ok:
-                os.rename(staging, path)
-            else:
-                os.rename(trash, path)
-        if os.path.exists(trash) and os.path.exists(path):
-            shutil.rmtree(trash, ignore_errors=True)
-    if os.path.exists(staging):
-        shutil.rmtree(staging, ignore_errors=True)
+# staging suffix, trash suffix, completion marker of the unpartitioned
+# rewrite swap (compaction and index erasure); Spark writes the marker
+_COMPACT_SWAP = (".compact-staging", ".compact-trash", "_SUCCESS")
 
 
 def compact_unpartitioned(
@@ -643,8 +620,8 @@ def compact_unpartitioned(
     lands fully in ``<path>.compact-staging`` and is row-count-verified
     against the original BEFORE any swap; the swap is two directory
     renames (original -> trash, staging -> original) with every crash
-    point recoverable by ``_recover_compaction`` (run automatically at
-    entry, so a re-run after ANY crash converges). Concurrent readers
+    point recoverable by ``io_utils.recover_swap`` (run automatically
+    at entry, so a re-run after ANY crash converges). Concurrent readers
     of the same path can observe a missing directory for the instant
     between the renames — run this in the ingest maintenance window,
     the same single-maintainer discipline landing-file retirement
@@ -659,7 +636,7 @@ def compact_unpartitioned(
             "compact_unpartitioned targets a local/posix path in this "
             "container; object stores need a manifest-based swap"
         )
-    _recover_compaction(path)
+    recover_swap(path, *_COMPACT_SWAP)
     n_files, total = _dir_file_stats(spark, path)
     if n_files <= 1 or total / n_files >= small_file_mb * 1024 * 1024:
         # healthy noop costs a directory LISTING, never a table scan —
@@ -668,8 +645,7 @@ def compact_unpartitioned(
         return DirCompactionReport(n_files, n_files, None, False)
 
     rows_before = spark.read.parquet(path).count()
-    staging = path + ".compact-staging"
-    trash = path + ".compact-trash"
+    staging = path + _COMPACT_SWAP[0]
     n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
     spark.read.parquet(path).coalesce(n_out).write.parquet(staging)
     rows_staged = spark.read.parquet(staging).count()
@@ -680,11 +656,29 @@ def compact_unpartitioned(
             f"{rows_before} original vs {rows_staged} staged; "
             "original left untouched"
         )
-    os.rename(path, trash)
-    os.rename(staging, path)
-    shutil.rmtree(trash, ignore_errors=True)
+    publish_swap(path, *_COMPACT_SWAP)
     n_after, _ = _dir_file_stats(spark, path)
     return DirCompactionReport(n_files, n_after, rows_before, True)
+
+
+def _index_subtables(path: str) -> list[str]:
+    """Sorted subtable dir names of a persisted index, after converging
+    every crashed per-subtable rewrite. A kill between that swap's two
+    renames leaves the base dir MISSING and only ``<sub>.compact-trash``
+    on disk — a listing that filters the suffix dirs would silently
+    skip the subtable, so recover every base name the suffix dirs imply
+    BEFORE listing."""
+    suffixes = _COMPACT_SWAP[:2]
+    for entry in os.listdir(path):
+        for suffix in suffixes:
+            if entry.endswith(suffix):
+                base = os.path.join(path, entry[: -len(suffix)])
+                recover_swap(base, *_COMPACT_SWAP)
+    return sorted(
+        n
+        for n in os.listdir(path)
+        if os.path.isdir(os.path.join(path, n)) and not n.endswith(suffixes)
+    )
 
 
 def compact_index(
@@ -702,12 +696,8 @@ def compact_index(
     Probe results are unchanged by construction (same rows, fewer
     files); the lifecycle tests pin this."""
     out: dict[str, DirCompactionReport] = {}
-    for name in sorted(os.listdir(path)):
+    for name in _index_subtables(path):
         sub = os.path.join(path, name)
-        if not os.path.isdir(sub) or name.endswith(
-            (".compact-staging", ".compact-trash")
-        ):
-            continue
         children = os.listdir(sub)
         if any("=" in c and os.path.isdir(os.path.join(sub, c)) for c in children):
             continue  # partitioned layout -> compact_partitions territory
@@ -745,15 +735,15 @@ def _erase_unpartitioned_rows(
     spark: SparkSession, path: str, ids: list, id_col: str
 ) -> int:
     """Staged filtered rewrite of one unpartitioned subtable (the
-    compact_unpartitioned swap discipline — staging + trash renames,
-    every crash state converged by ``_recover_compaction`` at entry).
+    compact_unpartitioned swap — staging + trash renames, every crash
+    state converged by ``io_utils.recover_swap`` at entry).
     Row-count verified: staged == before - subject, or the original is
     left untouched. A zero-subject table is a NOOP detected by ONE
     aggregate scan (total + subject counts in the same job — no second
     pass). Returns rows removed."""
     import shutil
 
-    _recover_compaction(path)
+    recover_swap(path, *_COMPACT_SWAP)
     df = spark.read.parquet(path)
     subject = _null_safe_isin(id_col, ids)
     counts = df.agg(
@@ -763,8 +753,7 @@ def _erase_unpartitioned_rows(
     n_before, n_subject = int(counts["n"]), int(counts["s"] or 0)
     if n_subject == 0:
         return 0
-    staging = path + ".compact-staging"
-    trash = path + ".compact-trash"
+    staging = path + _COMPACT_SWAP[0]
     df.filter(~subject).write.parquet(staging)
     n_staged = spark.read.parquet(staging).count()
     if n_staged != n_before - n_subject:  # pragma: no cover - defensive
@@ -774,9 +763,7 @@ def _erase_unpartitioned_rows(
             f"{n_before - n_subject}, staged {n_staged}; original left "
             "untouched"
         )
-    os.rename(path, trash)
-    os.rename(staging, path)
-    shutil.rmtree(trash, ignore_errors=True)
+    publish_swap(path, *_COMPACT_SWAP)
     return n_subject
 
 
@@ -800,7 +787,7 @@ def erase_from_index(
     Mechanics per subtable, reusing the maintenance disciplines:
 
     - UNpartitioned: staged filtered rewrite with staging + trash
-      renames and row-count verification (``_recover_compaction``
+      renames and row-count verification (``io_utils.recover_swap``
       converges every crash state at entry); zero-subject tables are
       noops that never rewrite a byte.
     - Partitioned (``key=value`` children): partition-SELECTIVE — the
@@ -833,33 +820,16 @@ def erase_from_index(
     cluster-partitioned vectors table erases proportionally to the
     subject's footprint.
     """
-    from ..io_utils import recover_staged_build
-
     # Converge any crashed staged BUILD first: a build that crashed
-    # between commit_staged_build's renames can leave the complete OLD
-    # index (subject's rows included) readable in <path>.build-trash —
-    # a residue an erasure tool must clear, not leave for the next
-    # build/extend to find.
-    recover_staged_build(path)
-    # ... and any crashed per-subtable COMPACT/ERASE rewrite: a kill
-    # between that swap's two renames leaves the base dir MISSING and
-    # only <sub>.compact-trash on disk — a listing that filters the
-    # suffix dirs would silently skip the subtable (reporting success
-    # while the subject's rows survive in trash), so recover every
-    # base name the suffix dirs imply BEFORE listing subtables.
-    for entry in os.listdir(path):
-        if entry.endswith((".compact-staging", ".compact-trash")):
-            _recover_compaction(
-                os.path.join(path, entry.rsplit(".compact-", 1)[0])
-            )
-    sub_names = [
-        n
-        for n in os.listdir(path)
-        if os.path.isdir(os.path.join(path, n))
-        and not n.endswith((".compact-staging", ".compact-trash"))
-    ]
+    # between publish_swap's renames can leave the complete OLD index
+    # (subject's rows included) readable in <path>.build-trash — a
+    # residue an erasure tool must clear, not leave for the next
+    # build/extend to find. _index_subtables then converges any crashed
+    # per-subtable rewrite, whose trash would otherwise hide the
+    # subtable (reporting success while the subject's rows survive).
+    recover_swap(path, *BUILD_SWAP)
     # bands LAST (see ordering note); alphabetical otherwise
-    sub_names.sort(key=lambda n: (n == "bands", n))
+    sub_names = sorted(_index_subtables(path), key=lambda n: n == "bands")
     removed: dict[str, int] = {}
     skipped: list[str] = []
     parts_rewritten = 0

@@ -353,63 +353,3 @@ def http_alert_sink(rows: Iterable[Row], topic_url: str, timeout_s: int = 10) ->
         )
         sent += 1
     return sent
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_partitions: int | None = None,
-    partition_by: Sequence[str] = (),
-) -> int:
-    """Rewrite a parquet table into fewer, larger files (small-file
-    compaction — streaming appends produce one file per micro-batch per
-    partition; object stores and the NameNode both degrade under
-    millions of tiny files).
-
-    Reads the table, writes the coalesced copy to a sibling tmp dir
-    (ONE data write — the coalesce decides the final file count), then
-    swaps directories with filesystem renames. A failure before the
-    swap leaves the original untouched; the unsafe window is two
-    metadata renames, not a data rewrite. Offline maintenance — pause
-    writers for the swap (an atomic-commit table format, e.g. Delta,
-    removes that caveat). Returns the row count rewritten.
-    """
-    df = spark.read.parquet(path)
-    n = (
-        target_partitions
-        if target_partitions is not None
-        else int(spark.conf.get("spark.sql.shuffle.partitions"))
-    )
-    writer = df.coalesce(n).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    tmp = path.rstrip("/") + "_compact_tmp"
-    writer.parquet(tmp)
-    count = spark.read.parquet(tmp).count()
-
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jpath, jtmp = hpath(path), hpath(tmp)
-    jold = hpath(path.rstrip("/") + "_compact_old")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jold, True)
-    if not fs.rename(jpath, jold):
-        raise IOError(f"compact_table: could not move {path} aside")
-    if not fs.rename(jtmp, jpath):
-        fs.rename(jold, jpath)  # roll back; original table restored
-        raise IOError(f"compact_table: could not promote {tmp}")
-    fs.delete(jold, True)
-    return count
-
-
-def orc_table_sink(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """ORC twin of ``parquet_table_sink`` (same layout contract:
-    optional hive-style partition directories for pruned reads)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..io_utils import publish_swap, recover_swap
 from ..operators.enrich import dim_upsert_latest_wins, node_dim_enrich, seed_node_dim
 from ..operators.parse import json_envelope_parse, route_packets
 from ..schemas import NODE_DIM_SCHEMA
@@ -205,49 +206,9 @@ def _phase(clock: dict | None, name: str):
         clock[name] = clock.get(name, 0.0) + (time.perf_counter() - t0)
 
 
-def _dim_fs_ops(spark: SparkSession, dim_path: str):
-    """(exists, rename, rmtree) closures for the snapshot's filesystem —
-    plain os/shutil for local paths, Hadoop FileSystem otherwise, so the
-    staging swap below works unchanged on HDFS/object-store backends."""
-    if "://" not in dim_path:
-        import shutil
-
-        return (
-            os.path.isdir,
-            os.rename,
-            lambda p: shutil.rmtree(p, ignore_errors=True),
-        )
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _hp(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = _hp(dim_path).getFileSystem(conf)
-    return (
-        lambda p: fs.exists(_hp(p)),
-        lambda a, b: fs.rename(_hp(a), _hp(b)),
-        lambda p: fs.delete(_hp(p), True),
-    )
-
-
-def _promote_dim_snapshot(spark: SparkSession, dim_path: str) -> None:
-    """Atomically promote a COMPLETE ``._next`` staging snapshot to the
-    live path: live -> ``._old``, ``._next`` -> live, drop ``._old``.
-    Every crash window leaves at least one complete copy on disk
-    (``._next`` is only promoted after its write committed; the live
-    dir is only renamed, never deleted, until the new one is in place),
-    and ``_load_node_dim`` self-heals from whichever copy survives —
-    the durability the old two-step staging write provided, restored
-    after the r7 direct-overwrite regression (ADVICE r7, medium)."""
-    nxt, old = dim_path + "._next", dim_path + "._old"
-    exists, rename, rmtree = _dim_fs_ops(spark, dim_path)
-    if exists(old):
-        rmtree(old)
-    if exists(dim_path):
-        rename(dim_path, old)
-    rename(nxt, dim_path)
-    rmtree(old)
+# staging suffix, trash suffix, completion marker of the node-dim
+# snapshot swap (io_utils.publish_swap); Spark writes the marker
+_DIM_SWAP = ("._next", "._old", "_SUCCESS")
 
 
 def _load_node_dim(spark: SparkSession, paths: IngestPaths) -> DataFrame:
@@ -255,22 +216,13 @@ def _load_node_dim(spark: SparkSession, paths: IngestPaths) -> DataFrame:
     seed. Existence-checked (not exception-driven): the analyzer logs a
     noisy FileNotFound stack on every first batch otherwise.
 
-    Self-healing: if the live dir is missing, a crash interrupted the
-    staging swap — the surviving complete copy (``._next`` if the swap
-    had started, else ``._old``) is promoted back to live before
+    Self-healing: ``recover_swap`` first converges a crashed snapshot
+    swap — the surviving complete copy (``._next`` if its write
+    committed, else ``._old``) is promoted back to live before
     reading, so accumulated nodeinfo history is never silently reset to
     the seed by a mid-swap crash."""
     dim_path = paths.table("node_dim")
-    exists, rename, rmtree = _dim_fs_ops(spark, dim_path)
-    if not exists(dim_path):
-        nxt, old = dim_path + "._next", dim_path + "._old"
-        if exists(nxt):
-            # live was renamed away => the staged copy is complete
-            rename(nxt, dim_path)
-            rmtree(old)
-        elif exists(old):
-            rename(old, dim_path)
-    if not exists(dim_path):
+    if not recover_swap(dim_path, *_DIM_SWAP):
         return seed_node_dim(spark)
     try:
         return spark.read.schema(NODE_DIM_SCHEMA).parquet(dim_path)
@@ -604,20 +556,21 @@ def process_packet_batch(
             # Stage-then-swap: an in-place overwrite would DELETE the
             # live dir before the new files commit — a crash in that
             # window would destroy the snapshot and silently reset the
-            # dimension to the seed. Write to ._next, then atomic-
-            # rename into place; every crash window leaves a complete
-            # copy that _load_node_dim self-heals from.
+            # dimension to the seed. Write to ._next, then swap it in
+            # with two renames (io_utils.publish_swap); every crash
+            # window leaves a complete copy that _load_node_dim
+            # self-heals from.
             with _phase(phase_clock, "dim_upsert"):
                 staged = dim_upsert_latest_wins(dim, updates).coalesce(1)
                 if plan_probe is not None:
                     plan_probe("dim_upsert", staged)
                 staged.write.mode("overwrite").parquet(
-                    paths.table("node_dim") + "._next"
+                    paths.table("node_dim") + _DIM_SWAP[0]
                 )
             if obs_nodeinfo is not None:
                 counts["nodeinfo"] = obs_nodeinfo.get["n"]
             with _phase(phase_clock, "dim_write"):
-                _promote_dim_snapshot(spark, paths.table("node_dim"))
+                publish_swap(paths.table("node_dim"), *_DIM_SWAP)
                 # facts in this batch enrich against the batch's own
                 # nodeinfo (the reference's callback ordering): re-read
                 # the freshly promoted snapshot — its files outlive the

@@ -188,114 +188,6 @@ def offline_monitor_stream(
     )
 
 
-def offline_monitor_stream_tws(
-    heartbeats: DataFrame,
-    threshold_minutes: float = OFFLINE_THRESHOLD_MINUTES,
-) -> DataFrame:
-    """``transformWithStateInPandas`` (Spark 4 arbitrary-state v2)
-    variant of ``offline_monitor_stream`` — same transition function,
-    same output schema, same exactly-one-alert contract.
-
-    Differences from the applyInPandasWithState version: explicit
-    per-key timers (re-armed on every heartbeat, deleted+re-registered
-    rather than a single timeout duration) and typed ValueState. Needs
-    the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — the production state
-    backend at scale regardless — plus the ``protobuf`` package for
-    the Python<->state-server protocol (absent in this container:
-    plan construction works everywhere, execution is gated in tests).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    threshold_s = float(threshold_minutes) * 60.0
-    threshold_ms = int(threshold_s * 1000)
-
-    def _emit(node: int, new_state, events):
-        import pandas as pd
-
-        last_seen_s, _alert_sent, longname = new_state
-        rows = [
-            {
-                "node": node,
-                "longname": longname,
-                "event": ev,
-                "last_seen_s": last_seen_s,
-                "message": offline_message(longname, node, threshold_minutes)
-                if ev == "OFFLINE"
-                else msg,
-            }
-            for ev, msg in events
-        ]
-        if rows:
-            yield pd.DataFrame(rows)
-
-    class _OfflineProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("hb", MONITOR_STATE_SCHEMA)
-
-        def _prev(self):
-            if not self._state.exists():
-                return None
-            last_seen_s, alert_sent, longname = self._state.get()
-            return (last_seen_s, bool(alert_sent), longname)
-
-        def handleInputRows(self, key, rows, timerValues):
-            node = int(key[0])
-            batch_last = None
-            batch_name = None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                ts_max = pdf["ts"].max()
-                ts_s = ts_max.timestamp() if hasattr(ts_max, "timestamp") else float(ts_max)
-                if batch_last is None or ts_s > batch_last:
-                    batch_last = ts_s
-                names = pdf["longname"].dropna()
-                if len(names):
-                    batch_name = names.iloc[-1]
-            now_ms = timerValues.getCurrentProcessingTimeInMs()
-            new_state, events = heartbeat_transition(
-                self._prev(), batch_last, batch_name, now_ms / 1000.0,
-                threshold_s, timed_out=False,
-            )
-            self._state.update(new_state)
-            # re-arm the offline timer: drop stale timers, set a fresh one
-            for expiry_ms in list(self._handle.listTimers()):
-                self._handle.deleteTimer(expiry_ms)
-            self._handle.registerTimer(now_ms + threshold_ms)
-            yield from _emit(node, new_state, events)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            node = int(key[0])
-            now_ms = timerValues.getCurrentProcessingTimeInMs()
-            new_state, events = heartbeat_transition(
-                self._prev(), None, None, now_ms / 1000.0,
-                threshold_s, timed_out=True,
-            )
-            self._state.update(new_state)
-            remaining_s = rearm_delay_after_timeout(
-                new_state, events, now_ms / 1000.0, threshold_s
-            )
-            if remaining_s is not None:
-                self._handle.registerTimer(now_ms + int(remaining_s * 1000))
-            yield from _emit(node, new_state, events)
-
-        def close(self) -> None:
-            pass
-
-    return heartbeats.groupBy("node").transformWithStateInPandas(
-        _OfflineProcessor(),
-        MONITOR_OUTPUT_SCHEMA,
-        "Update",
-        "ProcessingTime",
-    )
-
-
 def outage_episodes(
     facts: DataFrame, ts_col: str = "event_ts", gap_minutes: int = OFFLINE_THRESHOLD_MINUTES
 ) -> DataFrame:

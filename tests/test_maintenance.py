@@ -692,7 +692,7 @@ def test_erase_from_index_vindex_is_partition_selective(spark, tmp_path):
 def test_erase_from_index_noop_and_crash_convergence(spark, tmp_path):
     """An absent subject rewrites nothing (file mtimes untouched), and
     a leftover crashed staging dir converges at the next erase entry
-    (the shared _recover_compaction discipline)."""
+    (the shared io_utils.recover_swap discipline)."""
     from meshtastic_airsensor_database_spark.operators.dedup_index import (
         build_minhash_index,
         dedup_new_batch,
@@ -771,7 +771,7 @@ def test_erase_from_index_null_ids_survive(spark, tmp_path):
 
 
 def test_erase_from_index_clears_crashed_build_trash(spark, tmp_path):
-    """A build that crashed between commit_staged_build's renames
+    """A build that crashed between publish_swap's renames
     leaves the complete OLD index — subject rows included — readable in
     <path>.build-trash; an erasure must converge that residue at entry
     rather than reporting success while the bytes survive."""
@@ -839,3 +839,68 @@ def test_erase_from_index_recovers_mid_swap_crash(spark, tmp_path):
     )
     assert dedup_new_batch(shard, mh, threshold=0.8).count() == 0
     _sh.rmtree(mh, ignore_errors=True)
+
+
+def test_compact_index_recovers_mid_swap_crash(spark, tmp_path):
+    """A kill between a subtable rewrite's two renames leaves the base
+    dir missing and only <sub>.compact-trash on disk. compact_index
+    must restore the subtable at entry and report it, not list around
+    it and leave the index without its signatures."""
+    from meshtastic_airsensor_database_spark.operators.dedup_index import (
+        build_minhash_index,
+        dedup_new_batch,
+    )
+    from meshtastic_airsensor_database_spark.sources.maintenance import (
+        compact_index,
+    )
+
+    mh = str(tmp_path / "mh_idx")
+    docs = spark.createDataFrame(
+        [(1, "un deux trois quatre cinq six sept huit neuf dix")],
+        "doc_id long, text string",
+    )
+    build_minhash_index(docs, mh, sketch="md5")
+    sigs = os.path.join(mh, "sigs")
+    os.rename(sigs, sigs + ".compact-trash")
+
+    rep = compact_index(spark, mh)
+    assert sorted(rep) == ["bands", "sigs"], rep
+    assert sorted(n for n in os.listdir(mh) if not n.startswith("_")) == [
+        "bands",
+        "sigs",
+    ]
+    shard = spark.createDataFrame(
+        [(901, docs.collect()[0].text)], "doc_id long, text string"
+    )
+    assert dedup_new_batch(shard, mh, threshold=0.8).count() == 1
+
+
+def test_swap_on_hadoop_filesystem_path(spark, tmp_path):
+    """A ``scheme://`` path runs the swap through Hadoop FileSystem
+    (the branch HDFS deployments of the node-dim snapshot take): the
+    publish stamps a missing marker, and a crash between the renames
+    is finished by recovery."""
+    from meshtastic_airsensor_database_spark.io_utils import (
+        publish_swap,
+        recover_swap,
+    )
+
+    swap = (".s", ".t", "_DONE")
+    local = str(tmp_path / "tbl")
+    uri = "file://" + local
+    spark.range(3).write.parquet(uri + ".s")
+    assert not recover_swap(uri, *swap)  # incomplete staging: dropped
+    assert not os.path.exists(local + ".s")
+
+    spark.range(3).write.parquet(uri + ".s")
+    publish_swap(uri, *swap)
+    assert os.path.exists(os.path.join(local, "_DONE"))
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
+
+    # kill window: live moved to trash, complete staging not yet in
+    spark.range(5).write.parquet(uri + ".s")
+    open(os.path.join(local + ".s", "_DONE"), "w").close()
+    os.rename(local, local + ".t")
+    assert recover_swap(uri, *swap)
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
+    assert spark.read.parquet(uri).count() == 5

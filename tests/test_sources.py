@@ -331,28 +331,6 @@ def test_http_alert_sink_is_import_gated(monkeypatch):
         http_alert_sink([], "https://ntfy.sh/test")
 
 
-def test_packet_datasource_reads_typed_envelopes(spark, tmp_path):
-    """Custom Python DataSource (Spark 4 API): landing dir -> typed rows,
-    malformed JSON dropped (AIRWISEv0.py:155-157 semantics)."""
-    from meshtastic_airsensor_database_spark.sources.landing import write_packet_fixture
-    from meshtastic_airsensor_database_spark.sources.packet_datasource import register
-
-    from .fixtures import as_json_lines
-
-    register(spark)
-    landing = str(tmp_path / "dsrc_landing")
-    write_packet_fixture(landing, as_json_lines(), "b0.jsonl")
-
-    df = spark.read.format("meshtastic_packets").load(landing)
-    rows = {r["id"]: r for r in df.collect()}
-    assert len(rows) == 6  # 7 lines - 1 malformed JSON
-    assert rows[1001]["node"] == 3127201152
-    assert rows[1001]["payload"]["temperature"] == 21.5
-    assert rows[1002]["payload"]["battery_level"] == 101.0
-    assert rows[1003]["payload"]["text"].startswith("21.9,")
-    assert rows[1004]["type"] == "nodeinfo"
-
-
 def test_console_sink_batch_prints(spark, capfd):
     from meshtastic_airsensor_database_spark.sources.sinks import console_sink
 
@@ -378,48 +356,6 @@ def test_string_agg_topics(spark):
         "msh/US/2/json/LongFast/!ba654d80",
         "msh/US/2/json/LongFast/!06ba0ac4",
     }
-
-
-def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from meshtastic_airsensor_database_spark.sources.sinks import compact_table
-
-    path = str(tmp_path / "frag")
-    df = spark.range(1000).withColumn("v", F.col("id") * 2)
-    for i in range(5):  # five appends -> many small files
-        df.filter(F.col("id") % 5 == i).repartition(8).write.mode("append").parquet(path)
-    import glob
-
-    before = len(glob.glob(path + "/part-*"))
-    assert compact_table(spark, path, target_partitions=2) == 1000
-    after = len(glob.glob(path + "/part-*"))
-    assert after <= 2 < before
-    assert spark.read.parquet(path).count() == 1000
-
-
-def test_orc_round_trip_with_partition_pruning(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from meshtastic_airsensor_database_spark.sources.batch import orc_batch_source
-    from meshtastic_airsensor_database_spark.sources.sinks import orc_table_sink
-
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 4).alias("part"), (F.col("id") * 2.5).alias("v")
-    )
-    path = str(tmp_path / "orc_tbl")
-    orc_table_sink(df, path, partition_by=["part"])
-    back = orc_batch_source(spark, path)
-    assert back.count() == 100
-    assert {r["id"] for r in back.filter(F.col("part") == 2).collect()} == {
-        i for i in range(100) if i % 4 == 2
-    }
-    # partition pruning: the filtered scan must read only the part=2 dir
-    plan = back.filter(F.col("part") == 2)._jdf.queryExecution().executedPlan().toString()
-    import re
-    m = re.search(r"partitions read: (\d+)", plan)
-    if m:  # plan formats vary; when present, assert the prune
-        assert m.group(1) == "1"
 
 
 def _sqlite_factory(db_path: str):

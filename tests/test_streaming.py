@@ -347,170 +347,6 @@ def test_offline_monitor_stream_end_to_end(spark, tmp_path):
         query.stop()
 
 
-def _tws_state_proto_error() -> str | None:
-    """None when the tws state-server protocol is importable (protobuf
-    present); otherwise the ImportError text. Probes the EXACT module
-    the executor-side state server loads first, so the error we pin is
-    the one the worker actually dies on."""
-    try:
-        __import__("pyspark.sql.streaming.proto.StateMessage_pb2")
-        return None
-    except ImportError as exc:
-        return str(exc)
-
-
-def _protobuf_available() -> bool:
-    return _tws_state_proto_error() is None
-
-
-def test_offline_monitor_tws_end_to_end(spark, tmp_path):
-    """Same scenario as the applyInPandasWithState test, through the
-    Spark 4 transformWithStateInPandas processor (explicit timers +
-    ValueState on the RocksDB state store).
-
-    Environment-adaptive instead of a silent skip (r3 verdict item 3):
-    with protobuf installed the full OFFLINE->ONLINE scenario must
-    pass; without it the query must fail EXACTLY with the
-    missing-protobuf error — which proves the operator wires all the
-    way through planning into the state-server execution path and
-    fails loudly (not a silent no-op) on the one missing optional
-    dependency. Any other failure mode (API drift, schema rejection,
-    processor exception) fails the test in both environments."""
-    import json
-    import time
-
-    from meshtastic_airsensor_database_spark.operators.parse import (
-        extract_nodeinfo,
-        json_envelope_parse,
-    )
-    from meshtastic_airsensor_database_spark.sources.landing import packet_stream_source
-    from meshtastic_airsensor_database_spark.streaming.monitor import (
-        offline_monitor_stream_tws,
-    )
-
-    landing = str(tmp_path / "tws_landing")
-
-    def nodeinfo(node, ts, name):
-        return json.dumps(
-            {
-                "from": node,
-                "id": ts,
-                "type": "nodeinfo",
-                "timestamp": ts,
-                "payload": {"id": f"!{node:x}", "longname": name},
-            }
-        )
-
-    write_packet_fixture(landing, [nodeinfo(7, 1000, "Farm7")], "b0.jsonl")
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    raw = packet_stream_source(spark, landing)
-    heartbeats = extract_nodeinfo(json_envelope_parse(raw)).select(
-        "node", "longname", F.col("updated_ts").alias("ts")
-    )
-    events = offline_monitor_stream_tws(heartbeats, threshold_minutes=0.1 / 60)
-
-    query = (
-        events.writeStream.format("memory")
-        .queryName("tws_events")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .start()
-    )
-
-    def wait_for(event, node, deadline_s=90.0):
-        end = time.time() + deadline_s
-        while time.time() < end:
-            got = {
-                (r["node"], r["event"])
-                for r in spark.sql("SELECT node, event FROM tws_events").collect()
-            }
-            if (node, event) in got:
-                return
-            assert query.exception() is None, query.exception()
-            time.sleep(0.2)
-        raise AssertionError(f"timed out waiting for ({node}, {event})")
-
-    def wait_for_failure(deadline_s=90.0):
-        end = time.time() + deadline_s
-        while time.time() < end:
-            if query.exception() is not None:
-                return query.exception()
-            time.sleep(0.2)
-        raise AssertionError(
-            "query neither progressed nor failed — the missing-protobuf "
-            "gate changed behavior; re-check the tws execution path"
-        )
-
-    try:
-        if _protobuf_available():
-            wait_for("OFFLINE", 7)
-            write_packet_fixture(landing, [nodeinfo(7, 3000, "Farm7")], "b1.jsonl")
-            wait_for("ONLINE", 7)
-        else:
-            # pin the causal chain: (1) the exact module the state
-            # server imports first dies on the missing protobuf dep,
-            # (2) the query's failure is that worker's startup crash.
-            proto_err = _tws_state_proto_error()
-            assert proto_err and ("google" in proto_err or "protobuf" in proto_err), (
-                f"state-protocol import failed for a new reason: {proto_err}"
-            )
-            msg = str(wait_for_failure()).lower()
-            assert (
-                "protobuf" in msg
-                or "google" in msg
-                or ("transformwithstate" in msg and "worker exited" in msg)
-            ), (
-                "tws query failed for a reason OTHER than the known "
-                f"missing optional dependency: {msg[:2000]}"
-            )
-    finally:
-        query.stop()
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-
-def test_offline_monitor_tws_plan_builds(spark, tmp_path):
-    """The TWS operator's plan construction (schema, grouping, output
-    mode) is exercisable without protobuf; only execution needs it."""
-    import json
-
-    from meshtastic_airsensor_database_spark.operators.parse import (
-        extract_nodeinfo,
-        json_envelope_parse,
-    )
-    from meshtastic_airsensor_database_spark.sources.landing import packet_stream_source
-    from meshtastic_airsensor_database_spark.streaming.monitor import (
-        MONITOR_OUTPUT_SCHEMA,
-        offline_monitor_stream_tws,
-    )
-
-    landing = str(tmp_path / "tws_plan_landing")
-    write_packet_fixture(
-        landing,
-        [json.dumps({"from": 1, "id": 1, "type": "nodeinfo", "timestamp": 1,
-                     "payload": {"id": "!1", "longname": "Farm1"}})],
-        "b0.jsonl",
-    )
-    raw = packet_stream_source(spark, landing)
-    heartbeats = extract_nodeinfo(json_envelope_parse(raw)).select(
-        "node", "longname", F.col("updated_ts").alias("ts")
-    )
-    events = offline_monitor_stream_tws(heartbeats)
-    assert events.isStreaming
-    assert events.schema == MONITOR_OUTPUT_SCHEMA
-
-
 def test_streaming_windowed_agg_with_watermark(spark, tmp_path):
     """SURVEY §2.9 windowed_ingest + late_data_handling: event-time
     tumbling windows over the packet stream with a watermark. A record
