@@ -333,27 +333,20 @@ def _late_replayed_out_dir(spark: SparkSession) -> str:
         # FileStreamSource picks oldest-mtime first: pin mtimes so file a
         # IS batch 0 and file b IS batch 1, deterministically.
         os.utime(dst, (1_000 + i * 1_000, 1_000 + i * 1_000))
-    # The fixture is a few KB driven through 4 stateful micro-batches;
-    # at the session's cluster-sized shuffle width each batch would pay
-    # 32 state-store tasks per stage for single-digit rows. Pin a tiny
-    # width for the replay (state partition count is fixed at query
-    # start, so this is replay-local) and restore the caller's conf.
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    # The fixture is a few KB driven through 4 stateful micro-batches:
+    # two state stores are plenty (the width is pinned into the query
+    # at start; the caller's session keeps its own).
+    q = run_ingest_stream(
+        spark,
+        IngestPaths(landing_dir=landing, out_dir=out),
+        max_files_per_trigger=1,
+        dedup_within_watermark=True,
+        state_partitions=2,
+    )
     try:
-        q = run_ingest_stream(
-            spark,
-            IngestPaths(landing_dir=landing, out_dir=out),
-            max_files_per_trigger=1,
-            dedup_within_watermark=True,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q.processAllAvailable()
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.stop()
     _LATE_REPLAY_CACHE[key] = out
     return out
 

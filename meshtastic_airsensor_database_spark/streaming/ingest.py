@@ -28,10 +28,11 @@ import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..io_utils import publish_swap, recover_swap
 from ..operators.enrich import dim_upsert_latest_wins, node_dim_enrich, seed_node_dim
@@ -50,6 +51,24 @@ DEDUP_WATERMARK = "10 minutes"
 # (task launch + file-commit overhead dominated the per-batch clock);
 # a backfill-sized batch keeps up to the shuffle width.
 _ROWS_PER_TASK = 250_000
+
+# Per-query confs of the ingest stream: set on the session only around
+# writer.start() (Structured Streaming clones the session there) and
+# restored afterwards, so the caller's session never sees them. None
+# is pinned in the offset metadata, so existing checkpoints pick them
+# up on restart. Reasons and measurements: run_ingest_stream.
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_QUERY_CONFS = {
+    # local checkpoints only (see _ingest_query_confs): the default
+    # FileContext manager forks chmod/readlink per checkpoint file
+    _CHECKPOINT_MANAGER: "org.apache.spark.sql.execution.streaming."
+    "checkpointing.FileSystemBasedCheckpointFileManager",
+    # the only stateful operator is the watermark dedup, whose no-data
+    # batch emits nothing; the next data batch evicts instead
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    # idle landing-dir listing every 100 ms instead of every 10 ms
+    "spark.sql.streaming.pollingDelay": "100",
+}
 
 
 @dataclass
@@ -887,6 +906,45 @@ def run_ingest_stream(
     restart that requests a DIFFERENT value than the checkpoint pins
     warns loudly (RuntimeWarning) naming the value that actually
     applies — changing state width requires a fresh checkpoint.
+
+    The query also runs with its own ``_QUERY_CONFS``, set only around
+    ``start()`` like the shuffle width and then restored (a key the
+    caller had unset is unset again). Each cuts a fixed per-trigger
+    cost of a slow trickle. On 4 cores, one 100-packet file every 5 s
+    with watermark dedup uses a median 3.37 s of CPU per file with
+    them and 5.15 s without (10 alternating runs each, lower in all 10):
+
+    - ``checkpointFileManagerClass`` = FileSystem-based, for a local
+      checkpoint only. Without Hadoop's native library, Spark's default
+      FileContext manager forks a ``chmod``/``readlink`` process for
+      every checkpoint file it creates and every rename: the offset
+      and commit log entries and each state store's delta file. The
+      dedup state commit takes ~55 ms with this manager, ~730 ms
+      without. Checkpoint checksums stay on.
+    - ``noDataMicroBatches.enabled`` = false. The only stateful
+      operator is the watermark dedup; its no-data batch would emit
+      nothing and only evict state, yet pay every state-store commit,
+      the stats job and a ledger commit. The next data batch evicts
+      under the same watermark, after its own lookups, and the
+      late-row filter is unchanged: a trickle runs as files queued back
+      to back do (a backfill; the ``replay_late_dedup`` oracle pins
+      that behaviour). Mesh re-broadcasts, which repeat their event
+      time, are dropped either way. The one difference: a packet id
+      reused with a fresh event time, arriving in the data batch right
+      after its entry expired, is dropped as a duplicate instead of
+      re-accepted. Set per query, never session-wide: windowed
+      aggregations need their no-data batches to emit.
+    - ``pollingDelay`` = 100 ms instead of Spark's 10 ms between
+      listings of an idle landing dir. On top of the other two it
+      saves CPU (3.32 s per file instead of 3.96 s) and costs latency:
+      a file waits up to 100 ms more for its trigger, and the median
+      due-to-commit latency was ~2.22 s instead of ~1.98 s in the same
+      runs.
+
+    The first two overlap: most of a no-data batch's cost is its state
+    commit. Forked-process CPU (``tools/profile_stream_batch.py``) is
+    ~0.25 s per trigger with these confs, all of it lake writes, and
+    ~0.55 s per data trigger plus ~0.35 s per no-data trigger without.
     """
     if clean_source:
         others = _other_landing_consumers(
@@ -906,7 +964,6 @@ def run_ingest_stream(
                 RuntimeWarning,
                 stacklevel=2,
             )
-    restore_to = None
     if state_partitions is not None:
         pinned = _checkpoint_pinned_shuffle_partitions(
             spark, paths.checkpoint_dir
@@ -924,23 +981,58 @@ def run_ingest_stream(
                 RuntimeWarning,
                 stacklevel=2,
             )
-        restore_to = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    writer = _ingest_writer(
+        spark, paths, trigger_seconds, max_files_per_trigger,
+        dedup_within_watermark, phase_clock, batch_processor,
+        clean_source, source_archive_dir,
+    )
+    # start() clones the session, pinning the confs into the query;
+    # the caller's session gets its own values back
+    with _session_confs(
+        spark, _ingest_query_confs(spark, paths.checkpoint_dir, state_partitions)
+    ):
+        return writer.start()
+
+
+def _ingest_query_confs(
+    spark: SparkSession, checkpoint_dir: str, state_partitions: int | None
+) -> dict[str, str]:
+    """The per-query confs for a checkpoint at ``checkpoint_dir``.
+    The FileSystem-based checkpoint manager is chosen only when the
+    checkpoint is on the local filesystem (a scheme-less path lives on
+    ``fs.defaultFS``): there a rename is POSIX rename(2), and the
+    query is the checkpoint's single writer. Remote checkpoints keep
+    Spark's default manager."""
+    confs = dict(_QUERY_CONFS)
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///"
+    )
+    if (urlsplit(checkpoint_dir).scheme or urlsplit(default_fs).scheme) != "file":
+        del confs[_CHECKPOINT_MANAGER]
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    return confs
+
+
+@contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then put back the
+    caller's values: a key the caller had set gets its value again, an
+    unset key is unset again, also when the block raises."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
     try:
-        return _start_ingest_stream(
-            spark, paths, trigger_seconds, max_files_per_trigger,
-            dedup_within_watermark, phase_clock, batch_processor,
-            clean_source, source_archive_dir,
-        )
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
     finally:
-        # start() clones the session (pinning the width into the
-        # query); the caller's session gets its own value back — even
-        # when plan construction raises before start().
-        if restore_to is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_to)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def _start_ingest_stream(
+def _ingest_writer(
     spark: SparkSession,
     paths: IngestPaths,
     trigger_seconds: int | None,
@@ -950,7 +1042,7 @@ def _start_ingest_stream(
     batch_processor,
     clean_source: str | None = None,
     source_archive_dir: str | None = None,
-) -> StreamingQuery:
+) -> DataStreamWriter:
     raw = packet_stream_source(
         spark, paths.landing_dir, max_files_per_trigger,
         clean_source=clean_source, source_archive_dir=source_archive_dir,
@@ -992,4 +1084,4 @@ def _start_ingest_stream(
     ).option("checkpointLocation", paths.checkpoint_dir)
     if trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return writer

@@ -649,6 +649,161 @@ def test_restart_warns_when_checkpoint_ignores_state_partitions(spark, tmp_path)
         q3.stop()
 
 
+def test_ingest_stream_runs_no_empty_batches_but_still_evicts(spark, tmp_path):
+    """The ingest query runs without no-data micro-batches: a data batch
+    is not followed by an empty one that only evicts dedup state.
+    Eviction moves into the next data batch, and dedup still holds. The
+    first file spans 20 minutes, more than the 10-minute watermark, so
+    the watermark it sets has passed the expiry of its earliest packet:
+    the second data batch removes that entry, and still drops a
+    re-broadcast of the file's newest packet."""
+    landing = str(tmp_path / "ev_landing")
+    out = str(tmp_path / "ev_out")
+    t = ALL_GOOD[0]["timestamp"]
+
+    def pkt(pid, ts):
+        return json.dumps(dict(ALL_GOOD[0], id=pid, timestamp=ts))
+
+    write_packet_fixture(landing, [pkt(9401, t), pkt(9402, t + 1200)], "b0.jsonl")
+    paths = IngestPaths(landing_dir=landing, out_dir=out)
+    q = run_ingest_stream(spark, paths, dedup_within_watermark=True)
+    try:
+        q.processAllAvailable()
+        # a re-broadcast of 9402 (inside the watermark) + a fresh packet
+        write_packet_fixture(
+            landing, [pkt(9402, t + 1200), pkt(9403, t + 1260)], "b1.jsonl"
+        )
+        q.processAllAvailable()
+        progress = q.recentProgress
+    finally:
+        q.stop()
+
+    empty = [p["batchId"] for p in progress
+             if p["numInputRows"] == 0 and "addBatch" in p["durationMs"]]
+    assert not empty, f"no-data batches ran: {empty}"
+    data = [p for p in progress if p["numInputRows"] > 0]
+    assert [p["batchId"] for p in data] == [0, 1]
+    assert data[1]["stateOperators"][0]["numRowsRemoved"] > 0
+    assert spark.read.parquet(paths.table("airwise_data")).count() == 3
+
+
+def _conf_snapshot(spark, keys):
+    return {k: spark.conf.get(k, None) for k in keys}
+
+
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+@pytest.mark.parametrize(
+    "caller",
+    [
+        # caller-set shuffle width and polling, the other two unset
+        {"spark.sql.shuffle.partitions": "3",
+         "spark.sql.streaming.pollingDelay": "2000",
+         "spark.sql.streaming.noDataMicroBatches.enabled": None,
+         "spark.sql.streaming.checkpointFileManagerClass": None},
+        # the opposite
+        {"spark.sql.shuffle.partitions": None,
+         "spark.sql.streaming.pollingDelay": None,
+         "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+         "spark.sql.streaming.checkpointFileManagerClass": _FILE_CONTEXT_MANAGER},
+    ],
+)
+def test_ingest_stream_leaves_caller_confs_untouched(
+    spark, tmp_path, monkeypatch, caller
+):
+    """The per-query confs reach start() and nothing else: afterwards the
+    caller's session holds exactly what it held before, for every key
+    the ingest query sets — a key the caller had set keeps its value and
+    an unset key stays unset, also when start() raises."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from meshtastic_airsensor_database_spark.streaming import ingest
+
+    keys = [*ingest._QUERY_CONFS, "spark.sql.shuffle.partitions"]
+    assert sorted(caller) == sorted(keys)
+    saved = _conf_snapshot(spark, keys)
+    try:
+        for k, v in caller.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        before = _conf_snapshot(spark, keys)
+        assert before == caller
+
+        landing = str(tmp_path / "cf_landing")
+        write_packet_fixture(landing, as_json_lines(), "b0.jsonl")
+        q = run_ingest_stream(
+            spark, IngestPaths(landing, str(tmp_path / "cf_out")),
+            dedup_within_watermark=True,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert _conf_snapshot(spark, keys) == before
+
+        at_start = {}
+
+        def failing_start(self, *args, **kwargs):
+            at_start.update(_conf_snapshot(spark, keys))
+            raise RuntimeError("planted start failure")
+
+        monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+        with pytest.raises(RuntimeError, match="planted start failure"):
+            run_ingest_stream(
+                spark, IngestPaths(landing, str(tmp_path / "cf_out2")),
+                dedup_within_watermark=True,
+            )
+        assert at_start == {**ingest._QUERY_CONFS,
+                            "spark.sql.shuffle.partitions": "8"}
+        assert _conf_snapshot(spark, keys) == before
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "checkpoint_dir, default_fs, local",
+    [
+        ("/data/lake/_checkpoint", "file:///", True),
+        ("lake/_checkpoint", "file:///", True),
+        ("file:/data/lake/_checkpoint", "file:///", True),
+        ("file:///data/lake/_checkpoint", "hdfs://namenode:8020", True),
+        ("hdfs://namenode:8020/lake/_checkpoint", "file:///", False),
+        ("s3a://bucket/lake/_checkpoint", "file:///", False),
+        # a scheme-less path lives on the default filesystem
+        ("/data/lake/_checkpoint", "hdfs://namenode:8020", False),
+    ],
+)
+def test_checkpoint_manager_follows_checkpoint_scheme(
+    spark, checkpoint_dir, default_fs, local
+):
+    """The FileSystem-based checkpoint manager is chosen only for a
+    checkpoint on the local filesystem; for a remote one the ingest
+    query leaves the conf alone, so Spark's default manager applies."""
+    from meshtastic_airsensor_database_spark.streaming import ingest
+
+    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
+    prev = hadoop_conf.get("fs.defaultFS")
+    hadoop_conf.set("fs.defaultFS", default_fs)
+    try:
+        confs = ingest._ingest_query_confs(spark, checkpoint_dir, None)
+    finally:
+        hadoop_conf.set("fs.defaultFS", prev)
+    want = dict(ingest._QUERY_CONFS)
+    if not local:
+        del want[ingest._CHECKPOINT_MANAGER]
+    assert confs == want
+
+
 def test_quarantine_view_is_exactly_once_under_epoch_replay(spark, tmp_path):
     """The quarantine log is documented at-least-once (a crash between
     its append and the ledger commit replays the epoch and appends the

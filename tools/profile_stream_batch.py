@@ -5,6 +5,15 @@ wall time go? Replays bench.py's deterministic 20k-packet stream (same
 the residual (trigger time not inside any phase = source discovery +
 watermark dedup + parse/cache + planning).
 
+It also prints each trigger's CPU split three ways, read from /proc:
+this Python process, the JVM's own threads, and the JVM's reaped
+children. The last column is the processes the JVM forks and waits
+for: without Hadoop's native library, the local filesystem runs a
+``chmod``/``readlink`` through ``jspawnhelper`` for every file and
+directory it creates and every FileContext rename, so that column is
+the fork cost, visible without strace. Live children (Python workers)
+are in no column.
+
 Usage: python tools/profile_stream_batch.py [n_packets] [state_partitions]
 """
 
@@ -16,6 +25,8 @@ import sys
 import tempfile
 import time
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import gen_packets
@@ -26,6 +37,50 @@ from meshtastic_airsensor_database_spark.streaming.ingest import (
     idempotent_batch_processor,
     run_ingest_stream,
 )
+
+
+def _cpu_s(pid: int) -> tuple[float, float]:
+    """(own, reaped children) CPU seconds of ``pid``: utime + stime of
+    all its threads, and cutime + cstime of the children it waited for
+    (proc(5) stat fields 14-17)."""
+    with open(f"/proc/{pid}/stat") as fh:
+        f = fh.read().rsplit(")", 1)[1].split()
+    tick = os.sysconf("SC_CLK_TCK")
+    return (int(f[11]) + int(f[12])) / tick, (int(f[13]) + int(f[14])) / tick
+
+
+class CpuSplit(StreamingQueryListener):
+    """Per-trigger CPU of this Python process, the JVM's threads
+    and the JVM's reaped children, sampled at each progress event: a
+    row is the CPU since the previous trigger ended (the first, since
+    the listener was added)."""
+
+    def __init__(self, jvm_pid: int):
+        self.jvm_pid = jvm_pid
+        self.rows: list[tuple] = []
+        self._last = self._sample()
+
+    def _sample(self) -> tuple[float, float, float]:
+        jvm, children = _cpu_s(self.jvm_pid)
+        return _cpu_s(os.getpid())[0], jvm, children
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        now = self._sample()
+        p = event.progress
+        self.rows.append((
+            p.batchId, p.numInputRows, p.durationMs.get("triggerExecution", 0),
+            *(b - a for a, b in zip(self._last, now)),
+        ))
+        self._last = now
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
 
 
 def run_once(spark, root: str, vol: int, label: str,
@@ -60,6 +115,8 @@ def run_once(spark, root: str, vol: int, label: str,
         if chunk:
             p = write_packet_fixture(paths.landing_dir, chunk, f"b{fi:03d}.jsonl")
             os.utime(p, (base_t + 2 * fi, base_t + 2 * fi))
+    split = CpuSplit(spark._jvm.java.lang.ProcessHandle.current().pid())
+    spark.streams.addListener(split)
     t0 = time.time()
     q = run_ingest_stream(
         spark,
@@ -71,6 +128,11 @@ def run_once(spark, root: str, vol: int, label: str,
     )
     q.processAllAvailable()
     wall = time.time() - t0
+    # listener events are delivered asynchronously
+    deadline = time.time() + 10
+    while len(split.rows) < len(q.recentProgress) and time.time() < deadline:
+        time.sleep(0.1)
+    spark.streams.removeListener(split)
     prog = [p for p in (q.recentProgress or []) if p.get("numInputRows", 0) > 0]
     q.stop()
     trig_ms = [p["durationMs"]["triggerExecution"] for p in prog]
@@ -96,6 +158,11 @@ def run_once(spark, root: str, vol: int, label: str,
     engine = [t / 1000 - i for t, i in zip(sorted(trig_ms), sorted(inside))]
     print(f"  trigger-minus-foreachBatch (engine overhead, sorted-matched): "
           f"{[round(e, 2) for e in engine]}")
+    print("per-trigger CPU s (Python process / JVM threads / JVM reaped "
+          "children = forked chmod, readlink, jspawnhelper):")
+    for batch_id, rows, trig, py, jvm, children in split.rows:
+        print(f"  batch {batch_id:>3} rows {rows:>6} trigger {trig:>5} ms: "
+              f"{py:5.2f} / {jvm:5.2f} / {children:5.2f}")
 
 
 def main() -> None:
