@@ -6,6 +6,8 @@ Postgres vacuums itself — a parquet lake needs the engine to do it).
     python -m meshtastic_airsensor_database_spark.cli.maintain \
         compact-index PATH [--target-mb 256]
     python -m meshtastic_airsensor_database_spark.cli.maintain \
+        compact-rollup PATH
+    python -m meshtastic_airsensor_database_spark.cli.maintain \
         erase-key FACT_PATH --partition-by COL --key-col COL --key-value V
         [--rollup-path P --rollup-keys a,b --distinct-col c]
     python -m meshtastic_airsensor_database_spark.cli.maintain \
@@ -68,6 +70,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     ci.add_argument("path")
     ci.add_argument("--target-mb", type=int, default=256)
     ci.add_argument("--small-file-mb", type=float, default=32.0)
+
+    cr = sub.add_parser(
+        "compact-rollup",
+        help="fold each date's hourly-rollup deltas into one, crash-safely "
+        "(run with the ingest stopped)",
+    )
+    cr.add_argument("path")
 
     ek = sub.add_parser(
         "erase-key", help="right-to-erasure over the fact lake + rollup"
@@ -156,6 +165,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         )
         print(json.dumps({"cmd": args.cmd, **dataclasses.asdict(rep)}))
     elif args.cmd == "compact-index":
+        from ..io_utils import has_pending_append
         from ..sources.maintenance import compact_index
 
         reps = compact_index(
@@ -168,12 +178,20 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             json.dumps(
                 {
                     "cmd": args.cmd,
+                    # one marker per index: a crashed extend left some
+                    # subtables with its rows and later ones without
+                    "pending_append": has_pending_append(args.path),
                     "subtables": {
                         k: dataclasses.asdict(v) for k, v in reps.items()
                     },
                 }
             )
         )
+    elif args.cmd == "compact-rollup":
+        from ..streaming.rollup import compact_rollup
+
+        rep = compact_rollup(spark, args.path)
+        print(json.dumps({"cmd": args.cmd, **dataclasses.asdict(rep)}))
     elif args.cmd == "recover-erasure":
         from ..sources.maintenance import recover_erasure
 

@@ -145,7 +145,9 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 # completion marker lands in it, then two renames swap it in (live ->
 # ``<path><trash>``, staging -> live) and the trash is dropped. Every
 # crash point is converged by ``recover_swap`` at the next entry.
-# Three callers, each keeping its own on-disk names:
+# A side spec with a ``{}`` is a pattern for the side's NAME beside
+# ``path`` instead of a suffix (``swap_side``). Four callers, each
+# keeping its own on-disk names:
 #
 # - persisted index (re)builds (operators/dedup_index.py bands+sigs,
 #   operators/decon_index.py bands+vecs, operators/vindex.py
@@ -158,7 +160,11 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 #   (sources/maintenance.py): ``.compact-staging`` / ``.compact-trash``
 #   with Spark's ``_SUCCESS`` as the marker;
 # - the ingest node-dim snapshot (streaming/ingest.py): ``._next`` /
-#   ``._old`` with Spark's ``_SUCCESS``.
+#   ``._old`` with Spark's ``_SUCCESS``;
+# - one date dir of the hourly rollup (streaming/rollup.py: compaction
+#   and erasure repair): ``.{}.compact-staging`` / ``.{}.compact-trash``
+#   with Spark's ``_SUCCESS``. Partition discovery skips names that
+#   start with ``.``, so neither side is ever read as a date.
 #
 # The filesystem follows the path: ``os`` for local paths, Hadoop
 # ``FileSystem`` for ``scheme://`` paths. Rename atomicity is the
@@ -201,14 +207,24 @@ def _swap_fs(path: str):
     )
 
 
+def swap_side(path: str, spec: str) -> str:
+    """One side (staging or trash) of the swap of ``path``:
+    ``path + spec``, or, when ``spec`` holds ``{}``, the sibling whose
+    name is ``spec`` formatted with ``path``'s own name."""
+    if "{}" not in spec:
+        return path + spec
+    parent, name = path.rstrip("/").rsplit("/", 1)
+    return f"{parent}/{spec.format(name)}"
+
+
 def publish_swap(path: str, staging_suffix: str, trash_suffix: str, marker: str) -> None:
-    """Swap the complete ``path + staging_suffix`` in for ``path``. The
+    """Swap the complete staging side (``swap_side``) in for ``path``. The
     marker is stamped durably BEFORE any rename unless the writer
     already left it, so ``recover_swap`` can always tell a finished
     staging from a half-written one. Callers run ``recover_swap``
     first, at their entry."""
     exists, rename, rmtree, touch = _swap_fs(path)
-    staging, trash = path + staging_suffix, path + trash_suffix
+    staging, trash = swap_side(path, staging_suffix), swap_side(path, trash_suffix)
     stamp = staging + "/" + marker
     if not exists(stamp):
         touch(stamp)
@@ -235,7 +251,7 @@ def recover_swap(path: str, staging_suffix: str, trash_suffix: str, marker: str)
     Afterwards neither staging nor trash exists.
     """
     exists, rename, rmtree, _ = _swap_fs(path)
-    staging, trash = path + staging_suffix, path + trash_suffix
+    staging, trash = swap_side(path, staging_suffix), swap_side(path, trash_suffix)
     staged_ok = exists(staging + "/" + marker)
     has_path = exists(path)
     if not has_path and (staged_ok or exists(trash)):

@@ -251,59 +251,43 @@ def _repair_rollup(
 ) -> str:
     """Phase 3: retract the subject from the materialized rollup,
     bounded by ``touched_dates`` (the subject's event-time spread,
-    captured before its fact rows vanished). Two regimes, both
-    IDEMPOTENT — safe to re-run from the intent marker after any crash:
-    row-drop (subject is a rollup key: its rows are simply gone from
-    the affected dates) and rebuild (non-retractable min/max/sketch
-    partials: affected dates recomputed from the post-erasure facts).
+    captured before its fact rows vanished). Each touched date dir is
+    replaced whole through the rollup's crash-safe per-date swap
+    (``rollup.replace_dates``), so a delta leaf owned wholly by the
+    subject goes with it. Two regimes, both IDEMPOTENT — safe to re-run
+    from the intent marker after any crash: row-drop (subject is a
+    rollup key: its rows are dropped from every delta, which keeps its
+    tag — a replay of the newest epoch still overwrites its own leaf)
+    and rebuild (non-retractable min/max/sketch partials: the dates are
+    recomputed from the post-erasure facts into one fresh leaf).
     Returns the mode used."""
-    from ..streaming.rollup import ROLLUP_PARTITION_COL, _merge, _partials
+    from ..streaming.rollup import (
+        ROLLUP_PARTITION_COL, _merge, _partials, replace_dates,
+    )
 
-    roll = spark.read.parquet(rollup_path)
-    in_dates = F.col(ROLLUP_PARTITION_COL).cast("string").isin(touched_dates)
-    if key_col in rollup_keys:
-        mode = "row-drop"
-        subject = F.col(key_col).eqNullSafe(F.lit(key_value))
-        kept_roll = roll.filter(in_dates).filter(~subject)
-    elif not _partition_file_stats(spark, fact_path, partition_by):
-        # the subject owned the ENTIRE fact table (every partition dir
-        # is gone, only the intent marker remains) — nothing to rebuild
-        # from; the repair reduces to dropping every touched date
-        mode = "rebuild"
-        kept_roll = roll.filter(F.lit(False))
-    else:
-        mode = "rebuild"
+    row_drop = key_col in rollup_keys
+
+    def build() -> DataFrame:
+        if row_drop:
+            return spark.read.parquet(rollup_path).filter(
+                F.col(ROLLUP_PARTITION_COL).cast("string").isin(touched_dates)
+                & ~F.col(key_col).eqNullSafe(F.lit(key_value))
+            )
+        if not _partition_file_stats(spark, fact_path, partition_by):
+            # the subject owned the ENTIRE fact table (every partition
+            # dir is gone, only the intent marker remains) — nothing to
+            # rebuild from; every touched date is dropped
+            return spark.read.parquet(rollup_path).filter(F.lit(False))
         post = spark.read.parquet(fact_path).filter(
             F.to_date(F.col(ts_col)).cast("string").isin(touched_dates)
         )
-        kept_roll = _merge(
+        return _merge(
             _partials(post, rollup_keys, ts_col, value_col, distinct_col),
             rollup_keys,
         )
-    kept_roll = kept_roll.localCheckpoint(eager=True)
-    nonempty_dates = {
-        str(r["_d"])
-        for r in kept_roll.select(
-            F.col(ROLLUP_PARTITION_COL).cast("string").alias("_d")
-        )
-        .distinct()
-        .collect()
-    }
-    if nonempty_dates:
-        _overwrite_partitions(
-            kept_roll.filter(
-                F.col(ROLLUP_PARTITION_COL).cast("string").isin(list(nonempty_dates))
-            ),
-            rollup_path,
-            ROLLUP_PARTITION_COL,
-        )
-    _drop_partition_dirs(
-        spark,
-        rollup_path,
-        ROLLUP_PARTITION_COL,
-        [d for d in touched_dates if d not in nonempty_dates],
-    )
-    return mode
+
+    replace_dates(spark, rollup_path, touched_dates, build)
+    return "row-drop" if row_drop else "rebuild"
 
 
 def _rewrite_partitions_without(

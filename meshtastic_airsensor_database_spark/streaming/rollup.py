@@ -10,36 +10,51 @@ micro-batch.
 
 Scale contract (the reason this shape survives 1000 executors):
 
-- The rollup table stores PARTIAL aggregates (sum, count, min, max) —
-  never averages — so increments merge associatively and the maintainer
-  can always ``old ⊕ new`` without re-reading raw facts. The finalize
-  step (avg = sum/count) happens only at query time.
-- One micro-batch touches ONLY the date partitions its events land in:
-  the merge reads the existing rollup filtered to the affected dates
-  (partition-pruned directory scan — the rest of the table's files are
-  never listed), and the write uses dynamic partition overwrite, so a
-  day of history is rewritten only when a late event actually arrives
-  for it. Steady state rewrites one small partition per batch
-  regardless of table age.
-- The rewritten rows are bounded by (hours/day x keys), i.e. the rollup
-  grain, not by raw-fact volume: a batch merge shuffles thousands of
-  partial rows, never billions of events.
-- On an object store a production deployment would swap the
-  parquet-overwrite for a transactional table format (Delta/Iceberg
-  MERGE) to get atomic partition swaps; the maintenance algebra —
-  partial aggs, affected-partition pruning, associative merge — is
-  identical, and ``parquet_table_sink``-style dynamic overwrite is the
-  dependency-free stand-in this container allows.
+- The rollup table stores PARTIAL aggregates (sum, count, min, max,
+  optional HLL sketch) — never averages — so any set of them merges
+  associatively (``_merge``). The finalize step (avg = sum/count)
+  happens only at query time.
+- One micro-batch is one blind APPEND: its partials land as one delta
+  leaf per event date, ``rollup_date=<d>/rollup_delta=<tag>/``, in one
+  job that never reads the table — the fold costs the batch, not the
+  day. The write is a dynamic partition overwrite keyed by the tag:
+  the streaming ingest tags a delta with its (run, epoch), so a
+  replayed epoch overwrites exactly its own leaves and the fold is
+  idempotent without reading back what it wrote (Structured
+  Streaming's epoch-keyed sink). Untagged batch callers get a fresh
+  tag per fold.
+- Readers merge the deltas at read time (``read_rollup``; coarser
+  grains re-aggregate anyway). A delta holds rollup-grain rows
+  (hours x keys), never raw-fact volume, so a read costs deltas x
+  grain.
+- ``compact_rollup`` (``maintain compact-rollup``) bounds the delta
+  count: it folds each date's deltas into one leaf and swaps the date
+  dir in crash-safely (``io_utils.publish_swap``; staging and trash
+  are hidden from partition discovery). It never folds a run's newest
+  epoch — the one delta a crashed stream can replay.
+- On an object store a production deployment would swap the parquet
+  leaves for a transactional table format (Delta/Iceberg) to get
+  atomic commits; the maintenance algebra — partial aggs, epoch-keyed
+  deltas, associative merge — is identical, and dynamic partition
+  overwrite is the stand-in that needs no extra dependency.
 """
 
 from __future__ import annotations
 
-import os
+import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io_utils import publish_swap, recover_swap, swap_side
+
 ROLLUP_PARTITION_COL = "rollup_date"
+DELTA_COL = "rollup_delta"
+_AGG_COLS = ("sum_value", "cnt", "min_value", "max_value", "distinct_sketch")
+# staging, trash, marker of one date dir's swap: hidden siblings
+# (a leading "." keeps them out of partition discovery)
+_DATE_SWAP = (".{}.compact-staging", ".{}.compact-trash", "_SUCCESS")
 
 
 def _partials(
@@ -84,13 +99,34 @@ def _merge(parts: DataFrame, keys: list[str]) -> DataFrame:
     ]
     if "distinct_sketch" in parts.columns:
         aggs.append(F.hll_union_agg("distinct_sketch").alias("distinct_sketch"))
-    if "last_epoch" in parts.columns:
-        # a date's rows are stamped uniformly (every fold rewrites the
-        # whole partition with one tag), so max() just carries it
-        aggs.append(F.max("last_epoch").alias("last_epoch"))
     return parts.groupBy("hour_ts", *keys).agg(*aggs).withColumn(
         ROLLUP_PARTITION_COL, F.to_date("hour_ts")
     )
+
+
+def _epoch_delta(epoch_tag: str) -> str:
+    """Delta tag of a ``<run>:<epoch>`` identity. Every tag starts with
+    a letter (``e`` epoch, ``b`` untagged batch, ``c`` compacted), so
+    partition type inference always reads a string."""
+    run, _, epoch = epoch_tag.rpartition(":")
+    return f"e{run}-{epoch}"
+
+
+def _fresh_delta(kind: str) -> str:
+    return kind + uuid.uuid4().hex
+
+
+def _replayable(tags) -> set[str]:
+    """The newest epoch delta of every run: the only deltas a crashed
+    stream can replay (Spark re-runs only an uncommitted last epoch)."""
+    newest: dict[str, tuple] = {}
+    for tag in tags:
+        if tag.startswith("e"):
+            run, _, epoch = tag[1:].rpartition("-")
+            rank = (len(epoch), epoch)  # numeric order of digit strings
+            if run not in newest or rank > newest[run][0]:
+                newest[run] = (rank, tag)
+    return {tag for _, tag in newest.values()}
 
 
 def maintain_rollup(
@@ -102,194 +138,178 @@ def maintain_rollup(
     distinct_col: str | None = None,
     width: int | None = None,
     plan_probe=None,
-    affected_dates: list | None = None,
     epoch_tag: str | None = None,
-) -> list:
+) -> str:
     """Fold one (micro-)batch of raw facts into the materialized hourly
-    rollup at ``rollup_path``. Designed as a ``foreachBatch`` body (the
+    rollup at ``rollup_path`` as one delta: ONE job (partials + write),
+    no read of the table. Designed as a ``foreachBatch`` body (the
     streaming ingest calls it per epoch) and equally usable for batch
     backfill slices.
 
-    ``width`` (optional) coalesces the post-aggregation stages to that
-    many partitions — the caller's upper bound on partial-row volume.
-    The streaming ingest passes its batch-derived width so a trickle
-    micro-batch maintains the rollup with single-task stages instead of
-    shuffle-width ones; batch backfills leave it None.
+    ``width`` (optional) coalesces the partials to that many partitions
+    — the caller's upper bound on partial-row volume; the streaming
+    ingest passes its batch-derived width so a trickle batch writes
+    with one task.
 
-    ``affected_dates`` (optional): the distinct non-null event DATES in
-    the batch, when the caller already knows them (the streaming ingest
-    collects them as one more column of its per-batch stats aggregate —
-    zero extra jobs). With them, the whole maintenance is TWO jobs —
-    checkpoint the merged partials (one plan: batch partials ∪ pruned
-    existing), overwrite the affected partitions — instead of three
-    (the partials must otherwise be checkpointed first just to learn
-    which dates they touch).
+    ``epoch_tag`` (optional, ``<run>:<epoch>``) makes the fold
+    IDEMPOTENT under epoch replay — the one at-least-once residual the
+    fact tables absorb with packet dedup but an additive aggregate
+    cannot. The delta is named after it, and the dynamic overwrite
+    replaces exactly the leaves of that name: a crash after this write
+    but before the caller's epoch ledger commits re-delivers the batch,
+    and the re-fold rewrites the same leaves instead of adding a
+    second copy. Untagged folds get a fresh tag each.
 
-    ``epoch_tag`` (optional) makes the fold IDEMPOTENT under epoch
-    replay — the one at-least-once residual the fact tables absorb
-    with packet dedup but an additive aggregate cannot: a crash after
-    this overwrite commits but before the caller's epoch ledger marks
-    the epoch re-delivers the same batch, and an unguarded re-merge
-    would double-count it. With a tag (unique per (run, epoch) — the
-    streaming ingest passes ``EpochLedger.run_tag() + ':' + epoch``),
-    every rewritten partition's rows are stamped ``last_epoch = tag``,
-    and the merge drops the batch's partials for any affected date
-    whose stored stamp ALREADY equals the tag (that date was fully
-    folded by the crashed attempt; its partition is rewritten
-    unchanged). The check rides the same merge plan — a window over
-    rollup-grain rows, zero extra jobs. Tables maintained without tags
-    (batch backfill) never grow the stamp column; one maintainer style
-    per table.
-
-    Returns the list of affected partition dates (for tests/metrics).
-    """
-    spark = batch.sparkSession
-    # Null event times are excluded OUTRIGHT, on every path (r8 ADVICE):
-    # a null ts has no hour bucket and no prunable date partition, so
-    # its partials would land in __HIVE_DEFAULT_PARTITION__ — which the
-    # affected-date pruning can never name (collect_set and isin both
-    # skip nulls), making that partition a last-batch-wins clobber. The
-    # facts keep their null-ts rows; the time-bucketed aggregate simply
-    # has no bucket for them.
+    Returns the delta's tag."""
+    # Null event times are excluded OUTRIGHT (r8 ADVICE): a null ts has
+    # no hour bucket, so its partials would land in the
+    # __HIVE_DEFAULT_PARTITION__ date. The facts keep their null-ts
+    # rows; the time-bucketed aggregate simply has no bucket for them.
     batch = batch.filter(F.col(ts_col).isNotNull())
-    new_parts = _partials(batch, keys, ts_col, value_col, distinct_col)
-    if epoch_tag is not None:
-        new_parts = new_parts.withColumn("last_epoch", F.lit(epoch_tag))
+    tag = _epoch_delta(epoch_tag) if epoch_tag is not None else _fresh_delta("b")
+    delta = _partials(batch, keys, ts_col, value_col, distinct_col).withColumn(
+        DELTA_COL, F.lit(tag)
+    )
     if width is not None:
-        new_parts = new_parts.coalesce(width)
-    if affected_dates is None:
-        from pyspark.sql import Observation
-
-        # Pin the batch's partials FIRST: they are rollup-grain small
-        # (hours x keys), and the merge + overwrite then read this
-        # checkpoint instead of re-aggregating the raw batch. The
-        # affected-date set RIDES the checkpoint action as an observed
-        # aggregate (bounded by the batch's event-time spread —
-        # normally 1-2 dates per micro-batch): no separate
-        # distinct+collect job, and no data movement beyond a set of
-        # date scalars.
-        obs = Observation("rollup_affected_dates")
-        new_parts = new_parts.observe(
-            obs, F.collect_set(ROLLUP_PARTITION_COL).alias("d")
-        )
-        if plan_probe is not None:  # tests: structural plan audit hook
-            plan_probe("rollup_partials", new_parts)
-        new_parts = new_parts.localCheckpoint(eager=True)
-        affected = list(obs.get["d"])
-    else:
-        affected = list(affected_dates)
-    if not affected:
-        return []
-
-    # Read existing state as LITERAL partition directories (basePath
-    # keeps the partition column), not a root scan + isin filter. Same
-    # rows — but the plan's input paths are the subdirectories, never
-    # the table root the write below overwrites, so Spark's
-    # read-own-output guard doesn't trip and the merge + overwrite run
-    # as ONE job with no pre-write localCheckpoint (r9: that checkpoint
-    # was a whole extra job on the micro-batch critical path). A date
-    # with no directory yet has nothing to merge and is simply not read.
-    part_dirs = _affected_partition_dirs(spark, rollup_path, affected)
-    if part_dirs:
-        existing = spark.read.option("basePath", rollup_path).parquet(*part_dirs)
-        if epoch_tag is not None:
-            if "last_epoch" not in existing.columns:
-                # first tagged fold over a pre-stamp table
-                existing = existing.withColumn(
-                    "last_epoch", F.lit(None).cast("string")
-                )
-            from pyspark.sql import Window
-
-            # Per-date replay guard: _folded=1 iff the STORED rows of
-            # that date already carry this epoch's tag. Batch partials
-            # for folded dates are dropped (their partition is
-            # rewritten unchanged); everything else folds and gets the
-            # tag. Window over rollup-grain rows inside the same job.
-            both = existing.withColumn("_src", F.lit(0)).unionByName(
-                new_parts.withColumn("_src", F.lit(1))
-            )
-            w = Window.partitionBy(ROLLUP_PARTITION_COL)
-            flagged = both.withColumn(
-                "_folded",
-                F.max(
-                    F.when(
-                        (F.col("_src") == 0)
-                        & (F.col("last_epoch") == F.lit(epoch_tag)),
-                        1,
-                    ).otherwise(0)
-                ).over(w),
-            )
-            kept = flagged.filter(
-                (F.col("_src") == 0) | (F.col("_folded") == 0)
-            ).withColumn(
-                "last_epoch",
-                F.when(F.col("_folded") == 0, F.lit(epoch_tag)).otherwise(
-                    F.col("last_epoch")
-                ),
-            ).drop("_src", "_folded")
-            merged = _merge(kept, keys)
-        else:
-            merged = _merge(existing.unionByName(new_parts), keys)
-    else:
-        merged = _merge(new_parts, keys)
-
-    if width is not None:
-        merged = merged.coalesce(width)
-    if plan_probe is not None:
-        plan_probe("rollup_merged", merged)
-    # ONE job: merge + dynamic partition overwrite in the same action.
-    # Temporally safe to read the partitions being replaced — dynamic
-    # overwrite stages task output and only deletes/renames the affected
-    # partition directories in commitJob, after every read task has
-    # finished. The overwrite mode rides the WRITER (not the session
-    # conf, which a concurrent sink thread could observe mid-toggle —
-    # r8 ADVICE) so only this write is dynamic.
+        delta = delta.coalesce(width)
+    if plan_probe is not None:  # tests: structural plan audit hook
+        plan_probe("rollup_delta", delta)
+    # The overwrite mode rides the WRITER (not the session conf, which
+    # a concurrent sink thread could observe mid-toggle — r8 ADVICE).
     (
-        merged.write.mode("overwrite")
+        delta.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(ROLLUP_PARTITION_COL)
+        .partitionBy(ROLLUP_PARTITION_COL, DELTA_COL)
         .parquet(rollup_path)
     )
-    return affected
+    return tag
 
 
-def _affected_partition_dirs(
-    spark: SparkSession, rollup_path: str, affected: list
-) -> list[str]:
-    """Existing partition directories for the affected dates — the
-    merge's literal read set (see maintain_rollup). Existence is checked
-    per directory (O(affected), normally 1-2 per micro-batch) instead of
-    listing the table root, so the maintainer never pays a full-table
-    listing however old the rollup grows."""
-    dirs = [
-        f"{rollup_path.rstrip('/')}/{ROLLUP_PARTITION_COL}={d}" for d in affected
-    ]
-    if "://" not in rollup_path:
-        return [p for p in dirs if os.path.isdir(p)]
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(rollup_path).getFileSystem(conf)
-    return [p for p in dirs if fs.exists(jvm.org.apache.hadoop.fs.Path(p))]
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem of ``path``, Path constructor)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _date_deltas(spark: SparkSession, rollup_path: str) -> dict[str, list[str]]:
+    """{date: [delta tags]} of the rollup, after converging every
+    crashed date swap (a kill between its two renames leaves the date
+    only in its hidden trash)."""
+    fs, hpath = _fs(spark, rollup_path)
+    if not fs.exists(hpath(rollup_path)):
+        return {}
+    for st in fs.listStatus(hpath(rollup_path)):
+        name = st.getPath().getName()
+        for spec in _DATE_SWAP[:2]:
+            head, _, tail = spec.partition("{}")
+            if name.startswith(head + ROLLUP_PARTITION_COL) and name.endswith(tail):
+                date_dir = f"{rollup_path}/{name[len(head):-len(tail)]}"
+                recover_swap(date_dir, *_DATE_SWAP)
+    out = {}
+    for st in fs.listStatus(hpath(rollup_path)):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith(ROLLUP_PARTITION_COL + "="):
+            out[name.split("=", 1)[1]] = [
+                c.getPath().getName().split("=", 1)[1]
+                for c in fs.listStatus(st.getPath())
+                if c.getPath().getName().startswith(DELTA_COL + "=")
+            ]
+    return out
+
+
+def replace_dates(
+    spark: SparkSession, rollup_path: str, dates: list[str], build
+) -> None:
+    """Replace the dir of each date in ``dates`` with that date's rows
+    of ``build()`` (rollup rows; without a delta column they form one
+    fresh compacted delta), one crash-safe swap per date; a date left
+    with no rows loses its dir. ``build`` runs after every crashed swap of those dates has
+    converged, since it may read them. The swaps rename the dirs the
+    ingest appends to: run this with the ingest stopped, and re-run a
+    crashed call before the ingest restarts."""
+    root = rollup_path.rstrip("/")
+    date_dirs = {d: f"{root}/{ROLLUP_PARTITION_COL}={d}" for d in dates}
+    for date_dir in date_dirs.values():
+        recover_swap(date_dir, *_DATE_SWAP)
+    rows = build()
+    if DELTA_COL not in rows.columns:
+        rows = rows.withColumn(DELTA_COL, F.lit(_fresh_delta("c")))
+    rows = rows.localCheckpoint(eager=True)  # may read the dirs it replaces
+    day = F.col(ROLLUP_PARTITION_COL).cast("string")
+    nonempty = {r[0] for r in rows.select(day).distinct().collect()}
+    fs, hpath = _fs(spark, root)
+    for d, date_dir in date_dirs.items():
+        if d not in nonempty:
+            fs.delete(hpath(date_dir), True)
+            continue
+        rows.filter(day == d).drop(ROLLUP_PARTITION_COL).write.partitionBy(
+            DELTA_COL
+        ).parquet(swap_side(date_dir, _DATE_SWAP[0]))
+        publish_swap(date_dir, *_DATE_SWAP)
+
+
+@dataclass(frozen=True)
+class RollupCompactionReport:
+    dates_scanned: int
+    dates_compacted: int
+    max_deltas_before: int
+    max_deltas_after: int
+    deltas_kept_for_replay: int
+
+
+def compact_rollup(spark: SparkSession, rollup_path: str) -> RollupCompactionReport:
+    """Fold each date's deltas into ONE ``c``-tagged leaf, keeping
+    apart each run's newest epoch delta (folding it would let a replay
+    of that epoch double-count). Keys are the columns that are neither
+    aggregates nor partition columns. Idempotent; same rows served."""
+    root = rollup_path.rstrip("/")
+    deltas = _date_deltas(spark, root)
+    kept = _replayable(t for tags in deltas.values() for t in tags)
+    fold = {}  # date -> the deltas folded into its new leaf
+    for d, tags in deltas.items():
+        foldable = [t for t in tags if t not in kept]
+        if len(foldable) > 1:
+            fold[d] = foldable
+
+    def build() -> DataFrame:
+        parts = spark.read.option("basePath", root).parquet(
+            *[f"{root}/{ROLLUP_PARTITION_COL}={d}" for d in fold]
+        )
+        keys = [
+            c for c in parts.columns
+            if c not in ("hour_ts", *_AGG_COLS, ROLLUP_PARTITION_COL, DELTA_COL)
+        ]
+        leaf = F.when(F.col(DELTA_COL).isin(list(kept)), F.col(DELTA_COL)).otherwise(
+            F.lit(_fresh_delta("c"))
+        )
+        return _merge(parts.withColumn(DELTA_COL, leaf), [*keys, DELTA_COL])
+
+    if fold:
+        replace_dates(spark, root, list(fold), build)
+    after = [len(tags) - len(fold[d]) + 1 if d in fold else len(tags)
+             for d, tags in deltas.items()]
+    return RollupCompactionReport(
+        dates_scanned=len(deltas),
+        dates_compacted=len(fold),
+        max_deltas_before=max(map(len, deltas.values()), default=0),
+        max_deltas_after=max(after, default=0),
+        deltas_kept_for_replay=sum(t in kept for tags in deltas.values() for t in tags),
+    )
 
 
 def _rollup_exists(spark: SparkSession, rollup_path: str) -> bool:
-    if "://" not in rollup_path:
-        return os.path.isdir(rollup_path) and any(
-            name.startswith(ROLLUP_PARTITION_COL + "=") for name in os.listdir(rollup_path)
-        )
-    # Remote filesystems: probe through Hadoop so the same code runs on
-    # an object store.
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(rollup_path)
-    return path.getFileSystem(conf).exists(path)
+    fs, hpath = _fs(spark, rollup_path)
+    return fs.exists(hpath(rollup_path)) and any(
+        st.getPath().getName().startswith(ROLLUP_PARTITION_COL + "=")
+        for st in fs.listStatus(hpath(rollup_path))
+    )
 
 
 def read_rollup(spark: SparkSession, rollup_path: str, keys: list[str]) -> DataFrame:
-    """Finalize the materialized partials into the user-facing hourly
-    aggregate view (avg derived at read time — the stored state stays
-    mergeable)."""
-    parts = spark.read.parquet(rollup_path)
+    """Merge the stored deltas and finalize them into the user-facing
+    hourly aggregate view (avg derived at read time — the stored state
+    stays mergeable)."""
+    parts = _merge(spark.read.parquet(rollup_path), keys)
     cols = [
         F.col("hour_ts"),
         *[F.col(k) for k in keys],

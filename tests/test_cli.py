@@ -350,9 +350,45 @@ def test_maintain_cli_compact_index(spark, tmp_path, capsys):
     assert mmain(["compact-index", idx], spark=spark) == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["cmd"] == "compact-index"
+    assert rep["pending_append"] is False
     assert set(rep["subtables"]) == {"bands", "vecs"}
     for sub in rep["subtables"].values():
         assert sub["compacted"] and sub["files_after"] == 1
+
+    # a crashed extend's marker surfaces in the report
+    open(os.path.join(idx, "_APPEND_PENDING"), "w").close()
+    assert mmain(["compact-index", idx], spark=spark) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["pending_append"] is True
+
+
+def test_maintain_cli_compact_rollup(spark, tmp_path, capsys):
+    """compact-rollup: one JSON line with the lake-health counts, the
+    merged view unchanged, each run's newest epoch delta left alone."""
+    import json
+
+    from meshtastic_airsensor_database_spark.cli.maintain import main as mmain
+    from meshtastic_airsensor_database_spark.streaming.rollup import (
+        maintain_rollup,
+        read_rollup,
+    )
+
+    rows = [(f"2024-06-0{d} 0{h}:00:00", d % 2, float(d * h)) for d in (1, 2) for h in range(4)]
+    ev = spark.createDataFrame(rows, "s string, node long, value double").select(
+        F.to_timestamp("s").alias("ts"), "node", "value"
+    )
+    path = str(tmp_path / "hourly")
+    for epoch in range(4):
+        maintain_rollup(ev.filter(F.hour("ts") == epoch), path, keys=["node"],
+                        epoch_tag=f"run:{epoch}")
+    want = sorted(tuple(r) for r in read_rollup(spark, path, ["node"]).collect())
+    assert mmain(["compact-rollup", path], spark=spark) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep == {
+        "cmd": "compact-rollup", "dates_scanned": 2, "dates_compacted": 2,
+        "max_deltas_before": 4, "max_deltas_after": 2, "deltas_kept_for_replay": 2,
+    }
+    assert sorted(tuple(r) for r in read_rollup(spark, path, ["node"]).collect()) == want
 
 
 def test_maintain_cli_erase_key_and_validation(spark, tmp_path, capsys):

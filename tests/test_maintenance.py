@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from meshtastic_airsensor_database_spark.sources.maintenance import (
@@ -190,6 +191,58 @@ def test_erase_key_rebuild_mode_and_idempotency(spark, tmp_path):
     )
     assert rep2.rows_deleted == 0 and rep2.fact_partitions_rewritten == 0
     assert rep2.rollup_mode == "none"
+
+
+@pytest.mark.parametrize("keys, mode", [(["user_id"], "row-drop"), ([], "rebuild")])
+def test_erase_key_over_rollup_deltas(spark, tmp_path, keys, mode):
+    """Dates holding two deltas, one of them owned wholly by the
+    subject: each touched date dir is swapped whole, so that leaf goes
+    (a dynamic overwrite by date could not remove it), the date the
+    subject owned goes, no date mixes directory depths, untouched
+    dates keep their files, and the merged view equals a recompute
+    over the post-erasure facts."""
+    from meshtastic_airsensor_database_spark.sources.maintenance import erase_key
+    from meshtastic_airsensor_database_spark.streaming.rollup import (
+        maintain_rollup, read_rollup,
+    )
+
+    fact_path, _ = _erasure_fixture(spark, tmp_path)
+    rollup_path = str(tmp_path / "rollup_deltas")
+    facts = spark.read.parquet(fact_path)
+    subject = F.col("user_id") == 7
+    maintain_rollup(facts.filter(~subject), rollup_path, keys=keys, epoch_tag="r:1")
+    maintain_rollup(facts.filter(subject), rollup_path, keys=keys, epoch_tag="r:2")
+    leaves = {
+        d: sorted(os.listdir(os.path.join(rollup_path, d)))
+        for d in os.listdir(rollup_path)
+    }
+    assert leaves["rollup_date=2024-01-01"] == ["rollup_delta=er-1", "rollup_delta=er-2"]
+    untouched = _files_of(rollup_path, "rollup_date=2024-01-04/rollup_delta=er-1")
+
+    rep = erase_key(
+        spark, fact_path, "event_date", "user_id", 7,
+        rollup_path=rollup_path, rollup_keys=keys,
+    )
+    assert rep.rollup_mode == mode
+    dates = sorted(n for n in os.listdir(rollup_path) if not n.startswith(("_", ".")))
+    assert dates == ["rollup_date=2024-01-01", "rollup_date=2024-01-02",
+                     "rollup_date=2024-01-04"]
+    assert not [n for n in os.listdir(rollup_path) if n.startswith(".")]
+    for d in dates:
+        children = [c for c in os.listdir(os.path.join(rollup_path, d))
+                    if not c.startswith(("_", "."))]
+        assert children and all(c.startswith("rollup_delta=") for c in children), children
+        assert "rollup_delta=er-2" not in children
+    assert _files_of(rollup_path, "rollup_date=2024-01-04/rollup_delta=er-1") == untouched
+
+    post = spark.read.parquet(fact_path)
+    scratch = str(tmp_path / "rollup_scratch")
+    maintain_rollup(post, scratch, keys=keys)
+
+    def view(path):
+        return sorted(tuple(r) for r in read_rollup(spark, path, keys).collect())
+
+    assert view(rollup_path) == view(scratch)
 
 
 def _rollup_state(spark, rollup_path):

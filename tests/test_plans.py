@@ -718,9 +718,8 @@ def test_streaming_foreachbatch_inner_plans_audit(spark, tmp_path):
         )
 
     def processor(batch, epoch_id):
-        # epoch_tag mirrors the real idempotent_batch_processor so the
-        # audited rollup_merged plan includes the (run, epoch) replay
-        # guard's window subtree, not just the untagged merge
+        # epoch_tag mirrors the real idempotent_batch_processor, so
+        # the audited rollup_delta plan is the epoch-named one
         process_packet_batch(batch, paths, with_counts=False,
                              plan_probe=probe, epoch_tag=f"audit:{epoch_id}")
 
@@ -739,17 +738,14 @@ def test_streaming_foreachbatch_inner_plans_audit(spark, tmp_path):
 
     labels = {lbl for lbl, _ in captured}
     # every sink family executed (fixture has all routes + corrupt rows)
-    # (r8: no separate rollup_partials plan on this path — the ingest
-    # passes affected_dates from its stats job, so the partials subtree
-    # executes inside the audited rollup_merged plan.)
     assert {"stats", "dlq_write", "dim_upsert", "facts_airwise_data",
             "facts_battery_data", "facts_airwise_datav1",
-            "rollup_merged"} <= labels, labels
-    # batch 2's rollup plan must carry the epoch-replay guard (window
-    # over existing ∪ new partials) — assert it was actually audited
-    rollup_plans = [p for lbl, p in captured if lbl == "rollup_merged"]
+            "rollup_delta"} <= labels, labels
+    # one delta per batch, each a blind append: its plan scans the
+    # batch only, never the rollup table it writes to
+    rollup_plans = [p for lbl, p in captured if lbl == "rollup_delta"]
     assert len(rollup_plans) == 2, len(rollup_plans)
-    assert any("Window" in p for p in rollup_plans), rollup_plans[-1]
+    assert not any("airwise_hourly" in p for p in rollup_plans), rollup_plans[-1]
     for label, simple in captured:
         bad = unbounded_single_partition_exchanges(simple)
         assert not bad, (label, bad, simple)

@@ -526,6 +526,55 @@ def test_streaming_ingest_dedups_packet_ids_within_watermark(spark, tmp_path):
     assert env.count() == 2  # duplicate 9001 dropped, 9002 kept
 
 
+def test_streaming_dedup_expiry_semantics_without_no_data_batches(spark, tmp_path):
+    """Pins the trickle's dedup expiry (the ingest query runs without
+    no-data batches, so the next DATA batch evicts expired entries,
+    after its own lookups):
+
+    - a re-broadcast (same id, same event time) is dropped before its
+      entry expires and after (then as late data, behind the
+      watermark);
+    - an id reused with a FRESH event time in the data batch right
+      after the entry expired is still dropped as a duplicate;
+    - the batch after that accepts the reused id."""
+    landing = str(tmp_path / "ex_landing")
+    out = str(tmp_path / "ex_out")
+    pkt = dict(ALL_GOOD[0], id=9300)
+    t = pkt["timestamp"]
+
+    def at(offset_s, **kw):
+        return json.dumps(dict(pkt, timestamp=t + offset_s, **kw))
+
+    paths = IngestPaths(landing_dir=landing, out_dir=out)
+    batches = [
+        [at(0)],
+        # re-broadcast inside the watermark; an advancing packet moves
+        # the watermark to t+20 min, past the entry's expiry (t+10 min)
+        [at(0), at(1800, id=9301)],
+        # first data batch after expiry: reuse with a fresh event time,
+        # and a late re-broadcast
+        [at(1860), at(0)],
+        # the entry is gone now: the reuse passes
+        [at(1920)],
+    ]
+    write_packet_fixture(landing, batches[0], "b0.jsonl")
+    query = run_ingest_stream(spark, paths, dedup_within_watermark=True)
+    seen = []
+    try:
+        for i, lines in enumerate(batches):
+            if i:
+                write_packet_fixture(landing, lines, f"b{i}.jsonl")
+            query.processAllAvailable()
+            env = spark.read.parquet(paths.table("airwise_data"))
+            seen.append(sorted(
+                r[0] - t for r in env.select("timestamp_node").collect()
+            ))
+    finally:
+        query.stop()
+    # event-time offsets of the stored facts after each batch
+    assert seen == [[0], [0, 1800], [0, 1800], [0, 1800, 1920]]
+
+
 def test_streaming_dedup_preserves_idless_rows(spark, tmp_path):
     """Rows without a packet id must NOT be collapsed by --dedup: null
     keys compare equal in dropDuplicatesWithinWatermark, so id-less
@@ -1396,13 +1445,13 @@ def test_rollup_is_idempotent_under_epoch_replay(spark, tmp_path):
     at-least-once (packet-identity dedup absorbs the duplicate append —
     previous test), but the rollup is ADDITIVE: an unguarded re-fold of
     the replayed epoch would double-count the batch. The (run, epoch)
-    stamp (maintain_rollup epoch_tag) must make the replayed fold
-    rewrite the affected partitions unchanged: after restart the rollup
-    count equals the fact count pre-duplication, not 2x.
+    delta name (maintain_rollup epoch_tag) must make the replayed fold
+    overwrite its own delta: after restart the rollup count equals the
+    fact count pre-duplication, not 2x.
 
-    Mutation-verified (r8): neutering the guard's tag comparison makes
-    this test fail with the doubled count — it detects the bug class it
-    exists for, not just the happy path."""
+    Mutation-verified: naming each fold's delta afresh instead of after
+    its epoch tag makes this test fail with the doubled count — it
+    detects the bug class it exists for, not just the happy path."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from meshtastic_airsensor_database_spark.sources.landing import (
@@ -1445,7 +1494,7 @@ def test_rollup_is_idempotent_under_epoch_replay(spark, tmp_path):
 
     # restart on the same checkpoint: the epoch replays in full (the
     # default processor derives the SAME run tag from the persisted
-    # ledger dir, so the stamps match and the re-fold is a no-op)
+    # ledger dir, so the re-fold overwrites the same delta)
     q2 = run_ingest_stream(spark, paths)
     try:
         q2.processAllAvailable()
@@ -1943,10 +1992,14 @@ def test_replay_from_archive_rebuilds_identical_facts(spark, tmp_path):
     durable record by replaying it from scratch and asserting the
     rebuilt fact tables, node dim, rollup and quarantine equal the
     original streaming ingest's (modulo the wallclock ingest stamp and
-    the epoch tag, both delivery-time identities by design). This is
+    the epoch tag, both delivery-time identities by design; the rollup
+    is compared as its merged view, since the replay folds both batches
+    into one delta). This is
     the durability claim the reference cannot make: a crash between
     MQTT ack and INSERT loses the packet forever (AIRWISEv0.py:276-305)."""
     import time as time_mod
+
+    from meshtastic_airsensor_database_spark.streaming.rollup import read_rollup
 
     landing = str(tmp_path / "ra_landing")
     out = str(tmp_path / "ra_out")
@@ -1994,7 +2047,6 @@ def test_replay_from_archive_rebuilds_identical_facts(spark, tmp_path):
             ("airwise_datav1", ("pst_time",)),
             ("battery_data", ("pst_time",)),
             ("node_dim", ()),
-            ("airwise_hourly", ("last_epoch",)),
         ):
             df = spark.read.parquet(p.table(table))
             df = df.drop(*[c for c in drop if c in df.columns])
@@ -2002,6 +2054,12 @@ def test_replay_from_archive_rebuilds_identical_facts(spark, tmp_path):
                 tuple(str(v) for v in row)
                 for row in df.select(*sorted(df.columns)).collect()
             )
+        # the rollup holds one delta per batch: compare the merged view
+        # (the replay folds both batches into one delta)
+        snap["airwise_hourly"] = sorted(
+            tuple(str(v) for v in row)
+            for row in read_rollup(spark, p.table("airwise_hourly"), ["node"]).collect()
+        )
         from meshtastic_airsensor_database_spark.streaming.ingest import (
             QUARANTINE_SCHEMA,
         )

@@ -34,7 +34,7 @@ SHOWCASE = [
     ("chunk_pack_spans", "sequence packing cumsum window SHARDED (never SinglePartition)"),
     ("salted_brand_quantities", "skew-salted equi-join; at this SF the replicated build side still broadcasts (salting inert but harmless) - the (key, _salt) exchange shape with broadcast off is pinned by test_skew.py"),
     ("quantized_topk_cosine", "int8-quantized cosine scan as ONE mapInArrow kernel (zero-copy list-buffer reshape; exact int arithmetic keeps oracle bit-parity) (r5)"),
-    ("incremental_rollup_hourly", "finalize read over the materialized rollup (partition-pruned scan, no raw-fact rescan)"),
+    ("incremental_rollup_hourly", "merge-then-finalize read over the rollup's append-only deltas (one hour x key aggregate over a scan of the rollup, no raw-fact rescan)"),
     ("curation_funnel", "whole curation pipeline as one lineage: fingerprint agg + hashed-key gram join, map-side counts"),
     ("semantic_dedup_pairs", "SemDeDup: zero-shuffle centroid assignment, one bucket-grouping shuffle for in-cluster pairs, exact verify"),
     ("ann_pq_topk", "derandomized PQ: 4 subspace Lloyd codebooks (broadcast packs), narrow argmin encode, K-row ADC joins, 20-candidate exact re-rank — oracle-proven end to end (r5)"),

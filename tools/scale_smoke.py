@@ -191,12 +191,17 @@ def ingest_throughput(spark, tmp_root: str, n_packets: int) -> dict:
 def rollup_maintenance(spark, sf_dir: str, factor: int, tmp_root: str) -> dict:
     """Replicate events factor x (shifted by one hour per replica so the
     hour-key space grows with volume), then fold them into the
-    materialized rollup as 4 out-of-order micro-batches. Reports wall
-    seconds per batch — steady-state maintenance cost must track batch
-    size, not accumulated table size."""
+    materialized rollup as 4 out-of-order micro-batches, then compact
+    the deltas. Reports wall seconds per batch — a fold is a blind
+    append, so its cost must track batch size, not accumulated table
+    size — and of the compaction, which must serve the same rows."""
     import shutil
 
-    from meshtastic_airsensor_database_spark.streaming.rollup import maintain_rollup
+    from meshtastic_airsensor_database_spark.streaming.rollup import (
+        compact_rollup,
+        maintain_rollup,
+        read_rollup,
+    )
 
     shutil.rmtree(tmp_root, ignore_errors=True)
     path = os.path.join(tmp_root, "hourly")
@@ -219,7 +224,18 @@ def rollup_maintenance(spark, sf_dir: str, factor: int, tmp_root: str) -> dict:
             keys=["user_id", "event_type"],
         )
         secs.append(round(time.time() - t0, 2))
-    return {"batch_sec": secs, "n_events": big.count()}
+    keys = ["user_id", "event_type"]
+    n_rows = read_rollup(spark, path, keys).count()
+    t0 = time.time()
+    rep = compact_rollup(spark, path)
+    compact_sec = round(time.time() - t0, 2)
+    assert read_rollup(spark, path, keys).count() == n_rows, "compaction changed rows"
+    return {
+        "batch_sec": secs,
+        "n_events": big.count(),
+        "compact_sec": compact_sec,
+        "deltas_per_date": [rep.max_deltas_before, rep.max_deltas_after],
+    }
 
 
 def main() -> None:

@@ -15,10 +15,11 @@ Sections:
    (c) re-run as a listing-only noop.
 
 2. ``erase`` — the same lake shape plus a materialized hourly rollup;
-   one subject owns rows in exactly 3 of the 50 dates. erase_key must
-   touch only those 3 fact partitions + the rollup's 3 date dirs
-   (mtime check on the other 47), and its wall must sit near the
-   3-date compaction cost, not the 50-date table scan.
+   folded as two deltas per date; one subject owns rows in exactly 3
+   of the 50 dates. erase_key must touch only those 3 fact partitions
+   + the rollup's 3 date dirs (mtime check on the other 47, both
+   tables), and its wall must sit near the 3-date compaction cost,
+   not the 50-date table scan.
 
 3. ``wide`` — the analyzer-pathology guard: a lake with >= 1k BAD
    partitions (2 tiny files each). The per-partition output-file-count
@@ -169,6 +170,19 @@ def compaction_section(spark, n_dates: int) -> dict:
     return out
 
 
+def _rollup_mtimes(rollup: str, dates: list[str]) -> dict[str, tuple]:
+    out = {}
+    for d in dates:
+        pd = os.path.join(rollup, f"rollup_date={d}")
+        out[d] = tuple(sorted(
+            (os.path.join(leaf, f), os.path.getmtime(os.path.join(pd, leaf, f)))
+            for leaf in os.listdir(pd)
+            if leaf.startswith("rollup_delta=")
+            for f in os.listdir(os.path.join(pd, leaf))
+        ))
+    return out
+
+
 def erasure_section(spark, n_dates: int) -> dict:
     from meshtastic_airsensor_database_spark.streaming.rollup import (
         maintain_rollup,
@@ -201,11 +215,15 @@ def erasure_section(spark, n_dates: int) -> dict:
     )
     shutil.rmtree(path)
     os.rename(path + ".tmp", path)
-    maintain_rollup(
-        spark.read.parquet(path), rollup, keys=["user_id"]
-    )
+    # two deltas per date, as two ingest batches would leave them
+    for parity in (0, 1):
+        maintain_rollup(
+            spark.read.parquet(path).filter(F.col("user_id") % 2 == parity),
+            rollup, keys=["user_id"],
+        )
     untouched = [d for d in dates if d not in set(subject_dates)]
     before = _mtimes(path, untouched)
+    rollup_before = _rollup_mtimes(rollup, untouched)
     spark._jvm.System.gc()
     t0 = time.time()
     rep = erase_key(
@@ -216,6 +234,9 @@ def erasure_section(spark, n_dates: int) -> dict:
     assert rep.fact_partitions_rewritten + rep.fact_partitions_removed == 3, rep
     assert _mtimes(path, untouched) == before, (
         "partitions outside the subject's footprint were touched"
+    )
+    assert _rollup_mtimes(rollup, untouched) == rollup_before, (
+        "rollup dates outside the subject's footprint were touched"
     )
     post = spark.read.parquet(path)
     assert post.filter(F.col("user_id") == 42).count() == 0
