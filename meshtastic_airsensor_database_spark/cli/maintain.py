@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import dataclasses
 import json
+import sys
 
 from ..session import get_spark
 
@@ -188,9 +189,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             )
         )
     elif args.cmd == "compact-rollup":
-        from ..streaming.rollup import compact_rollup
+        from ..streaming.rollup import RollupLayoutError, compact_rollup
 
-        rep = compact_rollup(spark, args.path)
+        try:
+            rep = compact_rollup(spark, args.path)
+        except RollupLayoutError as e:
+            print(f"{args.cmd}: {e}", file=sys.stderr)
+            return 1
         print(json.dumps({"cmd": args.cmd, **dataclasses.asdict(rep)}))
     elif args.cmd == "recover-erasure":
         from ..sources.maintenance import recover_erasure

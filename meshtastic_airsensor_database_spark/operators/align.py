@@ -3,8 +3,9 @@
 graphdata.py's "compare co-located sensors on one Pacific-time axis"
 becomes a real declarative query: tag + union the sources, bucket by
 time window, aggregate — plus the window-function family the
-time-series domain demands (latest-per-key, gap detection, rolling
-averages, sessionization).
+time-series domain demands (latest-per-key, sessionization, as-of
+joins). Gap detection and the trailing rolling average are SQL texts
+(``plans/events.py``: ``reading_gap_detect``, ``rolling_avg_value``).
 
 Scale notes: all Window specs partition by the series key (node /
 user), so state never concentrates on one task; time-bucket
@@ -18,9 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-OFFLINE_THRESHOLD_MINUTES = 100  # AIRWISEv0.py:20
-
 
 def tag_source(df: DataFrame, name: str) -> DataFrame:
     return df.withColumn("source", F.lit(name))
@@ -86,39 +84,6 @@ def latest_reading_per_node(df: DataFrame, key: str, ts_col: str, tiebreak: str)
     (AIRWISEv0.py:27,258). row_number desc == 1 (SURVEY §2.5)."""
     w = Window.partitionBy(key).orderBy(F.col(ts_col).desc(), F.col(tiebreak).desc())
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def reading_gap_detect(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    threshold_seconds: int = OFFLINE_THRESHOLD_MINUTES * 60,
-) -> DataFrame:
-    """Batch dual of the streaming offline detector (SURVEY §2.5).
-
-    Gap between consecutive readings per key > threshold -> one row per
-    outage with (key, prev_ts, ts, gap_seconds).
-    """
-    w = Window.partitionBy(key).orderBy(ts_col)
-    with_prev = df.withColumn("prev_ts", F.lag(ts_col).over(w))
-    gap = F.col(ts_col).cast("long") - F.col("prev_ts").cast("long")
-    return (
-        with_prev.withColumn("gap_seconds", gap)
-        .filter(F.col("prev_ts").isNotNull() & (F.col("gap_seconds") > threshold_seconds))
-        .select(key, "prev_ts", ts_col, "gap_seconds")
-    )
-
-
-def rolling_avg(
-    df: DataFrame, key: str, ts_col: str, value_col: str, window_seconds: int = 3600
-) -> DataFrame:
-    """Trailing time-range average per key (SURVEY §2.5 rolling_avg_pm25)."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(ts_col).cast("long"))
-        .rangeBetween(-window_seconds, 0)
-    )
-    return df.withColumn(f"{value_col}_rolling_avg", F.avg(value_col).over(w))
 
 
 def sessionize(

@@ -108,50 +108,3 @@ def gapfill(
         prev_v.alias("v_ff"),
         interp.alias("v_interp"),
     )
-
-
-def seasonal_naive_forecast(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    value_col: str,
-    bucket_seconds: int,
-    season_buckets: int,
-) -> DataFrame:
-    """Seasonal-naive forecast baseline: predict each (key, bucket)'s
-    mean value with the value one season earlier (e.g. 24 hourly
-    buckets = "same hour yesterday") — the standard no-model baseline
-    every real forecaster must beat, and the cheapest drift detector a
-    telemetry pipeline can run (reference analytics stop at plotting
-    the series, graphdata.py:99-192; this scores them).
-
-    Returns ``(key, bucket_epoch, actual, forecast, abs_err)`` with a
-    null forecast where the season-earlier bucket is missing (first
-    season of each key, and holes in the grid — bucket ARITHMETIC on
-    the epoch axis, not row-lag, so gaps never misalign the season).
-
-    Scale shape: one shuffle for the per-(key, bucket) aggregate; the
-    self-join on ``(key, bucket - season)`` runs on the AGGREGATED
-    series (|keys| x |buckets| rows, orders of magnitude below the
-    input), so the second exchange is small by construction. No window
-    sort over the raw data, no Python path.
-    """
-    bucket = time_bucket(F.col(ts_col), bucket_seconds)
-    series = df.groupBy(
-        F.col(key).alias(key), bucket.alias("bucket")
-    ).agg(F.avg(value_col).alias("actual"))
-    prev = series.select(
-        F.col(key),
-        (F.col("bucket") + season_buckets).alias("bucket"),
-        F.col("actual").alias("forecast"),
-    )
-    return (
-        series.join(prev, [key, "bucket"], "left")
-        .select(
-            key,
-            (F.col("bucket") * bucket_seconds).cast("long").alias("bucket_epoch"),
-            "actual",
-            "forecast",
-            F.abs(F.col("actual") - F.col("forecast")).alias("abs_err"),
-        )
-    )

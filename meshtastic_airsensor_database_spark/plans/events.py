@@ -26,12 +26,7 @@ from ..operators.sketch import (
     hll_partial_sketches,
     hll_rollup_estimate,
 )
-from ..operators.align import (
-    reading_gap_detect,
-    rolling_avg,
-    sessionize,
-    timeseries_align,
-)
+from ..operators.align import sessionize
 from .base import Query, r, sql_query
 
 
@@ -81,11 +76,6 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
 GAP_SECONDS = 1800
 
 
-def reading_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return reading_gap_detect(ev, "user_id", "ts", GAP_SECONDS)
-
-
 READING_GAPS_SQL = f"""
 SELECT user_id, prev_ts, ts, gap_seconds
 FROM (SELECT user_id, ts,
@@ -98,15 +88,6 @@ WHERE prev_ts IS NOT NULL AND gap_seconds > {GAP_SECONDS}
 
 
 # --- trailing range-window rolling average (SURVEY §2.5) ----------------------
-
-def rolling_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    rolled = rolling_avg(ev, "user_id", "ts", "value", 3600)
-    return rolled.select(
-        "event_id", "user_id", "ts",
-        r("value_rolling_avg", 2).alias("rolling_avg_1h"),
-    )
-
 
 ROLLING_AVG_VALUE_SQL = """
 SELECT event_id, user_id, ts,
@@ -239,23 +220,9 @@ GROUP BY 1, 2
 
 # --- JSON envelope parsing (SURVEY §2.8 json_envelope_parse) ------------------
 
-def props_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parse the props JSON payload; absent/corrupt key -> null
-    (the reference's .get(key, None) semantics, AIRWISEv0.py:132-135).
-    Covers numeric_coercion via try_cast."""
-    ev = load(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").try_cast("long")
-    return (
-        ev.withColumn("k", k)
-        .groupBy("event_type")
-        .agg(
-            F.sum("k").alias("sum_k"),
-            F.count("k").alias("n_parsed"),
-            r(F.avg("k"), 2).alias("avg_k"),
-        )
-    )
-
-
+# Parse the props JSON payload; an absent key (or, on Spark, corrupt
+# JSON) gives null: the reference's .get(key, None) semantics
+# (AIRWISEv0.py:132-135). TRY_CAST covers numeric_coercion.
 PROPS_JSON_EXTRACT_SQL = """
 SELECT event_type,
        CAST(SUM(TRY_CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
@@ -534,24 +501,8 @@ FROM f WHERE is_click = 1
 
 # --- multi-source time-bucket alignment (SURVEY §2.3 timeseries_align) -------
 
-def aligned_type_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """graphdata.py's shared-axis overlay as a real query: two tagged
-    sources -> union -> 5-minute bucket averages per source."""
-    ev = load(spark, sf_dir, "events")
-    sources = {
-        "clicks": ev.filter(F.col("event_type") == "click"),
-        "views": ev.filter(F.col("event_type") == "view"),
-    }
-    aligned = timeseries_align(sources, "ts", "value", "5 minutes")
-    return aligned.select(
-        "bucket_ts", "source",
-        r("avg_value", 2).alias("avg_value"),
-        r("min_value", 2).alias("min_value"),
-        r("max_value", 2).alias("max_value"),
-        "n",
-    )
-
-
+# graphdata.py's shared-axis overlay as a real query: two tagged sources
+# -> union -> 5-minute bucket averages per source.
 ALIGNED_TYPE_BUCKETS_SQL = """
 WITH u AS (
   SELECT 'clicks' AS source, ts, value FROM events WHERE event_type = 'click'
@@ -598,22 +549,8 @@ FROM events GROUP BY user_id
 """
 
 
-def lead_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user stats over the gap to the NEXT event (lead window —
-    the forward dual of reading_gap_detect's lag)."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = (
-        F.unix_timestamp(F.lead("ts").over(w)) - F.unix_timestamp("ts")
-    ).alias("gap_s")
-    gaps = ev.select("user_id", gap).filter(F.col("gap_s").isNotNull())
-    return gaps.groupBy("user_id").agg(
-        r(F.avg("gap_s"), 2).alias("avg_gap_s"),
-        F.max("gap_s").alias("max_gap_s"),
-        F.count("*").alias("n_gaps"),
-    )
-
-
+# Per-user stats over the gap to the NEXT event (lead window: the
+# forward dual of reading_gap_detect's lag).
 LEAD_GAP_STATS_SQL = """
 SELECT user_id,
        CAST(ROUND(CAST(AVG(gap_s) AS DECIMAL(38,9)), 2) AS DOUBLE) AS avg_gap_s,
@@ -1027,10 +964,10 @@ QUERIES: list[Query] = [
           ("per_node_stats", "windowed_ingest"), "flagship per-node hourly stats"),
     sql_query("latest_reading_per_node", LATEST_READING_SQL,
               ("latest_reading_per_node", "last_seen_per_node"), "heartbeat-dict dual"),
-    Query("reading_gap_detect", reading_gaps, READING_GAPS_SQL,
-          ("reading_gap_detect", "offline_detection"), "batch offline detection"),
-    Query("rolling_avg_value", rolling_avg_value, ROLLING_AVG_VALUE_SQL,
-          ("rolling_avg_pm25",), "trailing 1h range-window average"),
+    sql_query("reading_gap_detect", READING_GAPS_SQL,
+              ("reading_gap_detect", "offline_detection"), "batch offline detection"),
+    sql_query("rolling_avg_value", ROLLING_AVG_VALUE_SQL,
+              ("rolling_avg_pm25",), "trailing 1h range-window average"),
     Query("session_counts", session_counts, SESSION_COUNTS_SQL,
           ("windowed_ingest", "offline_detection"), "gap-based sessionization"),
     Query("session_window_stats", session_window_stats,
@@ -1042,8 +979,8 @@ QUERIES: list[Query] = [
     Query("props_variant_extract", props_variant_extract,
           PROPS_VARIANT_EXTRACT_SQL, ("json_envelope_parse",),
           "VARIANT-typed JSON access: parse once, typed try_variant_get"),
-    Query("props_json_extract", props_json_extract, PROPS_JSON_EXTRACT_SQL,
-          ("json_envelope_parse", "numeric_coercion"), "JSON payload field extraction"),
+    sql_query("props_json_extract", PROPS_JSON_EXTRACT_SQL,
+              ("json_envelope_parse", "numeric_coercion"), "JSON payload field extraction"),
     Query("epoch_roundtrip", epoch_roundtrip, EPOCH_ROUNDTRIP_SQL,
           ("epoch_to_timestamp", "date_format_render"), "epoch<->ts<->string round trip"),
     Query("pacific_daily_counts", pacific_daily_counts, PACIFIC_DAILY_COUNTS_SQL,
@@ -1052,8 +989,8 @@ QUERIES: list[Query] = [
           ("tz_suffix_strip", "timestamp_parse_coerce"), "suffix strip + coercing parse"),
     sql_query("f_to_c_values", F_TO_C_VALUES_SQL,
               ("f_to_c", "round_cols"), "unit conversion + rounding"),
-    Query("aligned_type_buckets", aligned_type_buckets, ALIGNED_TYPE_BUCKETS_SQL,
-          ("timeseries_align", "multi_file_union"), "multi-source time-bucket alignment"),
+    sql_query("aligned_type_buckets", ALIGNED_TYPE_BUCKETS_SQL,
+              ("timeseries_align", "multi_file_union"), "multi-source time-bucket alignment"),
     Query("outage_episodes", outage_episode_bounds, OUTAGE_EPISODE_BOUNDS_SQL,
           ("windowed_ingest", "offline_detection"), "session-window outage episodes"),
     Query("asof_latest_view_value", asof_latest_view_value, ASOF_LATEST_VIEW_VALUE_SQL,
@@ -1067,8 +1004,8 @@ QUERIES: list[Query] = [
     sql_query("conditional_event_counts", CONDITIONAL_EVENT_COUNTS_SQL,
               ("per_node_stats", "packet_type_filter"),
               "count_if + conditional average per user"),
-    Query("lead_gap_stats", lead_gap_stats, LEAD_GAP_STATS_SQL,
-          ("reading_gap_detect",), "lead-window forward gap stats"),
+    sql_query("lead_gap_stats", LEAD_GAP_STATS_SQL,
+              ("reading_gap_detect",), "lead-window forward gap stats"),
     Query("props_regex_extract", props_regex_extract, PROPS_REGEX_EXTRACT_SQL,
           ("json_envelope_parse", "numeric_coercion"), "regex capture-group extraction"),
     Query("user_value_trend", user_value_trend, USER_VALUE_TREND_SQL,

@@ -506,43 +506,16 @@ FROM events GROUP BY 1, 2
 EWMA_ALPHA = 0.5
 EWMA_DEPTH = 8  # (1-alpha)^8 = 0.4% residual weight — negligible tail
 
-EWMA_SAMPLE_USERS = 40  # bounded declared output; the operator itself is full-corpus
+EWMA_SAMPLE_USERS = 40  # bounded declared output; the expression itself is full-corpus
 
-
-def ewma_value_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user exponentially weighted moving average of ``value``,
-    truncated at ``EWMA_DEPTH`` lags (pandas ``ewm(adjust=True)``
-    semantics over the available window): weights (1-α)^i normalized
-    over the lags that exist, so the series starts exact at the first
-    row instead of biased toward zero.
-
-    The truncation is what makes this a WINDOW expression instead of a
-    sequential recurrence: each output row reads its own K lags — one
-    per-key window sort, no cross-row dependency chain, embarrassingly
-    parallel across users at any scale (the untruncated recurrence
-    would need a sequential scan per key; at depth 8 and α=0.5 the
-    difference is < 0.4% of one sample's weight).
-    """
-    from pyspark.sql import Window
-
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < EWMA_SAMPLE_USERS)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    num = F.lit(0.0)
-    den = F.lit(0.0)
-    for i in range(EWMA_DEPTH):
-        wt = (1.0 - EWMA_ALPHA) ** i
-        lag_i = F.lag("value", i).over(w)
-        num = num + F.coalesce(lag_i * F.lit(wt), F.lit(0.0))
-        den = den + F.when(lag_i.isNotNull(), F.lit(wt)).otherwise(F.lit(0.0))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.col("ts").cast("long").alias("ts_epoch"),
-        r("value", 2).alias("value"),
-        r(num / den, 3).alias("ewma"),
-    )
-
-
+# Per-user EWMA of value, truncated at EWMA_DEPTH lags (pandas
+# ewm(adjust=True) over the available window): weights (1-α)^i are
+# normalized over the lags that exist, so the series starts exact at
+# the first row instead of biased toward zero. The truncation makes it
+# a window expression, not a sequential recurrence: each row reads its
+# own K lags through ONE per-key window sort, with no cross-row
+# dependency chain (at depth 8 and α=0.5 the untruncated recurrence
+# differs by < 0.4% of one sample's weight).
 _EWMA_NUM = " + ".join(
     f"COALESCE(lag(value, {i}) OVER w * {(1.0 - EWMA_ALPHA) ** i!r}, 0.0)"
     for i in range(EWMA_DEPTH)
@@ -586,31 +559,15 @@ FROM (
 SEASON_BUCKET_S = 3600
 SEASON_LAG_BUCKETS = 24  # same hour yesterday
 
-
-def seasonal_naive_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user accuracy of the seasonal-naive baseline ("same hour
-    yesterday") over the hourly mean-value series: bucket count,
-    scored-bucket count, MAE and sMAPE. The no-model baseline every
-    forecaster must beat — and a drift alarm when yesterday stops
-    predicting today."""
-    from ..operators.timegrid import seasonal_naive_forecast
-
-    ev = load(spark, sf_dir, "events")
-    fc = seasonal_naive_forecast(
-        ev, "user_id", "ts", "value", SEASON_BUCKET_S, SEASON_LAG_BUCKETS
-    )
-    den = F.abs(F.col("actual")) + F.abs(F.col("forecast"))
-    smape_term = F.when(den != 0, F.col("abs_err") * 2 / den)
-    return fc.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_buckets"),
-        F.count("forecast").cast("long").alias("n_scored"),
-        r(F.avg("abs_err"), 3).alias("mae"),
-        r(F.avg(smape_term), 4).alias("smape"),
-    )
-
-
 _R4 = "CAST(ROUND(CAST({x} AS DECIMAL(38,9)), 4) AS DOUBLE)"
 
+# Per-user accuracy of the seasonal-naive baseline ("same hour
+# yesterday") over the hourly mean series: the no-model baseline every
+# forecaster must beat, and a drift alarm when yesterday stops
+# predicting today. The season is bucket ARITHMETIC on the epoch axis,
+# not a row lag, so a missing hour leaves a null forecast one season
+# later instead of misaligning the series. The self-join runs on the
+# aggregated series (|users| x |hours| rows).
 SEASONAL_NAIVE_SKILL_SQL = f"""
 WITH series AS (
   SELECT user_id,
@@ -811,37 +768,13 @@ GROUP BY 1, 2
 
 # --- time-weighted average per key (TimescaleDB `time_weight` parity) ---------
 
-
-def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user time-weighted average of value: each reading is held
-    until the next one (LOCF weighting), so irregular sampling does
-    not bias the mean toward burst periods — the telemetry-correct
-    mean for the reference's 1-msg/15-min nodes whenever radio
-    conditions bunch packets.
-
-    Scale shape: ONE window shuffle on user_id (lead is the only
-    ordered op) then a hash agg on the same key — AQE reuses the
-    partitioning, no second exchange. Weights are integer epoch
-    MICROseconds: summing large positive integers keeps the float
-    condition number at 1, so the distributed sum matches the serial
-    oracle within the decimal(38,9) collapse.
-    """
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dt = (
-        F.unix_micros(F.lead("ts").over(w)) - F.unix_micros(F.col("ts"))
-    ).cast("double")
-    spans = ev.select(
-        "user_id", "value", dt.alias("dt")
-    ).where(F.col("dt").isNotNull())
-    return spans.groupBy("user_id").agg(
-        r(F.sum(F.col("value") * F.col("dt")) / F.sum("dt"), 4).alias(
-            "twa_value"
-        ),
-        F.count(F.lit(1)).cast("long").alias("n_spans"),
-    )
-
-
+# Each reading is held until the next one (LOCF weighting), so irregular
+# sampling does not bias the mean toward burst periods. One window
+# shuffle on user_id, then a hash agg on the same key (no second
+# exchange). Weights are integer epoch MICROseconds: summing large
+# positive integers keeps the float condition number at 1, so the
+# distributed sum matches the serial oracle within the decimal(38,9)
+# collapse.
 TIME_WEIGHTED_AVG_SQL = """
 WITH spans AS (
   SELECT user_id, value,
@@ -1165,41 +1098,11 @@ GROUP BY e.event_type
 
 WEEK_S = 604800
 
-
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention: users grouped by first-activity week,
-    then counted in every later week they return.
-
-    Scale shape: (user, week) activity is de-duplicated FIRST (one
-    hash agg — the frame every later step touches is bounded by
-    users x weeks, not by raw events), cohorts are a second hash agg
-    on user_id, and the join back is a co-partitioned equi-join on
-    user_id. Because (user, week) is already distinct and maps to
-    exactly one (cohort, offset) cell, the retention count is a plain
-    COUNT(*) — no expensive distinct aggregation after the join. The
-    week axis is epoch seconds (tz-free, both engines agree).
-    """
-    ev = load(spark, sf_dir, "events")
-    wk = F.unix_timestamp(F.date_trunc("week", F.col("ts"))).alias("wk")
-    activity = ev.select("user_id", wk).distinct()
-    first = activity.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
-    joined = activity.join(first, "user_id")
-    offset = ((F.col("wk") - F.col("cohort_wk")) / WEEK_S).cast("int")
-    ret = joined.groupBy(
-        "cohort_wk", offset.alias("week_offset")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_active"))
-    sizes = first.groupBy("cohort_wk").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    return ret.join(sizes, "cohort_wk").select(
-        F.col("cohort_wk").cast("long").alias("cohort_wk_epoch"),
-        "week_offset",
-        "n_active",
-        "cohort_size",
-        r(F.col("n_active") / F.col("cohort_size"), 4).alias("retention_rate"),
-    )
-
-
+# Users grouped by first-activity week, then counted in every later week
+# they return. (user, week) activity is de-duplicated FIRST, so every
+# later step touches users x weeks rows, not raw events; since each
+# distinct (user, week) maps to one (cohort, offset) cell, the retention
+# count is a plain COUNT(*), no distinct aggregation after the join.
 COHORT_RETENTION_SQL = f"""
 WITH activity AS (
   SELECT DISTINCT user_id,
@@ -1534,51 +1437,12 @@ FROM o
 
 ATTRIB_LOOKBACK_SEC = 7 * 24 * 3600
 
-
-def linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch attribution: each purchase's value is split
-    EQUALLY across every preceding touch ('view'/'click') by the same
-    user within a 7-day lookback — the credit model last-touch can't
-    express (`last_touch_attribution` is the single-touch dual).
-
-    Scale shape: purchases and touches are two prunes of one scan,
-    equi-joined on user_id with the time range as a residual filter
-    (per-user bounded fan-out, never a time-grid nested loop); the
-    per-purchase touch count comes from a window KEYED by purchase
-    event_id over the join result, and the final credit rollup is a
-    |touch_type|-wide hash agg.
-    """
-    ev = load(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("value").alias("p_value"),
-    )
-    t = ev.filter(F.col("event_type").isin(*ATTRIB_TOUCH_TYPES)).select(
-        F.col("user_id").alias("t_user"),
-        F.col("ts").alias("t_ts"),
-        F.col("event_type").alias("touch_type"),
-    )
-    j = p.join(
-        t,
-        (F.col("p_user") == F.col("t_user"))
-        & (F.col("t_ts") <= F.col("p_ts"))
-        & (
-            F.col("t_ts").cast("long")
-            > F.col("p_ts").cast("long") - ATTRIB_LOOKBACK_SEC
-        ),
-    )
-    k = F.count(F.lit(1)).over(Window.partitionBy("p_id"))
-    credited = j.select(
-        "touch_type", (F.col("p_value") / k).alias("credit")
-    )
-    return credited.groupBy("touch_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_credited_touches"),
-        r(F.sum("credit"), 2).alias("attributed_value"),
-    )
-
-
+# Each purchase's value is split EQUALLY across every preceding touch by
+# the same user within the lookback (last_touch_attribution is the
+# single-touch dual). Purchases and touches are two prunes of one scan,
+# equi-joined on user_id with the time range as a residual filter
+# (per-user bounded fan-out, never a time-grid nested loop); the touch
+# count per purchase is a window keyed by purchase event_id.
 LINEAR_ATTRIBUTION_SQL = f"""
 WITH p AS (
   SELECT event_id AS p_id, user_id AS p_user, ts AS p_ts, value AS p_value
@@ -2179,38 +2043,11 @@ LIMIT {PATH_TOPK}
 
 DEBOUNCE_GAP_S = 60
 
-
-def debounced_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Debounce: drop an event arriving within {gap}s of the PREVIOUS
-    event of the same (user, type) — the standard duplicate-burst
-    filter for chatty telemetry (a stuck sensor re-sending, a UI
-    double-fire). Returns the kept rows.
-
-    Scale shape: one keyed window (user_id, event_type) carries the
-    lag timestamp — a single exchange on the debounce key, then a
-    narrow integer-seconds filter; ties at identical timestamps break
-    on event_id so both engines keep the identical row.
-    """
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    prev_sec = F.lag(F.col("ts").cast("long")).over(w)
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            "event_type",
-            "ts",
-            "value",
-            prev_sec.alias("_prev"),
-        )
-        .filter(
-            F.col("_prev").isNull()
-            | (F.col("ts").cast("long") - F.col("_prev") >= DEBOUNCE_GAP_S)
-        )
-        .select("event_id", "user_id", "event_type", "ts", "value")
-    )
-
-
+# Drop an event arriving within DEBOUNCE_GAP_S of the PREVIOUS event of
+# the same (user, type): the duplicate-burst filter for chatty telemetry.
+# One keyed window carries the lag (a single exchange on the debounce
+# key); ties at identical timestamps break on event_id, so both engines
+# keep the same row.
 DEBOUNCED_EVENTS_SQL = f"""
 WITH l AS (
   SELECT event_id, user_id, event_type, ts, value,
@@ -2257,9 +2094,9 @@ QUERIES: list[Query] = [
           ("continuous_aggregate", "per_node_stats"),
           "rollup cascade: daily grain re-merged from the stored hourly "
           "partials (no raw rescan) == direct daily recompute"),
-    Query("ewma_value_smooth", ewma_value_smooth, EWMA_VALUE_SMOOTH_SQL,
-          ("rolling_avg_pm25", "timeseries_align"),
-          "per-key truncated EWMA smoothing as a pure window expression"),
+    sql_query("ewma_value_smooth", EWMA_VALUE_SMOOTH_SQL,
+              ("rolling_avg_pm25", "timeseries_align"),
+              "per-key truncated EWMA smoothing as a pure window expression"),
     sql_query("value_histogram", VALUE_HISTOGRAM_SQL,
               ("per_node_stats",),
               "fixed-width value histogram per event type (one-shuffle binning)"),
@@ -2272,11 +2109,10 @@ QUERIES: list[Query] = [
               "seasonality-aware anomaly flags: median/MAD robust z over "
               "the decomposition residual (fires on unexplained spikes, "
               "not rhythm)"),
-    Query("seasonal_naive_skill", seasonal_naive_skill,
-          SEASONAL_NAIVE_SKILL_SQL,
-          ("timeseries_align", "per_node_stats"),
-          "per-key MAE/sMAPE of the same-hour-yesterday forecast baseline "
-          "(epoch-arithmetic season alignment, gap-safe)"),
+    sql_query("seasonal_naive_skill", SEASONAL_NAIVE_SKILL_SQL,
+              ("timeseries_align", "per_node_stats"),
+              "per-key MAE/sMAPE of the same-hour-yesterday forecast baseline "
+              "(epoch-arithmetic season alignment, gap-safe)"),
     Query("value_drift_cusum", value_drift_cusum, VALUE_DRIFT_CUSUM_SQL,
           ("robust_outlier_detect", "rolling_avg_pm25"),
           "CUSUM-chart sustained-shift detection as pure window algebra "
@@ -2293,10 +2129,10 @@ QUERIES: list[Query] = [
     sql_query("value_equidepth_bins", VALUE_EQUIDEPTH_BINS_SQL,
               ("per_node_stats",),
               "exact equi-depth histogram via deterministic NTILE binning"),
-    Query("cohort_retention", cohort_retention, COHORT_RETENTION_SQL,
-          ("funnel_pattern", "per_node_stats"),
-          "weekly first-activity cohort retention (dedup-first, "
-          "count-only after join)"),
+    sql_query("cohort_retention", COHORT_RETENTION_SQL,
+              ("funnel_pattern", "per_node_stats"),
+              "weekly first-activity cohort retention (dedup-first, "
+              "count-only after join)"),
     sql_query("event_transition_matrix", EVENT_TRANSITION_MATRIX_SQL, ("funnel_pattern",),
               "first-order Markov transition counts/probabilities over "
               "per-user event sequences"),
@@ -2308,10 +2144,10 @@ QUERIES: list[Query] = [
               ("timeseries_align", "per_node_stats"),
               "pairwise Pearson correlation of hourly-mean series "
               "(hour-keyed self equi-join, co-moment hash agg)"),
-    Query("time_weighted_avg", time_weighted_avg, TIME_WEIGHTED_AVG_SQL,
-          ("rolling_avg_pm25", "per_node_stats"),
-          "LOCF time-weighted mean per user (one window shuffle, "
-          "integer-microsecond weights)"),
+    sql_query("time_weighted_avg", TIME_WEIGHTED_AVG_SQL,
+              ("rolling_avg_pm25", "per_node_stats"),
+              "LOCF time-weighted mean per user (one window shuffle, "
+              "integer-microsecond weights)"),
     Query("m4_downsample", m4_downsample, M4_DOWNSAMPLE_SQL,
           ("timeseries_align", "column_projection"),
           "M4 pixel-exact chart downsampling: first/last/min/max per "
@@ -2333,10 +2169,10 @@ QUERIES: list[Query] = [
           ("per_node_stats",),
           "derandomized Bayesian-bootstrap SE + 95% CI per event type "
           "(map-side xB explode into a bounded (type,b) agg)"),
-    Query("linear_attribution", linear_attribution, LINEAR_ATTRIBUTION_SQL,
-          ("timeseries_align", "windowed_ingest"),
-          "linear multi-touch attribution: user-keyed range join with "
-          "7-day lookback, per-purchase equal credit split"),
+    sql_query("linear_attribution", LINEAR_ATTRIBUTION_SQL,
+              ("timeseries_align", "windowed_ingest"),
+              "linear multi-touch attribution: user-keyed range join with "
+              "7-day lookback, per-purchase equal credit split"),
     Query("dau_wau_stickiness", dau_wau_stickiness, DAU_WAU_STICKINESS_SQL,
           ("windowed_ingest", "per_node_stats"),
           "rolling 7-day COUNT DISTINCT via one-scan x7 day fan-out "
@@ -2353,10 +2189,10 @@ QUERIES: list[Query] = [
           MANNWHITNEY_VALUE_TEST_SQL, ("per_node_stats",),
           "Mann-Whitney U / rank-sum A/B readout with midrank ties, "
           "keyed per-type rank windows"),
-    Query("debounced_events", debounced_events, DEBOUNCED_EVENTS_SQL,
-          ("timeseries_align", "exact_dedup"),
-          "per-(user,type) time-window debounce: drop events within "
-          "60s of the previous one (keyed lag window)"),
+    sql_query("debounced_events", DEBOUNCED_EVENTS_SQL,
+              ("timeseries_align", "exact_dedup"),
+              "per-(user,type) time-window debounce: drop events within "
+              "60s of the previous one (keyed lag window)"),
     Query("top_session_paths", top_session_paths, TOP_SESSION_PATHS_SQL,
           ("windowed_ingest", "time_sort"),
           "top first-3-event session journeys: one user-keyed sort "

@@ -191,10 +191,18 @@ def _fs(spark: SparkSession, path: str):
     return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
+class RollupLayoutError(RuntimeError):
+    """The rollup holds files that no delta owns, so Spark cannot read
+    it as one table."""
+
+
 def _date_deltas(spark: SparkSession, rollup_path: str) -> dict[str, list[str]]:
     """{date: [delta tags]} of the rollup, after converging every
     crashed date swap (a kill between its two renames leaves the date
-    only in its hidden trash)."""
+    only in its hidden trash). Raises ``RollupLayoutError`` naming each
+    date dir that holds data files outside any delta leaf (the
+    one-level layout written before deltas): read together with deltas,
+    such a dir fails partition discovery."""
     fs, hpath = _fs(spark, rollup_path)
     if not fs.exists(hpath(rollup_path)):
         return {}
@@ -205,15 +213,25 @@ def _date_deltas(spark: SparkSession, rollup_path: str) -> dict[str, list[str]]:
             if name.startswith(head + ROLLUP_PARTITION_COL) and name.endswith(tail):
                 date_dir = f"{rollup_path}/{name[len(head):-len(tail)]}"
                 recover_swap(date_dir, *_DATE_SWAP)
-    out = {}
+    out, loose = {}, []
     for st in fs.listStatus(hpath(rollup_path)):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(ROLLUP_PARTITION_COL + "="):
+            children = fs.listStatus(st.getPath())
             out[name.split("=", 1)[1]] = [
                 c.getPath().getName().split("=", 1)[1]
-                for c in fs.listStatus(st.getPath())
+                for c in children
                 if c.getPath().getName().startswith(DELTA_COL + "=")
             ]
+            if any(c.isFile() and not c.getPath().getName().startswith(("_", "."))
+                   for c in children):
+                loose.append(f"{rollup_path}/{name}")
+    if loose:
+        raise RollupLayoutError(
+            f"rollup {rollup_path}: data files outside any {DELTA_COL}= leaf "
+            f"(the one-level layout written before append-only deltas) in "
+            f"{', '.join(sorted(loose))}; rebuild these dates from the facts"
+        )
     return out
 
 

@@ -7,8 +7,6 @@ import datetime as dt
 from meshtastic_airsensor_database_spark.operators.align import (
     asof_fill,
     latest_reading_per_node,
-    reading_gap_detect,
-    rolling_avg,
     sessionize,
     timeseries_align,
 )
@@ -30,18 +28,6 @@ def test_latest_reading(spark):
     assert out[1].value == 2.0 and out[2].value == 9.0
 
 
-def test_gap_detect_100min_threshold(spark):
-    """Offline threshold semantics (OFFLINE_THRESHOLD_MINUTES=100,
-    AIRWISEv0.py:20): gap of 101 min flags, 99 min does not."""
-    df = _series(
-        spark,
-        [(1, _ts(0), 0.0), (1, _ts(99), 0.0), (1, _ts(200), 0.0), (2, _ts(0), 0.0)],
-    )
-    gaps = reading_gap_detect(df, "node", "ts").collect()
-    assert len(gaps) == 1
-    assert gaps[0].node == 1 and gaps[0].gap_seconds == 101 * 60
-
-
 def test_sessionize(spark):
     df = _series(
         spark,
@@ -50,14 +36,6 @@ def test_sessionize(spark):
     sess = sessionize(df, "node", "ts", gap_seconds=1800)
     ids = [r.session_id for r in sess.orderBy("ts").collect()]
     assert ids == [1, 1, 2, 2]
-
-
-def test_rolling_avg_range_window(spark):
-    df = _series(spark, [(1, _ts(0), 10.0), (1, _ts(30), 20.0), (1, _ts(90), 60.0)])
-    out = {r.ts: r.value_rolling_avg for r in rolling_avg(df, "node", "ts", "value", 3600).collect()}
-    assert out[_ts(0)] == 10.0
-    assert out[_ts(30)] == 15.0       # both first readings in the hour
-    assert out[_ts(90)] == 40.0       # 30min & 90min within trailing hour
 
 
 def test_asof_fill_locf(spark):
@@ -125,34 +103,6 @@ def test_per_key_linear_trend_null_handling(spark):
     out = {r.key: r for r in per_key_linear_trend(df, "k", "ts", "v").collect()}
     assert out[1].n == 2 and abs(out[1].slope_per_hour - 2.0) < 1e-9
     assert out[2].n == 1 and out[2].slope_per_hour is None
-
-
-def test_seasonal_naive_forecast_epoch_alignment(spark):
-    """Forecast = value one season earlier by BUCKET ARITHMETIC: a
-    missing hour leaves a null forecast one season later instead of
-    shifting the alignment (the row-lag bug this operator avoids)."""
-    import datetime as dt
-
-    from meshtastic_airsensor_database_spark.operators.timegrid import (
-        seasonal_naive_forecast,
-    )
-
-    def t(h):
-        return dt.datetime(2024, 1, 1, h, 30)
-
-    rows = [  # season = 2 hourly buckets; hour 3 missing
-        (1, t(1), 10.0), (1, t(2), 20.0), (1, t(4), 40.0), (1, t(5), 50.0),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    fc = seasonal_naive_forecast(df, "user_id", "ts", "value", 3600, 2)
-    got = {r.bucket_epoch: (r.forecast, r.abs_err) for r in fc.collect()}
-    base = int(
-        dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp()
-    )
-    assert got[base + 1 * 3600] == (None, None)  # no history
-    assert got[base + 4 * 3600] == (20.0, 20.0)  # hour 4 <- hour 2
-    # hour 5 <- hour 3 which is MISSING: null, not hour 2's value
-    assert got[base + 5 * 3600] == (None, None)
 
 
 def test_asof_join_tolerance_staleness_bound(spark):

@@ -284,6 +284,41 @@ def test_compaction_recovers_a_crashed_date_swap(spark, tmp_path):
     assert sorted(tuple(r) for r in read_rollup(spark, path, []).collect()) == want
 
 
+def test_compaction_reports_a_date_left_in_the_one_level_layout(spark, tmp_path, capsys):
+    """A date dir written before deltas (part files straight under
+    rollup_date=<d>, with a last_epoch column) next to dates holding
+    deltas cannot be read as one table: compaction names it and says to
+    rebuild it instead of reporting success, and the CLI exits non-zero."""
+    from meshtastic_airsensor_database_spark.cli.maintain import main as mmain
+    from meshtastic_airsensor_database_spark.streaming.rollup import RollupLayoutError
+
+    rows = [(f"2024-05-0{d} 0{h}:00:00", float(d + h)) for d in (1, 2) for h in (1, 2)]
+    ev = spark.createDataFrame(rows, "s string, value double").select(
+        F.to_timestamp("s").alias("ts"), "value"
+    )
+    path = str(tmp_path / "hourly")
+    for h in (1, 2):
+        maintain_rollup(ev.filter(F.hour("ts") == h), path, keys=[])
+    old = os.path.join(path, f"{ROLLUP_PARTITION_COL}=2024-05-03")
+    spark.createDataFrame(
+        [("2024-05-03 01:00:00", 3.0, 1, 3.0, 3.0, 7)],
+        "hour_ts string, sum_value double, cnt long, min_value double, "
+        "max_value double, last_epoch long",
+    ).withColumn("hour_ts", F.to_timestamp("hour_ts")).coalesce(1).write.parquet(old)
+    assert any(n.startswith("part-") for n in os.listdir(old))
+
+    with pytest.raises(RollupLayoutError) as err:
+        compact_rollup(spark, path)
+    msg = str(err.value)
+    assert f"{ROLLUP_PARTITION_COL}=2024-05-03" in msg and "rebuild" in msg
+    assert "=2024-05-01" not in msg and "=2024-05-02" not in msg  # the delta dates are fine
+
+    capsys.readouterr()
+    assert mmain(["compact-rollup", path], spark=spark) == 1
+    out = capsys.readouterr()
+    assert out.out == "" and f"{ROLLUP_PARTITION_COL}=2024-05-03" in out.err
+
+
 def test_sketch_maintenance_slice_order_independent(spark, tmp_path):
     import pyspark.sql.functions as F
 
