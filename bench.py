@@ -1,15 +1,23 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries":
-{name: sec}, "sf": ...}.
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 testdata dir) on ``local[$SPARK_GRAFT_CPUS]`` and prints TWO
+JSON lines: first the full result, {"metric": ..., "value": N,
+"unit": "sec", "queries": {name: sec}, "queries_action": ..., "sf":
+..., calibration probes ...}, then a short summary line small enough
+for any bounded tail capture. The full result is also written to
+``bench_out.json``, which adds ``queries_trace``: {name: record}, the
+``trace.trace_query`` record (builder/action seconds and jobs,
+Catalyst phase ms, shuffle and spill bytes) of the run that set each
+query's minimum.
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver-side result transfer). Protocol: one untimed warm-up pass at
-the target SF (JIT/codegen + file listing), then two timed passes per
-query, reporting the per-query MIN (steady-state; a single local[32]
-JVM has enough scheduler/GC jitter to swing small queries 2-3x).
+Each query is traced by ``trace.trace_query``: builder plus a
+noop-sink action (full computation, no driver-side result transfer)
+after a GC fence outside the clock. Protocol: one untimed warm-up pass
+at the target SF (JIT/codegen + file listing), then three timed sweeps
+over the query list, reporting the per-query MIN (steady-state; a
+single local[32] JVM has enough scheduler/GC jitter to swing small
+queries 2-3x), with extra reps for the ``HIGH_VARIANCE`` queries.
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from meshtastic_airsensor_database_spark.plans import REGISTRY
 from meshtastic_airsensor_database_spark.session import get_spark
+from meshtastic_airsensor_database_spark.trace import trace_query
 
 # Headline set: every operator family, sized to finish in minutes at
 # sf0.1 (the O(n^2) exact pair joins are correctness-oracle tools, not
@@ -319,31 +328,6 @@ def calibration_suite(spark, sf_dir: str) -> dict[str, float]:
     }
 
 
-def run_query(spark, name: str, sf_dir: str) -> tuple[float, float]:
-    # GC fence: collect garbage from the previous query outside the
-    # timed region so one query's allocation debt doesn't land as a
-    # pause inside another's timing.
-    spark._jvm.System.gc()
-    # TWO clocks (changed in r5). The headline per-query number is
-    # END-TO-END: builder + action. Several builders legitimately do
-    # eager work — partition-offset counts passes, localCheckpoint
-    # materializations, Lloyd's training rounds, bounded driver
-    # collects (line_numbering, rfm_segments, pareto_user_share,
-    # token_budget_selection, ann_kmeans_ivf_topk, mmr_diversified_topk,
-    # user_copresence_triangles) — and timing only the final action
-    # under-reports exactly the queries whose scale-safe plans moved
-    # work into those passes (measured: triangles 0.37 s action vs
-    # 4.8 s end-to-end). The action-only clock is ALSO reported
-    # (queries_action) for like-for-like comparison against r1-r4
-    # benches, which timed only the action.
-    t0 = time.time()
-    df = REGISTRY[name].builder(spark, sf_dir)
-    t1 = time.time()
-    df.write.mode("overwrite").format("noop").save()
-    t2 = time.time()
-    return t2 - t0, t2 - t1
-
-
 def gen_packets(n: int, seed_ts: int = 1760748000) -> list[str]:
     """Deterministic synthetic packet stream shaped like the golden
     fixtures (tests/fixtures.py): an 8-node fleet emitting v0 env
@@ -573,18 +557,33 @@ def main() -> None:
     # query): machine-load bursts last seconds, so consecutive runs of
     # one query share the same burst — sweeping decorrelates the noise
     # each min() sees at identical total cost.
+    #
+    # TWO clocks per run (r5). The headline per-query number is
+    # END-TO-END: builder + action, because several builders do eager
+    # work (partition-offset count passes, localCheckpoints, Lloyd
+    # rounds, index lifecycle writes) that an action-only clock misses
+    # (measured: user_copresence_triangles 0.37 s action vs 4.8 s end
+    # to end). The action-only minimum (queries_action) is the r1-r4
+    # basis. The trace of the run that set each end-to-end minimum is
+    # kept too (queries_trace).
     def min_of_sweeps() -> tuple[
-        dict[str, float], dict[str, float], dict[str, float]
+        dict[str, float], dict[str, float], dict[str, float], dict[str, dict]
     ]:
         timings: dict[str, float] = {}
         action: dict[str, float] = {}
+        traces: dict[str, dict] = {}
+
+        def run(name: str) -> None:
+            rec = trace_query(spark, REGISTRY[name].builder, sf_dir)
+            t = rec["query.build_s"] + rec["query.action_s"]
+            if name not in timings or t < timings[name]:
+                timings[name] = t
+                traces[name] = rec
+            action[name] = min(action.get(name, float("inf")), rec["query.action_s"])
+
         for _ in range(3):
             for name in BENCH_QUERIES:
-                t, ta = run_query(spark, name, sf_dir)
-                if name not in timings or t < timings[name]:
-                    timings[name] = t
-                if name not in action or ta < action[name]:
-                    action[name] = ta
+                run(name)
         # documented-variance queries: extra back-to-back reps tighten
         # the min (their spread is intrinsic — GC/scheduler-sensitive
         # plans — so 3 sweep samples under-sample the fast mode).
@@ -599,16 +598,15 @@ def main() -> None:
                 continue
             sweep_only[name] = timings[name]
             for _ in range(_EXTRA_REPS):
-                t, ta = run_query(spark, name, sf_dir)
-                timings[name] = min(timings[name], t)
-                action[name] = min(action[name], ta)
+                run(name)
         return (
             {name: round(t, 3) for name, t in timings.items()},
             {name: round(t, 3) for name, t in action.items()},
             {name: round(t, 3) for name, t in sweep_only.items()},
+            traces,
         )
 
-    timings, action, sweep_min = min_of_sweeps()
+    timings, action, sweep_min, traces = min_of_sweeps()
 
     total = round(sum(timings.values()), 3)
     full = {
@@ -641,7 +639,7 @@ def main() -> None:
     # by the driver: doubles bench cost; run locally when a regression
     # needs a verdict.)
     if os.environ.get("SPARK_GRAFT_BENCH_JITTER"):
-        t2, a2, _s2 = min_of_sweeps()
+        t2, a2, _s2, _t2 = min_of_sweeps()
         jitter = {
             n: round(abs(t2[n] - timings[n]) / max(min(t2[n], timings[n]), 1e-9), 4)
             for n in timings
@@ -656,12 +654,14 @@ def main() -> None:
     # full JSON line (84 per-query timings, ~2.6 KB) outgrew the window
     # and its head was cut off, so the driver's parse came back null.
     # Three outputs, redundantly: (1) the full JSON persisted to
-    # bench_out.json next to this script, (2) the full line printed
-    # early for logs, (3) a SHORT summary line printed LAST — small
-    # enough that any tail capture keeps it intact and parseable.
+    # bench_out.json next to this script, plus each minimum's trace
+    # (queries_trace, kept off the printed lines for their size), (2)
+    # the full line printed early for logs, (3) a SHORT summary line
+    # printed LAST — small enough that any tail capture keeps it intact
+    # and parseable.
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json")
     with open(out_path, "w") as f:
-        json.dump(full, f)
+        json.dump({**full, "queries_trace": traces}, f)
         f.write("\n")
     print(json.dumps(full))
     print(

@@ -314,6 +314,23 @@ def has_pending_append(path: str) -> bool:
     return os.path.exists(os.path.join(path, _APPEND_PENDING_MARKER))
 
 
+def warn_pending_append(path: str) -> None:
+    """Report a crashed append when the index is probed: one
+    ``RuntimeWarning`` while ``has_pending_append`` holds, because
+    the crashed shard's rows may be in earlier tables only and the
+    probe then misses their matches."""
+    if has_pending_append(path):
+        import warnings
+
+        warnings.warn(
+            f"index at {path} has a crashed append pending "
+            f"({_APPEND_PENDING_MARKER}): this probe may miss the crashed "
+            "shard's matches; re-running the extend converges and clears it",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+
 def parallel_append_ordered(path: str, writes: list) -> None:
     """Append several frames to sibling tables of a persisted index
     with the COMPUTE in parallel and the PUBLISH in caller order.

@@ -68,6 +68,7 @@ from ..io_utils import (
     parallel_append_ordered,
     publish_swap,
     recover_swap,
+    warn_pending_append,
 )
 from .dedup import MAX_BUCKET
 
@@ -332,6 +333,7 @@ def probe_decon_index(
         evals, id_col, emb_col, n_bands, band_bits, dim=len(first[0])
     )
     _check_meta(path, dim, n_bands, band_bits)
+    warn_pending_append(path)
     # band the eval shard ONCE (eager, eval-shard-sized checkpoint —
     # the same bounded class the broadcasts already collect): every
     # broadcast build below projects from the cached band rows, where

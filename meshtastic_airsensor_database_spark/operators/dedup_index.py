@@ -58,6 +58,7 @@ from ..io_utils import (
     parallel_append_ordered,
     publish_swap,
     recover_swap,
+    warn_pending_append,
 )
 from .dedup import (
     _MINHASH_P,
@@ -317,6 +318,7 @@ def dedup_new_batch(
     """
     spark = new_docs.sparkSession
     sketch = _check_meta(path)
+    warn_pending_append(path)
     if new_docs.isEmpty():
         # empty shard -> empty report with the right schema (indexed_id
         # typed from the index's own footer; no sketching work)

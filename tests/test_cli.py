@@ -327,6 +327,57 @@ def test_run_query_metrics_mode(spark, sf_dir, monkeypatch, capsys):
     assert "AdaptiveSparkPlan" not in out  # descended through AQE roots
 
 
+def _run_query_tool():
+    import sys as _sys
+
+    sys_path = os.path.join(os.path.dirname(__file__), "..", "tools")
+    _sys.path.insert(0, os.path.abspath(sys_path))
+    try:
+        import run_query as rq
+    finally:
+        _sys.path.pop(0)
+    return rq
+
+
+def test_run_query_trace_mode(spark, sf_dir, monkeypatch, capsys):
+    """--trace over several names prints ONE JSON line holding each
+    query's trace record."""
+    import sys as _sys
+
+    from meshtastic_airsensor_database_spark.trace import LAYER_KEYS
+
+    rq = _run_query_tool()
+    monkeypatch.setattr(_sys, "argv", [
+        "run_query", "--trace", "pricing_summary", "fact_dim_join", sf_dir,
+        "--reps", "1",
+    ])
+    assert rq.main() == 0
+    (line,) = capsys.readouterr().out.strip().splitlines()
+    got = json.loads(line)
+    assert got["sf_dir"] == sf_dir and got["cpus"] >= 1
+    assert set(got["queries"]) == {"pricing_summary", "fact_dim_join"}
+    for rec in got["queries"].values():
+        assert tuple(rec) == LAYER_KEYS
+
+
+def test_run_query_explain_is_normalized(spark, sf_dir, monkeypatch, capsys):
+    """--explain prints through dump_plans.normalize_plan, so plan
+    files written before and after a change diff cleanly: the output is
+    a fixed point of the normalizer, offset map masked."""
+    import sys as _sys
+
+    from tools.dump_plans import normalize_plan
+
+    rq = _run_query_tool()
+    monkeypatch.setattr(
+        _sys, "argv", ["run_query", "line_numbering", sf_dir, "--explain"]
+    )
+    assert rq.main() == 0
+    out = capsys.readouterr().out
+    assert "== Physical Plan ==" in out and "values: [<offsets>]" in out
+    assert normalize_plan(out) == out
+
+
 def test_maintain_cli_compact_index(spark, tmp_path, capsys):
     """compact-index over an append-grown decon index: JSON report per
     subtable, files collapse, probe results preserved (the library test

@@ -373,3 +373,39 @@ def test_crashed_mid_publish_extend_is_detectable_then_converges(
     assert not iou.has_pending_append(index_path)
     rows = dedup_new_batch(probe, index_path).collect()
     assert [(r.new_id, r.indexed_id) for r in rows] == [(701, 601)]
+
+
+@pytest.mark.parametrize("kind", ["minhash", "decon"])
+def test_probe_warns_on_pending_append(spark, tmp_path, kind):
+    """A crashed extend is reported when the index is PROBED, not only
+    by ``maintain``: one RuntimeWarning naming the path while the
+    ``_APPEND_PENDING`` marker stands, none without it."""
+    import warnings
+
+    from meshtastic_airsensor_database_spark.operators.decon_index import (
+        build_decon_index,
+        probe_decon_index,
+    )
+
+    path = os.path.join(str(tmp_path), kind)
+    if kind == "minhash":
+        build_minhash_index(_df(spark, CORPUS), path)
+        shard = _df(spark, [(801, CORPUS[0][1])])
+        probe = lambda: dedup_new_batch(shard, path)  # noqa: E731
+    else:
+        emb = "vec_id long, embedding array<double>"
+        build_decon_index(spark.createDataFrame([(1, [1.0, 0.0, 0.0])], emb), path)
+        shard = spark.createDataFrame([(801, [2.0, 0.0, 0.0])], emb)
+        probe = lambda: probe_decon_index(shard, path)  # noqa: E731
+
+    def pending_warnings() -> list:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            probe()
+        return [w for w in caught if "crashed append" in str(w.message)]
+
+    assert pending_warnings() == []
+    open(os.path.join(path, "_APPEND_PENDING"), "w").close()
+    (w,) = pending_warnings()
+    assert w.category is RuntimeWarning
+    assert path in str(w.message) and "re-running the extend" in str(w.message)

@@ -834,3 +834,26 @@ def test_normalize_plan_keeps_subqueries_distinct():
     # bare spellings get the same treatment
     c = mod.normalize_plan("subquery 40 then subquery 55 then subquery 40")
     assert c == "subquery 1 then subquery 2 then subquery 1"
+
+
+def test_normalize_plan_masks_only_partition_offsets():
+    """The partition-offset map's values come from a range-partition
+    sample seeded by the session-global RDD id, so they move with
+    session history: masked. Any other map literal (an IVF centroid
+    pack, say) is plan content and stays."""
+    from tools.dump_plans import normalize_plan
+
+    def offsets(values: str) -> str:
+        return (
+            f"element_at(map(keys: [0,1,2,3], values: [{values}]), "
+            "cast(shiftright(monotonically_increasing_id(), 33) as int), None, true)"
+        )
+
+    fresh = normalize_plan(offsets("0,1168,2481,3752"))
+    later = normalize_plan(offsets("0,1317,2548,3777"))
+    assert fresh == later == offsets("<offsets>")
+    assert normalize_plan(fresh) == fresh
+    pack = "element_at(map(keys: [0,1], values: [[0.5,0.25],[1.0,2.0]]), cid#7)"
+    assert normalize_plan(pack) == pack.replace("#7", "#1")
+    ints = "element_at(map(keys: [0,1], values: [3,4]), x#2)"
+    assert normalize_plan(ints) == ints.replace("#2", "#1")
