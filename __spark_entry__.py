@@ -22,9 +22,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: per-node hourly stats
     (SURVEY.md §7.1 M0 — the per_node_stats generalization of the
     reference's graphdata.py analytics)."""
-    from meshtastic_airsensor_database_spark.plans.events import hourly_avg_by_node
-
-    return hourly_avg_by_node(spark, "/root/testdata/sf0.001")
+    return queries_map()["hourly_avg_by_node"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

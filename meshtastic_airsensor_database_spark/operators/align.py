@@ -90,6 +90,9 @@ def sessionize(
     df: DataFrame, key: str, ts_col: str, gap_seconds: int = 1800
 ) -> DataFrame:
     """Assign session ids: a gap > ``gap_seconds`` starts a new session.
+    Gaps compare in microseconds, as ``session_window`` merges them (a
+    1800.8 s gap is longer than 1800 s; flooring each side to whole
+    seconds could read it as 1800).
 
     Batch sessionization (lag + cumulative sum of new-session flags);
     the streaming dual is ``session_window`` (streaming/monitor.py).
@@ -97,8 +100,9 @@ def sessionize(
     100-minute offline threshold (SURVEY §2.9 windowed_ingest).
     """
     w = Window.partitionBy(key).orderBy(ts_col)
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    us = F.unix_micros(ts_col)
+    gap = us - F.lag(us).over(w)
+    new_sess = F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0)
     return df.withColumn("_new_session", new_sess).withColumn(
         "session_id",
         F.sum("_new_session").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),

@@ -32,25 +32,9 @@ from .base import Query, r, sql_query
 
 # --- flagship: per-node hourly aggregate (SURVEY §7.1 M0) --------------------
 
-def hourly_avg_by_node(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node, per-hour avg/min/max/count — the query graphdata.py's
-    six plots visually answer (SURVEY §2.4 per_node_stats). One shuffle
-    on (user_id, hour); map-side partial aggregation; window().start
-    == date_trunc('hour') because buckets align to the epoch."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.window("ts", "1 hour").alias("w"))
-        .agg(
-            r(F.avg("value"), 2).alias("avg_value"),
-            r(F.min("value"), 2).alias("min_value"),
-            r(F.max("value"), 2).alias("max_value"),
-            F.count("*").alias("n"),
-        )
-        .select(F.col("user_id"), F.col("w.start").alias("hour_ts"),
-                "avg_value", "min_value", "max_value", "n")
-    )
-
-
+# Per-node, per-hour avg/min/max/count: the query graphdata.py's six
+# plots visually answer (SURVEY §2.4 per_node_stats). One shuffle on
+# (user_id, hour) with map-side partials; a NULL ts is its own NULL hour.
 HOURLY_AVG_BY_NODE_SQL = """
 SELECT user_id, date_trunc('hour', ts) AS hour_ts,
        CAST(ROUND(CAST(AVG(value) AS DECIMAL(38,9)), 2) AS DOUBLE) AS avg_value,
@@ -113,7 +97,7 @@ SESSION_COUNTS_SQL = f"""
 WITH flagged AS (
   SELECT user_id,
          CASE WHEN LAG(ts) OVER w IS NULL
-                OR CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(LAG(ts) OVER w)) AS BIGINT) > {GAP_SECONDS}
+                OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) > {GAP_SECONDS} * 1000000
               THEN 1 ELSE 0 END AS new_session
   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 )
@@ -157,7 +141,7 @@ SESSION_WINDOW_STATS_SQL = f"""
 WITH flagged AS (
   SELECT user_id, ts, value,
          CASE WHEN LAG(ts) OVER w IS NULL
-                OR CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(LAG(ts) OVER w)) AS BIGINT) > {GAP_SECONDS}
+                OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) > {GAP_SECONDS} * 1000000
               THEN 1 ELSE 0 END AS brk
   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 ),
@@ -960,8 +944,8 @@ FROM events
 
 
 QUERIES: list[Query] = [
-    Query("hourly_avg_by_node", hourly_avg_by_node, HOURLY_AVG_BY_NODE_SQL,
-          ("per_node_stats", "windowed_ingest"), "flagship per-node hourly stats"),
+    sql_query("hourly_avg_by_node", HOURLY_AVG_BY_NODE_SQL,
+              ("per_node_stats", "windowed_ingest"), "flagship per-node hourly stats"),
     sql_query("latest_reading_per_node", LATEST_READING_SQL,
               ("latest_reading_per_node", "last_seen_per_node"), "heartbeat-dict dual"),
     sql_query("reading_gap_detect", READING_GAPS_SQL,

@@ -804,34 +804,20 @@ def m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scalable form of the reference's matplotlib plots
     (graphdata.py:99-192), which draw every raw row.
 
-    Scale shape: one window shuffle on (user, bucket) for the
-    first/last row-numbers, then a hash agg on the SAME key (no
-    second exchange). Every output value is a SELECTION of stored
-    doubles (no arithmetic), so parity needs no rounding.
+    Scale shape: one shuffle on (user, bucket) of map-side partials.
+    First and last are ``min_by``/``max_by`` of value over
+    ``struct(ts, event_id)``, the twin's ascending and descending row
+    order (NULLs sort first in a struct, as in the ascending sort). A
+    struct buffer is not fixed-width, so the aggregate is sort-based.
+    Every output value is a SELECTION of stored doubles (no
+    arithmetic), so parity needs no rounding.
     """
     ev = load(spark, sf_dir, "events")
     bucket = (F.unix_timestamp("ts") / M4_BUCKET_S).cast("long")
-    rows = ev.select(
-        "user_id",
-        bucket.alias("bucket"),
-        "ts",
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
-    wd = Window.partitionBy("user_id", "bucket").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    marked = rows.select(
-        "user_id",
-        "bucket",
-        "value",
-        F.row_number().over(w).alias("_ra"),
-        F.row_number().over(wd).alias("_rd"),
-    )
-    return marked.groupBy("user_id", "bucket").agg(
-        F.max(F.when(F.col("_ra") == 1, F.col("value"))).alias("v_first"),
-        F.max(F.when(F.col("_rd") == 1, F.col("value"))).alias("v_last"),
+    order = F.struct("ts", "event_id")
+    return ev.groupBy("user_id", bucket.alias("bucket")).agg(
+        F.min_by("value", order).alias("v_first"),
+        F.max_by("value", order).alias("v_last"),
         F.min("value").alias("v_min"),
         F.max("value").alias("v_max"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1161,6 +1147,15 @@ FROM counts c JOIN totals t USING (prev_type)
 DECOMP_HALF_WIN = 12  # 25-point centered MA over the hourly series
 
 
+# Every step is a window over the hourly pre-aggregate, keyed on
+# event_type (the hour-of-day profile on event_type + hour, which the
+# event_type shuffle already satisfies): one scan of events, one
+# shuffle per key, no join back. Spark's InlineCTE re-plans a
+# deterministic CTE at every reference, so joining an aggregate of
+# these CTEs back onto them would plan and run the hourly -> trend
+# pipeline once more per consumer. Rows with a NULL event_type or hour
+# are framed by the trend window and dropped after it (they have no
+# hour-of-day profile).
 _DECOMP_CTES = f"""hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS hour_ts, AVG(value) AS v
   FROM events GROUP BY 1, 2
@@ -1174,45 +1169,51 @@ with_trend AS (
                ROWS BETWEEN {DECOMP_HALF_WIN} PRECEDING
                         AND {DECOMP_HALF_WIN} FOLLOWING)
 ),
-seasonal AS (
-  SELECT event_type, hour(hour_ts) AS hod, AVG(v - trend) AS seasonal
-  FROM with_trend GROUP BY 1, 2
+decomp AS (
+  SELECT event_type, hour_ts, v, trend,
+         AVG(v - trend) OVER (PARTITION BY event_type, hour(hour_ts)) AS seasonal
+  FROM with_trend
+  WHERE event_type IS NOT NULL AND hour_ts IS NOT NULL
 )"""
 
 SEASONAL_DECOMPOSITION_SQL = f"""
 WITH {_DECOMP_CTES}
-SELECT /*+ BROADCAST(s) */ t.event_type,
-       CAST(t.hour_ts AS TIMESTAMP) AS hour_ts,
-       {_R4.format(x="t.v")} AS value,
-       {_R4.format(x="t.trend")} AS trend,
-       {_R4.format(x="s.seasonal")} AS seasonal,
-       {_R4.format(x="t.v - t.trend - s.seasonal")} AS resid
-FROM with_trend t
-JOIN seasonal s ON t.event_type = s.event_type AND hour(t.hour_ts) = s.hod
+SELECT event_type,
+       CAST(hour_ts AS TIMESTAMP) AS hour_ts,
+       {_R4.format(x="v")} AS value,
+       {_R4.format(x="trend")} AS trend,
+       {_R4.format(x="seasonal")} AS seasonal,
+       {_R4.format(x="v - trend - seasonal")} AS resid
+FROM decomp
 """
 
+# med and mad are per-type medians as windows over the residual rows,
+# which stay on their event_type partition.
 SEASONAL_ANOMALY_FLAGS_SQL = f"""
 WITH {_DECOMP_CTES},
 d AS (
-  SELECT /*+ BROADCAST(s) */ t.event_type, t.hour_ts, t.v,
-         t.v - t.trend - s.seasonal AS resid
-  FROM with_trend t
-  JOIN seasonal s ON t.event_type = s.event_type AND hour(t.hour_ts) = s.hod
-  WHERE t.v - t.trend - s.seasonal IS NOT NULL
+  SELECT event_type, hour_ts, v, v - trend - seasonal AS resid
+  FROM decomp
+  WHERE v - trend - seasonal IS NOT NULL
 ),
-med AS (SELECT event_type, median(resid) AS med FROM d GROUP BY 1),
+med AS (
+  SELECT event_type, hour_ts, v, resid,
+         median(resid) OVER (PARTITION BY event_type) AS med
+  FROM d
+),
 mad AS (
-  SELECT /*+ BROADCAST(m) */ d.event_type, median(abs(d.resid - m.med)) AS mad
-  FROM d JOIN med m USING (event_type) GROUP BY 1
+  SELECT event_type, hour_ts, v, resid, med,
+         median(abs(resid - med)) OVER (PARTITION BY event_type) AS mad
+  FROM med
 )
 SELECT event_type, CAST(hour_ts AS TIMESTAMP) AS hour_ts, value, resid, robust_z
 FROM (
-  SELECT /*+ BROADCAST(m, x) */ d.event_type, d.hour_ts,
-         {_R4.format(x="d.v")} AS value,
-         {_R4.format(x="d.resid")} AS resid,
-         {_R3.format(x=f"{MAD_CONSISTENCY} * (d.resid - m.med) / x.mad")} AS robust_z
-  FROM d JOIN med m USING (event_type) JOIN mad x USING (event_type)
-  WHERE x.mad > 0
+  SELECT event_type, hour_ts,
+         {_R4.format(x="v")} AS value,
+         {_R4.format(x="resid")} AS resid,
+         {_R3.format(x=f"{MAD_CONSISTENCY} * (resid - med) / mad")} AS robust_z
+  FROM mad
+  WHERE mad > 0
 )
 WHERE abs(robust_z) > {MAD_Z_THRESHOLD}
 """
@@ -2007,9 +2008,9 @@ TOP_SESSION_PATHS_SQL = f"""
 WITH o AS (
   SELECT user_id, ts, event_id, event_type,
          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-              OR FLOOR(epoch(ts)) - FLOOR(epoch(
+              OR epoch_us(ts) - epoch_us(
                    lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                 )) > {PATH_GAP_SEC}
+                 ) > {PATH_GAP_SEC} * 1000000
               THEN 1 ELSE 0 END AS ns
   FROM events
 ),
@@ -2151,7 +2152,7 @@ QUERIES: list[Query] = [
     Query("m4_downsample", m4_downsample, M4_DOWNSAMPLE_SQL,
           ("timeseries_align", "column_projection"),
           "M4 pixel-exact chart downsampling: first/last/min/max per "
-          "series bucket (selection-only, window+agg share one key)"),
+          "series bucket (selection-only min_by/max_by, one aggregate)"),
     Query("winsorized_value_stats", winsorized_value_stats,
           WINSORIZED_VALUE_STATS_SQL, ("robust_outlier_detect",),
           "winsorized means per type (decimal-rounded clip bounds for "

@@ -110,3 +110,27 @@ def test_session_window_boundary_merges_at_exact_gap(spark):
     )
     assert [r["n"] for r in rows] == [2, 1]
     assert str(rows[0]["session_window"]["end"]) == "2024-01-01 01:00:00"
+
+
+def test_session_gaps_compare_microseconds(spark, events_dir, hashes):
+    """Gaps of 1799.9, 1800.0, 1800.8 and 1801.2 s make 3 sessions:
+    session_window merges a gap up to the gap exactly and splits
+    anything longer. Flooring both ends to whole seconds reads the
+    1800.8 s gap (04:00:00.0 -> 04:30:00.8 below) as 1800 and merges it.
+    The session builders and their twins agree on it."""
+    import datetime as dt
+
+    from meshtastic_airsensor_database_spark.plans import REGISTRY
+
+    on_spark, on_duckdb = hashes
+    ts = [dt.datetime(2024, 1, 1, 3, 0, 0, 100000)]
+    for gap_s in (1799.9, 1800.0, 1800.8, 1801.2):
+        ts.append(ts[-1] + dt.timedelta(seconds=gap_s))
+    sf = events_dir([(1, t, 1.0) for t in ts])
+    for name in ("session_window_stats", "session_counts"):
+        q = REGISTRY[name]
+        assert on_spark(q.builder, sf) == on_duckdb(q.oracle, sf), name
+    stats = REGISTRY["session_window_stats"].builder(spark, sf)
+    assert sorted(r.n_events for r in stats.collect()) == [1, 1, 3]
+    (counts,) = REGISTRY["session_counts"].builder(spark, sf).collect()
+    assert (counts.n_sessions, counts.n_events) == (3, 5)

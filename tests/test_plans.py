@@ -553,16 +553,33 @@ def test_multi_consumer_stats_queries_scan_once(spark, sf_dir):
     """Queries whose totals/marginals re-aggregate an intermediate must
     not re-run the fact scan per consumer: DAU/WAU folds both counts
     into one fan-out agg, Pareto and the data card take their grand
-    totals from a full-frame window over the AGGREGATED rows, and chi2
-    materializes the contingency grid (0 scans in the displayed plan —
-    the single scan ran at checkpoint time)."""
+    totals from a full-frame window over the AGGREGATED rows, the
+    seasonal pair takes its profile and medians from keyed windows over
+    the hourly series (no join back, which re-planned the inlined CTEs
+    per reference), and chi2 materializes the contingency grid (0 scans
+    in the displayed plan — the single scan ran at checkpoint time)."""
     for name, max_scans in (("dau_wau_stickiness", 1),
                             ("pareto_user_share", 1),
                             ("corpus_data_card", 1),
+                            ("seasonal_decomposition", 1),
+                            ("seasonal_anomaly_flags", 1),
                             ("type_hour_chi2", 0)):
         plan = plan_of(spark, name, sf_dir)
         n = len(set(re.findall(r"\(\d+\) Scan parquet", plan)))
         assert n <= max_scans, (name, n, plan)
+        if name.startswith("seasonal_"):
+            assert "BroadcastHashJoin" not in plan, (name, plan)
+
+
+def test_m4_downsample_is_one_aggregate_no_window(spark, sf_dir):
+    """First/last come from min_by/max_by inside the one aggregate: no
+    Window (a ROW_NUMBER form sorts the raw rows once per direction),
+    one exchange, of map-side partials. The struct ordering key is not
+    fixed-width, so the aggregate is sort-based."""
+    plan = plan_of(spark, "m4_downsample", sf_dir)
+    assert re.search(r"\(\d+\) Window\b", plan) is None, plan
+    assert len(set(re.findall(r"\(\d+\) Exchange\b", plan))) == 1, plan
+    assert "partial_min_by" in plan and "partial_max_by" in plan, plan
 
 
 def test_unpivot_is_single_scan_expand(spark, sf_dir):

@@ -55,25 +55,7 @@ def test_single_sourced_builder_runs_its_oracle_text(spark, sf_dir, monkeypatch,
     assert [t for t in seen if t not in BRIDGE] == [q.oracle]
 
 
-def _events_dir(tmp_path, rows):
-    """An sf dir holding only an ``events`` table of ``(user_id, ts,
-    value)`` rows (``sql_builder`` binds only the tables a text names)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    n = len(rows)
-    pq.write_table(pa.table({
-        "event_id": pa.array(range(n), pa.int64()),
-        "ts": pa.array([t for _, t, _ in rows], pa.timestamp("us")),
-        "user_id": pa.array([u for u, _, _ in rows], pa.int64()),
-        "event_type": pa.array(["view"] * n),
-        "value": pa.array([v for _, _, v in rows], pa.float64()),
-        "props": pa.array(["{}"] * n),
-    }), str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def test_reading_gap_detect_flags_gaps_over_gap_seconds(spark, tmp_path):
+def test_reading_gap_detect_flags_gaps_over_gap_seconds(spark, events_dir):
     """A gap of GAP_SECONDS - 1 is no outage, one of GAP_SECONDS + 1 is;
     a node with one reading has no gap."""
     from meshtastic_airsensor_database_spark.plans.events import GAP_SECONDS
@@ -81,22 +63,22 @@ def test_reading_gap_detect_flags_gaps_over_gap_seconds(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     t1 = t0 + dt.timedelta(seconds=GAP_SECONDS - 1)
     t2 = t1 + dt.timedelta(seconds=GAP_SECONDS + 1)
-    sf = _events_dir(tmp_path, [(1, t0, 0.0), (1, t1, 0.0), (1, t2, 0.0), (2, t0, 0.0)])
+    sf = events_dir([(1, t0, 0.0), (1, t1, 0.0), (1, t2, 0.0), (2, t0, 0.0)])
     rows = REGISTRY["reading_gap_detect"].builder(spark, sf).collect()
     assert [tuple(r) for r in rows] == [(1, t1, t2, GAP_SECONDS + 1)]
 
 
-def test_rolling_avg_value_is_a_trailing_hour(spark, tmp_path):
+def test_rolling_avg_value_is_a_trailing_hour(spark, events_dir):
     t0 = dt.datetime(2024, 1, 1)
     ts = [t0 + dt.timedelta(minutes=m) for m in (0, 30, 90)]
-    sf = _events_dir(tmp_path, [(1, t, v) for t, v in zip(ts, (10.0, 20.0, 60.0))])
+    sf = events_dir([(1, t, v) for t, v in zip(ts, (10.0, 20.0, 60.0))])
     out = {r.ts: r.rolling_avg_1h
            for r in REGISTRY["rolling_avg_value"].builder(spark, sf).collect()}
     # both first readings in the hour; then the 30- and 90-minute ones
     assert out == {ts[0]: 10.0, ts[1]: 15.0, ts[2]: 40.0}
 
 
-def test_seasonal_naive_skill_aligns_seasons_by_bucket_arithmetic(spark, tmp_path):
+def test_seasonal_naive_skill_aligns_seasons_by_bucket_arithmetic(spark, events_dir):
     """The forecast for an hour is the same hour one season earlier: a
     missing hour leaves a null forecast one season later and shifts no
     other hour (a 24-row lag would pair day 1's hour 1 with day 0's
@@ -107,11 +89,41 @@ def test_seasonal_naive_skill_aligns_seasons_by_bucket_arithmetic(spark, tmp_pat
     day0 = dt.datetime(2024, 1, 1)
     rows = [(1, day0 + dt.timedelta(hours=h), float(h)) for h in range(24) if h != 3]
     rows += [(1, day0 + dt.timedelta(days=1, hours=h), h + 10.0) for h in range(5)]
-    sf = _events_dir(tmp_path, rows)
+    sf = events_dir(rows)
     (got,) = REGISTRY["seasonal_naive_skill"].builder(spark, sf).collect()
     assert (got.n_buckets, got.n_scored) == (28, 4)  # day 1 hour 3 unscored
     assert got.mae == 10.0
     assert got.smape == round(sum(20 / (2 * h + 10) for h in (0, 1, 2, 4)) / 4, 4)
+
+
+def test_hourly_avg_by_node_keeps_a_null_ts_hour(spark, events_dir, hashes):
+    """A NULL ts is its own NULL hour on Spark as on DuckDB (grouping by
+    ``window()`` would filter it out)."""
+    on_spark, on_duckdb = hashes
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(u, t0 + dt.timedelta(minutes=37 * i), float(i)) for i in range(20) for u in (1, 2)]
+    sf = events_dir(rows + [(1, None, 5.0)])
+    q = REGISTRY["hourly_avg_by_node"]
+    assert on_spark(q.builder, sf) == on_duckdb(q.oracle, sf)
+    nulls = [(r.user_id, r.avg_value, r.n)
+             for r in q.builder(spark, sf).collect() if r.hour_ts is None]
+    assert nulls == [(1, 5.0, 1)]
+
+
+def test_m4_first_last_follow_ts_then_event_id(spark, events_dir, hashes):
+    """Ties on ts break on event_id (first = lowest, last = highest), and
+    NULL-ts rows form one NULL bucket, as in the twin's row orders."""
+    on_spark, on_duckdb = hashes
+    t0 = dt.datetime(2024, 1, 1)
+    t1 = t0 + dt.timedelta(hours=1)
+    sf = events_dir([(1, t1, 9.0), (1, t0, 5.0), (1, t1, 1.0), (1, t0, 3.0),
+                     (1, None, 7.0), (1, None, 8.0)])
+    q = REGISTRY["m4_downsample"]
+    assert on_spark(q.builder, sf) == on_duckdb(q.oracle, sf)
+    got = {r.bucket_epoch: (r.v_first, r.v_last, r.n) for r in q.builder(spark, sf).collect()}
+    # ids: 0=(t1, 9), 1=(t0, 5), 2=(t1, 1), 3=(t0, 3), 4, 5 NULL ts
+    assert got == {int(t0.replace(tzinfo=dt.timezone.utc).timestamp()): (5.0, 1.0, 4),
+                   None: (7.0, 8.0, 2)}
 
 
 def test_sql_views_follow_sf_dir(spark, sf_dir):

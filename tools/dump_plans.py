@@ -22,7 +22,7 @@ SHOWCASE = [
     ("pricing_summary", "filter pushdown + column pruning + partial/final hash agg"),
     ("region_supplier_revenue", "6-way snowflake join: every dimension broadcast"),
     ("customers_without_urgent_orders", "anti join (NOT EXISTS) without shuffle of the dim"),
-    ("hourly_avg_by_node", "event-time window aggregation (flagship)"),
+    ("hourly_avg_by_node", "per-node hourly aggregation (flagship): date_trunc hour key, partial/final hash agg"),
     ("latest_reading_per_node", "row_number window, single shuffle on the key"),
     ("topk_expensive_orders", "global top-k -> TakeOrderedAndProject (no full sort)"),
     ("minhash_neardup_candidates", "LSH bucket-grouping: signature pipeline runs ONCE, no self-join"),
@@ -51,7 +51,7 @@ SHOWCASE = [
     ("table_constraint_report", "Deequ-style gates: one aggregation pass per table of row rules, counts-only uniqueness exchange, AQE-sized referential joins"),
     ("value_ks_drift", "exact KS: binned CDF walk as per-key window (no SinglePartition exchange anywhere)"),
     ("time_weighted_avg", "LOCF time-weighted mean: lead window + hash agg share ONE user_id exchange"),
-    ("m4_downsample", "M4: first/last via row_number windows + min/max agg on the same (user,bucket) key"),
+    ("m4_downsample", "M4: first/last as min_by/max_by over (ts, event_id) inside the one (user,bucket) aggregate, map-side partials, no window"),
     ("cohort_retention", "cohort retention: dedup-first bounds every later stage to users x weeks"),
     ("bm25_topk_docs", "BM25: query-term-only explode, broadcast df + corpus stats, TakeOrdered top-k"),
     ("winsorized_value_stats", "winsorize: 5-row broadcast bounds join, two hash aggs on one key"),
@@ -67,7 +67,7 @@ SHOWCASE = [
     ("split_leakage_report", "near-dup split leakage: LSH-verified pairs x md5 split via two doc_id equi-joins into a <=6-row agg"),
     ("vocab_growth_by_source", "vocab growth: per-token MIN(source) agg (shuffle carries distinct tokens), running sum over <=|sources| rows"),
     ("tfidf_top_terms", "TF-IDF keywords: doc-term partial aggs, vocab-sized df join, single-row corpus broadcast, doc-partitioned rank window"),
-    ("seasonal_decomposition", "seasonal decomposition: ONE keyed window sort over the hourly pre-aggregate, broadcast hour-of-day profile join"),
+    ("seasonal_decomposition", "seasonal decomposition: keyed windows over the hourly pre-aggregate (trend, then the hour-of-day profile on the same event_type shuffle), one scan, no join back"),
     ("cms_heavy_hitters", "count-min sketch: posexplode into a (depth x width)-bounded partial agg; estimates via broadcast counter join + MIN"),
     ("doc_novelty_scores", "corpus novelty: hash aggs only (df==1 owner via MIN on the same gram rollup), 8-byte hashed grams, no sort-window"),
     ("source_overlap_jaccard", "source overlap: NO self-join — per-gram collect_set(source) bounded by the source domain, narrow pair expansion, broadcast size re-attach"),
