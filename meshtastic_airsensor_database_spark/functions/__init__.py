@@ -9,7 +9,6 @@ from .scalars import (  # noqa: F401
     epoch_to_timestamp,
     f_to_c,
     ingest_wallclock_stamp,
-    markdown_alert_format,
     round_cols,
     timestamp_parse_coerce,
     try_double,

@@ -98,16 +98,3 @@ def string_agg_topics(col: Column | str, sep: str = ", ") -> Column:
     order is partition order).
     """
     return F.concat_ws(sep, F.collect_list(col))
-
-
-def markdown_alert_format(
-    longname: Column, node: Column, threshold_minutes: Column | int
-) -> Column:
-    """Offline-alert message text (AIRWISEv0.py:53-56)."""
-    thr = F.lit(threshold_minutes) if isinstance(threshold_minutes, int) else threshold_minutes
-    return F.format_string(
-        "Node OFFLINE: %s (**ID: %d**) - No message received for over %d minutes",
-        longname,
-        node,
-        thr,
-    )

@@ -29,7 +29,7 @@ expressions in shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "_salt"
@@ -77,15 +77,3 @@ def salted_join(
     f = with_salt(facts, salt_n, salt_on)
     b = replicate_for_salt(build, salt_n)
     return f.join(b, on + [SALT_COL], how).drop(SALT_COL)
-
-
-def top_key_volumes(df: DataFrame, keys: list[str], k: int = 20) -> DataFrame:
-    """Diagnostic: the k heaviest join/agg keys and their row counts —
-    the number that decides whether salting is needed and how big
-    ``salt_n`` should be (hot-key rows / target partition rows)."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy(F.col("n_rows").desc(), *keys)
-        .limit(k)
-    )

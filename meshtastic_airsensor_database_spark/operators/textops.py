@@ -1,59 +1,13 @@
 """Document-level text analysis operators (SURVEY.md §2.11 text_analysis).
 
-DataFrame-level operators over a corpus: the chunking UDTF, vocabulary
-build and encode, and the gram-count passes behind novelty and
-cross-source overlap.
+DataFrame-level operators over a corpus: vocabulary build and encode,
+and the gram-count passes behind novelty and cross-source overlap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def chunk_doc_udtf(size: int, stride: int):
-    """Python UDTF (Spark 4) emitting overlapping token chunks per
-    document — the table-function API surface for row→many-rows
-    transforms. NOTE: this is the slow path (per-row Python); the
-    production chunker is the pure-built-in formulation in
-    plans/textq.py::rag_chunk_spans (sequence + posexplode + slice),
-    which this UDTF is parity-tested against. Use the UDTF form when
-    the chunking rule needs real Python (custom tokenizers, sentence
-    boundaries) that built-ins can't express."""
-    from pyspark.sql.functions import udtf
-
-    class _ChunkDoc:
-        def eval(self, text):
-            if text is None:
-                return
-            # str.split() == split on \s+ runs after trim — the same
-            # tokenization as the built-in chunker
-            toks = text.split()
-            n = len(toks)
-            for i, start in enumerate(range(0, n, stride)):
-                end = min(start + size, n)
-                yield (i, start, end, end - start, " ".join(toks[start:end]))
-
-    return udtf(
-        _ChunkDoc,
-        returnType=(
-            "chunk_idx: bigint, start_tok: bigint, "
-            "end_tok: bigint, n_chunk_tokens: bigint, chunk_text: string"
-        ),
-    )
-
-
-def chunk_documents_udtf(
-    df: DataFrame, size: int, stride: int, id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Lateral-join the chunking UDTF against a corpus (the lateral
-    correlation keeps the left row's id next to each emitted chunk;
-    ``.outer()`` marks the argument as a left-side lateral reference)."""
-    chunker = chunk_doc_udtf(size, stride)
-    return df.lateralJoin(chunker(F.col(text_col).outer())).select(
-        id_col, "chunk_idx", "start_tok", "end_tok", "n_chunk_tokens", "chunk_text"
-    )
 
 
 # --- vocabulary encoding (tokens -> ids) --------------------------------------
@@ -199,33 +153,6 @@ def source_shingle_sets(
     )
     return sh.groupBy("k").agg(
         F.array_sort(F.collect_set("_src")).alias("ss")
-    )
-
-
-def bounded_pair_counts(
-    sets_df: DataFrame, set_col: str = "ss", a: str = "source_a", b: str = "source_b"
-) -> DataFrame:
-    """``(a, b, n_common)`` co-occurrence counts via NARROW pair
-    expansion of each row's bounded sorted set — the small-domain
-    co-occurrence shape: no self-join, fan-out capped at |domain|²
-    per row regardless of stream size. ``set_col`` must be a
-    materialized column (the inner lambda slices it — a computed
-    capture would re-evaluate per element)."""
-    pairs = sets_df.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col(set_col),
-                    lambda x, i: F.transform(
-                        F.slice(F.col(set_col), i + 2, F.size(set_col)),
-                        lambda y: F.struct(x.alias(a), y.alias(b)),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.groupBy(f"p.{a}", f"p.{b}").agg(
-        F.count(F.lit(1)).cast("long").alias("n_common")
     )
 
 

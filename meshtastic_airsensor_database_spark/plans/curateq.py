@@ -214,8 +214,10 @@ def _ffd_sql() -> str:
         f"(CASE WHEN b.n_tokens <= {cap} THEN NULLIF(list_position("
         f"list_transform({s0}, x -> x >= b.n_tokens), true), 0) END)"
     )
+    # MATERIALIZED: otherwise DuckDB re-evaluates base (a tokenize and a
+    # window over every document) on each recursion step
     return f"""
-WITH RECURSIVE base AS (
+WITH RECURSIVE base AS MATERIALIZED (
   SELECT doc_id, shard, n_tokens,
          ROW_NUMBER() OVER (ORDER BY shard, n_tokens DESC, doc_id) AS rn
   FROM (

@@ -13,6 +13,7 @@ bucket axes, identical aliases).
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -23,7 +24,12 @@ from ..operators.align import sessionize
 from ..operators.intervals import bucketed_range_join
 from ..operators.ordered import global_ntile, global_rank_cumsum
 from ..operators.timegrid import gapfill
-from ..streaming.rollup import maintain_rollup, read_rollup
+from ..streaming.rollup import (
+    ROLLUP_PARTITION_COL,
+    _partials,
+    finalize_rollup,
+    maintain_rollup,
+)
 from .base import Query, r, sql_query
 
 # --- dense gap-filled grid (time_gapfill) -------------------------------------
@@ -295,32 +301,41 @@ ROLLUP_KEYS = ["user_id", "event_type"]
 _ROLLUP_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _maintained_rollup_path(
+def _maintained_partials(
     spark: SparkSession,
     sf_dir: str,
     keys: list | None = None,
     distinct_col: str | None = None,
     tag: str = "hourly",
-) -> str:
+) -> DataFrame:
+    """The stored partial rows of an hourly rollup maintained from
+    ``ROLLUP_SLICES`` slices of ``events``. A rollup that holds no delta
+    (no event has a time) has no file to infer a schema from, so it
+    reads as the partials of the events themselves: the same typed,
+    empty rows, as a batch recompute returns."""
+    keys = list(keys) if keys is not None else ROLLUP_KEYS
+    ev = load(spark, sf_dir, "events")
     key = (spark.sparkContext.applicationId, sf_dir, tag)
     path = _ROLLUP_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    path = os.path.join(ephemeral_dir("rollup_maint_"), tag)
-    ev = load(spark, sf_dir, "events")
-    # Slice by event-id residue, NOT by time: every slice then scatters
-    # events across the full date range, forcing each maintenance pass
-    # to merge into already-written partitions — the adversarial
-    # (maximally late/out-of-order) arrival order for the merge algebra.
-    for i in range(ROLLUP_SLICES):
-        maintain_rollup(
-            ev.filter(F.pmod(F.col("event_id"), F.lit(ROLLUP_SLICES)) == i),
-            path,
-            keys=list(keys) if keys is not None else ROLLUP_KEYS,
-            distinct_col=distinct_col,
-        )
-    _ROLLUP_CACHE[key] = path
-    return path
+    if path is None or not os.path.isdir(path):
+        path = os.path.join(ephemeral_dir("rollup_maint_"), tag)
+        # Slice by event-id residue, NOT by time: every slice then
+        # scatters events across the full date range, forcing each
+        # maintenance pass to merge into already-written partitions —
+        # the adversarial (maximally late/out-of-order) arrival order
+        # for the merge algebra.
+        for i in range(ROLLUP_SLICES):
+            maintain_rollup(
+                ev.filter(F.pmod(F.col("event_id"), F.lit(ROLLUP_SLICES)) == i),
+                path,
+                keys=keys,
+                distinct_col=distinct_col,
+            )
+        _ROLLUP_CACHE[key] = path
+    if not glob.glob(os.path.join(path, ROLLUP_PARTITION_COL + "=*")):
+        return _partials(ev.filter(F.col("ts").isNotNull()), keys, "ts", "value",
+                         distinct_col)
+    return spark.read.parquet(path)
 
 
 def incremental_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,8 +345,7 @@ def incremental_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw facts. The oracle recomputes the same aggregate from the full
     raw table in one pass, so a hash match proves incremental
     maintenance == full recompute (streaming/rollup.py)."""
-    path = _maintained_rollup_path(spark, sf_dir)
-    roll = read_rollup(spark, path, ROLLUP_KEYS)
+    roll = finalize_rollup(_maintained_partials(spark, sf_dir), ROLLUP_KEYS)
     return roll.select(
         "user_id",
         "event_type",
@@ -362,8 +376,7 @@ def daily_rollup_from_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the full raw table, so the hash match proves the cascade
     algebra end to end on the same 4-slice out-of-order maintenance
     run that backs ``incremental_rollup_hourly``."""
-    path = _maintained_rollup_path(spark, sf_dir)
-    parts = spark.read.parquet(path)
+    parts = _maintained_partials(spark, sf_dir)
     day = parts.groupBy(
         F.date_trunc("day", F.col("hour_ts")).alias("day_ts"),
         "user_id",
@@ -480,11 +493,11 @@ def incremental_distinct_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse threshold the same path degrades to ~1.6% rse estimates
     (operators/sketch.py contract, tolerance-tested).
     """
-    path = _maintained_rollup_path(
+    parts = _maintained_partials(
         spark, sf_dir, keys=["event_type"], distinct_col="user_id",
         tag="hourly_distinct",
     )
-    roll = read_rollup(spark, path, ["event_type"])
+    roll = finalize_rollup(parts, ["event_type"])
     return roll.select(
         "event_type",
         "hour_ts",

@@ -2759,10 +2759,8 @@ LIMIT {TOP_K}
 """
 
 
-# Derandomized-PQ parameters (oracle tier): 4 subspaces x 8 codes,
-# 2 deterministic Lloyd rounds per subspace, 20 ADC candidates into the
-# exact re-rank. The production tier (operators/pq.py: Spark-ML-trained
-# codebooks, 8x16, Arrow-batched encode/ADC) stays pytest-verified.
+# Derandomized-PQ parameters: 4 subspaces x 8 codes, 2 deterministic
+# Lloyd rounds per subspace, 20 ADC candidates into the exact re-rank.
 PQD_M = 4
 PQD_K = 8
 PQD_ITERS = 2
@@ -2789,12 +2787,20 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (s, cluster, dim) — 2 lineage checkpoints total instead of 2 per
     subspace); encoding falls out of the final assignment; ADC attaches
     via (s, cluster)-keyed joins; only the {cand}-row candidate set
-    touches float vectors again. The production tier (operators/pq.py)
-    is the same pipeline with ML-trained codebooks and Arrow-batched
-    kernels; this query pins the PQ MATH (training, encoding, ADC,
-    re-rank order) cross-engine."""
+    touches float vectors again. This is the package's one PQ, and
+    the twin pins its math (training, encoding, ADC, re-rank order)
+    cross-engine.
+
+    An empty table, or one without the query id, yields the typed
+    empty top-k (the same contract as _probe_and_rerank)."""
     emb = load(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()[0])
+    empty = emb.select(
+        "vec_id", F.lit(0.0).alias("adc_d2"), F.lit(0.0).alias("cosine")
+    ).limit(0)
+    first = emb.select("embedding").first()
+    if first is None:
+        return empty
+    dim = len(first[0])
     assert dim % PQD_M == 0, (dim, PQD_M)
     w = dim // PQD_M
 
@@ -2900,15 +2906,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub.filter(F.col("vec_id") == QUERY_VEC_ID).select("s", "v").collect()
     )
     if not qsub_rows:
-        # absent query id -> empty top-k with the right schema, the
-        # same contract as _probe_and_rerank (an empty qmap literal
-        # would otherwise fail analysis as a VOID map, and the final
-        # head() would raise TypeError — r11 ADVICE)
-        return codes.select(
-            "vec_id",
-            F.lit(0.0).alias("adc_d2"),
-            F.lit(0.0).alias("cosine"),
-        ).limit(0)
+        # absent query id: an empty qmap literal would otherwise fail
+        # analysis as a VOID map, and the final head() would raise
+        # TypeError (r11 ADVICE)
+        return empty
     qmap = F.expr(
         "map("
         + ", ".join(

@@ -315,19 +315,17 @@ def compact_rollup(spark: SparkSession, rollup_path: str) -> RollupCompactionRep
     )
 
 
-def _rollup_exists(spark: SparkSession, rollup_path: str) -> bool:
-    fs, hpath = _fs(spark, rollup_path)
-    return fs.exists(hpath(rollup_path)) and any(
-        st.getPath().getName().startswith(ROLLUP_PARTITION_COL + "=")
-        for st in fs.listStatus(hpath(rollup_path))
-    )
-
-
 def read_rollup(spark: SparkSession, rollup_path: str, keys: list[str]) -> DataFrame:
     """Merge the stored deltas and finalize them into the user-facing
+    hourly aggregate view (``finalize_rollup``)."""
+    return finalize_rollup(spark.read.parquet(rollup_path), keys)
+
+
+def finalize_rollup(stored: DataFrame, keys: list[str]) -> DataFrame:
+    """Merge stored partial rows and finalize them into the user-facing
     hourly aggregate view (avg derived at read time — the stored state
     stays mergeable)."""
-    parts = _merge(spark.read.parquet(rollup_path), keys)
+    parts = _merge(stored, keys)
     cols = [
         F.col("hour_ts"),
         *[F.col(k) for k in keys],
@@ -341,82 +339,3 @@ def read_rollup(spark: SparkSession, rollup_path: str, keys: list[str]) -> DataF
             F.hll_sketch_estimate("distinct_sketch").alias("distinct_est")
         )
     return parts.select(*cols)
-
-
-# Grains the hourly rollup CANNOT serve (finer than its stored grain).
-_SUB_HOUR_GRAINS = {"minute", "second"}
-
-
-def serve_series_stats(
-    spark: SparkSession,
-    facts_path: str,
-    rollup_path: str,
-    keys: list[str],
-    grain: str = "hour",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> tuple[DataFrame, str]:
-    """Materialized-view routing: answer a (grain x keys) series of
-    count/avg/min/max from the HOURLY rollup whenever the requested
-    grain is hour-or-coarser — the stored partials re-merge
-    associatively to any such grain (sums add, extrema fold) — and
-    fall back to scanning raw facts ONLY for sub-hour grains the
-    rollup cannot represent. Returns (df, source) with source in
-    {'rollup', 'facts'}; tests assert the rollup-served plan never
-    lists a raw-fact file.
-
-    This is the BI-accelerator contract at 100 TB: the rollup is
-    hours x keys (typically 5-6 orders of magnitude smaller than the
-    fact table), so a dashboard's daily/weekly series costs a scan of
-    the rollup partitions instead of the lake — and because
-    maintain_rollup keeps the partials exact and mergeable, the served
-    numbers are identical to a raw recompute, not an approximation.
-    """
-    servable = (
-        grain not in _SUB_HOUR_GRAINS and _rollup_exists(spark, rollup_path)
-    )
-    if servable:
-        parts = spark.read.parquet(rollup_path)
-        aggs = [
-            F.sum("sum_value").alias("sum_value"),
-            F.sum("cnt").alias("n"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        ]
-        # HLL sketches exist precisely for this re-merge: hourly
-        # sketches union to any coarser grain, so the served distinct
-        # estimate equals the single-pass sketch over the raw rows.
-        has_sketch = "distinct_sketch" in parts.columns
-        if has_sketch:
-            aggs.append(F.hll_union_agg("distinct_sketch").alias("_sk"))
-        cols = [
-            "bucket_ts",
-            *keys,
-            (F.col("sum_value") / F.col("n")).alias("avg_value"),
-            "min_value",
-            "max_value",
-            "n",
-        ]
-        if has_sketch:
-            cols.append(F.hll_sketch_estimate("_sk").alias("distinct_est"))
-        out = (
-            parts.groupBy(
-                F.date_trunc(grain, F.col("hour_ts")).alias("bucket_ts"), *keys
-            )
-            .agg(*aggs)
-            .select(*cols)
-        )
-        return out, "rollup"
-    facts = spark.read.parquet(facts_path)
-    out = (
-        facts.groupBy(
-            F.date_trunc(grain, F.col(ts_col)).alias("bucket_ts"), *keys
-        )
-        .agg(
-            F.avg(value_col).alias("avg_value"),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-            F.count(value_col).alias("n"),
-        )
-    )
-    return out, "facts"

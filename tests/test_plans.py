@@ -118,7 +118,7 @@ BNLJ_OK = {"embedding_topk_cosine", "embedding_batch_topk",
            # narrow assignment projection (assign_ivf_clusters)
            "semantic_dedup_pairs",
            # single query-vector row crossed into the k'-candidate
-           # exact re-rank (operators/pq.py::pq_topk)
+           # exact re-rank (plans/vectorq.py::ann_pq_topk)
            "ann_pq_topk",
            # single query-vector row crossed into the vector-ranking arm
            # of the RRF fusion

@@ -44,6 +44,30 @@ def _as_sorted_rounded(df):
     return sorted(tuple(r) for r in rows)
 
 
+@pytest.mark.parametrize("name", [
+    "incremental_rollup_hourly",
+    "daily_rollup_from_hourly",
+    "incremental_distinct_hourly",
+])
+def test_rollup_readers_on_empty_events_are_typed_empty(spark, sf_dir, tmp_path, name):
+    """An empty events table stores no delta, and a rollup without a
+    file has no schema to read. The readers return what a batch
+    recompute (their twin) returns: 0 rows, typed like a non-empty
+    run."""
+    import pyarrow.parquet as pq
+
+    from meshtastic_airsensor_database_spark.io_utils import table_path
+    from meshtastic_airsensor_database_spark.plans import REGISTRY
+
+    empty_dir = str(tmp_path)
+    pq.write_table(pq.read_table(table_path(sf_dir, "events")).slice(0, 0),
+                   table_path(empty_dir, "events"))
+    builder = REGISTRY[name].builder
+    out = builder(spark, empty_dir)
+    assert out.count() == 0
+    assert out.schema == builder(spark, sf_dir).schema
+
+
 def test_incremental_slices_equal_full_recompute(spark, sf_dir, tmp_path):
     """Four out-of-order micro-batch slices folded into the rollup must
     reproduce the one-pass aggregate exactly (associative merge)."""
@@ -353,98 +377,3 @@ def test_sketch_maintenance_slice_order_independent(spark, tmp_path):
         .collect()
     }
     assert {h: v[0] for h, v in a.items()} == exact
-
-
-def test_serve_series_stats_routes_to_rollup_and_matches_raw(spark, tmp_path):
-    """Day-grain series served from the hourly rollup must equal the
-    raw-fact recompute EXACTLY, and the served plan must not list one
-    raw-fact file; a sub-hour grain falls back to facts."""
-    from meshtastic_airsensor_database_spark.streaming.rollup import (
-        maintain_rollup,
-        serve_series_stats,
-    )
-
-    facts_path = str(tmp_path / "facts")
-    rollup_path = str(tmp_path / "rollup")
-    rows = []
-    for d in (1, 2):
-        for h in (0, 1, 5):
-            for u in (7, 8):
-                rows.append((f"2024-02-0{d} 0{h}:15:00", u, float(d * 10 + h + u)))
-                rows.append((f"2024-02-0{d} 0{h}:45:00", u, float(d + h)))
-    facts = spark.createDataFrame(rows, "s string, user_id long, value double").select(
-        F.to_timestamp("s").alias("ts"), "user_id", "value"
-    )
-    facts.write.parquet(facts_path)
-    # fold in as two out-of-order slices (the maintenance path, not a
-    # one-shot build)
-    stored = spark.read.parquet(facts_path)
-    maintain_rollup(stored.filter(F.dayofmonth("ts") == 2), rollup_path, keys=["user_id"])
-    maintain_rollup(stored.filter(F.dayofmonth("ts") == 1), rollup_path, keys=["user_id"])
-
-    served, source = serve_series_stats(
-        spark, facts_path, rollup_path, keys=["user_id"], grain="day"
-    )
-    assert source == "rollup"
-    assert all("rollup" in f for f in served.inputFiles())  # zero fact files
-
-    direct = (
-        stored.groupBy(F.date_trunc("day", "ts").alias("bucket_ts"), "user_id")
-        .agg(
-            F.avg("value").alias("avg_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.count("value").alias("n"),
-        )
-    )
-
-    def key(df):
-        return {
-            (str(r["bucket_ts"]), r["user_id"]): (
-                round(r["avg_value"], 9), r["min_value"], r["max_value"], r["n"]
-            )
-            for r in df.collect()
-        }
-
-    assert key(served) == key(direct)
-
-    _, source_min = serve_series_stats(
-        spark, facts_path, rollup_path, keys=["user_id"], grain="minute"
-    )
-    assert source_min == "facts"
-
-
-def test_serve_series_merges_distinct_sketches_to_grain(spark, tmp_path):
-    """A sketch-bearing rollup served at day grain must union the
-    hourly HLL sketches — the estimate equals a single-pass sketch of
-    the raw rows' users for that day (identical sketch algebra), while
-    still reading zero fact files."""
-    from meshtastic_airsensor_database_spark.streaming.rollup import (
-        maintain_rollup,
-        serve_series_stats,
-    )
-
-    facts_path = str(tmp_path / "facts")
-    rollup_path = str(tmp_path / "rollup")
-    rows = []
-    for h in (0, 1, 2):
-        for u in range(20):
-            rows.append((f"2024-03-01 0{h}:10:00", (h * 7 + u) % 30, 1.0))
-    facts = spark.createDataFrame(rows, "s string, user_id long, value double").select(
-        F.to_timestamp("s").alias("ts"), "user_id", "value"
-    )
-    facts.write.parquet(facts_path)
-    stored = spark.read.parquet(facts_path)
-    maintain_rollup(stored, rollup_path, keys=[], distinct_col="user_id")
-
-    served, source = serve_series_stats(
-        spark, facts_path, rollup_path, keys=[], grain="day"
-    )
-    assert source == "rollup"
-    assert all("rollup" in f for f in served.inputFiles())
-    got = served.collect()
-    assert len(got) == 1
-    direct = stored.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("d")
-    ).first()["d"]
-    assert got[0]["distinct_est"] == direct

@@ -331,50 +331,6 @@ def test_semantic_dedup_pairs_recall_and_parity(spark, sf_dir):
     assert got_arrow == got
 
 
-def test_pq_codes_bounds_and_determinism(spark, sf_dir):
-    from meshtastic_airsensor_database_spark.operators.pq import (
-        PQ_K,
-        PQ_M,
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    books = train_pq_codebooks(emb)
-    assert books.shape == (PQ_M, PQ_K, 64 // PQ_M)
-    books2 = train_pq_codebooks(emb)
-    assert (books == books2).all()  # deterministic training
-
-    codes = pq_encode(emb, books).collect()
-    assert len(codes) == emb.count()
-    for r in codes:
-        assert len(r.codes) == PQ_M
-        assert all(0 <= c < PQ_K for c in r.codes)
-    # encoding is deterministic too
-    again = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    assert {r.vec_id: list(r.codes) for r in codes} == again
-
-
-def test_pq_topk_recall_vs_brute_force(spark, sf_dir):
-    """ADC top-k with exact re-rank vs exact brute force: the re-rank
-    makes reported cosines exact, so every returned id appearing in
-    the brute-force top-10 must carry the identical cosine; recall@10
-    has a corpus floor (ADC is approximate — candidates can miss)."""
-    from meshtastic_airsensor_database_spark.operators.pq import pq_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    exact = {r.vec_id: r.cosine for r in brute_force_topk(emb, 0, k=10).collect()}
-    got = pq_topk(emb, query_vec_id=0, k=10).collect()
-    assert len(got) == 10
-    got_map = {r.vec_id: r.cosine for r in got}
-    overlap = set(got_map) & set(exact)
-    assert len(overlap) / len(exact) >= 0.5  # recall@10 floor
-    for vid in overlap:
-        assert got_map[vid] == exact[vid]  # re-ranked cosines are exact
-    dists = [r.adc_dist2 for r in got]
-    assert all(d >= 0 for d in dists)
-
-
 def test_standardize_vectors_zero_mean_unit_std(spark):
     import math
 
@@ -776,3 +732,46 @@ def test_ann_pq_topk_absent_query_id_returns_empty(spark, tmp_path):
     out = ann_pq_topk(spark, sf_dir)
     assert out.columns == ["vec_id", "adc_d2", "cosine"]
     assert out.count() == 0
+
+
+def test_ann_pq_topk_on_empty_embeddings_returns_empty(spark, tmp_path):
+    """An empty embeddings table has no vector to size the subspaces
+    from; the top-k is empty and typed like a non-empty run, as the
+    twin returns 0 rows."""
+    from meshtastic_airsensor_database_spark.plans.vectorq import ann_pq_topk
+
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [], "vec_id long, embedding array<float>, label int"
+    ).write.parquet(f"{sf_dir}/embeddings.parquet")
+    out = ann_pq_topk(spark, sf_dir)
+    assert out.dtypes == [("vec_id", "bigint"), ("adc_d2", "double"),
+                          ("cosine", "double")]
+    assert out.count() == 0
+
+
+def test_ann_pq_topk_rerank_is_exact(spark, sf_dir):
+    """ADC top-k with exact re-rank vs exact brute force: the re-rank
+    makes reported cosines exact, so every returned id that is also in
+    the brute-force top-10 carries the identical cosine; rows come
+    sorted by cosine, and ADC distances are squared L2 (>= 0). Recall
+    has no floor here: the derandomized 4x8 codebook is coarse, and
+    ADC candidates can miss."""
+    from meshtastic_airsensor_database_spark.plans.vectorq import (
+        QUERY_VEC_ID,
+        TOP_K,
+        ann_pq_topk,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    exact = {r.vec_id: r.cosine
+             for r in brute_force_topk(emb, QUERY_VEC_ID, k=TOP_K).collect()}
+    got = ann_pq_topk(spark, sf_dir).collect()
+    assert len(got) == TOP_K
+    assert QUERY_VEC_ID not in {r.vec_id for r in got}
+    for row in got:
+        if row.vec_id in exact:
+            assert row.cosine == exact[row.vec_id]
+    cosines = [r.cosine for r in got]
+    assert cosines == sorted(cosines, reverse=True)
+    assert all(r.adc_d2 >= 0 for r in got)

@@ -12,7 +12,6 @@ from meshtastic_airsensor_database_spark.io_utils import load
 from meshtastic_airsensor_database_spark.operators.skew import (
     SALT_COL,
     salted_join,
-    top_key_volumes,
     with_salt,
 )
 
@@ -63,17 +62,6 @@ def test_salt_is_deterministic_and_bounded(spark, sf_dir):
     b = _multiset(with_salt(li, 8, ["l_orderkey", "partkey"])
                   .select("l_orderkey", "partkey", SALT_COL))
     assert a == b
-
-
-def test_top_key_volumes_finds_heaviest_key(spark, sf_dir):
-    li, _ = _li_pt(spark, sf_dir)
-    diag = top_key_volumes(li, ["partkey"], k=5).collect()
-    assert len(diag) == 5
-    truth = (
-        li.groupBy("partkey").count().orderBy(F.col("count").desc(), "partkey")
-        .first()
-    )
-    assert (diag[0]["partkey"], diag[0]["n_rows"]) == (truth["partkey"], truth["count"])
 
 
 def test_salted_join_shuffles_on_key_plus_salt(spark, sf_dir):

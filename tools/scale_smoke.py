@@ -303,7 +303,6 @@ def main() -> None:
     # knob), holding cluster size — and therefore per-cluster candidate
     # fan-out — constant as factor grows: total candidate pairs stay
     # linear in corpus size.
-    from meshtastic_airsensor_database_spark.operators.pq import pq_encode, train_pq_codebooks
     from meshtastic_airsensor_database_spark.operators.similarity import semantic_dedup_pairs
 
     timed(spark, "semantic_dedup_pairs",
@@ -378,7 +377,6 @@ def main() -> None:
         }
     finally:
         shutil.rmtree(idx, ignore_errors=True)
-    timed(spark, "pq_encode", pq_encode(emb, train_pq_codebooks(emb)), out)
     # r4 late additions over the factor-x corpus: corpus novelty (two
     # hash aggs over hashed grams), source-overlap (one collect_set
     # shuffle + narrow pair expansion bounded by the source domain),
@@ -388,7 +386,7 @@ def main() -> None:
     # a join.
     from meshtastic_airsensor_database_spark.operators.sketch import cms_counters
     from meshtastic_airsensor_database_spark.operators.textops import (
-        bounded_pair_counts,
+        bounded_pair_and_member_counts,
         novelty_counts,
         source_shingle_sets,
     )
@@ -412,8 +410,12 @@ def main() -> None:
     timed(spark, "exact_span_dedup",
           exact_span_dedup(docs_src).agg(
               F.sum(F.size("kept_tokens")), F.sum("n_removed")), out)
-    timed(spark, "source_overlap",
-          bounded_pair_counts(source_shingle_sets(docs_src)), out)
+    # the pair/member counts materialize eagerly, so the call itself is
+    # timed; counting the materialized pairs afterwards is free
+    spark._jvm.System.gc()
+    t0 = time.time()
+    pairs, _ = bounded_pair_and_member_counts(source_shingle_sets(docs_src))
+    out["source_overlap"] = {"sec": round(time.time() - t0, 2), "rows": pairs.count()}
     timed(spark, "cms_counters",
           cms_counters(docs_src.select("source"), "source"), out)
     # Stats/quality family over a factor-x events corpus: the KS CDF
