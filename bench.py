@@ -417,17 +417,23 @@ def streaming_main() -> None:
     cross-batch dedup -> route/enrich -> partitioned parquet facts +
     rollup maintenance + quarantine) and report rows/s plus per-micro-
     batch latency at each volume. Deterministic input (gen_packets);
-    processAllAvailable bounds the run. Writes bench_stream.json."""
+    processAllAvailable bounds the run. Every run is traced per batch
+    (trace.BatchTrace): the latencies come from its records, and
+    bench_stream.json also holds each timed run's records under
+    ``batches`` (the printed line leaves them out). Writes
+    bench_stream.json."""
     import shutil
     import tempfile
 
     from meshtastic_airsensor_database_spark.streaming.ingest import (
         IngestPaths,
+        idempotent_batch_processor,
         run_ingest_stream,
     )
     from meshtastic_airsensor_database_spark.sources.landing import (
         write_packet_fixture,
     )
+    from meshtastic_airsensor_database_spark.trace import BatchTrace
 
     spark = get_spark("bench-stream")
     vols = [
@@ -467,29 +473,33 @@ def streaming_main() -> None:
                     # "late" rows, making throughput/row counts
                     # nondeterministic.
                     os.utime(p, (base_t + 2 * fi, base_t + 2 * fi))
-            t0 = time.time()
-            q = run_ingest_stream(
-                spark,
-                paths,
-                max_files_per_trigger=mfpt,
-                dedup_within_watermark=True,
-            )
-            try:
-                q.processAllAvailable()
-                wall = time.time() - t0
-                prog = [
-                    p for p in (q.recentProgress or []) if p.get("numInputRows", 0) > 0
-                ]
-            finally:
-                # always stop before the finally-rmtree below deletes the
-                # landing/checkpoint dirs out from under a live query
+            with BatchTrace(spark) as trace:
+                body = idempotent_batch_processor(
+                    paths, phase_clock=trace.clock, input_deduped=True
+                )
+                t0 = time.time()
+                q = run_ingest_stream(
+                    spark,
+                    paths,
+                    max_files_per_trigger=mfpt,
+                    dedup_within_watermark=True,
+                    batch_processor=trace.wrap(body),
+                )
                 try:
-                    q.stop()
-                except Exception:
-                    pass
-            batch_ms = sorted(
-                p["durationMs"]["triggerExecution"] for p in prog
-            )
+                    q.processAllAvailable()
+                    wall = time.time() - t0
+                    batches = [
+                        r for r in trace.records(q) if r["num_input_rows"] > 0
+                    ]
+                finally:
+                    # always stop before the finally-rmtree below deletes
+                    # the landing/checkpoint dirs out from under a live
+                    # query
+                    try:
+                        q.stop()
+                    except Exception:
+                        pass
+            batch_ms = sorted(r["batch_duration_ms"] for r in batches)
             fact_rows = {
                 t: spark.read.parquet(paths.table(t)).count()
                 for t in ("airwise_data", "battery_data", "airwise_datav1")
@@ -504,6 +514,7 @@ def streaming_main() -> None:
                         "batch_ms_p50": batch_ms[len(batch_ms) // 2] if batch_ms else None,
                         "batch_ms_max": batch_ms[-1] if batch_ms else None,
                         "fact_rows": fact_rows,
+                        "batches": batches,
                     }
                 )
         finally:
@@ -530,7 +541,8 @@ def streaming_main() -> None:
     with open(out_path, "w") as f:
         json.dump(full, f)
         f.write("\n")
-    print(json.dumps(full))
+    printed = [{k: v for k, v in r.items() if k != "batches"} for r in runs]
+    print(json.dumps(dict(full, runs=printed)))
 
 
 def main() -> None:

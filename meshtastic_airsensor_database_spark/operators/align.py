@@ -9,9 +9,9 @@ joins). Gap detection and the trailing rolling average are SQL texts
 
 Scale notes: all Window specs partition by the series key (node /
 user), so state never concentrates on one task; time-bucket
-aggregation is a hash aggregate with map-side partials; the as-of fill
-uses ``last(..., ignorenulls=True)`` over a key-partitioned window —
-no cross-partition ordering is ever required.
+aggregation is a hash aggregate with map-side partials; the as-of join
+(``asof_join_tolerance``) runs one key-partitioned window sort — no
+cross-partition ordering is ever required.
 """
 
 from __future__ import annotations
@@ -62,21 +62,6 @@ def timeseries_align(
         .select(F.col("w.start").alias("bucket_ts"), "*")
         .drop("w")
     )
-
-
-def asof_fill(df: DataFrame, key: str, ts_col: str, value_col: str) -> DataFrame:
-    """As-of (last-observation-carried-forward) fill within each key.
-
-    Union-based as-of join building block: after unioning sparse series,
-    every row gets the most recent non-null value per key — the
-    union+``last(ignorenulls)`` formulation from SURVEY §2.3.
-    """
-    w = (
-        Window.partitionBy(key)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(f"{value_col}_ff", F.last(value_col, ignorenulls=True).over(w))
 
 
 def latest_reading_per_node(df: DataFrame, key: str, ts_col: str, tiebreak: str) -> DataFrame:
@@ -157,34 +142,6 @@ def per_key_linear_trend(
     )
 
 
-def salted_collect_list(
-    df: DataFrame, key: str, value_col: str, n_salts: int = 16
-) -> DataFrame:
-    """Two-phase collect_list with key salting (SURVEY §4 'skewed keys
-    -> salting'): phase 1 groups on (key, salt) so a hot key's values
-    spread over ``n_salts`` tasks; phase 2 flattens the per-salt lists.
-
-    Use for holistic aggregations (list/set building) where ONE key
-    owns a large share of rows — partial aggregation can't spread
-    those (the hot key's state still lands on one reducer), and AQE
-    skew handling splits JOIN partitions, not aggregation state.
-    Algebraic aggs (sum/avg/min/max/count) never need this: Spark's
-    map-side partial aggregation already spreads them. List order is
-    nondeterministic, as with plain collect_list. The salt is per-ROW
-    (not a hash of the value — a hot key dominated by one repeated
-    value would collapse back onto one salt).
-    """
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)).alias("_salt")
-    partial = (
-        df.select(F.col(key), salt, F.col(value_col))
-        .groupBy(key, "_salt")
-        .agg(F.collect_list(value_col).alias("_vals"))
-    )
-    return partial.groupBy(key).agg(
-        F.flatten(F.collect_list("_vals")).alias(f"{value_col}_list")
-    )
-
-
 def node_equality_filter(df: DataFrame, key: str, value) -> DataFrame:
     """Per-node slice (graphdata.py:90-91); partition-prunable at scale."""
     return df.filter(F.col(key) == F.lit(value))
@@ -204,8 +161,9 @@ def asof_join_tolerance(
     row gets the ``carry_cols`` of the latest right row at-or-before
     its timestamp for the same key — unless that match is older than
     ``tolerance_seconds``, in which case the columns are null (a stale
-    sensor reading should NOT be carried forward forever; plain
-    ``asof_fill`` does exactly that).
+    sensor reading should NOT be carried forward forever; a plain
+    ``last(ignorenulls)`` fill, ``asof_latest_view_value``, does
+    exactly that).
 
     The right side must be unique per (key, ts) — pre-aggregate ties
     (e.g. ``max_by``) so semantics are deterministic in any engine.

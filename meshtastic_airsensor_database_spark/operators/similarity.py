@@ -409,49 +409,6 @@ def _semantic_pairs_grouped_blas(
     ).filter(F.col("cosine") >= threshold)
 
 
-def kmeans_ivf_topk(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_centroids: int = 8,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN with TRAINED centroids (Spark ML KMeans) — the
-    production upgrade of ``ivf_topk``'s first-N-vectors stand-in.
-
-    Train k-means on the corpus (one ML job, amortized across queries
-    at scale), broadcast the centers, probe the ``n_probe`` clusters
-    nearest the query, exact cosine re-rank inside — via the shared
-    ``_probe_and_rerank`` plumbing. The probe ranks clusters by
-    EUCLIDEAN distance to the trained centers, matching the metric
-    KMeans assigned vectors with (centroids are means of unit vectors
-    — not unit-norm — so a cosine probe would rank clusters
-    differently from the assignment and lose recall).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = fan_out(emb).select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_features"),
-    )
-    model = KMeans(
-        k=n_centroids, seed=42, featuresCol="_features", predictionCol="cluster"
-    ).fit(feats)
-    assigned = model.transform(feats).select(id_col, vec_col, "cluster")
-
-    centers = emb.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "centroid_id int, centroid_vec array<double>",
-    )
-    q = emb.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_qv"))
-    return _probe_and_rerank(
-        assigned, centers, q, k, n_probe, id_col, vec_col, query_vec_id, "euclidean"
-    )
-
-
 # Above this many literal doubles the centroid pack stops being inlined
 # as expression text (parser cost grows with the literal) and ships as a
 # broadcast instead. C x dim is bounded by the training caps everywhere

@@ -8,7 +8,7 @@ partitions at runtime, but only for sort-merge joins it can re-plan;
 salting is the ahead-of-time tool that works for any join/aggregate
 shape and composes with AQE rather than replacing it.
 
-Shapes provided:
+Shape provided:
 
 - ``salted_join``: fact-side rows get a deterministic salt in
   ``[0, salt_n)``; the (small-but-not-broadcastable) build side is
@@ -17,8 +17,6 @@ Shapes provided:
   reduce tasks. Build-side cost is ``salt_n x |build|`` rows — the
   classic trade: pick ``salt_n`` ~ (hot-key volume / target partition
   size), not hundreds.
-- ``salted_collect_list`` (operators/align.py): the two-phase holistic
-  aggregate — partial per (key, salt), then merge per key.
 
 The salt is ``xxhash64(fact columns) % salt_n`` — deterministic (same
 row always gets the same salt, so retries/replays stay idempotent and

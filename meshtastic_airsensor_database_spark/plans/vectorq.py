@@ -2513,9 +2513,7 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine re-rank. Every stage is declarative, so the oracle
     unrolls the whole training loop in SQL — the hash match pins the
     k-means math itself (assignment argmin, per-dim means, probe
-    ranking), closing the r3 verdict's ``no_oracle`` gap. The
-    Spark-ML-KMeans production variant (kmeans_ivf_topk) stays
-    pytest-verified against brute force."""
+    ranking), closing the r3 verdict's ``no_oracle`` gap."""
     emb = load(spark, sf_dir, "embeddings")
     return lloyd_ivf_topk(
         emb, query_vec_id=QUERY_VEC_ID, k=TOP_K,

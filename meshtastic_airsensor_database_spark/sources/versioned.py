@@ -18,9 +18,8 @@ claims N+1). On a local filesystem the pointer swap is an atomic
 true atomicity there needs the store's conditional-put, which is out
 of scope for this container.
 
-Versions are immutable, so ``snapshot_changes`` (keyed diff of any two
-versions, reusing the CDC snapshot_diff operator) is exact, and
-``expire_snapshots`` reclaims history without touching what the
+Versions are immutable, so a keyed diff of any two versions is exact,
+and ``expire_snapshots`` reclaims history without touching what the
 pointer can still reach. No counterpart in the reference (its Postgres
 tables are mutable in place); this is the engine-native answer to the
 LLM-pipeline reproducibility requirement.
@@ -102,25 +101,6 @@ def read_snapshot(
             f"snapshot v={version} is not published (or was expired) under {path}"
         )
     return spark.read.parquet(vdir)
-
-
-def snapshot_changes(
-    spark: SparkSession,
-    path: str,
-    v_from: int,
-    v_to: int,
-    key_cols: list[str],
-) -> DataFrame:
-    """Exact keyed diff between two retained versions via the CDC
-    snapshot_diff operator: one row per changed key with status in
-    {added, removed, changed, unchanged}."""
-    from ..operators.cdc import snapshot_diff
-
-    return snapshot_diff(
-        read_snapshot(spark, path, v_from),
-        read_snapshot(spark, path, v_to),
-        key_cols,
-    )
 
 
 def expire_snapshots(path: str, keep_last: int = 2) -> list[int]:

@@ -845,7 +845,6 @@ def run_ingest_stream(
     trigger_seconds: int | None = None,
     max_files_per_trigger: int | None = None,
     dedup_within_watermark: bool = False,
-    phase_clock: dict | None = None,
     batch_processor=None,
     state_partitions: int | None = 8,
     clean_source: str | None = None,
@@ -872,8 +871,10 @@ def run_ingest_stream(
     (bounded state; needs event-time on the raw line, so we parse the
     envelope in-stream for the timestamp and carry the raw line along).
     ``batch_processor`` overrides the default ledgered foreachBatch
-    body (chaos tests inject crash points with it); restarts must keep
-    the same topology flags, the processor is free to differ.
+    body (chaos tests inject crash points with it; a traced run passes
+    ``trace.BatchTrace.wrap`` around a clocked
+    ``idempotent_batch_processor``); restarts must keep the same
+    topology flags, the processor is free to differ.
 
     ``state_partitions`` sizes ``spark.sql.shuffle.partitions`` FOR
     THIS QUERY (Structured Streaming clones the session at start, so
@@ -932,9 +933,10 @@ def run_ingest_stream(
       runs.
 
     The first two overlap: most of a no-data batch's cost is its state
-    commit. Forked-process CPU (``tools/profile_stream_batch.py``) is
-    ~0.25 s per trigger with these confs, all of it lake writes, and
-    ~0.55 s per data trigger plus ~0.35 s per no-data trigger without.
+    commit. Forked-process CPU (the ``cpu_children_s`` of a
+    ``trace.BatchTrace`` record) is ~0.25 s per trigger with these
+    confs, all of it lake writes, and ~0.55 s per data trigger plus
+    ~0.35 s per no-data trigger without.
     """
     if clean_source:
         others = _other_landing_consumers(
@@ -973,7 +975,7 @@ def run_ingest_stream(
             )
     writer = _ingest_writer(
         spark, paths, trigger_seconds, max_files_per_trigger,
-        dedup_within_watermark, phase_clock, batch_processor,
+        dedup_within_watermark, batch_processor,
         clean_source, source_archive_dir,
     )
     # start() clones the session, pinning the confs into the query;
@@ -1028,7 +1030,6 @@ def _ingest_writer(
     trigger_seconds: int | None,
     max_files_per_trigger: int | None,
     dedup_within_watermark: bool,
-    phase_clock: dict | None,
     batch_processor,
     clean_source: str | None = None,
     source_archive_dir: str | None = None,
@@ -1066,7 +1067,6 @@ def _ingest_writer(
         batch_processor
         or idempotent_batch_processor(
             paths,
-            phase_clock=phase_clock,
             # this topology already deduped on [from, id] upstream —
             # the batch core must not pay the same shuffle again
             input_deduped=dedup_within_watermark,

@@ -1,77 +1,58 @@
-"""Streaming observability: StreamingQueryProgress -> DataFrame.
+"""Streaming observability: per-batch trace records -> DataFrame.
 
 A 1000-executor deployment lives or dies by its per-batch telemetry:
 input rate vs processing rate (falling behind?), batch duration
 breakdown (where does the time go?), state-store growth (leaking
 keys?), and watermark lag (how stale is event time vs wall clock?).
-Spark already emits all of it as `StreamingQueryProgress` JSON on the
-driver; this module flattens the recent-progress ring buffer into a
-typed DataFrame so the same engine that runs the pipeline can query
-its own health — joinable, windowable, sinkable like any fact table.
-
-Driver-side cost: `recentProgress` is a bounded ring buffer
-(spark.sql.streaming.numRecentProgressUpdates, default 100 entries),
-so harvesting is O(1) in stream volume.
+``trace.BatchTrace`` records all of it for every trigger, together
+with the foreachBatch body's per-sink split and the CPU split; this
+module turns those records into a typed DataFrame so the same engine
+that runs the pipeline can query its own health — joinable,
+windowable, sinkable like any fact table.
 """
 
 from __future__ import annotations
 
-import json
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PROGRESS_SCHEMA = (
-    "query_id string, run_id string, batch_id long, ts timestamp, "
-    "num_input_rows long, input_rows_per_second double, "
-    "processed_rows_per_second double, batch_duration_ms long, "
-    "state_rows long, state_bytes long, watermark timestamp"
-)
+from ..trace import BATCH_KEYS
+
+_TYPES = {
+    "query_id": "string", "run_id": "string",
+    "ts": "timestamp", "watermark": "timestamp",
+    "input_rows_per_second": "double", "processed_rows_per_second": "double",
+}
 
 
-def _parse_iso(ts: str | None) -> datetime | None:
-    if not ts:
-        return None
-    try:
-        # Spark emits e.g. 2024-01-01T00:00:00.123Z
-        return datetime.fromisoformat(ts.replace("Z", "+00:00")).astimezone(
-            timezone.utc
-        ).replace(tzinfo=None)
-    except ValueError:
-        return None
+def _type(key: str) -> str:
+    """Seconds are double, counts and milliseconds long."""
+    return _TYPES.get(key, "double" if key.endswith("_s") else "long")
 
 
-def progress_frame(spark: SparkSession, queries) -> DataFrame:
-    """Flatten one or more StreamingQuery handles' recent progress into
-    a typed DataFrame. The epoch-unstarted watermark sentinel
-    (1970-01-01) is normalized to NULL so lag math never sees it."""
-    if not isinstance(queries, (list, tuple)):
-        queries = [queries]
-    rows = []
-    for q in queries:
-        for p in q.recentProgress:
-            if isinstance(p, str):  # older API returns JSON strings
-                p = json.loads(p)
-            state = (p.get("stateOperators") or [{}])[0]
-            wm = _parse_iso((p.get("eventTime") or {}).get("watermark"))
-            if wm is not None and wm.year <= 1970:
-                wm = None
-            rows.append(
-                (
-                    p.get("id"),
-                    p.get("runId"),
-                    p.get("batchId"),
-                    _parse_iso(p.get("timestamp")),
-                    p.get("numInputRows"),
-                    p.get("inputRowsPerSecond"),
-                    p.get("processedRowsPerSecond"),
-                    (p.get("durationMs") or {}).get("triggerExecution"),
-                    state.get("numRowsTotal"),
-                    state.get("stateMemory") or state.get("memoryUsedBytes"),
-                    wm,
-                )
-            )
+# one column per record key, its dots as underscores
+PROGRESS_SCHEMA = ", ".join(f"{k.replace('.', '_')} {_type(k)}" for k in BATCH_KEYS)
+
+
+def _value(key: str, v):
+    t = _type(key)
+    if v is None or t == "string":
+        return v
+    if t == "timestamp":
+        # Spark emits e.g. 2024-01-01T00:00:00.123Z; the epoch-unstarted
+        # watermark sentinel (1970-01-01) is NULL, so lag math never
+        # sees it
+        ts = datetime.fromisoformat(v).astimezone(timezone.utc).replace(tzinfo=None)
+        return ts if ts.year > 1970 else None
+    return float(v) if t == "double" else int(v)
+
+
+def progress_frame(spark: SparkSession, records: list[dict]) -> DataFrame:
+    """The typed DataFrame view of ``BatchTrace.records()``: one row
+    per trigger, one column per record key (``PROGRESS_SCHEMA``)."""
+    rows = [tuple(_value(k, r[k]) for k in BATCH_KEYS) for r in records]
     return spark.createDataFrame(rows, PROGRESS_SCHEMA)
 
 

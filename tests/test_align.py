@@ -5,7 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 from meshtastic_airsensor_database_spark.operators.align import (
-    asof_fill,
     latest_reading_per_node,
     sessionize,
     timeseries_align,
@@ -38,15 +37,6 @@ def test_sessionize(spark):
     assert ids == [1, 1, 2, 2]
 
 
-def test_asof_fill_locf(spark):
-    df = spark.createDataFrame(
-        [(1, _ts(0), 5.0), (1, _ts(10), None), (1, _ts(20), None), (1, _ts(30), 7.0)],
-        ["node", "ts", "value"],
-    )
-    out = [r.value_ff for r in asof_fill(df, "node", "ts", "value").orderBy("ts").collect()]
-    assert out == [5.0, 5.0, 5.0, 7.0]
-
-
 def test_timeseries_align_buckets(spark):
     a = _series(spark, [(1, _ts(0), 10.0), (1, _ts(2), 20.0)])
     b = _series(spark, [(1, _ts(1), 100.0)])
@@ -56,28 +46,6 @@ def test_timeseries_align_buckets(spark):
     assert by_src["b"].avg_value == 100.0
     assert by_src["a"].bucket_ts == T0  # same shared bucket axis
     assert by_src["b"].bucket_ts == T0
-
-
-def test_salted_collect_list_matches_plain(spark):
-    """Salted two-phase list building returns the same multiset per key
-    as plain collect_list (order aside), spread over n_salts tasks."""
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from meshtastic_airsensor_database_spark.operators.align import salted_collect_list
-
-    rows = [(1, f"v{i % 7}") for i in range(200)] + [(2, "x")] + [(3, None)]
-    df = spark.createDataFrame(rows, "k long, v string")
-    salted = {
-        r.k: Counter(r.v_list)
-        for r in salted_collect_list(df, "k", "v", n_salts=8).collect()
-    }
-    plain = {
-        r.k: Counter(r.vl)
-        for r in df.groupBy("k").agg(F.collect_list("v").alias("vl")).collect()
-    }
-    assert salted == plain
 
 
 def test_per_key_linear_trend_null_handling(spark):

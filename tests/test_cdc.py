@@ -1,56 +1,18 @@
-"""operators/cdc.py — snapshot diff status semantics, incl. null-safe
-change detection and all four statuses."""
+"""sources/versioned.py — immutable snapshots: time travel, orphan
+invisibility, version claiming, and expiry that keeps reachable
+history."""
 
 from __future__ import annotations
 
-import pytest
-
-from meshtastic_airsensor_database_spark.operators.cdc import snapshot_diff
-
-
-def test_snapshot_diff_statuses(spark):
-    old = spark.createDataFrame(
-        [(1, 10.0, "x"), (2, 20.0, "y"), (3, None, "z"), (4, 40.0, None)],
-        "k long, v double, s string",
-    )
-    new = spark.createDataFrame(
-        [(2, 20.0, "y"), (3, 30.0, "z"), (4, 40.0, None), (5, 50.0, "w")],
-        "k long, v double, s string",
-    )
-    rows = {r["k"]: r for r in snapshot_diff(old, new, ["k"]).collect()}
-    assert rows[1]["status"] == "removed"
-    assert rows[2]["status"] == "unchanged"
-    assert rows[3]["status"] == "changed"  # NULL -> 30.0 is a change
-    assert rows[4]["status"] == "unchanged"  # NULL == NULL, null-safe
-    assert rows[5]["status"] == "added"
-    assert rows[3]["old_v"] is None and rows[3]["new_v"] == 30.0
-    assert rows[5]["old_v"] is None and rows[5]["new_v"] == 50.0
-
-
-def test_snapshot_diff_compare_subset_and_missing_col(spark):
-    old = spark.createDataFrame([(1, 10.0)], "k long, v double")
-    new = spark.createDataFrame([(1, 99.0, "extra")], "k long, v double, e string")
-    # explicit subset works even when `new` has extra columns
-    rows = snapshot_diff(old, new, ["k"], ["v"]).collect()
-    assert rows[0]["status"] == "changed"
-    # defaulting compare cols to new's non-keys must fail loudly when
-    # old lacks one of them
-    with pytest.raises(ValueError, match="absent from old"):
-        snapshot_diff(old, new, ["k"])
-
 
 def test_snapshot_write_read_timetravel(spark, tmp_path):
-    """Write two snapshots: latest reads v2, time travel reads v1, the
-    keyed diff reports exactly the applied changes, and an orphan
-    (unpublished) directory is invisible to readers."""
+    """Write two snapshots: latest reads v2, time travel reads v1, and
+    an orphan (unpublished) directory is invisible to readers."""
     import os
-
-    from pyspark.sql import functions as F
 
     from meshtastic_airsensor_database_spark.sources.versioned import (
         latest_version,
         read_snapshot,
-        snapshot_changes,
         snapshot_versions,
         write_snapshot,
     )
@@ -69,12 +31,6 @@ def test_snapshot_write_read_timetravel(spark, tmp_path):
 
     assert {r["id"] for r in read_snapshot(spark, path).collect()} == {1, 2, 4}
     assert {r["id"] for r in read_snapshot(spark, path, 1).collect()} == {1, 2, 3}
-
-    diff = {
-        r["id"]: r["status"]
-        for r in snapshot_changes(spark, path, 1, 2, ["id"]).collect()
-    }
-    assert diff == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
 
     # crashed writer: a v=3 directory with no _SUCCESS and no pointer
     # move is invisible — latest still v2, version list unchanged

@@ -8,8 +8,8 @@ in a root or in the body of a reachable definition. The roots are:
 - every module-level statement of the package other than a definition
   or an import (the registry's ``Query(...)`` entries, the CLI
   ``if __name__ == "__main__"`` blocks, module constants);
-- every identifier inside a string constant, so SQL texts and
-  ``module:function`` entry points count;
+- every identifier inside a string constant other than a docstring,
+  so SQL texts and ``module:function`` entry points count;
 - ``bench.py``, ``__spark_entry__.py``, ``perfbench/``, ``tools/`` and
   ``pyproject.toml``, whole;
 - ``KEEP``: definitions kept without such a caller, each with the
@@ -17,9 +17,9 @@ in a root or in the body of a reachable definition. The roots are:
   caller): reason``).
 
 Names are matched without their module, so a name shared by two modules
-keeps both alive, and docstrings count as string constants, so a name
-in prose keeps its definition alive; the scan can only miss dead code,
-never flag live code.
+keeps both alive; the scan can only miss dead code, never flag live
+code. Module, class and def docstrings are prose, not callers: a name
+a docstring mentions keeps nothing alive.
 """
 
 from __future__ import annotations
@@ -62,10 +62,26 @@ KEEP = {
         "the left-fold reference test_fold_numpy_twins compares the PCA folds against",
     "int8_scale":
         "the dequantization scale test_quantize_int8_bounds_and_error checks quantize_int8 against",
+    "brute_force_topk":
+        "the exact top-k every IVF and LSH test in test_similarity.py compares against",
+    "_batch_scores_expr":
+        "the built-in-expression scorer test_batch_topk_arrow_equals_expression_path compares the Arrow/BLAS scorer against",
 }
 
 _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _parse(path: Path) -> ast.Module:
+    """The module's AST with every docstring removed."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    for n in ast.walk(tree):
+        if (isinstance(n, (ast.Module, *_DEFS)) and n.body
+                and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)
+                and isinstance(n.body[0].value.value, str)):
+            n.body[0] = ast.Pass()
+    return tree
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -92,7 +108,7 @@ def _scan() -> tuple[dict[str, list[str]], dict[str, set[str]], set[str]]:
     aliases: dict[str, set[str]] = {}
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = str(path.relative_to(ROOT))
-        tree = ast.parse(path.read_text(), filename=rel)
+        tree = _parse(path)
         for a in ast.walk(tree):
             if isinstance(a, ast.alias) and a.asname:
                 aliases.setdefault(a.asname, set()).add(a.name.split(".")[-1])
@@ -106,7 +122,7 @@ def _scan() -> tuple[dict[str, list[str]], dict[str, set[str]], set[str]]:
         p = ROOT / entry
         for f in sorted(p.rglob("*.py")) if p.is_dir() else [p]:
             if f.suffix == ".py":
-                roots |= _names(ast.parse(f.read_text(), filename=str(f)))
+                roots |= _names(_parse(f))
             else:
                 roots.update(_WORD.findall(f.read_text()))
 

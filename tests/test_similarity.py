@@ -86,24 +86,6 @@ def test_embedding_lsh_neardup_pairs_recall_vs_exact(spark, sf_dir):
         assert len(got & exact) / len(exact) >= 0.7
 
 
-def test_kmeans_ivf_full_probe_equals_brute_force(spark, sf_dir):
-    """Probing ALL trained clusters recovers the exact brute-force
-    top-k (the pruning structure loses nothing when not pruning)."""
-    from meshtastic_airsensor_database_spark.operators.similarity import (
-        kmeans_ivf_topk,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    exact = [r.vec_id for r in brute_force_topk(emb, 0, k=10).collect()]
-    full = [
-        r.vec_id
-        for r in kmeans_ivf_topk(
-            emb, query_vec_id=0, k=10, n_centroids=8, n_probe=8
-        ).collect()
-    ]
-    assert full == exact
-
-
 def test_lloyd_ivf_full_probe_equals_brute_force(spark, sf_dir):
     """The deterministic Lloyd's-trained IVF (the oracle-backed
     ann_kmeans_ivf_topk path) also recovers the exact brute-force

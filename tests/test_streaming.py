@@ -1720,10 +1720,11 @@ def test_quarantine_captures_corrupt_and_unknown_packets(spark, tmp_path):
 
 
 def test_progress_frame_and_health_rollup(spark, tmp_path):
-    """The observability harvester turns a live query's recentProgress
-    into a typed frame: batch ids monotone, input rows accounted, the
+    """The progress frame is the typed view of a live query's per-batch
+    trace records: batch ids monotone, input rows accounted, the
     watermark column real (not the epoch sentinel) once data flowed,
-    and the health rollup aggregates to one row per query."""
+    the phase and CPU columns filled, and the health rollup aggregates
+    to one row per query."""
     import json as _json
 
     from meshtastic_airsensor_database_spark.operators.parse import (
@@ -1737,6 +1738,7 @@ def test_progress_frame_and_health_rollup(spark, tmp_path):
         progress_frame,
         progress_health,
     )
+    from meshtastic_airsensor_database_spark.trace import BatchTrace
 
     landing = str(tmp_path / "obs_landing")
 
@@ -1757,34 +1759,41 @@ def test_progress_frame_and_health_rollup(spark, tmp_path):
         .groupBy(F.window("event_ts", "10 minutes"), "node")
         .count()
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName("obs_agg")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "obs_ckpt"))
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        write_packet_fixture(landing, [env(1, 1_700_000_900)], "b1.jsonl")
-        query.processAllAvailable()
-        pf = progress_frame(spark, query)
-        rows = pf.orderBy("batch_id").collect()
-        assert len(rows) >= 2
-        ids = [r["batch_id"] for r in rows]
-        assert ids == sorted(ids)
-        assert sum(r["num_input_rows"] or 0 for r in rows) == 6
-        assert any(
-            r["watermark"] is not None and r["watermark"].year > 1970
-            for r in rows
+    with BatchTrace(spark) as trace:
+        query = (
+            agg.writeStream.format("memory")
+            .queryName("obs_agg")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "obs_ckpt"))
+            .start()
         )
-        health = progress_health(pf).collect()
-        assert len(health) == 1
-        h = health[0]
-        assert h["total_rows"] == 6 and h["n_batches"] == len(rows)
-        assert h["max_watermark_lag_s"] is not None
-    finally:
-        query.stop()
+        try:
+            query.processAllAvailable()
+            write_packet_fixture(landing, [env(1, 1_700_000_900)], "b1.jsonl")
+            query.processAllAvailable()
+            records = trace.records(query)
+        finally:
+            query.stop()
+    pf = progress_frame(spark, records)
+    rows = pf.orderBy("batch_id").collect()
+    assert len(rows) >= 2
+    ids = [r["batch_id"] for r in rows]
+    assert ids == sorted(ids)
+    assert sum(r["num_input_rows"] or 0 for r in rows) == 6
+    assert any(
+        r["watermark"] is not None and r["watermark"].year > 1970
+        for r in rows
+    )
+    data = [r for r in rows if r["stream_add_batch_ms"] is not None]
+    assert data and all(r["stream_latest_offset_ms"] is not None for r in data)
+    assert all(r["cpu_jvm_s"] >= 0 and r["cpu_python_s"] >= 0 for r in rows)
+    # a memory sink has no traced foreachBatch body
+    assert all(r["body_s"] is None and r["sink_rollup_s"] is None for r in rows)
+    health = progress_health(pf).collect()
+    assert len(health) == 1
+    h = health[0]
+    assert h["total_rows"] == 6 and h["n_batches"] == len(rows)
+    assert h["max_watermark_lag_s"] is not None
 
 
 def test_offline_monitor_state_survives_crash_restart(spark, tmp_path):

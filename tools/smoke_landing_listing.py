@@ -5,8 +5,10 @@ landed) rationale for ``clean_source`` with numbers, not prose).
 Protocol: land N tiny files, stream them with a NO-OP batch processor
 (isolates source-side work — offset resolution/listing — from the fact
 pipeline) at ``per_trigger`` files per micro-batch, and record every
-trigger's ``durationMs.latestOffset`` (the slice that contains the
-directory listing). With retirement ON ('delete'), the landing dir
+trigger's ``stream.latest_offset_ms`` from its ``trace.BatchTrace``
+record (the slice that contains the directory listing). The trace
+keeps every trigger (r10 ADVICE: Spark's ring of the last 100
+truncated phase 1). With retirement ON ('delete'), the landing dir
 shrinks as batches commit, so late triggers list a near-empty dir;
 with retirement OFF the dir stays at N files forever and every trigger
 re-lists all of it — the cost a months-old production deployment pays
@@ -35,6 +37,7 @@ from meshtastic_airsensor_database_spark.streaming.ingest import (
     IngestPaths,
     run_ingest_stream,
 )
+from meshtastic_airsensor_database_spark.trace import BatchTrace
 
 PACKET = (
     '{"from": 3127201152, "id": %d, "type": "telemetry", '
@@ -57,51 +60,18 @@ def _land(landing: str, n_files: int) -> None:
 TAIL_FILES = 40
 
 
-class _ProgressCollector:
-    """StreamingQueryListener that keeps EVERY progress event (r10
-    ADVICE: ``recentProgress`` is capped at
-    spark.sql.streaming.numRecentProgressUpdates entries — 100 by
-    default — which silently truncated phase-1 counts at larger
-    n_files/per_trigger settings)."""
-
-    def __init__(self):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        outer = self
-        self.events: list[dict] = []
-
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event):  # noqa: N802
-                pass
-
-            def onQueryProgress(self, event):  # noqa: N802
-                p = event.progress
-                outer.events.append(json.loads(p.json))
-
-            def onQueryIdle(self, event):  # noqa: N802
-                pass
-
-            def onQueryTerminated(self, event):  # noqa: N802
-                pass
-
-        self.listener = _L()
-
-    def for_query(self, query_id: str) -> list[dict]:
-        return [p for p in self.events if str(p.get("id")) == str(query_id)]
-
-
-def _data_batches(progress: list[dict]) -> list[int]:
+def _data_batches(records: list[dict]) -> list[int]:
     """latestOffset ms of the DATA-CARRYING triggers only — idle
     triggers have no addBatch slice (numInputRows reads 0 under a
     no-op foreachBatch, so addBatch presence is the discriminator).
     Phase boundaries and the tail slice must use THIS filter on both
-    sides (r10 ADVICE: mixing a raw recentProgress count with a
+    sides (r10 ADVICE: mixing an unfiltered trigger count with a
     filtered list shifted the slice whenever an idle trigger fired in
     phase 1, leaking backlog samples into the tail mean)."""
     return [
-        p.get("durationMs", {}).get("latestOffset", 0)
-        for p in progress
-        if p.get("durationMs", {}).get("addBatch") is not None
+        r["stream.latest_offset_ms"]
+        for r in records
+        if r["stream.add_batch_ms"] is not None
     ]
 
 
@@ -112,7 +82,7 @@ def run_case(spark, base: str, n_files: int, per_trigger: int,
     Phase 2 is the steady state that history leaves behind: a trickle
     of TAIL_FILES new files at ONE file per trigger — each trigger
     must re-list the landing dir to find it, so its
-    ``durationMs.latestOffset`` is dominated by how many ALREADY
+    ``stream.latest_offset_ms`` is dominated by how many ALREADY
     PROCESSED files still sit there: all ``n_files`` with retirement
     off, ~none with it on."""
     tag = "retire_on" if retire else "retire_off"
@@ -120,36 +90,31 @@ def run_case(spark, base: str, n_files: int, per_trigger: int,
     out = os.path.join(base, f"out_{tag}")
     _land(landing, n_files)
     paths = IngestPaths(landing_dir=landing, out_dir=out)
-    collector = _ProgressCollector()
-    spark.streams.addListener(collector.listener)
-    t0 = time.time()
-    q = run_ingest_stream(
-        spark, paths,
-        max_files_per_trigger=per_trigger,
-        clean_source="delete" if retire else None,
-        batch_processor=lambda df, eid: None,
-    )
-    try:
-        q.processAllAvailable()  # phase 1: drain the backlog
-        # the listener bus is async AND the cleaner needs a beat to
-        # retire phase-1 files — the sleep serves both
-        time.sleep(3.0)
-        # SAME addBatch filter as the final slice (r10 ADVICE)
-        phase1_batches = len(_data_batches(collector.for_query(q.id)))
-        for i in range(TAIL_FILES):  # phase 2: trickle, ONE file/trigger
-            tmp = os.path.join(landing, f"tail{i:03d}.jsonl.tmp")
-            dst = os.path.join(landing, f"tail{i:03d}.jsonl")
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(PACKET % (90_000 + i, 1_760_800_000 + i) + "\n")
-            os.rename(tmp, dst)
-            q.processAllAvailable()
-        wall = time.time() - t0
-        time.sleep(2.0)  # drain the async listener bus before reading
-        qid = q.id
-    finally:
-        q.stop()
-        spark.streams.removeListener(collector.listener)
-    listing = _data_batches(collector.for_query(qid))
+    with BatchTrace(spark) as trace:
+        t0 = time.time()
+        q = run_ingest_stream(
+            spark, paths,
+            max_files_per_trigger=per_trigger,
+            clean_source="delete" if retire else None,
+            batch_processor=lambda df, eid: None,
+        )
+        try:
+            q.processAllAvailable()  # phase 1: drain the backlog
+            # the cleaner retires phase-1 files asynchronously
+            time.sleep(3.0)
+            # SAME addBatch filter as the final slice (r10 ADVICE)
+            phase1_batches = len(_data_batches(trace.records(q)))
+            for i in range(TAIL_FILES):  # phase 2: trickle, ONE file/trigger
+                tmp = os.path.join(landing, f"tail{i:03d}.jsonl.tmp")
+                dst = os.path.join(landing, f"tail{i:03d}.jsonl")
+                with open(tmp, "w", encoding="utf-8") as fh:
+                    fh.write(PACKET % (90_000 + i, 1_760_800_000 + i) + "\n")
+                os.rename(tmp, dst)
+                q.processAllAvailable()
+            wall = time.time() - t0
+            listing = _data_batches(trace.records(q))
+        finally:
+            q.stop()
     assert len(listing) >= phase1_batches + TAIL_FILES, (
         "listener missed progress events",
         len(listing), phase1_batches, TAIL_FILES,
