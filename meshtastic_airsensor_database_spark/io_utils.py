@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .schemas import TESTDATA_TABLES
 
@@ -146,7 +147,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 # ``<path><trash>``, staging -> live) and the trash is dropped. Every
 # crash point is converged by ``recover_swap`` at the next entry.
 # A side spec with a ``{}`` is a pattern for the side's NAME beside
-# ``path`` instead of a suffix (``swap_side``). Four callers, each
+# ``path`` instead of a suffix (``swap_side``). Three callers, each
 # keeping its own on-disk names:
 #
 # - persisted index (re)builds (operators/dedup_index.py bands+sigs,
@@ -156,15 +157,13 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 #   sequential in-place overwrites would leave table A from the new
 #   build and table B from the old one after a crash between them —
 #   new bands verified against old signatures, silently;
-# - unpartitioned compaction and index erasure
-#   (sources/maintenance.py): ``.compact-staging`` / ``.compact-trash``
-#   with Spark's ``_SUCCESS`` as the marker;
 # - the ingest node-dim snapshot (streaming/ingest.py): ``._next`` /
 #   ``._old`` with Spark's ``_SUCCESS``;
-# - one date dir of the hourly rollup (streaming/rollup.py: compaction
-#   and erasure repair): ``.{}.compact-staging`` / ``.{}.compact-trash``
-#   with Spark's ``_SUCCESS``. Partition discovery skips names that
-#   start with ``.``, so neither side is ever read as a date.
+# - ``rewrite_dirs`` below, the one rewrite of existing lake data
+#   (sources/maintenance.py: partition and index compaction, fact and
+#   index erasure; streaming/rollup.py and the erasure's rollup repair:
+#   date dirs of the hourly rollup), fed by ``read_partitions`` and
+#   matched to dirs by ``partition_dirs``.
 #
 # The filesystem follows the path: ``os`` for local paths, Hadoop
 # ``FileSystem`` for ``scheme://`` paths. Rename atomicity is the
@@ -175,8 +174,10 @@ BUILD_SWAP = (".build-staging", ".build-trash", "_BUILD_COMPLETE")
 
 
 def _swap_fs(path: str):
-    """(exists, rename, rmtree, touch) for the filesystem that
-    holds ``path``; ``touch`` creates an empty file durably."""
+    """(exists, rename, rmtree, touch, listdir) for the filesystem that
+    holds ``path``; ``touch`` creates an empty file durably, ``rename``
+    raises when it fails, ``listdir`` gives ``(name, bytes)`` per entry
+    (``None`` bytes for a dir) and is empty for a missing dir."""
     if "://" not in path:
         import shutil
 
@@ -185,11 +186,20 @@ def _swap_fs(path: str):
                 f.flush()
                 os.fsync(f.fileno())
 
+        def listdir(p):
+            if not os.path.isdir(p):
+                return []
+            with os.scandir(p) as it:
+                return [
+                    (e.name, None if e.is_dir() else e.stat().st_size) for e in it
+                ]
+
         return (
             os.path.exists,
             os.rename,
             lambda p: shutil.rmtree(p, ignore_errors=True),
             touch,
+            listdir,
         )
     from pyspark import SparkContext
 
@@ -197,14 +207,79 @@ def _swap_fs(path: str):
     hpath = sc._jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(sc._jsc.hadoopConfiguration())
 
+    def rename(a, b):
+        # Hadoop reports a failed rename by returning false: going on
+        # would publish an empty staging dir in place of live data
+        if not fs.rename(hpath(a), hpath(b)):
+            raise OSError(f"rename {a} -> {b} failed")
+
     return (
         lambda p: fs.exists(hpath(p)),
-        lambda a, b: fs.rename(hpath(a), hpath(b)),
+        rename,
         lambda p: fs.delete(hpath(p), True),
         # close() completes the file on the NameNode; hsync is not
         # supported by every FileSystem
         lambda p: fs.create(hpath(p), True).close(),
+        lambda p: [
+            (s.getPath().getName(), None if s.isDirectory() else s.getLen())
+            for s in fs.listStatus(hpath(p))
+        ] if fs.isDirectory(hpath(p)) else [],
     )
+
+
+def list_dir(path: str) -> list[tuple[str, int | None]]:
+    """``(name, bytes)`` of each entry of the dir ``path`` (``None`` bytes
+    for a subdir; empty for a missing dir), on the filesystem that holds
+    it: the one listing of maintained lake dirs."""
+    return _swap_fs(path)[4](path)
+
+
+def partition_dirs(path: str, column: str) -> dict[str | None, str]:
+    """{raw value: dir name} of the ``column=`` partition dirs directly
+    under ``path``: names unescaped as Spark's partition discovery reads
+    them (``p=a%3A1`` is ``a:1``), its null dir
+    (``__HIVE_DEFAULT_PARTITION__``) keyed None. The one place a
+    partition value is mapped to its dir."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext.getOrCreate()._jvm
+    utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    null_name = utils.DEFAULT_PARTITION_NAME()
+    head = column + "="
+    out: dict[str | None, str] = {}
+    for name, size in list_dir(path):
+        if size is None and name.startswith(head):
+            raw = name[len(head):]
+            out[None if raw == null_name else utils.unescapePathName(raw)] = name
+    return out
+
+
+def read_partitions(
+    spark: SparkSession, path: str, column: str, values: list | None = None
+) -> DataFrame:
+    """The rows of ``path``'s ``column=`` dirs — only those of ``values``
+    (``partition_dirs`` keys; a value without a dir reads nothing) when
+    given — with ``column`` read as the raw dir value (a string, None
+    for the null dir). Typed inference would not write a row back to
+    the dir it came from (``d=01`` reads as 1 and writes ``d=1``), and
+    a null value matches no ``isin`` filter; ``rewrite_dirs`` needs
+    both."""
+    root = path.rstrip("/")
+    if values is None:
+        paths = [root]
+    else:
+        dirs = partition_dirs(root, column)
+        paths = [f"{root}/{dirs[v]}" for v in values if v in dirs]
+        if not paths:
+            return spark.read.parquet(root).filter(F.lit(False))
+    reader = spark.read.option("basePath", root)
+    # one dir's schema: inference reads one footer anyway, and listing
+    # every dir twice would double the listing cost
+    schema = StructType([
+        StructField(column, StringType()) if f.name == column else f
+        for f in reader.parquet(paths[0]).schema
+    ])
+    return reader.schema(schema).parquet(*paths)
 
 
 def swap_side(path: str, spec: str) -> str:
@@ -223,7 +298,7 @@ def publish_swap(path: str, staging_suffix: str, trash_suffix: str, marker: str)
     already left it, so ``recover_swap`` can always tell a finished
     staging from a half-written one. Callers run ``recover_swap``
     first, at their entry."""
-    exists, rename, rmtree, touch = _swap_fs(path)
+    exists, rename, rmtree, touch, _ = _swap_fs(path)
     staging, trash = swap_side(path, staging_suffix), swap_side(path, trash_suffix)
     stamp = staging + "/" + marker
     if not exists(stamp):
@@ -250,7 +325,7 @@ def recover_swap(path: str, staging_suffix: str, trash_suffix: str, marker: str)
 
     Afterwards neither staging nor trash exists.
     """
-    exists, rename, rmtree, _ = _swap_fs(path)
+    exists, rename, rmtree, _, _ = _swap_fs(path)
     staging, trash = swap_side(path, staging_suffix), swap_side(path, trash_suffix)
     staged_ok = exists(staging + "/" + marker)
     has_path = exists(path)
@@ -270,6 +345,119 @@ def begin_staged_build(path: str) -> str:
     staging = path + BUILD_SWAP[0]
     os.makedirs(staging)
     return staging
+
+
+# Sides of ``rewrite_dirs``' swaps (Spark's ``_SUCCESS`` or the one
+# ``publish_swap`` stamps is the marker): an unpartitioned table is
+# staged beside itself; a partitioned table's one write job lands in
+# the hidden ``_REWRITE_JOB`` dir inside it, and each partition dir
+# moves from there to its hidden sibling before its swap. Partition
+# discovery skips names that start with ``.``, so no side is ever read
+# as a partition.
+REWRITE_SWAP = (".compact-staging", ".compact-trash", "_SUCCESS")
+_PARTITION_SWAP = (".{}.compact-staging", ".{}.compact-trash", "_SUCCESS")
+_REWRITE_JOB = ".compact-job"
+
+
+def recover_rewrite(path: str) -> bool:
+    """Converge every crash point of ``rewrite_dirs`` on ``path``: the
+    table's own swap, the swap of each partition dir its hidden sides
+    name, and a leftover job dir. Returns whether ``path`` exists.
+    Maintenance commands run it at entry, before they read the table:
+    a partition dir caught between its two renames is visible again
+    only afterwards."""
+    root = path.rstrip("/")
+    if not recover_swap(root, *REWRITE_SWAP):
+        return False
+    _, _, rmtree, _, listdir = _swap_fs(root)
+    sides = [spec.split("{}") for spec in _PARTITION_SWAP[:2]]
+    for name, _ in listdir(root):
+        for head, tail in sides:
+            if name.startswith(head) and name.endswith(tail) and "=" in name:
+                recover_swap(f"{root}/{name[len(head):-len(tail)]}", *_PARTITION_SWAP)
+    rmtree(f"{root}/{_REWRITE_JOB}")
+    return True
+
+
+def rewrite_dirs(
+    df: DataFrame,
+    path: str,
+    partition_by: tuple[str, ...] = (),
+    values: list = (),
+    expect_rows: int | None = None,
+    drop_empty: bool = False,
+) -> list:
+    """Replace data under ``path`` with ``df``'s rows, crash-safely: ONE
+    write job into hidden staging, then one ``publish_swap`` per dir.
+
+    - No ``partition_by``: ``path`` itself is replaced. With
+      ``expect_rows`` the staged row count is checked first, and a
+      mismatch raises with ``path`` untouched.
+    - Otherwise the ``partition_by[0]`` dir of each of ``values``
+      (``partition_dirs`` keys) gets that value's rows, laid out by the
+      other columns; rows of other values are not written. ``df``
+      should come from ``read_partitions``, so each row lands in the
+      dir it was read from. A value that staged no rows raises before
+      any swap, unless ``drop_empty``: then its dir is removed (a crash
+      mid-delete leaves only rows that were all to go).
+
+    ``df`` may read the dirs it replaces: none is renamed before the job
+    commits. Callers run ``recover_rewrite(path)`` at their entry.
+    Returns the values whose dirs hold rows afterwards."""
+    _, rename, rmtree, _, _ = _swap_fs(path)
+    root = path.rstrip("/")
+    if not partition_by:
+        staging = swap_side(root, REWRITE_SWAP[0])
+        df.write.parquet(staging)
+        if expect_rows is not None:
+            staged = df.sparkSession.read.parquet(staging).count()
+            if staged != expect_rows:
+                rmtree(staging)
+                raise RuntimeError(
+                    f"rewrite of {root}: {staged} rows staged, {expect_rows} "
+                    "expected; the table is left untouched"
+                )
+        publish_swap(root, *REWRITE_SWAP)
+        return []
+    job = f"{root}/{_REWRITE_JOB}"
+    df.write.partitionBy(*partition_by).parquet(job)
+    staged = partition_dirs(job, partition_by[0])
+    live = partition_dirs(root, partition_by[0])
+    emptied = [v for v in values if v not in staged and v in live]
+    if emptied and not drop_empty:
+        rmtree(job)
+        raise RuntimeError(
+            f"rewrite of {root}: no rows staged for {partition_by[0]} values "
+            f"{emptied}; every dir is left untouched"
+        )
+    for v in values:
+        if v in staged:
+            target = f"{root}/{live.get(v, staged[v])}"
+            rename(f"{job}/{staged[v]}", swap_side(target, _PARTITION_SWAP[0]))
+            publish_swap(target, *_PARTITION_SWAP)
+        elif v in live:
+            rmtree(f"{root}/{live[v]}")
+    rmtree(job)
+    return [v for v in values if v in staged]
+
+
+def values_frame(spark: SparkSession, rows: list[tuple], columns: str) -> DataFrame:
+    """A small driver-side table as a SQL ``VALUES`` relation named
+    ``columns`` (``"a, b"``), its values bound as parameters. It plans
+    as a ``LocalTableScan`` in the JVM; ``createDataFrame`` over a
+    Python list runs Python-worker tasks instead (a daemon start the
+    first time in a process)."""
+    # named markers: positional ``?`` ones mis-type inline tables of
+    # three or more rows in Spark 4.1.2
+    w = len(rows[0])
+    text = ", ".join(
+        "(" + ", ".join(f":p{i * w + j}" for j in range(w)) + ")"
+        for i in range(len(rows))
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {text} AS t({columns})",
+        args={f"p{i * w + j}": v for i, r in enumerate(rows) for j, v in enumerate(r)},
+    )
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

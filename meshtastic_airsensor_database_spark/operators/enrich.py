@@ -16,13 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..io_utils import values_frame
 from ..schemas import NODE_DIM_SCHEMA, NODE_DIM_SEED
 
 
 def seed_node_dim(spark: SparkSession) -> DataFrame:
-    """The reference's static fleet seed (AIRWISEv0.py:41-49)."""
-    rows = [(node, topic, name, None) for node, topic, name in NODE_DIM_SEED]
-    return spark.createDataFrame(rows, NODE_DIM_SCHEMA)
+    """The reference's static fleet seed (AIRWISEv0.py:41-49), as a
+    ``VALUES`` relation (``io_utils.values_frame``): the ingest's first
+    batch reads it before any snapshot exists, and it must not start
+    Python workers there."""
+    seed = values_frame(spark, NODE_DIM_SEED, "node, topic_id, longname")
+    return seed.select(
+        *[F.col(f.name).cast(f.dataType) for f in NODE_DIM_SCHEMA.fields[:3]],
+        F.lit(None).cast("timestamp").alias("updated_ts"),
+    )
 
 
 def node_dim_enrich(facts: DataFrame, node_dim: DataFrame) -> DataFrame:

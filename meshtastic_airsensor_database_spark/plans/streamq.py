@@ -52,7 +52,7 @@ def _replayed_out_dir(spark: SparkSession) -> str:
     out = ephemeral_dir("golden_replay_")
     paths = IngestPaths(landing_dir=str(FIXTURE_DIR), out_dir=out)
     batch = packet_batch_source(spark, str(FIXTURE_DIR))
-    process_packet_batch(batch, paths, with_counts=False)
+    process_packet_batch(batch, paths)
     _REPLAY_CACHE[key] = out
     return out
 

@@ -76,6 +76,11 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # A fixed set of JIT compiler threads: with the dynamic number,
+        # a compiler thread that exits folds its CPU into the process
+        # total, so trace.BatchTrace's JIT share goes negative for
+        # that trigger. Applies when this call starts the JVM.
+        .config("spark.driver.extraJavaOptions", "-XX:-UseDynamicNumberOfCompilerThreads")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -196,7 +196,6 @@ def idempotent_batch_processor(
         process_packet_batch(
             batch,
             paths,
-            with_counts=False,
             phase_clock=phase_clock,
             # (run, epoch)-scoped name of the rollup delta: the crash
             # window between the sinks below and the ledger commit
@@ -253,21 +252,18 @@ def _load_node_dim(spark: SparkSession, paths: IngestPaths) -> DataFrame:
 def process_packet_batch(
     batch: DataFrame,
     paths: IngestPaths,
-    with_counts: bool = True,
     phase_clock: dict | None = None,
     plan_probe=None,
     epoch_tag: str | None = None,
     input_deduped: bool = False,
-) -> dict[str, int]:
+) -> None:
     """Route one (micro-)batch of raw packet lines to the fact tables.
 
     Pure batch logic — the identical function serves foreachBatch, tests,
     and bulk replay (SURVEY §7.0 batch-core/streaming-shell stance).
-    Returns per-table appended row counts for observability. Counts ride
-    the WRITE action via ``Observation`` (``df.observe`` attaches an
-    aggregate to the existing job), so ``with_counts=True`` costs zero
-    extra jobs; ``with_counts=False`` skips even the metric wiring —
-    the streaming hot path, which discards counts, uses that.
+    Returns nothing: per-table row counts are read from the written
+    tables or the stream's progress events, never counted on the
+    write path.
 
     ``plan_probe`` (optional, tests only): called as ``(label, df)``
     with every DataFrame immediately before its action executes, so the
@@ -306,7 +302,6 @@ def process_packet_batch(
         "known_packet_type": F.col("packet.type").isNull()
         | F.col("packet.type").isin("telemetry", "text", "nodeinfo"),
     }
-    counts: dict[str, int] = {}
     pool = None  # sink-thunk executor; drained in the outer finally
     pending: list = []
     try:
@@ -438,22 +433,12 @@ def process_packet_batch(
                 # an audit log of CORRUPT rows has no id to key on)
                 F.lit(epoch_tag).cast("string").alias("epoch_tag"),
             )
-            obs_dlq = None
-            if with_counts:
-                from pyspark.sql import Observation
-
-                obs_dlq = Observation("ingest_quarantine")
-                dlq_out = dlq_out.observe(
-                    obs_dlq, F.count(F.lit(1)).alias("n")
-                )
             if plan_probe is not None:
                 plan_probe("dlq_write", dlq_out)
 
-            def dlq_thunk(dlq_out=dlq_out, obs_dlq=obs_dlq):
+            def dlq_thunk(dlq_out=dlq_out):
                 with _phase(phase_clock, "dlq_write"):
                     dlq_out.write.mode("append").json(paths.table("quarantine"))
-                if obs_dlq is not None:
-                    counts["quarantine"] = obs_dlq.get["n"]
 
         routed = route_packets(parsed)
 
@@ -547,18 +532,9 @@ def process_packet_batch(
             # OLD live snapshot and writes the staging ``._next`` dir —
             # distinct paths, so no self-overwrite hazard and no
             # lineage-pinning localCheckpoint needed (that extra job
-            # used to cost ~0.2s/batch). The nodeinfo count rides the
-            # write action as an observed metric. coalesce(1): the
-            # dimension is fleet-sized (it is broadcast on the enrich
-            # side) — one task, one file.
-            obs_nodeinfo = None
-            if with_counts:
-                from pyspark.sql import Observation
-
-                obs_nodeinfo = Observation("ingest_nodeinfo")
-                updates = updates.observe(
-                    obs_nodeinfo, F.count(F.lit(1)).alias("n")
-                )
+            # used to cost ~0.2s/batch). coalesce(1): the dimension is
+            # fleet-sized (it is broadcast on the enrich side) — one
+            # task, one file.
             # Stage-then-swap: an in-place overwrite would DELETE the
             # live dir before the new files commit — a crash in that
             # window would destroy the snapshot and silently reset the
@@ -573,14 +549,18 @@ def process_packet_batch(
                 staged.write.mode("overwrite").parquet(
                     paths.table("node_dim") + _DIM_SWAP[0]
                 )
-            if obs_nodeinfo is not None:
-                counts["nodeinfo"] = obs_nodeinfo.get["n"]
             with _phase(phase_clock, "dim_write"):
                 publish_swap(paths.table("node_dim"), *_DIM_SWAP)
                 # facts in this batch enrich against the batch's own
                 # nodeinfo (the reference's callback ordering): re-read
                 # the freshly promoted snapshot — its files outlive the
                 # batch, so downstream broadcast lineage stays valid.
+                # Enriching against dim_upsert_latest_wins(dim, updates)
+                # in the plan instead would skip this read but put the
+                # latest-wins window into every fact job: a prototype
+                # measured perfbench ingest_trickle cpu_ms_per_op
+                # 2590/2640/2660 ms against 2150/1980/2025 ms for this
+                # read (3 alternating pairs, seeds 11-13, 4 cores).
                 dim = spark.read.schema(NODE_DIM_SCHEMA).parquet(
                     paths.table("node_dim")
                 )
@@ -595,36 +575,23 @@ def process_packet_batch(
                 # rollup maintenance (an empty partitioned write emits
                 # no data files anyway — skipping changes no on-disk
                 # state, only removes the job)
-                if with_counts:
-                    counts[table] = 0
                 continue
             facts = node_dim_enrich(routed[slice_name], dim)
             # partition by event date: prunable, low-cardinality (SURVEY §4.2)
             facts = facts.withColumn("event_date", F.to_date("event_ts"))
-            obs = None
-            if with_counts:
-                # observe() rides the write job below — the count is a
-                # metric of the SAME action, not a second computation
-                from pyspark.sql import Observation
-
-                obs = Observation(f"ingest_{table}")
-                facts = facts.observe(obs, F.count(F.lit(1)).alias("n"))
             if plan_probe is not None:
                 plan_probe(f"facts_{table}", facts)
 
-            def route_thunk(table=table, facts=facts, obs=obs):
+            def route_thunk(table=table, facts=facts):
                 with _phase(phase_clock, f"facts_{table}"):
                     parquet_table_sink(
                         facts, paths.table(table), partition_by=("event_date",)
                     )
-                if obs is not None:
-                    counts[table] = obs.get["n"]
 
             _run(route_thunk)
 
         for fut in pending:
             fut.result()  # re-raise the first sink failure
-        return counts
     finally:
         # Drain sink threads FIRST (even when a plan build raised and
         # the result loop above never ran) so no job still races the

@@ -28,10 +28,11 @@ Scale contract (the reason this shape survives 1000 executors):
   (hours x keys), never raw-fact volume, so a read costs deltas x
   grain.
 - ``compact_rollup`` (``maintain compact-rollup``) bounds the delta
-  count: it folds each date's deltas into one leaf and swaps the date
-  dir in crash-safely (``io_utils.publish_swap``; staging and trash
-  are hidden from partition discovery). It never folds a run's newest
-  epoch — the one delta a crashed stream can replay.
+  count: it folds each date's deltas into one leaf in one write job
+  and swaps the date dirs in crash-safely (``io_utils.rewrite_dirs``;
+  staging and trash are hidden from partition discovery). It never
+  folds a run's newest epoch — the one delta a crashed stream can
+  replay.
 - On an object store a production deployment would swap the parquet
   leaves for a transactional table format (Delta/Iceberg) to get
   atomic commits; the maintenance algebra — partial aggs, epoch-keyed
@@ -47,14 +48,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io_utils import publish_swap, recover_swap, swap_side
+from ..io_utils import (
+    list_dir, partition_dirs, read_partitions, recover_rewrite, rewrite_dirs,
+)
 
 ROLLUP_PARTITION_COL = "rollup_date"
 DELTA_COL = "rollup_delta"
 _AGG_COLS = ("sum_value", "cnt", "min_value", "max_value", "distinct_sketch")
-# staging, trash, marker of one date dir's swap: hidden siblings
-# (a leading "." keeps them out of partition discovery)
-_DATE_SWAP = (".{}.compact-staging", ".{}.compact-trash", "_SUCCESS")
 
 
 def _partials(
@@ -185,47 +185,28 @@ def maintain_rollup(
     return tag
 
 
-def _fs(spark: SparkSession, path: str):
-    """(Hadoop FileSystem of ``path``, Path constructor)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 class RollupLayoutError(RuntimeError):
     """The rollup holds files that no delta owns, so Spark cannot read
     it as one table."""
 
 
-def _date_deltas(spark: SparkSession, rollup_path: str) -> dict[str, list[str]]:
+def _date_deltas(rollup_path: str) -> dict[str, list[str]]:
     """{date: [delta tags]} of the rollup, after converging every
-    crashed date swap (a kill between its two renames leaves the date
-    only in its hidden trash). Raises ``RollupLayoutError`` naming each
-    date dir that holds data files outside any delta leaf (the
-    one-level layout written before deltas): read together with deltas,
-    such a dir fails partition discovery."""
-    fs, hpath = _fs(spark, rollup_path)
-    if not fs.exists(hpath(rollup_path)):
+    crashed date swap (``recover_rewrite``: a kill between its two
+    renames leaves the date only in its hidden trash). Raises
+    ``RollupLayoutError`` naming each date dir that holds data files
+    outside any delta leaf (the one-level layout written before
+    deltas): read together with deltas, such a dir fails partition
+    discovery."""
+    if not recover_rewrite(rollup_path):
         return {}
-    for st in fs.listStatus(hpath(rollup_path)):
-        name = st.getPath().getName()
-        for spec in _DATE_SWAP[:2]:
-            head, _, tail = spec.partition("{}")
-            if name.startswith(head + ROLLUP_PARTITION_COL) and name.endswith(tail):
-                date_dir = f"{rollup_path}/{name[len(head):-len(tail)]}"
-                recover_swap(date_dir, *_DATE_SWAP)
     out, loose = {}, []
-    for st in fs.listStatus(hpath(rollup_path)):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(ROLLUP_PARTITION_COL + "="):
-            children = fs.listStatus(st.getPath())
-            out[name.split("=", 1)[1]] = [
-                c.getPath().getName().split("=", 1)[1]
-                for c in children
-                if c.getPath().getName().startswith(DELTA_COL + "=")
-            ]
-            if any(c.isFile() and not c.getPath().getName().startswith(("_", "."))
-                   for c in children):
-                loose.append(f"{rollup_path}/{name}")
+    for date, name in partition_dirs(rollup_path, ROLLUP_PARTITION_COL).items():
+        date_dir = f"{rollup_path}/{name}"
+        out[date] = list(partition_dirs(date_dir, DELTA_COL))
+        if any(n is not None and not c.startswith(("_", "."))
+               for c, n in list_dir(date_dir)):
+            loose.append(date_dir)
     if loose:
         raise RollupLayoutError(
             f"rollup {rollup_path}: data files outside any {DELTA_COL}= leaf "
@@ -233,37 +214,6 @@ def _date_deltas(spark: SparkSession, rollup_path: str) -> dict[str, list[str]]:
             f"{', '.join(sorted(loose))}; rebuild these dates from the facts"
         )
     return out
-
-
-def replace_dates(
-    spark: SparkSession, rollup_path: str, dates: list[str], build
-) -> None:
-    """Replace the dir of each date in ``dates`` with that date's rows
-    of ``build()`` (rollup rows; without a delta column they form one
-    fresh compacted delta), one crash-safe swap per date; a date left
-    with no rows loses its dir. ``build`` runs after every crashed swap of those dates has
-    converged, since it may read them. The swaps rename the dirs the
-    ingest appends to: run this with the ingest stopped, and re-run a
-    crashed call before the ingest restarts."""
-    root = rollup_path.rstrip("/")
-    date_dirs = {d: f"{root}/{ROLLUP_PARTITION_COL}={d}" for d in dates}
-    for date_dir in date_dirs.values():
-        recover_swap(date_dir, *_DATE_SWAP)
-    rows = build()
-    if DELTA_COL not in rows.columns:
-        rows = rows.withColumn(DELTA_COL, F.lit(_fresh_delta("c")))
-    rows = rows.localCheckpoint(eager=True)  # may read the dirs it replaces
-    day = F.col(ROLLUP_PARTITION_COL).cast("string")
-    nonempty = {r[0] for r in rows.select(day).distinct().collect()}
-    fs, hpath = _fs(spark, root)
-    for d, date_dir in date_dirs.items():
-        if d not in nonempty:
-            fs.delete(hpath(date_dir), True)
-            continue
-        rows.filter(day == d).drop(ROLLUP_PARTITION_COL).write.partitionBy(
-            DELTA_COL
-        ).parquet(swap_side(date_dir, _DATE_SWAP[0]))
-        publish_swap(date_dir, *_DATE_SWAP)
 
 
 @dataclass(frozen=True)
@@ -279,9 +229,13 @@ def compact_rollup(spark: SparkSession, rollup_path: str) -> RollupCompactionRep
     """Fold each date's deltas into ONE ``c``-tagged leaf, keeping
     apart each run's newest epoch delta (folding it would let a replay
     of that epoch double-count). Keys are the columns that are neither
-    aggregates nor partition columns. Idempotent; same rows served."""
+    aggregates nor partition columns. One write job for all the dates
+    (``rewrite_dirs``), then one swap per date dir: the swaps rename
+    the dirs the ingest appends to, so run this with the ingest
+    stopped, and re-run a crashed call before the ingest restarts.
+    Idempotent; same rows served."""
     root = rollup_path.rstrip("/")
-    deltas = _date_deltas(spark, root)
+    deltas = _date_deltas(root)
     kept = _replayable(t for tags in deltas.values() for t in tags)
     fold = {}  # date -> the deltas folded into its new leaf
     for d, tags in deltas.items():
@@ -289,10 +243,8 @@ def compact_rollup(spark: SparkSession, rollup_path: str) -> RollupCompactionRep
         if len(foldable) > 1:
             fold[d] = foldable
 
-    def build() -> DataFrame:
-        parts = spark.read.option("basePath", root).parquet(
-            *[f"{root}/{ROLLUP_PARTITION_COL}={d}" for d in fold]
-        )
+    if fold:
+        parts = read_partitions(spark, root, ROLLUP_PARTITION_COL, list(fold))
         keys = [
             c for c in parts.columns
             if c not in ("hour_ts", *_AGG_COLS, ROLLUP_PARTITION_COL, DELTA_COL)
@@ -300,10 +252,10 @@ def compact_rollup(spark: SparkSession, rollup_path: str) -> RollupCompactionRep
         leaf = F.when(F.col(DELTA_COL).isin(list(kept)), F.col(DELTA_COL)).otherwise(
             F.lit(_fresh_delta("c"))
         )
-        return _merge(parts.withColumn(DELTA_COL, leaf), [*keys, DELTA_COL])
-
-    if fold:
-        replace_dates(spark, root, list(fold), build)
+        rewrite_dirs(
+            _merge(parts.withColumn(DELTA_COL, leaf), [*keys, DELTA_COL]),
+            root, (ROLLUP_PARTITION_COL, DELTA_COL), list(fold),
+        )
     after = [len(tags) - len(fold[d]) + 1 if d in fold else len(tags)
              for d, tags in deltas.items()]
     return RollupCompactionReport(

@@ -26,6 +26,24 @@ def test_enrich_left_semantics(spark):
     assert len(out) == 2  # left join never drops facts
 
 
+def test_seed_node_dim_plans_in_the_jvm(spark):
+    """The seed is a VALUES relation: its plan is one LocalTableScan,
+    with no RDD scan (createDataFrame over a Python list) and nothing
+    that starts Python workers; its schema is the node dimension's."""
+    from meshtastic_airsensor_database_spark.schemas import NODE_DIM_SCHEMA, NODE_DIM_SEED
+
+    seed = seed_node_dim(spark)
+    plan = seed._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "RDD" not in plan and "Python" not in plan and "ArrowEval" not in plan, plan
+    assert [(f.name, f.dataType) for f in seed.schema.fields] == [
+        (f.name, f.dataType) for f in NODE_DIM_SCHEMA.fields
+    ]
+    assert sorted((r.node, r.topic_id, r.longname, r.updated_ts) for r in seed.collect()) == sorted(
+        (n, t, name, None) for n, t, name in NODE_DIM_SEED
+    )
+
+
 def test_upsert_latest_wins(spark):
     dim = seed_node_dim(spark)
     t1 = dt.datetime(2024, 1, 1, 10, 0)

@@ -75,6 +75,72 @@ def test_compaction_noop_on_healthy_table(spark, tmp_path):
     assert _files_of(path, "d=a") == files
 
 
+def test_compaction_and_erasure_keep_every_partition_dir_in_place(spark, tmp_path):
+    """Dir values that typed partition discovery would not write back —
+    the null dir (``__HIVE_DEFAULT_PARTITION__``, where ingest keeps
+    null-``event_ts`` facts), ``d=01`` (inferred as 1, written as
+    ``d=1``) and an escaped name (``a:1`` lives in ``d=a%3A1``) — are
+    compacted in place with every row kept; an erasure removes exactly
+    the subject's rows from the null dir, and one that empties the
+    escaped dir removes that dir."""
+    from meshtastic_airsensor_database_spark.sources.maintenance import erase_key
+
+    path = str(tmp_path / "t")
+    spark.range(300).select(
+        F.col("id"),
+        F.when(F.col("id") % 3 == 0, F.lit(None))
+        .when(F.col("id") % 3 == 1, "01")
+        .otherwise("a:1")
+        .alias("d"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
+    ).repartition(4).write.partitionBy("d").parquet(path)
+    dirs = ["d=01", "d=__HIVE_DEFAULT_PARTITION__", "d=a%3A1"]
+    assert sorted(n for n in os.listdir(path) if n.startswith("d=")) == dirs
+    before = sorted(r.id for r in spark.read.parquet(path).collect())
+
+    rep = compact_partitions(spark, path, "d", small_file_mb=1.0)
+    assert rep.partitions_compacted == 3 and rep.files_after == 3
+    assert sorted(n for n in os.listdir(path) if n.startswith("d=")) == dirs
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == before
+
+    rep = erase_key(spark, path, "d", "id", 3)  # id 3 sits in the null dir
+    assert (rep.rows_deleted, rep.fact_partitions_rewritten) == (1, 1)
+    rep = erase_key(spark, path, "d", "d", "a:1")
+    assert (rep.rows_deleted, rep.fact_partitions_removed) == (100, 1)
+    assert sorted(n for n in os.listdir(path) if n.startswith("d=")) == dirs[:2]
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [
+        i for i in before if i != 3 and i % 3 != 2
+    ]
+
+
+def test_rewrite_refuses_to_empty_a_dir_unless_asked(spark, tmp_path):
+    """A listed value that stages no rows raises before any swap (a
+    compaction never empties a partition, so an empty one is a bug that
+    would delete data), and every dir is left as it was; with
+    ``drop_empty`` (erasure) the dir is removed."""
+    from meshtastic_airsensor_database_spark.io_utils import (
+        read_partitions,
+        rewrite_dirs,
+    )
+
+    path = str(tmp_path / "t")
+    spark.range(20).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("d")
+    ).repartition(2).write.partitionBy("d").parquet(path)
+    files = _files_of(path, "d=0")
+    rows = read_partitions(spark, path, "d", ["0", "1"]).filter(F.col("d") == "1")
+    with pytest.raises(RuntimeError, match="no rows staged"):
+        rewrite_dirs(rows, path, ("d",), ["0", "1"])
+    assert _files_of(path, "d=0") == files
+    assert sorted(
+        n for n in os.listdir(path) if os.path.isdir(os.path.join(path, n))
+    ) == ["d=0", "d=1"]
+
+    assert rewrite_dirs(rows, path, ("d",), ["0", "1"], drop_empty=True) == ["1"]
+    assert not os.path.exists(os.path.join(path, "d=0"))
+    assert spark.read.parquet(path).count() == 10
+
+
 def _erasure_fixture(spark, tmp_path):
     """Partitioned facts for three users; user 7 owns ALL of date
     2024-01-03 (the full-partition edge) and parts of 01 and 02."""
@@ -325,7 +391,7 @@ def test_erase_key_crash_before_fact_rewrite_recovers(spark, tmp_path, monkeypat
     def _killed(*a, **k):
         raise RuntimeError("killed before the fact rewrite")
 
-    monkeypatch.setattr(m, "_erase_fact_rows", _killed)
+    monkeypatch.setattr(m, "_rewrite_partitions_without", _killed)
     with pytest.raises(RuntimeError, match="killed before"):
         m.erase_key(
             spark, fact_path, "event_date", "user_id", 7,
@@ -390,27 +456,151 @@ def test_erase_key_rebuild_preserves_distinct_sketch(spark, tmp_path):
     assert est.agg(F.max("est")).collect()[0][0] <= 2  # user 7 is gone
 
 
-def test_overwrite_partitions_restores_unset_conf(spark, tmp_path):
-    """r4-ADVICE fix: when partitionOverwriteMode was UNSET before the
-    dynamic-overwrite write, it must be unset again afterwards — a
-    leaked 'dynamic' changes later unrelated overwrite semantics."""
-    from meshtastic_airsensor_database_spark.sources.maintenance import (
-        _overwrite_partitions,
-    )
+def test_maintain_commands_never_set_partition_overwrite_mode(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """Every maintain command rewrites through io_utils.rewrite_dirs'
+    staged swaps: none sets or unsets the session's
+    partitionOverwriteMode (a toggled session conf changes the
+    overwrite semantics of every other writer of the session), and each
+    one here does rewrite something, so the check is not vacuous."""
+    import json
 
-    key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.unset(key)
-    df = spark.range(10).select(
-        F.col("id"), (F.col("id") % 2).alias("p")
-    )
-    _overwrite_partitions(df, str(tmp_path / "t"), "p")
-    assert spark.conf.get(key, None) is None
+    from pyspark.sql.conf import RuntimeConfig
 
-    # and when it WAS set, the prior value is restored
-    spark.conf.set(key, "static")
-    _overwrite_partitions(df, str(tmp_path / "t2"), "p")
-    assert spark.conf.get(key) == "static"
-    spark.conf.unset(key)
+    from meshtastic_airsensor_database_spark.cli.maintain import main as mmain
+    from meshtastic_airsensor_database_spark.operators.decon_index import (
+        build_decon_index,
+        extend_decon_index,
+    )
+    from meshtastic_airsensor_database_spark.streaming.rollup import maintain_rollup
+
+    facts = str(tmp_path / "frag")
+    spark.range(200).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("d")
+    ).repartition(4).write.partitionBy("d").parquet(facts)
+    fact_path, rollup_path = _erasure_fixture(spark, tmp_path)
+    maintain_rollup(spark.read.parquet(fact_path), rollup_path, keys=["user_id"])
+    idx = str(tmp_path / "decon_idx")
+    emb = "vec_id long, embedding array<double>"
+    build_decon_index(spark.createDataFrame([(1, [1.0, 0.0])], emb), idx)
+    extend_decon_index(spark.createDataFrame([(2, [0.0, 1.0])], emb), idx)
+    vectors = str(tmp_path / "ivf" / "vectors")
+    spark.createDataFrame(
+        [(10, 0), (11, 0), (12, 1)], "vec_id long, cluster int"
+    ).write.partitionBy("cluster").parquet(vectors)
+
+    touched = []
+    for name in ("set", "unset"):
+        def spy(self, key, *args, _orig=getattr(RuntimeConfig, name)):
+            touched.append(key)
+            return _orig(self, key, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, spy)
+    capsys.readouterr()
+    for argv in (
+        ["compact-partitions", facts, "--partition-by", "d", "--small-file-mb", "1"],
+        ["compact-rollup", rollup_path],
+        ["compact-index", idx],
+        ["erase-key", fact_path, "--partition-by", "event_date",
+         "--key-col", "user_id", "--key-value", "7",
+         "--rollup-path", rollup_path, "--rollup-keys", "user_id"],
+        ["recover-erasure", fact_path],
+        ["erase-index", idx, "--ids", "1"],
+        ["erase-index", str(tmp_path / "ivf"), "--ids", "10"],
+    ):
+        assert mmain(argv, spark=spark) == 0, argv
+    reports = [json.loads(ln) for ln in capsys.readouterr().out.splitlines()]
+    assert reports[0]["partitions_compacted"] == 2
+    assert reports[1]["dates_compacted"] == 4
+    assert all(r["compacted"] for r in reports[2]["subtables"].values())
+    assert reports[3]["rows_deleted"] == 4
+    assert reports[5]["removed"]["vecs"] == 1 and reports[5]["removed"]["bands"] > 0
+    assert reports[6]["partitions_rewritten"] == 1
+    assert not [k for k in touched if "partitionOverwriteMode" in k], touched
+
+
+class _Killed(RuntimeError):
+    pass
+
+
+def _rows(spark, path: str, where=None) -> list[str]:
+    df = spark.read.parquet(path)
+    if where is not None:
+        df = df.filter(where)
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.mark.parametrize("staging_complete", [True, False])
+@pytest.mark.parametrize("command", ["compact_partitions", "erase_key", "erase_from_index"])
+def test_rewrite_killed_after_live_dir_moved_aside(
+    spark, tmp_path, monkeypatch, command, staging_complete
+):
+    """Kill a rewrite inside its first partition swap, right after the
+    live dir moved to its hidden trash — once with the staged partition
+    complete (recovery finishes the swap), once without (recovery rolls
+    back) — then re-run the command: compaction keeps every row,
+    erasure removes exactly the subject's rows, and no hidden staging,
+    trash or job dir is left."""
+    import meshtastic_airsensor_database_spark.io_utils as io
+    import meshtastic_airsensor_database_spark.sources.maintenance as m
+
+    if command == "compact_partitions":
+        root = str(tmp_path / "facts")
+        spark.range(2000).select(
+            F.col("id"), (F.col("id") % 2).cast("string").alias("d")
+        ).repartition(8).write.partitionBy("d").parquet(root)
+        want = _rows(spark, root)
+
+        def run():
+            return m.compact_partitions(spark, root, "d", small_file_mb=1.0)
+    elif command == "erase_key":
+        root, _ = _erasure_fixture(spark, tmp_path)
+        want = _rows(spark, root, F.col("user_id") != 7)
+
+        def run():
+            return m.erase_key(spark, root, "event_date", "user_id", 7)
+    else:
+        from meshtastic_airsensor_database_spark.operators.vindex import (
+            build_ivf_index,
+        )
+
+        idx = str(tmp_path / "ivf_idx")
+        build_ivf_index(
+            spark.createDataFrame(
+                [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (10, [0.1, 0.0]), (11, [10.0, 9.9])],
+                "vec_id long, embedding array<double>",
+            ),
+            idx, n_centroids=2, n_iters=1,
+        )
+        root = os.path.join(idx, "vectors")
+        want = _rows(spark, root, F.col("vec_id") != 10)
+
+        def run():
+            return m.erase_from_index(spark, idx, [10])
+
+    def killed_publish(path, staging_spec, trash_spec, marker):
+        if staging_complete:
+            open(os.path.join(io.swap_side(path, staging_spec), marker), "w").close()
+        os.rename(path, io.swap_side(path, trash_spec))
+        raise _Killed(path)
+
+    monkeypatch.setattr(io, "publish_swap", killed_publish)
+    with pytest.raises(_Killed):
+        run()
+    monkeypatch.undo()
+    trash = [n for n in os.listdir(root) if n.endswith(".compact-trash")]
+    assert len(trash) == 1
+    assert not os.path.exists(os.path.join(root, trash[0][1 : -len(".compact-trash")]))
+
+    run()
+    assert _rows(spark, root) == want
+    assert not [
+        n for n in os.listdir(root)
+        if n.startswith(".") and os.path.isdir(os.path.join(root, n))
+    ]
+    if command == "compact_partitions":
+        assert len(_files_of(root, "d=0")) == len(_files_of(root, "d=1")) == 1
 
 
 # --- unpartitioned index compaction ------------------------------------------
@@ -957,3 +1147,34 @@ def test_swap_on_hadoop_filesystem_path(spark, tmp_path):
     assert recover_swap(uri, *swap)
     assert sorted(os.listdir(tmp_path)) == ["tbl"]
     assert spark.read.parquet(uri).count() == 5
+
+
+def test_failed_hadoop_rename_raises(monkeypatch):
+    """Hadoop's ``FileSystem.rename`` reports failure by returning
+    false; the swap's rename raises instead, so ``publish_swap`` never
+    goes on to swap an empty staging dir in for live data."""
+    from types import SimpleNamespace
+
+    import pyspark
+
+    from meshtastic_airsensor_database_spark.io_utils import _swap_fs
+
+    class Path:
+        def __init__(self, p):
+            self.p = p
+
+        def getFileSystem(self, conf):
+            return SimpleNamespace(rename=lambda a, b: False)
+
+    jvm = SimpleNamespace(org=SimpleNamespace(apache=SimpleNamespace(
+        hadoop=SimpleNamespace(fs=SimpleNamespace(Path=Path))
+    )))
+    sc = SimpleNamespace(
+        _jvm=jvm, _jsc=SimpleNamespace(hadoopConfiguration=lambda: None)
+    )
+    monkeypatch.setattr(
+        pyspark.SparkContext, "getOrCreate", classmethod(lambda cls, conf=None: sc)
+    )
+    rename = _swap_fs("hdfs://nn/lake/t")[1]
+    with pytest.raises(OSError, match="rename hdfs://nn/lake/t/a"):
+        rename("hdfs://nn/lake/t/a", "hdfs://nn/lake/t/.a.compact-staging")

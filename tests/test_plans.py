@@ -737,7 +737,7 @@ def test_streaming_foreachbatch_inner_plans_audit(spark, tmp_path):
     def processor(batch, epoch_id):
         # epoch_tag mirrors the real idempotent_batch_processor, so
         # the audited rollup_delta plan is the epoch-named one
-        process_packet_batch(batch, paths, with_counts=False,
+        process_packet_batch(batch, paths,
                              plan_probe=probe, epoch_tag=f"audit:{epoch_id}")
 
     q = run_ingest_stream(

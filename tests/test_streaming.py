@@ -43,12 +43,13 @@ def test_process_packet_batch_routes_all_tables(spark, tmp_path):
     write_packet_fixture(landing, as_json_lines(), "batch-0.jsonl")
     paths = IngestPaths(landing_dir=landing, out_dir=out)
 
-    counts = process_packet_batch(packet_batch_source(spark, landing), paths)
+    process_packet_batch(packet_batch_source(spark, landing), paths)
 
-    assert counts["airwise_data"] == 1
-    assert counts["battery_data"] == 1
-    assert counts["airwise_datav1"] == 1
-    assert counts["nodeinfo"] == 1
+    for table in ("airwise_data", "battery_data", "airwise_datav1"):
+        assert spark.read.parquet(paths.table(table)).count() == 1, table
+    # the one nodeinfo packet stamped its node's row of the snapshot
+    dim = spark.read.parquet(paths.table("node_dim"))
+    assert dim.filter(F.col("updated_ts").isNotNull()).count() == 1
 
     env = spark.read.parquet(paths.table("airwise_data"))
     row = env.collect()[0]
@@ -69,8 +70,8 @@ def test_process_packet_batch_dedups_packet_id(spark, tmp_path):
     write_packet_fixture(landing, dup, "batch-0.jsonl")
     paths = IngestPaths(landing_dir=landing, out_dir=out)
 
-    counts = process_packet_batch(packet_batch_source(spark, landing), paths)
-    assert counts["airwise_data"] == 1
+    process_packet_batch(packet_batch_source(spark, landing), paths)
+    assert spark.read.parquet(paths.table("airwise_data")).count() == 1
 
 
 def test_dedup_key_is_composite_from_and_id(spark, tmp_path):
@@ -88,8 +89,8 @@ def test_dedup_key_is_composite_from_and_id(spark, tmp_path):
     )
     paths = IngestPaths(landing_dir=landing, out_dir=out)
 
-    counts = process_packet_batch(packet_batch_source(spark, landing), paths)
-    assert counts["airwise_data"] == 2
+    process_packet_batch(packet_batch_source(spark, landing), paths)
+    assert spark.read.parquet(paths.table("airwise_data")).count() == 2
 
 
 def test_golden_replay_queries_semantics(spark):
@@ -883,7 +884,7 @@ def test_quarantine_view_is_exactly_once_under_epoch_replay(spark, tmp_path):
         if ledger.committed(epoch_id):
             return
         process_packet_batch(
-            batch, paths, with_counts=False,
+            batch, paths,
             epoch_tag=f"{ledger.run_tag()}:{epoch_id}",
         )
         raise RuntimeError("planted crash: after quarantine append, before ledger commit")
@@ -929,8 +930,8 @@ def test_quarantine_view_passes_untagged_rows_through(spark, tmp_path):
     write_packet_fixture(landing, [MALFORMED_JSON], "b0.jsonl")
     paths = IngestPaths(landing_dir=landing, out_dir=out)
     batch = packet_batch_source(spark, landing)
-    process_packet_batch(batch, paths, with_counts=False)  # no epoch_tag
-    process_packet_batch(batch, paths, with_counts=False)  # genuine re-ingest
+    process_packet_batch(batch, paths)  # no epoch_tag
+    process_packet_batch(batch, paths)  # genuine re-ingest
 
     assert spark.read.json(paths.table("quarantine")).count() == 2
     rows = quarantine_view(spark, paths.table("quarantine")).collect()
@@ -1127,13 +1128,9 @@ def test_empty_routes_are_guarded_not_written(spark, tmp_path):
         "b0.jsonl",
     )
     paths = IngestPaths(landing_dir=landing, out_dir=out)
-    counts = process_packet_batch(packet_batch_source(spark, landing), paths)
+    process_packet_batch(packet_batch_source(spark, landing), paths)
 
-    assert counts["quarantine"] == 2
-    assert counts["airwise_data"] == 0
-    assert counts["battery_data"] == 0
-    assert counts["airwise_datav1"] == 0
-    assert "nodeinfo" not in counts
+    assert spark.read.json(paths.table("quarantine")).count() == 2
     # the guard means no sink job ran: no fact/dim dirs exist at all
     for table in ("airwise_data", "battery_data", "airwise_datav1",
                   "node_dim", "airwise_hourly"):
@@ -1170,7 +1167,7 @@ def test_mid_batch_crash_after_ledger_commit_is_exactly_once(spark, tmp_path):
         ledger = ledger_box["l"]
         if ledger.committed(epoch_id):
             return
-        process_packet_batch(batch, paths, with_counts=False)
+        process_packet_batch(batch, paths)
         ledger.commit(epoch_id)
         raise RuntimeError("planted crash: after ledger commit, before checkpoint")
 
@@ -1235,7 +1232,7 @@ def test_mid_batch_crash_with_stateful_dedup_recovers_state(spark, tmp_path):
         ledger = ledger_box["l"]
         if ledger.committed(epoch_id):
             return
-        process_packet_batch(batch, paths, with_counts=False)
+        process_packet_batch(batch, paths)
         ledger.commit(epoch_id)
         raise RuntimeError("planted crash: stateful topology")
 
@@ -1299,7 +1296,7 @@ def test_mid_batch_crash_before_ledger_commit_is_absorbed_by_dedup(
         ledger = EpochLedger(batch.sparkSession, paths.ledger_dir)
         if ledger.committed(epoch_id):
             return
-        process_packet_batch(batch, paths, with_counts=False)
+        process_packet_batch(batch, paths)
         raise RuntimeError("planted crash: after fact write, before ledger commit")
 
     q = (
@@ -1350,12 +1347,11 @@ def test_pooled_sink_failure_propagates_and_batch_recovers(
 
     monkeypatch.setattr(ingest_mod, "parquet_table_sink", failing)
     with pytest.raises(RuntimeError, match="planted sink failure"):
-        process_packet_batch(batch, paths, with_counts=False)
+        process_packet_batch(batch, paths)
 
     # clean retry (the replay the ledger would trigger) fully succeeds
     monkeypatch.setattr(ingest_mod, "parquet_table_sink", orig)
-    counts = process_packet_batch(batch, paths)
-    assert counts["airwise_datav1"] == 1
+    process_packet_batch(batch, paths)
     assert spark.read.parquet(paths.table("airwise_datav1")).count() == 1
 
 
@@ -1425,9 +1421,7 @@ def test_pooled_sink_jobs_inherit_job_group(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("ingest-jobgroup-test", "pooled sink attribution", True)
     try:
-        process_packet_batch(
-            packet_batch_source(spark, landing), paths, with_counts=False
-        )
+        process_packet_batch(packet_batch_source(spark, landing), paths)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -1473,7 +1467,7 @@ def test_rollup_is_idempotent_under_epoch_replay(spark, tmp_path):
         if ledger.committed(epoch_id):
             return
         process_packet_batch(
-            batch, paths, with_counts=False,
+            batch, paths,
             epoch_tag=f"{ledger.run_tag()}:{epoch_id}",
         )
         raise RuntimeError("planted crash: after rollup fold, before ledger commit")
@@ -1709,9 +1703,8 @@ def test_quarantine_captures_corrupt_and_unknown_packets(spark, tmp_path):
     write_packet_fixture(landing, as_json_lines(), "batch-0.jsonl")
     paths = IngestPaths(landing_dir=landing, out_dir=out)
 
-    counts = process_packet_batch(packet_batch_source(spark, landing), paths)
+    process_packet_batch(packet_batch_source(spark, landing), paths)
 
-    assert counts["quarantine"] == 2
     dlq = spark.read.json(paths.table("quarantine"))
     rows = {tuple(sorted(r["violations"])): r["raw"] for r in dlq.collect()}
     assert ("parseable_json",) in rows  # truncated JSON
@@ -2091,7 +2084,7 @@ def test_replay_from_archive_rebuilds_identical_facts(spark, tmp_path):
     if any(n.endswith(".jsonl") for n in os.listdir(landing)):
         replay = replay.unionByName(packet_batch_source(spark, landing))
     paths2 = IngestPaths(landing_dir=landing, out_dir=out2)
-    process_packet_batch(replay, paths2, with_counts=False)
+    process_packet_batch(replay, paths2)
 
     rebuilt = snapshot(paths2)
     assert rebuilt == original

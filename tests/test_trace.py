@@ -104,3 +104,13 @@ def test_batch_trace_records_every_trigger(spark, tmp_path):
         assert 0 < r["body_s"] <= r["batch_duration_ms"] / 1000
     named = sum(r["cpu_python_s"] + r["cpu_jvm_s"] + r["cpu_children_s"] for r in recs)
     assert named >= 0.9 * (cpu1 - cpu0), (named, cpu1 - cpu0)
+
+
+def test_session_pins_jit_compiler_threads(spark):
+    """get_spark starts the driver JVM with a fixed set of JIT compiler
+    threads, so none exits with its CPU folded into the process total
+    (BatchTrace's cpu_jit_s would go negative for that trigger)."""
+    args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    )
+    assert "-XX:-UseDynamicNumberOfCompilerThreads" in args, args

@@ -171,12 +171,9 @@ def ingest_throughput(spark, tmp_root: str, n_packets: int) -> dict:
     paths = IngestPaths(landing_dir=landing, out_dir=out)
     spark._jvm.System.gc()
     t0 = time.time()
-    # with_counts=False: time the STREAMING hot path (the foreachBatch
-    # wrapper runs without observability counts); routed rows are
-    # counted afterwards from the written parquet, outside the clock.
-    process_packet_batch(
-        packet_batch_source(spark, landing), paths, with_counts=False
-    )
+    # routed rows are counted afterwards from the written parquet,
+    # outside the clock
+    process_packet_batch(packet_batch_source(spark, landing), paths)
     wall = time.time() - t0
     routed = {
         t: spark.read.parquet(paths.table(t)).count()
